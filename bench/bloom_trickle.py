@@ -108,6 +108,7 @@ def main() -> None:
                     )
                 else:
                     # plain existence read: every touched bucket
+                    prior = os.environ.get("DVX_KEY_BLOOM")
                     os.environ["DVX_KEY_BLOOM"] = "0"
                     try:
                         _insert_new_keys(
@@ -115,7 +116,10 @@ def main() -> None:
                             "s", None,
                         )
                     finally:
-                        os.environ["DVX_KEY_BLOOM"] = "1"
+                        if prior is None:
+                            os.environ.pop("DVX_KEY_BLOOM", None)
+                        else:
+                            os.environ["DVX_KEY_BLOOM"] = prior
                 row[f"{arm}_wall_s"] = round(time.time() - t0, 3)
             results.append(row)
 

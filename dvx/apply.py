@@ -18,9 +18,13 @@ insertion into one commit), driven by a declarative entity registry
    HISTORY: the batch chains per key on the satellite's OWN hash-diff
    (consecutive duplicates collapse), displaced versions are end-dated
    into history, the batch-final version upserts into current as a
-   merge-on-read delta; stale (out-of-order) arrivals trigger a
-   per-bucket re-chain that splices them into history (one-shot
-   semantics, nothing lost); deletes are tombstone versions.
+   merge-on-read delta; stale (out-of-order) arrivals trigger a per-key
+   re-chain that splices them into history (one-shot semantics, nothing
+   lost); deletes are tombstone versions. Every batch, stale or not,
+   has ONE write shape: the history and current writes are staged
+   concurrently and published history-first, the history side as a
+   single commit (an append, or an equality-delete + insert when stale
+   keys re-chain).
 
 Scale notes
 -----------
@@ -279,29 +283,48 @@ def _apply_satellite(
       (ts, seq)): the no-op guard drops the batch's earliest surviving
       version if it matches the stored current hash_diff (P5 change
       filter, RawVaultETL.scala:340-346); non-final chain versions +
-      displaced old current rows append to the HISTORY table (guarded by
-      its epoch watermark); the batch-final version per key upserts into
-      CURRENT as a merge-on-read delta (O(changed rows) write IO).
+      displaced old current rows go to the HISTORY table; the
+      batch-final version per key upserts into CURRENT as a
+      merge-on-read delta (O(changed rows) write IO).
     - EQUAL rows (same (ts, seq) as the stored current): exact
       redeliveries — dropped, idempotent.
     - STALE rows (strictly older than the stored current): out-of-order
-      arrivals. Every bucket containing one is re-chained from scratch:
-      union(history ∪ current ∪ incoming) for that bucket, dedup on
+      arrivals. Every key receiving one is re-chained from scratch:
+      union(history ∪ current ∪ incoming) for that key, dedup on
       (key, ts, seq), re-collapse consecutive duplicate hash_diffs,
       recompute valid_from/valid_to — the one-shot oracle semantics for
-      O(stale buckets) only. The re-chain is a pure function of (stored
-      state ∪ batch), so crash-replay at any point converges.
+      O(stale keys) only.
 
-    Crash ordering: history appends first (epoch-guarded); the
-    stale-bucket current replacement carries NO epoch mark — only the
-    final delta commit does — so a crash anywhere in between re-runs
-    the whole satellite apply, which converges.
+    Write shape (the same for every batch, stale or in-order): a stale
+    batch first computes and spills its re-chain and stages the stale
+    keys' history tombstones (both on helper threads, while this thread
+    plans the in-order frames); then the history write and the
+    current-delta write are STAGED concurrently (lake.stage_write) and
+    published strictly history-first. The
+    history side is ONE commit — an ``append`` of the in-order keys'
+    displaced/intermediate rows, or, when stale keys exist, a
+    ``delete_insert`` that also tombstones the stale keys' old history
+    and appends their re-chained ended versions (the key sets are
+    disjoint through ``anti_stale``; rows written in the tombstone's
+    own commit survive it). The current side is one ``upsert_delta``
+    holding the batch-final rows and the stale keys' re-chained current
+    rows.
+
+    Crash ordering: history (data and tombstones, atomically) before
+    current; both commits carry the epoch mark. A crash before the
+    history commit publishes nothing. A crash between the two leaves
+    current untouched, so the re-run sees do_hist=False and commits
+    only the current delta — the same delta: the in-order part depends
+    only on (unchanged) current, and the re-chain is a pure function of
+    stored state ∪ batch that the spliced history reproduces.
     """
+    import shutil as _shutil
+    import time as _time
+    from concurrent.futures import ThreadPoolExecutor
+
     from pyspark.sql.window import Window
 
-    import shutil as _shutil
-
-    import time as _time
+    from dvx.lake import CommitConflict
 
     _prof = os.environ.get("DVX_PROFILE_SAT") == "1"
     _marks: list[tuple[str, float]] = [("start", _time.time())]
@@ -313,6 +336,10 @@ def _apply_satellite(
     key = spec.parent_key
     cur_tbl = vault.table(spec.name)
     hist_tbl = vault.table(spec.hist_name)
+    do_hist = epoch_id is None or hist_tbl.last_epoch(stream_id) < epoch_id
+    do_cur = epoch_id is None or cur_tbl.last_epoch(stream_id) < epoch_id
+    if not (do_hist or do_cur):
+        return  # replayed epoch, both commits already landed
     sat_fields = cur_tbl.schema().fields
     sat_cols = [f.name for f in sat_fields]
     types = {f.name: f.dataType for f in sat_fields}
@@ -337,6 +364,7 @@ def _apply_satellite(
     src = cur_tbl.with_bucket(prepared.select(*proj, "ts", "seq"))
     spill_j = None
     spill_r = None
+    ex = ThreadPoolExecutor(max_workers=3)
     try:
         if touched is None:
             touched = sorted(r[0] for r in src.select(BUCKET_COL).distinct().collect())
@@ -410,40 +438,30 @@ def _apply_satellite(
             "ts",
             "seq",
             BUCKET_COL,
-            # int-typed so the spill's hive-style partition value ("0"/"1")
-            # round-trips with a stable inferred type
-            F.col("_stale").cast("int").alias("_stale"),
             (F.col("_surv") & F.col("_fresh") & ~noop).alias("_win"),
             nxt.alias("_next_ts"),
+            # _sb: a stale row's bucket, -1 for every other row
+            F.when(F.col("_stale"), F.col(BUCKET_COL)).otherwise(F.lit(-1)).alias("_sb"),
         )
         spill_j = _spill_path(vault)
-        # spill PARTITIONED by the stale flag: whether any out-of-order
-        # row exists — and which buckets hold them — is then a driver-side
-        # listdir + a partition-pruned read of the (rare) _stale=1 slice,
-        # not a full extra Spark job over the decisions every batch. In
-        # the near-ordered steady state (_stale=1 absent) the stale check
-        # costs ZERO jobs — one fewer sequential job on the satellite
-        # critical path (guide §2.4 / §1.2: per-batch fixed floor).
+        # spill PARTITIONED by _sb: whether any out-of-order row exists —
+        # and which buckets hold them — is then a driver-side listdir of
+        # the `_sb=<bucket>` directories, and the stale slice a
+        # partition-pruned read. The stale check costs ZERO Spark jobs,
+        # stale batch or not (guide §2.4 / §1.2: per-batch fixed floor).
         dec_schema = decisions.schema
         decisions.write.mode("overwrite").option(
             "compression", "snappy"
-        ).partitionBy("_stale").parquet(spill_j)
+        ).partitionBy("_sb").parquet(spill_j)
         _mark("spill_decisions")
         # explicit schema: the spill's shape is known, so the re-read
         # skips the per-batch driver-side footer/partition inference job
         decisions = vault.spark.read.schema(dec_schema).parquet(spill_j)
-
-        if os.path.isdir(os.path.join(spill_j, "_stale=1")):
-            stale_buckets = sorted(
-                r[0]
-                for r in decisions.filter("_stale = 1")
-                .select(BUCKET_COL)
-                .distinct()
-                .collect()
-            )
-        else:
-            stale_buckets = []
-        _mark("stale_collect")
+        stale_buckets = sorted(
+            int(d[len("_sb="):])
+            for d in os.listdir(spill_j)
+            if d.startswith("_sb=") and d != "_sb=-1"
+        )
 
         # Staleness is KEY-granular: windows are per key, so only the
         # keys that actually received an out-of-order row re-chain —
@@ -453,7 +471,113 @@ def _apply_satellite(
         # key's full history in its bucket.) The anti-joins below are
         # free when no stale rows exist, and broadcast-sized otherwise
         # (stale keys are narrow and rare in a near-ordered stream).
-        stale_keys = decisions.filter("_stale = 1").select(key).distinct()
+        stale_keys = decisions.filter("_sb >= 0").select(key).distinct()
+
+        def as_sat(df: DataFrame, valid_to) -> DataFrame:
+            return df.select(
+                *[
+                    F.col("ts").alias("valid_from")
+                    if c == "valid_from"
+                    else valid_to.alias("valid_to")
+                    if c == "valid_to"
+                    else F.col("seq").alias("src_seq")
+                    if c == "src_seq"
+                    else F.col(c)
+                    for c in sat_cols
+                ],
+                F.col(BUCKET_COL),
+            )
+
+        sc = vault.spark.sparkContext
+
+        def _critical(fn, *args, **kwargs):
+            # the satellite apply is the batch's critical path: its helper
+            # threads' jobs join the weighted pool (the scheduler-pool
+            # localProperty is per python thread)
+            sc.setLocalProperty("spark.scheduler.pool", "dvx_critical")
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                sc.setLocalProperty("spark.scheduler.pool", None)
+
+        def _rechain(path: str) -> DataFrame:
+            """Re-chain the stale keys over history ∪ current ∪ batch and
+            spill the result to ``path``: it feeds BOTH staged writes,
+            and without the spill each write job would recompute the
+            whole re-chain (two table reads + MOR merge + dedup agg +
+            two windows) from scratch (guide §1.2: don't compute things
+            twice; §5 materialize shared subtrees)."""
+            attr_cols = [
+                c for c in sat_cols
+                if c not in (key, "valid_from", "valid_to", "src_seq")
+            ]
+
+            def as_version(df: DataFrame) -> DataFrame:
+                return df.select(
+                    F.col(key),
+                    F.col("valid_from").alias("ts"),
+                    F.col("src_seq").alias("seq"),
+                    *attr_cols,
+                    F.col(BUCKET_COL),
+                )
+
+            inc_re = src.join(stale_keys, key, "left_semi").select(
+                F.col(key), "ts", "seq", *attr_cols, F.col(BUCKET_COL)
+            )
+            # key-filtered reads: the re-chain consumes only the stale
+            # keys' history and current — key_filter pushes the semi
+            # below the MOR merge / tombstone resolution
+            hist_re = as_version(
+                hist_tbl.with_bucket(
+                    hist_tbl.read(buckets=stale_buckets, key_filter=stale_keys)
+                )
+            )
+            cur_re = as_version(
+                cur_tbl.with_bucket(
+                    cur_tbl.read(buckets=stale_buckets, key_filter=stale_keys)
+                )
+            )
+            # dedup redeliveries on (key, ts, seq) with a deterministic
+            # attr pick, then re-collapse consecutive duplicate diffs and
+            # recompute the valid_from/valid_to chain — the one-shot
+            # semantics over everything ever seen for these keys.
+            # Repartition on the key FIRST: HashPartitioning(key) is a
+            # subset of the dedup agg's grouping cols, so the agg reuses
+            # this exchange, and the chain windows below (partitionBy
+            # key) need only a sort — the full-text version rows cross
+            # ONE exchange instead of two (guide §2.4: two operations
+            # keyed the same way share one exchange)
+            n_part = int(
+                vault.spark.conf.get("spark.sql.shuffle.partitions", "32")
+            )
+            allv = (
+                inc_re.unionByName(hist_re)
+                .unionByName(cur_re)
+                .repartition(n_part, F.col(key))
+                .groupBy(key, "ts", "seq", BUCKET_COL)
+                .agg(F.min(F.struct(*attr_cols)).alias("_s"))
+                .select(key, "ts", "seq", BUCKET_COL, "_s.*")
+            )
+            wv = Window.partitionBy(key).orderBy("ts", "seq")
+            collapsed = allv.withColumn("_pd", F.lag("hash_diff").over(wv)).filter(
+                F.col("_pd").isNull() | (F.col("_pd") != F.col("hash_diff"))
+            )
+            chained = collapsed.withColumn("_nt", F.lead("ts").over(wv))
+            re_sat = as_sat(chained, F.col("_nt").cast("timestamp"))
+            re_sat.write.mode("overwrite").option("compression", "snappy").parquet(path)
+            return vault.spark.read.schema(re_sat.schema).parquet(path)
+
+        # ---- stale keys: start the re-chain and the history tombstones ----
+        # both depend only on the decisions spill, so they run on helper
+        # threads while this thread plans the in-order frames below
+        f_rechain = f_tombs = None
+        if stale_buckets:
+            spill_r = _spill_path(vault)
+            f_rechain = ex.submit(_critical, _rechain, spill_r)
+            if do_hist:
+                f_tombs = ex.submit(
+                    _critical, hist_tbl.stage_write, None, tombstone_keys=stale_keys
+                )
 
         def anti_stale(df: DataFrame) -> DataFrame:
             return df.join(stale_keys, key, "left_anti") if stale_buckets else df
@@ -474,22 +598,7 @@ def _apply_satellite(
             key, "ts", "seq", "_next_ts"
         )
 
-        def as_sat(df: DataFrame, valid_to) -> DataFrame:
-            return df.select(
-                *[
-                    F.col("ts").alias("valid_from")
-                    if c == "valid_from"
-                    else valid_to.alias("valid_to")
-                    if c == "valid_to"
-                    else F.col("seq").alias("src_seq")
-                    if c == "src_seq"
-                    else F.col(c)
-                    for c in sat_cols
-                ],
-                F.col(BUCKET_COL),
-            )
-
-        # ---- fast path (buckets with in-order arrivals only) ----
+        # ---- in-order keys ----
         # batch-final winner per key -> new current (valid_to NULL);
         # earlier chain versions -> history with their chained end ts
         intermediates = src_fast.join(inter_n, [key, "ts", "seq"], "inner")
@@ -523,235 +632,61 @@ def _apply_satellite(
         hist_rows = as_sat(
             intermediates, F.col("_next_ts").cast("timestamp")
         ).unionByName(displaced)
+        delta_rows = as_sat(finals, F.lit(None).cast("timestamp"))
 
-        do_hist = epoch_id is None or hist_tbl.last_epoch(stream_id) < epoch_id
-        do_cur = epoch_id is None or cur_tbl.last_epoch(stream_id) < epoch_id
+        if f_rechain is not None:
+            re_sat = f_rechain.result()
+            _mark("rechain_spill")
+            hist_rows = hist_rows.unionByName(
+                re_sat.filter(F.col("valid_to").isNotNull())
+            )
+            delta_rows = delta_rows.unionByName(
+                re_sat.filter(F.col("valid_to").isNull())
+            )
 
-        if not stale_buckets and do_hist and do_cur:
-            # ---- fast-path write overlap ----
-            # history and current are INDEPENDENT tables, but their
-            # commits must stay ordered: displaced rows must reach
-            # history before current advances, or a crash between the
-            # two commits loses the old version entirely (it is no
-            # longer in current and never reached history — the re-run
-            # would classify the batch rows stale and re-chain from
-            # state that no longer contains it). So: run both multi-
-            # second WRITE jobs concurrently on the executors
-            # (lake.stage_write), then publish the two metadata commits
-            # strictly history-first. Crash windows collapse to the
-            # sequential path's: before hist commit = nothing published;
-            # between commits = the already-safe state.
-            from concurrent.futures import ThreadPoolExecutor as _TPE
-
-            from dvx.lake import CommitConflict
-
-            delta_rows = as_sat(finals, F.lit(None).cast("timestamp"))
-            sc = vault.spark.sparkContext
-
-            def _staged(pool: str, tbl, frame):
-                # scheduler-pool localProperty is per python thread
-                sc.setLocalProperty("spark.scheduler.pool", pool)
-                try:
-                    return tbl.stage_write(frame)
-                finally:
-                    sc.setLocalProperty("spark.scheduler.pool", None)
-
-            with _TPE(max_workers=2) as ex2:
-                # both staged writes ARE the critical path — keep them in
-                # the weighted pool (intra-pool FAIR shares between them)
-                fh = ex2.submit(_staged, "dvx_critical", hist_tbl, hist_rows)
-                fd = ex2.submit(_staged, "dvx_critical", cur_tbl, delta_rows)
-                sh, sd = fh.result(), fd.result()
+        # ---- staged write overlap, history-first publish ----
+        # history and current are INDEPENDENT tables, but their commits
+        # must stay ordered: displaced rows must reach history before
+        # current advances, or a crash between the two commits loses the
+        # old version entirely (it is no longer in current and never
+        # reached history). So: run both multi-second WRITE jobs
+        # concurrently on the executors, then publish the two metadata
+        # commits strictly history-first.
+        writes = []
+        if do_hist:
+            op = "delete_insert" if f_tombs is not None else "append"
+            writes.append((hist_tbl, hist_rows, op, ex.submit(
+                _critical, hist_tbl.stage_write, hist_rows)))
+        if do_cur:
+            writes.append((cur_tbl, delta_rows, "upsert_delta", ex.submit(
+                _critical, cur_tbl.stage_write, delta_rows)))
+        for tbl, frame, op, fut in writes:
+            staged = fut.result()
+            if op == "delete_insert":
+                staged = [f_tombs.result(), staged]
             try:
-                hist_tbl.commit_staged(sh, "append", summary=summary)
-            except CommitConflict:  # external writer moved the table
-                cur_tbl._drop_attempt(sd["commit_rel"])
-                sd = None
-                hist_tbl.append(hist_rows, summary=summary)
-            _mark("hist_append")
-            if sd is not None:
-                try:
-                    cur_tbl.commit_staged(sd, "upsert_delta", summary=summary)
-                except CommitConflict:
-                    cur_tbl.upsert_delta(delta_rows, summary=summary)
-            else:
-                cur_tbl.upsert_delta(delta_rows, summary=summary)
-            _mark("upsert_delta")
+                tbl.commit_staged(staged, op, summary=summary)
+            except CommitConflict:  # an external writer moved the table
+                if op == "upsert_delta":
+                    tbl.upsert_delta(frame, summary=summary)
+                elif op == "delete_insert":
+                    tbl.delete_keys_insert(stale_keys, frame, summary=summary)
+                else:
+                    tbl.append(frame, summary=summary)
+            _mark(f"commit_{op}")
+        if do_cur:
+            # current is written as merge-on-read deltas (O(changed rows)
+            # per batch); folding a bucket every DVX_SAT_DELTA_COMPACT
+            # delta commits keeps its amortized rewrite O(bucket/threshold)
             cur_tbl.compact_deltas(
                 int(os.environ.get("DVX_SAT_DELTA_COMPACT", "8"))
             )
             _mark("compact_deltas")
-            if _prof:
-                deltas = {
-                    b: round(tb - ta, 2)
-                    for (_, ta), (b, tb) in zip(_marks, _marks[1:])
-                }
-                print(f"DVX_PROFILE_SAT {spec.name} {deltas}", flush=True)
-            return
-
-        # ---- sequential path (stale re-chain, or partial epoch replay) ----
-        # history append first: if we crash before the current commit, the
-        # re-run recomputes the same displaced/intermediate rows (current
-        # is unchanged) and the epoch guard skips the duplicate append
-        if do_hist:
-            hist_tbl.append(hist_rows, summary=summary)
-        _mark("hist_append")
-
-        re_current = None
-
-        # ---- re-chain path (KEYS that received out-of-order rows) ----
-        if stale_buckets:
-            vcols = [
-                c for c in sat_cols if c not in ("valid_from", "valid_to", "src_seq")
-            ]
-            attr_cols = [c for c in vcols if c != key]
-
-            def as_version(df: DataFrame) -> DataFrame:
-                return df.select(
-                    F.col(key),
-                    F.col("valid_from").alias("ts"),
-                    F.col("src_seq").alias("seq"),
-                    *attr_cols,
-                    F.col(BUCKET_COL),
-                )
-
-            inc_re = src.join(stale_keys, key, "left_semi").select(
-                F.col(key), "ts", "seq", *attr_cols, F.col(BUCKET_COL)
-            )
-            # equality-delete splice (default): history write IO for the
-            # re-chain is O(stale keys' versions) — a per-key tombstone +
-            # append in one atomic commit (lake.delete_keys_insert) —
-            # instead of rewriting every stale BUCKET (O(touched
-            # buckets) read+write per stale batch; guide §1.2: the
-            # distributed algorithm first). DVX_HIST_EQ_DELETE=0 falls
-            # back to the bucket-rewrite path (A/B lever).
-            use_eq = os.environ.get("DVX_HIST_EQ_DELETE", "1") != "0"
-            hist_stale = None
-            if use_eq:
-                # key-filtered read: the re-chain consumes only the stale
-                # keys' history — no full-bucket passthrough needed when
-                # nothing is rewritten
-                hist_re = as_version(
-                    hist_tbl.with_bucket(
-                        hist_tbl.read(buckets=stale_buckets, key_filter=stale_keys)
-                    )
-                )
-            else:
-                # read only the stale buckets (manifest file pruning),
-                # then restrict to the stale KEYS: the expensive dedup +
-                # window recompute below runs over O(stale keys'
-                # history), not the whole bucket's
-                hist_stale = hist_tbl.with_bucket(
-                    hist_tbl.read(buckets=stale_buckets)
-                )
-                hist_re = as_version(hist_stale.join(stale_keys, key, "left_semi"))
-            # key_filter pushes the stale-key semi below the MOR merge:
-            # the re-chain's current read pays the last-wins agg over the
-            # stale KEYS' rows only (hist_stale stays a full-bucket read —
-            # its untouched keys pass through into new_hist)
-            cur_re = as_version(
-                cur_tbl.with_bucket(
-                    cur_tbl.read(buckets=stale_buckets, key_filter=stale_keys)
-                )
-            )
-            # dedup redeliveries on (key, ts, seq) with a deterministic
-            # attr pick, then re-collapse consecutive duplicate diffs and
-            # recompute the valid_from/valid_to chain — the one-shot
-            # semantics over everything ever seen for these keys
-            # repartition on the key FIRST: HashPartitioning(key) is a
-            # subset of the dedup agg's grouping cols, so the agg reuses
-            # this exchange, and the chain windows below (partitionBy
-            # key) need only a sort — the full-text version rows cross
-            # ONE exchange instead of two (guide §2.4: two operations
-            # keyed the same way share one exchange)
-            n_part = int(
-                vault.spark.conf.get("spark.sql.shuffle.partitions", "32")
-            )
-            allv = (
-                inc_re.unionByName(hist_re)
-                .unionByName(cur_re)
-                .repartition(n_part, F.col(key))
-                .groupBy(key, "ts", "seq", BUCKET_COL)
-                .agg(F.min(F.struct(*attr_cols)).alias("_s"))
-                .select(key, "ts", "seq", BUCKET_COL, "_s.*")
-            )
-            wv = Window.partitionBy(key).orderBy("ts", "seq")
-            collapsed = allv.withColumn("_pd", F.lag("hash_diff").over(wv)).filter(
-                F.col("_pd").isNull() | (F.col("_pd") != F.col("hash_diff"))
-            )
-            chained = collapsed.withColumn("_nt", F.lead("ts").over(wv)).drop("_pd")
-            re_sat = chained.select(
-                *[
-                    F.col("ts").alias("valid_from")
-                    if c == "valid_from"
-                    else F.col("_nt").cast("timestamp").alias("valid_to")
-                    if c == "valid_to"
-                    else F.col("seq").alias("src_seq")
-                    if c == "src_seq"
-                    else F.col(c)
-                    for c in sat_cols
-                ],
-                F.col(BUCKET_COL),
-            )
-            # spill the re-chained versions ONCE: re_sat feeds BOTH the
-            # history bucket rewrite and the current-table delta below —
-            # without the spill each write job recomputes the whole
-            # re-chain (two table reads + MOR merge + dedup agg + two
-            # windows) from scratch (guide §1.2: don't compute things
-            # twice; §5 localCheckpoint/materialize shared subtrees)
-            spill_r = _spill_path(vault)
-            re_schema = re_sat.schema
-            re_sat.write.mode("overwrite").option(
-                "compression", "snappy"
-            ).parquet(spill_r)
-            re_sat = vault.spark.read.schema(re_schema).parquet(spill_r)
-            _mark("rechain_spill")
-            if use_eq:
-                # atomic splice: tombstone the stale keys' old history
-                # rows, append their re-chained ended versions. Re-running
-                # converges — the newer tombstone also covers the previous
-                # attempt's inserts.
-                hist_tbl.delete_keys_insert(
-                    stale_keys,
-                    re_sat.filter(F.col("valid_to").isNotNull()),
-                    summary=summary,
-                )
-            else:
-                # history bucket rewrite: untouched keys pass through
-                # unmodified (one anti-join, no recompute); stale keys get
-                # their re-chained ended versions
-                new_hist = (
-                    hist_stale.select(*sat_cols, BUCKET_COL)
-                    .join(stale_keys, key, "left_anti")
-                    .unionByName(re_sat.filter(F.col("valid_to").isNotNull()))
-                )
-                hist_tbl.replace_buckets(stale_buckets, new_hist, summary=summary)
-            _mark("hist_splice")
-            re_current = re_sat.filter(F.col("valid_to").isNull())
-
-        # ---- current-table apply: merge-on-read ----
-        # Only the CHANGED rows are written: the batch-final version per
-        # displaced/new key — and the re-chained current row per stale
-        # key (one row per key, disjoint from finals) — go into
-        # per-bucket DELTA files (lake.upsert_delta, last-wins-merged at
-        # read time); unchanged current rows are never rewritten.
-        # compact_deltas folds them back every DVX_SAT_DELTA_COMPACT
-        # commits per bucket, so the amortized rewrite is
-        # O(bucket / threshold) per batch.
-        if do_cur:
-            delta_rows = as_sat(finals, F.lit(None).cast("timestamp"))
-            if re_current is not None:
-                delta_rows = delta_rows.unionByName(re_current)
-            cur_tbl.upsert_delta(delta_rows, summary=summary)
-            _mark("upsert_delta")
-            cur_tbl.compact_deltas(
-                int(os.environ.get("DVX_SAT_DELTA_COMPACT", "8"))
-            )
-        _mark("compact_deltas")
         if _prof:
             deltas = {b: round(tb - ta, 2) for (_, ta), (b, tb) in zip(_marks, _marks[1:])}
             print(f"DVX_PROFILE_SAT {spec.name} {deltas}", flush=True)
     finally:
+        ex.shutdown(wait=True)  # no helper job may still read a spill
         for d in (spill_j, spill_r):
             if d:
                 _shutil.rmtree(d, ignore_errors=True)
@@ -764,7 +699,6 @@ def apply_batch(
     stream_id: str = "default",
     salt_buckets: int = 32,
     collect_metrics: bool = False,
-    parallel: bool = True,
     pit_dates: list[str] | None = None,
 ) -> dict:
     """Apply one changelog micro-batch to the vault (idempotent).
@@ -856,121 +790,94 @@ def apply_batch(
                 for r in bucketed.groupBy(BUCKET_COL).count().collect()
             )
 
-        if parallel:
-            # each merge thread gets its OWN fair-scheduler pool: with
-            # spark.scheduler.mode=FAIR alone, all jobs land in the
-            # default pool whose intra-pool scheduling is FIFO — an early
-            # hub job would still hog every slot. Distinct on-demand pools
-            # (default weight 1) round-robin slots across the merges.
-            # The fused bloom scan and the bucket-count collect run as
-            # concurrent pooled jobs too: the satellite applies (the
-            # critical path) start as soon as the counts land (~sub-second
-            # narrow agg) instead of waiting behind the multi-second scan
-            # that only the hub/link inserts consume (guide §2.6 overlap).
-            sc = vault.spark.sparkContext
+        # each merge thread gets its OWN fair-scheduler pool: with
+        # spark.scheduler.mode=FAIR alone, all jobs land in the
+        # default pool whose intra-pool scheduling is FIFO — an early
+        # hub job would still hog every slot. Distinct on-demand pools
+        # (default weight 1) round-robin slots across the merges.
+        # The fused bloom scan and the bucket-count collect run as
+        # concurrent pooled jobs too: the satellite applies (the
+        # critical path) start as soon as the counts land (~sub-second
+        # narrow agg) instead of waiting behind the multi-second scan
+        # that only the hub/link inserts consume (guide §2.6 overlap).
+        sc = vault.spark.sparkContext
 
-            def _pooled(pool: str, label: str, fn, *args):
-                sc.setLocalProperty("spark.scheduler.pool", pool)
-                _tt0 = _time.time()
-                try:
-                    return fn(*args)
-                finally:
-                    if _prof:  # per-task walls (overlapping — attribution only)
-                        _pts[f"t_{label}"] = round(_time.time() - _tt0, 2)
-                    sc.setLocalProperty("spark.scheduler.pool", None)
+        def _pooled(pool: str, label: str, fn, *args):
+            sc.setLocalProperty("spark.scheduler.pool", pool)
+            _tt0 = _time.time()
+            try:
+                return fn(*args)
+            finally:
+                if _prof:  # per-task walls (overlapping — attribution only)
+                    _pts[f"t_{label}"] = round(_time.time() - _tt0, 2)
+                sc.setLocalProperty("spark.scheduler.pool", None)
 
-            n_workers = 2 + len(tasks) + len(registry.satellites)
-            with ThreadPoolExecutor(max_workers=n_workers) as ex:
-                fut_scan = (
-                    ex.submit(_pooled, "dvx_merge_scan", "scan", _bloom_scan,
-                              prepared, bloomed)
-                    if bloomed
-                    else None
+        n_workers = 2 + len(tasks) + len(registry.satellites)
+        with ThreadPoolExecutor(max_workers=n_workers) as ex:
+            fut_scan = (
+                ex.submit(_pooled, "dvx_merge_scan", "scan", _bloom_scan,
+                          prepared, bloomed)
+                if bloomed
+                else None
+            )
+            fut_counts = (
+                # the counts job GATES the satellite start — run it
+                # in the weighted critical pool so it never queues
+                # behind the scan/hub stages
+                ex.submit(_pooled, "dvx_critical", "counts",
+                          _count_buckets)
+                if first_sat is not None
+                else None
+            )
+
+            def _run_sat(s):
+                touched = None
+                if fut_counts is not None and s.parent_key == first_sat.parent_key:
+                    touched = [b for b, c in fut_counts.result() if c]
+                _apply_satellite(
+                    vault, s, prepared, epoch_id, stream_id, summary, touched
                 )
-                fut_counts = (
-                    # the counts job GATES the satellite start — run it
-                    # in the weighted critical pool so it never queues
-                    # behind the scan/hub stages
-                    ex.submit(_pooled, "dvx_critical", "counts",
-                              _count_buckets)
-                    if first_sat is not None
-                    else None
+
+            def _run_key_table(tbl, nm, key, cols):
+                scan = (
+                    fut_scan.result().get(nm) if fut_scan is not None else None
+                )
+                touched = None
+                if (
+                    scan is None
+                    and fut_counts is not None
+                    and key == first_sat.parent_key
+                ):
+                    touched = [b for b, c in fut_counts.result() if c]
+                _insert_new_keys(
+                    tbl, prepared.select(*cols), key, cols, epoch_id,
+                    stream_id, summary, touched, scan
                 )
 
-                def _run_sat(s):
-                    touched = None
-                    if fut_counts is not None and s.parent_key == first_sat.parent_key:
-                        touched = [b for b, c in fut_counts.result() if c]
-                    _apply_satellite(
-                        vault, s, prepared, epoch_id, stream_id, summary, touched
-                    )
-
-                def _run_key_table(tbl, nm, key, cols):
-                    scan = (
-                        fut_scan.result().get(nm) if fut_scan is not None else None
-                    )
-                    touched = None
-                    if (
-                        scan is None
-                        and fut_counts is not None
-                        and key == first_sat.parent_key
-                    ):
-                        touched = [b for b, c in fut_counts.result() if c]
-                    _insert_new_keys(
-                        tbl, prepared.select(*cols), key, cols, epoch_id,
-                        stream_id, summary, touched, scan
-                    )
-
-                futs = [
-                    # the satellite applies are the critical path of the
-                    # batch: the weighted `dvx_critical` pool (dvx.session
-                    # _alloc_file) gives them most task slots; hub/link/
-                    # scan backfill (guide §2.6)
-                    ex.submit(_pooled, "dvx_critical", s.name, _run_sat, s)
-                    for s in registry.satellites
-                ]
-                futs += [
-                    ex.submit(
-                        _pooled, f"dvx_merge_{os.path.basename(tbl.root)}",
-                        os.path.basename(tbl.root), _run_key_table,
-                        tbl, nm, key, cols
-                    )
-                    for tbl, nm, key, cols in tasks
-                ]
-                for f in futs:
-                    f.result()
-                if fut_counts is not None:
-                    bucket_counts = fut_counts.result()
-                    n = sum(c for _, c in bucket_counts)
-                else:
-                    n = prepared.count()
-            _pmark("merges")
-        else:
-            scans = _bloom_scan(prepared, bloomed) if bloomed else {}
-            if first_sat is not None:
-                bucket_counts = _count_buckets()
+            futs = [
+                # the satellite applies are the critical path of the
+                # batch: the weighted `dvx_critical` pool (dvx.session
+                # _alloc_file) gives them most task slots; hub/link/
+                # scan backfill (guide §2.6)
+                ex.submit(_pooled, "dvx_critical", s.name, _run_sat, s)
+                for s in registry.satellites
+            ]
+            futs += [
+                ex.submit(
+                    _pooled, f"dvx_merge_{os.path.basename(tbl.root)}",
+                    os.path.basename(tbl.root), _run_key_table,
+                    tbl, nm, key, cols
+                )
+                for tbl, nm, key, cols in tasks
+            ]
+            for f in futs:
+                f.result()
+            if fut_counts is not None:
+                bucket_counts = fut_counts.result()
                 n = sum(c for _, c in bucket_counts)
             else:
                 n = prepared.count()
-            touched_list = [b for b, c in bucket_counts if c]
-            for tbl, nm, key, cols in tasks:
-                scan = scans.get(nm)
-                touched = (
-                    touched_list
-                    if scan is None
-                    and first_sat is not None
-                    and key == first_sat.parent_key
-                    else None
-                )
-                _insert_new_keys(
-                    tbl, prepared.select(*cols), key, cols, epoch_id, stream_id,
-                    summary, touched, scan
-                )
-            for s in registry.satellites:
-                _apply_satellite(
-                    vault, s, prepared, epoch_id, stream_id, summary,
-                    touched_list if s.parent_key == first_sat.parent_key else None,
-                )
+        _pmark("merges")
         if pit_dates:
             # maintain PIT snapshots incrementally while the prepared batch
             # (with its already-computed hash keys) is still spilled — no

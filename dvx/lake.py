@@ -116,6 +116,14 @@ def _bucket_of(k: str, composite: bool) -> str:
     return k.split("|", 1)[1] if composite else k
 
 
+def _extended(base: dict, add: dict) -> dict:
+    """Copy of a ``{key: [paths]}`` map with ``add``'s paths appended."""
+    out = {k: list(ps) for k, ps in base.items()}
+    for k, ps in add.items():
+        out.setdefault(k, []).extend(ps)
+    return out
+
+
 def _log_dir(root: str) -> str:
     return os.path.join(root, "_log")
 
@@ -566,12 +574,16 @@ class LakeTable:
                 # wide (big rewrites): 4x partition headroom so two bucket
                 # keys rarely hash to the same writer task and idle the
                 # rest. Narrow (small appends — hubs/links/history/deltas,
-                # several per micro-batch): exactly num_buckets partitions;
-                # the 4x flood is mostly empty tasks whose scheduling cost
-                # is pure per-batch overhead, and a hash collision on a
-                # small write is harmless.
-                factor = 4 if wide else 1
-                df = df.repartition(factor * manifest["num_buckets"], F.col(_PHYS))
+                # several per micro-batch): no partition count, so AQE
+                # coalesces the shuffle to as few writer tasks as the data
+                # needs. A fixed num_buckets count launched mostly empty
+                # tasks whose scheduling cost is pure per-batch overhead
+                # (trickle: ~0.3 s per small write on 4 cores); a bucket
+                # still lands in exactly one task, so one file per bucket.
+                if wide:
+                    df = df.repartition(4 * manifest["num_buckets"], F.col(_PHYS))
+                else:
+                    df = df.repartition(F.col(_PHYS))
         else:
             if manifest["partition_col"]:
                 df = df.withColumn(_PHYS, F.col(manifest["partition_col"]).cast("string"))
@@ -746,9 +758,7 @@ class LakeTable:
                         with open(os.path.join(self.root, rel), "wb") as bf:
                             bf.write(segs[k])
                         bloom_add[k] = rel
-            files = {k: list(ps) for k, ps in m["files"].items()}
-            for k, ps in new_files.items():
-                files.setdefault(k, []).extend(ps)
+            files = _extended(m["files"], new_files)
             try:
                 return self._commit_next(
                     m, v, "append", files, new_files, summary, bloom_add=bloom_add
@@ -887,24 +897,14 @@ class LakeTable:
         per-key merge over base + deltas for the touched buckets until
         :meth:`compact_deltas` folds them back into the base.
         """
+        if self.snapshot()["num_buckets"] is None:
+            raise ValueError("upsert_delta requires a bucketed table")
         while True:
-            v = self.version()
-            m = self.snapshot(v)
-            if m["num_buckets"] is None:
-                raise ValueError("upsert_delta requires a bucketed table")
-            new_files, commit_rel = self._write_files(
-                self._schema_aligned(df, m), m, v + 1
-            )
-            deltas = {k: list(ps) for k, ps in m.get("deltas", {}).items()}
-            for k, ps in new_files.items():
-                deltas.setdefault(k, []).extend(ps)
             try:
-                return self._commit_next(
-                    m, v, "upsert_delta", dict(m["files"]), new_files, summary,
-                    deltas=deltas,
+                return self.commit_staged(
+                    self.stage_write(df), "upsert_delta", summary=summary
                 )
             except CommitConflict:
-                self._drop_attempt(commit_rel)
                 continue
 
     def delete_keys_insert(
@@ -928,42 +928,10 @@ class LakeTable:
         key blooms (tombstones would break bloom completeness).
         """
         while True:
-            v = self.version()
-            m = self.snapshot(v)
-            if m["num_buckets"] is None or m.get("partition_col"):
-                raise ValueError(
-                    "delete_keys_insert requires a plain bucketed table"
-                )
-            if m.get("properties", {}).get("key_bloom"):
-                raise ValueError(
-                    "delete_keys_insert is not supported on key_bloom "
-                    "tables (deletes break segment completeness)"
-                )
-            key_cols = m["bucket_cols"]
-            new_files, commit_rel = self._write_files(
-                self._schema_aligned(rows, m), m, v + 1
-            )
-            # tombstone key files: (key cols, _tcv = this commit) in a
-            # sibling attempt dir; _tcv is a stored column so the read
-            # side never needs a second input_file_name derivation
-            kdf = keys.select(*key_cols).distinct().withColumn(
-                "_tcv", F.lit(v + 1).cast("long")
-            )
-            tomb_files, tomb_rel = self._write_files(kdf, m, v + 1)
-            files = {k: list(ps) for k, ps in m["files"].items()}
-            for k, ps in new_files.items():
-                files.setdefault(k, []).extend(ps)
-            tombs = {k: list(ps) for k, ps in m.get("tombstones", {}).items()}
-            for k, ps in tomb_files.items():
-                tombs.setdefault(k, []).extend(ps)
+            staged = self.stage_write(rows, tombstone_keys=keys)
             try:
-                return self._commit_next(
-                    m, v, "delete_insert", files, new_files, summary,
-                    tombstones=tombs,
-                )
+                return self.commit_staged(staged, "delete_insert", summary=summary)
             except CommitConflict:
-                self._drop_attempt(commit_rel)
-                self._drop_attempt(tomb_rel)
                 continue
 
     def compact_tombstones(self) -> int:
@@ -982,9 +950,12 @@ class LakeTable:
         )
         return len(fat)
 
-    def stage_write(self, df: DataFrame) -> dict:
-        """Run ONLY the heavy data-file write job of an append /
-        upsert_delta now; publish later with :meth:`commit_staged`.
+    def stage_write(
+        self, df: DataFrame | None, tombstone_keys: DataFrame | None = None
+    ) -> dict:
+        """Run ONLY the heavy data-file write jobs of an append /
+        upsert_delta / delete_insert now; publish later with
+        :meth:`commit_staged`.
 
         Lets a caller overlap two independent tables' write jobs on the
         executors while still COMMITTING in a required order (the
@@ -992,48 +963,90 @@ class LakeTable:
         crash-replay invariant — but has no reason to serialize the two
         multi-second writes). The staged files are invisible until
         commit; a crash in between leaves an orphan attempt dir only.
+
+        ``tombstone_keys`` (plain bucketed tables without key blooms)
+        also writes equality-delete tombstone files for those keys,
+        stamped with the staged commit version (``_tcv``, a stored
+        column so the read side never needs a second input_file_name
+        derivation); publish them with ``op="delete_insert"``.
+        ``df=None`` stages tombstones only, so a caller can write them
+        while it still computes the data rows.
         """
         v = self.version()
         m = self.snapshot(v)
-        new_files, commit_rel = self._write_files(
-            self._schema_aligned(df, m), m, v + 1
-        )
-        return {
-            "base_version": v,
-            "new_files": new_files,
-            "commit_rel": commit_rel,
+        staged = {
+            "base_version": v, "new_files": {}, "commit_rel": None,
+            "tomb_files": {}, "tomb_rel": None,
         }
-
-    def commit_staged(self, staged: dict, op: str, summary: dict | None = None) -> int:
-        """Publish a :meth:`stage_write` result as an ``append`` or
-        ``upsert_delta`` commit. Raises :class:`CommitConflict` (after
-        removing the attempt dir) if the table moved past the staged
-        base version — the caller falls back to the regular write path.
-        No silent retry here: the staged file paths embed the guessed
-        commit version, which the MOR last-wins merge orders by, so
-        re-targeting them at a different version would corrupt delta
-        ordering."""
-        v, new_files = staged["base_version"], staged["new_files"]
-        try:
-            m = self.snapshot(v)
-            if self.version() != v:
-                raise CommitConflict(f"table moved past staged version {v}")
-            if op == "append":
-                files = {k: list(ps) for k, ps in m["files"].items()}
-                for k, ps in new_files.items():
-                    files.setdefault(k, []).extend(ps)
-                return self._commit_next(m, v, "append", files, new_files, summary)
-            if op == "upsert_delta":
-                deltas = {k: list(ps) for k, ps in m.get("deltas", {}).items()}
-                for k, ps in new_files.items():
-                    deltas.setdefault(k, []).extend(ps)
-                return self._commit_next(
-                    m, v, "upsert_delta", dict(m["files"]), new_files, summary,
-                    deltas=deltas,
+        if tombstone_keys is not None:
+            if m["num_buckets"] is None or m.get("partition_col"):
+                raise ValueError(
+                    "delete_keys_insert requires a plain bucketed table"
                 )
-            raise ValueError(f"unsupported staged op {op!r}")
+            if m.get("properties", {}).get("key_bloom"):
+                raise ValueError(
+                    "delete_keys_insert is not supported on key_bloom "
+                    "tables (deletes break segment completeness)"
+                )
+        if df is not None:
+            staged["new_files"], staged["commit_rel"] = self._write_files(
+                self._schema_aligned(df, m), m, v + 1
+            )
+        if tombstone_keys is not None:
+            kdf = tombstone_keys.select(*m["bucket_cols"]).distinct().withColumn(
+                "_tcv", F.lit(v + 1).cast("long")
+            )
+            staged["tomb_files"], staged["tomb_rel"] = self._write_files(
+                kdf, m, v + 1
+            )
+        return staged
+
+    def commit_staged(
+        self, staged: dict | list[dict], op: str, summary: dict | None = None
+    ) -> int:
+        """Publish :meth:`stage_write` results as ONE ``append``,
+        ``upsert_delta`` or ``delete_insert`` commit (the last adds the
+        staged data files AND tombstones atomically; rows written in the
+        tombstone's own commit survive it). A list of staged parts — all
+        staged at the same base version — commits as one. Raises
+        :class:`CommitConflict` (after removing the attempt dirs) if the
+        table moved past the staged base version — the caller falls back
+        to the regular write path. No silent retry here: the staged file
+        paths embed the guessed commit version, which the MOR last-wins
+        merge and the tombstone resolution order by, so re-targeting
+        them at a different version would corrupt both."""
+        parts = staged if isinstance(staged, list) else [staged]
+        v = parts[0]["base_version"]
+        new_files = tomb_files = {}
+        for p in parts:
+            new_files = _extended(new_files, p["new_files"])
+            tomb_files = _extended(tomb_files, p["tomb_files"])
+        try:
+            if self.version() != v or any(p["base_version"] != v for p in parts):
+                raise CommitConflict(f"table moved past staged version {v}")
+            if op not in ("append", "upsert_delta", "delete_insert"):
+                raise ValueError(f"unsupported staged op {op!r}")
+            m = self.snapshot(v)
+            if op == "upsert_delta":
+                files = dict(m["files"])
+                deltas = _extended(m.get("deltas", {}), new_files)
+            else:
+                files = _extended(m["files"], new_files)
+                deltas = None
+            tombs = (
+                _extended(m.get("tombstones", {}), tomb_files)
+                if op == "delete_insert"
+                else None
+            )
+            return self._commit_next(
+                m, v, op, files, new_files, summary, deltas=deltas,
+                tombstones=tombs,
+            )
         except CommitConflict:
-            self._drop_attempt(staged["commit_rel"])
+            for p in parts:
+                for rel in (p["commit_rel"], p["tomb_rel"]):
+                    if rel:
+                        self._drop_attempt(rel)
             raise
 
     def compact_deltas(self, max_delta_files: int = 8) -> int:

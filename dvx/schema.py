@@ -22,6 +22,7 @@ derived, never wall clock, so replays byte-match (SURVEY.md §7.3).
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
@@ -35,6 +36,8 @@ from pyspark.sql.types import (
 )
 
 from dvx.lake import LakeTable
+
+log = logging.getLogger(__name__)
 
 RECORD_SOURCE = "transcripts.changelog"
 
@@ -272,10 +275,14 @@ class Vault:
         (RawVaultSchema.createAllTables pattern). Also warms the engine
         (dvx.session.warm_start, once per session): vault creation is
         the natural pre-ingest setup point, so the first micro-batch
-        does not pay Python-worker fork + codegen cold-start."""
+        does not pay Python-worker fork + codegen cold-start. The
+        warm-up is best-effort: its failure is logged, never raised."""
         from dvx.session import warm_start
 
-        warm_start(self.spark)
+        try:
+            warm_start(self.spark)
+        except Exception as e:
+            log.warning("warm_start failed, continuing without warm-up: %r", e)
         for name, spec in self.tables.items():
             kwargs: dict = {}
             if "bucket_cols" in spec:

@@ -86,7 +86,6 @@ def warm_start(spark: SparkSession) -> None:
     key = spark.sparkContext.applicationId
     if key in _WARMED:
         return
-    _WARMED.add(key)
     import shutil
     import tempfile
 
@@ -143,6 +142,8 @@ def warm_start(spark: SparkSession) -> None:
         )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+    # marked only after the job succeeded: a failed warm-up is retried
+    _WARMED.add(key)
 
 
 def get_spark(

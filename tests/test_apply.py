@@ -408,3 +408,62 @@ def test_straggler_rechains_only_its_key(spark, tmp_path):
         for r in vault.sat_all().filter("text LIKE 'b %'").collect()
     )
     assert hist_b_after == hist_b_before
+
+
+@pytest.fixture(scope="module")
+def oneshot_vault(spark, tmp_path_factory, changelog):
+    """The whole changelog applied as ONE batch: the history oracle."""
+    v = Vault(spark, str(tmp_path_factory.mktemp("oneshot") / "wh"), num_buckets=4)
+    v.create_all_tables()
+    apply_batch(v, changelog)
+    return v
+
+
+@pytest.mark.parametrize("stale", [False, True], ids=["in_order", "stale"])
+def test_crash_between_history_and_current_commit_converges(
+    spark, tmp_path, changelog, oneshot_vault, monkeypatch, stale
+):
+    """Crash after the satellite's history commit, before its current
+    delta commit; re-running the same epoch converges to the one-shot
+    state with no duplicated history version."""
+    from dvx.lake import LakeTable
+    from dvx.validate import validate_vault
+
+    early, late = split_batches(changelog, 2)
+    first, second = (late, early) if stale else (early, late)
+    vault = make_vault(spark, tmp_path)
+    apply_batch(vault, first, epoch_id=0)
+
+    commit_staged = LakeTable.commit_staged
+    armed = {"on": True}
+
+    def crash_on_current(self, staged, op, summary=None):
+        if op == "upsert_delta" and armed["on"]:
+            armed["on"] = False
+            raise RuntimeError("injected crash before the current delta commit")
+        return commit_staged(self, staged, op, summary=summary)
+
+    monkeypatch.setattr(LakeTable, "commit_staged", crash_on_current)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        apply_batch(vault, second, epoch_id=1)
+    hist = vault.sat_turn_text_hist
+    assert hist.last_epoch("default") == 1
+    assert vault.sat_turn_text.last_epoch("default") == 0
+    # the history side landed as ONE commit of the expected shape
+    assert hist.history()[-1]["operation"] == (
+        "delete_insert" if stale else "append"
+    )
+    assert hist.history()[-2]["summary"]["epochs"]["default"] == 0
+
+    apply_batch(vault, second, epoch_id=1)
+    assert vault.sat_turn_text.last_epoch("default") == 1
+    assert_frames_equal(current_state(vault), oracle_state(changelog))
+    assert_frames_equal(full_history(vault), full_history(oneshot_vault))
+    assert validate_vault(vault)["exit_code"] == 0
+    dup = (
+        vault.sat_all()
+        .groupBy("turn_hash_key", "valid_from", "src_seq")
+        .count()
+        .filter("count > 1")
+    )
+    assert dup.count() == 0

@@ -171,35 +171,79 @@ def test_delete_with_mor_deltas_coexists(spark, tmp_path):
     assert got == [("a", 2), ("b", 9)]
 
 
-def test_stale_rechain_uses_eq_delete_and_drain_folds(spark, tmp_path, monkeypatch):
-    """End-to-end: an out-of-order redelivery splices history via
-    delete_keys_insert (no bucket rewrite commit), and the stream drain
-    folds the tombstones; final state equals the bucket-rewrite path."""
+def test_staged_tombstones_and_rows_commit_as_one(spark, tbl):
+    """Tombstones staged apart from the data rows (the satellite writes
+    them while it still computes the rows) publish as ONE delete_insert
+    commit, equal to delete_keys_insert; a part staged before the table
+    moved makes the commit conflict and removes every attempt dir."""
+    import os
+
+    from dvx.lake import CommitConflict
+
+    v = tbl.version()
+    tombs = tbl.stage_write(None, tombstone_keys=_keys(spark, ["a", "b"]))
+    rows = tbl.stage_write(_rows(spark, [("a", 10), ("b", 10)]))
+    assert tbl.commit_staged([tombs, rows], "delete_insert") == v + 1
+    assert tbl.history()[-1]["operation"] == "delete_insert"
+    assert [r for r in _contents(tbl) if r[0] in ("a", "b")] == [
+        ("a", 10, "p-a-10"), ("b", 10, "p-b-10"),
+    ]
+
+    stale = tbl.stage_write(None, tombstone_keys=_keys(spark, ["c"]))
+    tbl.append(_rows(spark, [("e", 1)]))  # another writer moves the table
+    fresh = tbl.stage_write(_rows(spark, [("c", 10)]))
+    with pytest.raises(CommitConflict):
+        tbl.commit_staged([stale, fresh], "delete_insert")
+    for rel in (stale["tomb_rel"], fresh["commit_rel"]):
+        assert not os.path.exists(os.path.join(tbl.root, rel))
+    assert ("c", 1, "p-c-1") in _contents(tbl)
+
+
+def test_stale_rechain_uses_eq_delete_and_drain_folds(spark, tmp_path):
+    """End-to-end: an out-of-order redelivery splices history in ONE
+    delete_insert commit per stale epoch (the stale keys' tombstones,
+    their re-chained versions and the in-order keys' displaced rows
+    together), the stream drain folds the tombstones, and current state
+    and full history equal the one-shot oracle."""
+    from test_apply import (
+        assert_frames_equal,
+        current_state,
+        full_history,
+        oracle_state,
+    )
+
+    from dvx.apply import apply_batch
     from dvx.changelog import synthetic_changelog
     from dvx.schema import Vault
     from dvx.stream import run_stream, write_changelog_files
 
-    def build(root, eq):
-        monkeypatch.setenv("DVX_HIST_EQ_DELETE", "1" if eq else "0")
-        v = Vault(spark, str(root), num_buckets=8)
-        v.create_all_tables()
-        # negate seq: batches are seq-ranged, so updates/deletes (large
-        # original seq) land in batch 1 and the original inserts in
-        # batch 2 with OLDER (ts, seq) — the stale re-chain path fires.
-        # Both arms replay the identical (negated) stream.
-        cl = synthetic_changelog(spark, n_convs=40, seed=7)
-        cdir = str(root) + "_cl"
-        write_changelog_files(cl.withColumn("seq", -F.col("seq")), cdir, 2)
-        run_stream(v, cdir, str(root) + "_ck", log_lineage=False)
-        return v
+    # negate seq: batches are seq-ranged, so updates/deletes (large
+    # original seq) land in batch 1 and the original inserts in batch 2
+    # with OLDER (ts, seq) — the stale re-chain path fires in epoch 1
+    cl = synthetic_changelog(spark, n_convs=40, seed=7).withColumn(
+        "seq", -F.col("seq")
+    ).persist()
+    root = tmp_path / "w"
+    v = Vault(spark, str(root), num_buckets=8)
+    v.create_all_tables()
+    write_changelog_files(cl, str(root) + "_cl", 2)
+    run_stream(v, str(root) + "_cl", str(root) + "_ck", log_lineage=False)
 
-    va = build(tmp_path / "wa", eq=True)
-    vb = build(tmp_path / "wb", eq=False)
-    for name in ("sat_turn_text", "sat_turn_text_hist"):
-        a = sorted(map(tuple, va.table(name).read().collect()))
-        b = sorted(map(tuple, vb.table(name).read().collect()))
-        assert a == b, name
+    hist = v.table("sat_turn_text_hist")
+    by_epoch: dict[int, list[str]] = {}
+    for h in hist.history()[1:]:  # skip the create commit
+        if h["summary"].get("compacted_tombstone_buckets"):
+            continue  # the drain fold
+        by_epoch.setdefault(h["summary"]["epochs"]["default"], []).append(
+            h["operation"]
+        )
+    assert by_epoch == {0: ["append"], 1: ["delete_insert"]}
     # drain folded every tombstone
-    assert not any(
-        va.table("sat_turn_text_hist").snapshot()["tombstones"].values()
-    )
+    assert not any(hist.snapshot()["tombstones"].values())
+
+    oracle = Vault(spark, str(tmp_path / "oracle"), num_buckets=8)
+    oracle.create_all_tables()
+    apply_batch(oracle, cl)
+    assert_frames_equal(current_state(v), oracle_state(cl))
+    assert_frames_equal(full_history(v), full_history(oracle))
+    cl.unpersist()
