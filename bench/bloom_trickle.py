@@ -12,13 +12,14 @@ most buckets report hits=0 and their existence read is skipped
 entirely (read IO O(possibly-present buckets), the dvx.bloom design
 note's asymptote).
 
-Protocol: seed two IDENTICAL bloom-enabled key tables with SEED_KEYS
-keys, then apply BATCHES trickle batches of BATCH_KEYS brand-new keys
-each — one table inserted with the bloom prune (its fused scan passed
-in), the twin with DVX_KEY_BLOOM=0 semantics (scan=None, plain
-existence read of every touched bucket). Arms alternate order each
-batch, same session/window. Reports per batch: wall per arm, buckets
-read by the bloom arm (possible-hit count) vs total.
+Protocol: seed two key tables with the same SEED_KEYS keys — one
+created with the ``key_bloom`` property, its twin without it — then
+apply BATCHES trickle batches of BATCH_KEYS brand-new keys each: the
+bloom table inserts with the bloom prune (its fused scan passed in),
+the plain table with the plain existence read of every touched
+bucket. Arms alternate order each batch, same session/window. Reports
+per batch: wall per arm, buckets read by the bloom arm (possible-hit
+count) vs total.
 
 Usage: python bench/bloom_trickle.py [seed_keys] [batch_keys] [batches] [buckets]
 Prints one JSON line; exit code 0.
@@ -71,20 +72,21 @@ def main() -> None:
         tbls = {}
         for arm in ("bloom", "plain"):
             path = os.path.join(tmp, arm)
-            LakeTable.create(
+            tbls[arm] = LakeTable.create(
                 spark,
                 path,
                 schema,
                 num_buckets=buckets,
                 bucket_cols=["k"],
-                properties={"key_bloom": True},
+                properties={"key_bloom": arm == "bloom"},
             )
-            tbls[arm] = LakeTable(spark, path)
-            # identical seed on both tables, segments built on both
-            # (the plain arm's STATE is bloom-complete too — only its
-            # insert-time READ path differs below)
+            # identical seed rows on both tables; only the bloom table
+            # builds segments (its fused scan is passed in)
             seed_src = keys_df(0, seed_keys)
-            scan = _bloom_scan(seed_src, [("t", tbls[arm], "k")])["t"]
+            scan = (
+                _bloom_scan(seed_src, [("t", tbls[arm], "k")])["t"]
+                if arm == "bloom" else None
+            )
             _insert_new_keys(
                 tbls[arm], seed_src, "k", ["k", "payload"], None, "s", None,
                 scan=scan,
@@ -107,19 +109,10 @@ def main() -> None:
                         None, scan=scan,
                     )
                 else:
-                    # plain existence read: every touched bucket
-                    prior = os.environ.get("DVX_KEY_BLOOM")
-                    os.environ["DVX_KEY_BLOOM"] = "0"
-                    try:
-                        _insert_new_keys(
-                            tbls[arm], src, "k", ["k", "payload"], None,
-                            "s", None,
-                        )
-                    finally:
-                        if prior is None:
-                            os.environ.pop("DVX_KEY_BLOOM", None)
-                        else:
-                            os.environ["DVX_KEY_BLOOM"] = prior
+                    # no key_bloom: plain existence read of every touched bucket
+                    _insert_new_keys(
+                        tbls[arm], src, "k", ["k", "payload"], None, "s", None,
+                    )
                 row[f"{arm}_wall_s"] = round(time.time() - t0, 3)
             results.append(row)
 

@@ -89,7 +89,6 @@ def main(argv: list[str] | None = None) -> int:
             cfg.checkpoint_dir or cfg.warehouse + "_ckpt",
             stream_id=cfg.stream_id,
             max_files_per_trigger=cfg.max_files_per_trigger,
-            salt_buckets=cfg.salt_buckets,
             log_lineage=cfg.log_lineage,
             pit_dates=cfg.pit_dates or None,
         )

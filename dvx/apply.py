@@ -59,6 +59,10 @@ from dvx.schema import CHANGELOG_SCHEMA, RECORD_SOURCE, Vault
 
 _ENVELOPE = {f.name for f in CHANGELOG_SCHEMA.fields}
 
+#: a satellite's current table folds a bucket's merge-on-read deltas
+#: back into its base once the bucket holds this many delta files
+SAT_DELTA_COMPACT = 8
+
 
 def descriptive_cols_of(df: DataFrame) -> list[str]:
     """Additive-evolution extras present in the batch (the reference's
@@ -227,15 +231,12 @@ def _insert_new_keys(
     (almost) no existing data — and the scan's per-bucket segments ride
     along into the append commit, keeping coverage complete.
     ``scan`` is the table's slice of apply_batch's fused
-    :func:`_bloom_scan` (standalone callers compute their own); disable
-    wholesale with DVX_KEY_BLOOM=0 (A/B lever)."""
+    :func:`_bloom_scan` (standalone callers compute their own)."""
     if epoch_id is not None and tbl.last_epoch(stream_id) >= epoch_id:
         return
     others = [c for c in select_cols if c != key]
     src_b = tbl.with_bucket(src)
-    if scan is None and (
-        os.environ.get("DVX_KEY_BLOOM", "1") != "0" and tbl.bloom_enabled()
-    ):
+    if scan is None and tbl.bloom_enabled():
         scan = _bloom_scan(src, [("t", tbl, key)])["t"]
     if touched is None:
         touched = sorted(scan) if scan is not None else sorted(
@@ -319,19 +320,11 @@ def _apply_satellite(
     stored state ∪ batch that the spliced history reproduces.
     """
     import shutil as _shutil
-    import time as _time
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark.sql.window import Window
 
     from dvx.lake import CommitConflict
-
-    _prof = os.environ.get("DVX_PROFILE_SAT") == "1"
-    _marks: list[tuple[str, float]] = [("start", _time.time())]
-
-    def _mark(label: str) -> None:
-        if _prof:
-            _marks.append((label, _time.time()))
 
     key = spec.parent_key
     cur_tbl = vault.table(spec.name)
@@ -368,7 +361,6 @@ def _apply_satellite(
     try:
         if touched is None:
             touched = sorted(r[0] for r in src.select(BUCKET_COL).distinct().collect())
-        _mark("touched_collect")
         if not touched:
             return
 
@@ -453,7 +445,6 @@ def _apply_satellite(
         decisions.write.mode("overwrite").option(
             "compression", "snappy"
         ).partitionBy("_sb").parquet(spill_j)
-        _mark("spill_decisions")
         # explicit schema: the spill's shape is known, so the re-read
         # skips the per-batch driver-side footer/partition inference job
         decisions = vault.spark.read.schema(dec_schema).parquet(spill_j)
@@ -636,7 +627,6 @@ def _apply_satellite(
 
         if f_rechain is not None:
             re_sat = f_rechain.result()
-            _mark("rechain_spill")
             hist_rows = hist_rows.unionByName(
                 re_sat.filter(F.col("valid_to").isNotNull())
             )
@@ -666,25 +656,15 @@ def _apply_satellite(
                 staged = [f_tombs.result(), staged]
             try:
                 tbl.commit_staged(staged, op, summary=summary)
-            except CommitConflict:  # an external writer moved the table
-                if op == "upsert_delta":
-                    tbl.upsert_delta(frame, summary=summary)
-                elif op == "delete_insert":
-                    tbl.delete_keys_insert(stale_keys, frame, summary=summary)
-                else:
-                    tbl.append(frame, summary=summary)
-            _mark(f"commit_{op}")
+            except CommitConflict:  # an external writer moved the table:
+                # the same write, staged again at its new base
+                keys = stale_keys if op == "delete_insert" else None
+                tbl.write(op, frame, keys, summary=summary)
         if do_cur:
             # current is written as merge-on-read deltas (O(changed rows)
-            # per batch); folding a bucket every DVX_SAT_DELTA_COMPACT
-            # delta commits keeps its amortized rewrite O(bucket/threshold)
-            cur_tbl.compact_deltas(
-                int(os.environ.get("DVX_SAT_DELTA_COMPACT", "8"))
-            )
-            _mark("compact_deltas")
-        if _prof:
-            deltas = {b: round(tb - ta, 2) for (_, ta), (b, tb) in zip(_marks, _marks[1:])}
-            print(f"DVX_PROFILE_SAT {spec.name} {deltas}", flush=True)
+            # per batch); folding a bucket every SAT_DELTA_COMPACT delta
+            # commits keeps its amortized rewrite O(bucket/threshold)
+            cur_tbl.compact_deltas(SAT_DELTA_COMPACT)
     finally:
         ex.shutdown(wait=True)  # no helper job may still read a spill
         for d in (spill_j, spill_r):
@@ -697,7 +677,6 @@ def apply_batch(
     batch: DataFrame,
     epoch_id: int | None = None,
     stream_id: str = "default",
-    salt_buckets: int = 32,
     collect_metrics: bool = False,
     pit_dates: list[str] | None = None,
 ) -> dict:
@@ -726,21 +705,8 @@ def apply_batch(
 
     from dvx.evolve import evolve_for_batch
 
-    import time as _time
-
-    _prof = os.environ.get("DVX_PROFILE_BATCH") == "1"
-    _t0 = _time.time()
-    _pts: dict[str, float] = {}
-
-    def _pmark(label: str) -> None:
-        nonlocal _t0
-        if _prof:
-            _pts[label] = round(_time.time() - _t0, 2)
-            _t0 = _time.time()
-
     registry = vault.registry
     desc_extras = evolve_for_batch(vault, batch)
-    _pmark("evolve")
     # snappy spills even on tmpfs scratch: transcript text compresses 3-4x,
     # and tmpfs "IO" is kernel memcpy, so fewer bytes = less sys-CPU (16c
     # A/B 2026-08-17: prepare stage 27.2s -> 17.4s, kernel CPU 128 -> 12s)
@@ -748,7 +714,6 @@ def apply_batch(
     pre = prepare_batch(batch, registry)
     pre.write.mode("overwrite").option("compression", "snappy").parquet(spill)
     prepared = vault.spark.read.schema(pre.schema).parquet(spill)
-    _pmark("prepare_spill")
     try:
         summary = {"epochs": {stream_id: epoch_id}} if epoch_id is not None else None
 
@@ -764,10 +729,7 @@ def apply_batch(
         ] + [
             (l.name, vault.table(l.name), l.hash_key) for l in registry.links
         ]
-        use_bloom = os.environ.get("DVX_KEY_BLOOM", "1") != "0"
-        bloomed = [
-            (nm, t, k) for nm, t, k in scan_specs if use_bloom and t.bloom_enabled()
-        ]
+        bloomed = [(nm, t, k) for nm, t, k in scan_specs if t.bloom_enabled()]
 
         audit = ["load_date", "record_source"]
         tasks = []
@@ -802,21 +764,18 @@ def apply_batch(
         # that only the hub/link inserts consume (guide §2.6 overlap).
         sc = vault.spark.sparkContext
 
-        def _pooled(pool: str, label: str, fn, *args):
+        def _pooled(pool: str, fn, *args):
             sc.setLocalProperty("spark.scheduler.pool", pool)
-            _tt0 = _time.time()
             try:
                 return fn(*args)
             finally:
-                if _prof:  # per-task walls (overlapping — attribution only)
-                    _pts[f"t_{label}"] = round(_time.time() - _tt0, 2)
                 sc.setLocalProperty("spark.scheduler.pool", None)
 
         n_workers = 2 + len(tasks) + len(registry.satellites)
         with ThreadPoolExecutor(max_workers=n_workers) as ex:
             fut_scan = (
-                ex.submit(_pooled, "dvx_merge_scan", "scan", _bloom_scan,
-                          prepared, bloomed)
+                ex.submit(_pooled, "dvx_merge_scan", _bloom_scan, prepared,
+                          bloomed)
                 if bloomed
                 else None
             )
@@ -824,8 +783,7 @@ def apply_batch(
                 # the counts job GATES the satellite start — run it
                 # in the weighted critical pool so it never queues
                 # behind the scan/hub stages
-                ex.submit(_pooled, "dvx_critical", "counts",
-                          _count_buckets)
+                ex.submit(_pooled, "dvx_critical", _count_buckets)
                 if first_sat is not None
                 else None
             )
@@ -859,14 +817,13 @@ def apply_batch(
                 # batch: the weighted `dvx_critical` pool (dvx.session
                 # _alloc_file) gives them most task slots; hub/link/
                 # scan backfill (guide §2.6)
-                ex.submit(_pooled, "dvx_critical", s.name, _run_sat, s)
+                ex.submit(_pooled, "dvx_critical", _run_sat, s)
                 for s in registry.satellites
             ]
             futs += [
                 ex.submit(
                     _pooled, f"dvx_merge_{os.path.basename(tbl.root)}",
-                    os.path.basename(tbl.root), _run_key_table,
-                    tbl, nm, key, cols
+                    _run_key_table, tbl, nm, key, cols
                 )
                 for tbl, nm, key, cols in tasks
             ]
@@ -877,7 +834,6 @@ def apply_batch(
                 n = sum(c for _, c in bucket_counts)
             else:
                 n = prepared.count()
-        _pmark("merges")
         if pit_dates:
             # maintain PIT snapshots incrementally while the prepared batch
             # (with its already-computed hash keys) is still spilled — no
@@ -896,10 +852,6 @@ def apply_batch(
             touched_keys = prepared.select(pit_sats[0].parent_key).distinct()
             for d in pit_dates:
                 build_pit_incremental(vault, d, touched_keys)
-        if pit_dates:
-            _pmark("pit_incr")
-        if _prof:
-            print(f"DVX_PROFILE_BATCH {_pts}", flush=True)
         return {"events": n, "extras": desc_extras, "bucket_counts": bucket_counts}
     finally:
         _shutil.rmtree(spill, ignore_errors=True)

@@ -22,7 +22,6 @@ class DvxConfig:
     checkpoint_dir: str = ""
     master: str = ""  # "" -> dvx.session default (local[$SPARK_GRAFT_CPUS])
     num_buckets: int = 16
-    salt_buckets: int = 32
     max_files_per_trigger: int = 1
     shuffle_partitions: int = 0  # 0 -> derived from master
     pit_dates: list[str] = field(default_factory=list)

@@ -14,10 +14,12 @@ hash key, :211-221 diff hash, rationale :98-109):
 
 Two implementations, bit-identical (unit-tested against each other):
 
-- :func:`hash_expr` — native Column expression (JVM, whole-stage codegen).
-- :func:`hash_expr_udf` — the normalization stays native, the MD5 digest
-  runs in a vectorized Arrow pandas UDF (BASELINE.json north_star mandates
-  pandas/Arrow UDFs for the hash computation; no per-row Python UDFs).
+- :func:`hash_expr` — native Column expression (JVM, whole-stage codegen),
+  the reference used by gold and the tests.
+- :func:`registry_hashes` — the ingest hot path: the normalization stays
+  native, every MD5 digest of a registry runs in ONE vectorized Arrow
+  pandas UDF (BASELINE.json north_star mandates pandas/Arrow UDFs for
+  the hash computation; no per-row Python UDFs).
 
 Link hash keys follow RawVaultETL.scala:477-490: MD5 over the
 concatenation of the parent hash keys (joined with ``~`` like any other
@@ -52,96 +54,6 @@ def hash_expr(*cols: Column | str) -> Column:
     return F.md5(normalized_concat(*cols))
 
 
-@F.pandas_udf(StringType())
-def md5_udf(s: pd.Series) -> pd.Series:
-    """Vectorized MD5 hex digest over an Arrow batch of strings."""
-    return s.map(
-        lambda x: None if x is None else hashlib.md5(x.encode("utf-8")).hexdigest()
-    )
-
-
-def hash_expr_udf(*cols: Column | str) -> Column:
-    """pandas-UDF MD5 over the same normalized concat (bit-identical to
-    :func:`hash_expr`; Arrow-vectorized, never row-at-a-time Python)."""
-    return md5_udf(normalized_concat(*cols))
-
-
-_TURN_KEYS_TYPE = StructType(
-    [
-        StructField("conv_hash_key", StringType()),
-        StructField("turn_hash_key", StringType()),
-        StructField("link_hash_key", StringType()),
-    ]
-)
-
-
-@F.pandas_udf(_TURN_KEYS_TYPE)
-def _turn_keys_udf(n_conv: pd.Series, n_turn: pd.Series) -> pd.DataFrame:
-    """All three business-key hashes in ONE Arrow pass.
-
-    Semantically identical to three hash_expr_udf calls, but the link
-    hash depends on the other two hash strings, which as separate UDFs
-    forces two sequential ArrowEvalPython stages; fused here it is a
-    single Python round trip per batch."""
-    md5 = lambda x: hashlib.md5(x.encode("utf-8")).hexdigest()  # noqa: E731
-    conv_h = n_conv.map(md5)
-    turn_h = (n_conv + DELIMITER + n_turn).map(md5)
-    link_h = (conv_h.str.upper() + DELIMITER + turn_h.str.upper()).map(md5)
-    return pd.DataFrame(
-        {"conv_hash_key": conv_h, "turn_hash_key": turn_h, "link_hash_key": link_h}
-    )
-
-
-def turn_key_hashes(conv_col: str = "conv_id", turn_col: str = "turn_idx") -> Column:
-    """Struct column (conv_hash_key, turn_hash_key, link_hash_key);
-    link hash per RawVaultETL.scala:477-490 (MD5 over parent hash keys,
-    which the ~NULL~/upper/trim normalization upper-cases)."""
-    return _turn_keys_udf(_normalized(conv_col), _normalized(turn_col))
-
-
-_TURN_ALL_TYPE = StructType(
-    [
-        StructField("conv_hash_key", StringType()),
-        StructField("turn_hash_key", StringType()),
-        StructField("link_hash_key", StringType()),
-        StructField("hash_diff", StringType()),
-    ]
-)
-
-
-@F.pandas_udf(_TURN_ALL_TYPE)
-def _turn_all_udf(
-    n_conv: pd.Series, n_turn: pd.Series, n_diff: pd.Series
-) -> pd.DataFrame:
-    """Every hash a changelog row needs in ONE Arrow pass: the three
-    business keys plus the descriptive hash-diff. Two ArrowEvalPython
-    stages (keys, then diff) fuse into a single Python round trip —
-    the normalized diff concat still comes in pre-built from the JVM."""
-    md5 = lambda x: hashlib.md5(x.encode("utf-8")).hexdigest()  # noqa: E731
-    conv_h = n_conv.map(md5)
-    turn_h = (n_conv + DELIMITER + n_turn).map(md5)
-    link_h = (conv_h.str.upper() + DELIMITER + turn_h.str.upper()).map(md5)
-    return pd.DataFrame(
-        {
-            "conv_hash_key": conv_h,
-            "turn_hash_key": turn_h,
-            "link_hash_key": link_h,
-            "hash_diff": n_diff.map(md5),
-        }
-    )
-
-
-def turn_all_hashes(
-    conv_col: str, turn_col: str, diff_cols: list[Column | str]
-) -> Column:
-    """Struct (conv_hash_key, turn_hash_key, link_hash_key, hash_diff) —
-    the fully-fused hot-path variant of :func:`turn_key_hashes` +
-    :func:`hash_expr_udf` (bit-identical outputs)."""
-    return _turn_all_udf(
-        _normalized(conv_col), _normalized(turn_col), normalized_concat(*diff_cols)
-    )
-
-
 #: registry-shaped fused UDFs, cached by their output signature so a
 #: streaming job registers one UDF per registry, not one per micro-batch
 _FUSED_CACHE: dict[tuple, object] = {}
@@ -149,9 +61,9 @@ _FUSED_CACHE: dict[tuple, object] = {}
 
 def registry_hashes(registry, sat_diff_cols: dict[str, list]) -> Column:
     """Every hash a changelog row needs for an entity registry, in ONE
-    Arrow pass (the generalized :func:`turn_all_hashes`): one business
-    key per hub, one link key per link (md5 over the upper-cased parent
-    hashes computed in-pass), one hash-diff per satellite.
+    Arrow pass: one business key per hub, one link key per link (md5
+    over the upper-cased parent hashes computed in-pass), one hash-diff
+    per satellite.
 
     ``sat_diff_cols`` maps satellite name -> the diff's input columns
     (attrs + dynamic extras + is_deleted), resolved per batch by the

@@ -34,6 +34,20 @@ atomic via ``os.link`` (fails if the target version already exists →
 optimistic-concurrency retry), mirroring Iceberg's atomic
 metadata-pointer swap which is likewise driver-side.
 
+Writes
+------
+Every data write is one sequence run by one retry loop
+(``LakeTable._write``): stage the attempt's files for base version v,
+publish them with ONE :meth:`LakeTable.commit_staged`, and on
+``CommitConflict`` drop the attempt and stage again from the new base
+(a frame read from the table itself is re-read there). A commit names
+the manifest keys it ``replace``s; they lose their files, deltas and
+tombstones: the written buckets of ``replace_buckets`` and of a plain
+overwrite, every key of a written partition value on composite tables,
+every key of an unpartitioned overwrite, and the folded keys of a
+compaction. Staged data joins ``files`` (``deltas`` for
+``upsert_delta``) and staged tombstones join ``tombstones``.
+
 Object-store note (what changes off POSIX): ``os.link`` atomicity maps
 to a conditional PUT (S3 ``If-None-Match: *``, GCS ``ifGenerationMatch=
 0``) or a commit mutex in a transactional KV (the Delta/S3 LogStore and
@@ -77,6 +91,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 
@@ -94,6 +109,18 @@ _CHECKPOINT_EVERY = 16
 #: resolved-manifest memo, keyed (table_root, version). Manifests are
 #: immutable once committed, so entries never go stale.
 _SNAP_CACHE: dict[tuple[str, int], dict] = {}
+
+#: the per-key maps every snapshot carries: data files, merge-on-read
+#: delta files, key bloom segments, equality-delete tombstone files
+_MAPS = ("files", "deltas", "blooms", "tombstones")
+
+#: the manifest operations a data write commits as
+_OPS = ("append", "upsert_delta", "delete_insert", "overwrite_partitions",
+        "merge", "compact")
+
+#: a direct append() builds bloom segments driver-side only for buckets
+#: of at most this many new rows (see _segments_from_written)
+_BLOOM_FALLBACK_MAX_ROWS = 2_000_000
 
 __all__ = ["LakeTable", "BUCKET_COL", "CommitConflict"]
 
@@ -116,12 +143,54 @@ def _bucket_of(k: str, composite: bool) -> str:
     return k.split("|", 1)[1] if composite else k
 
 
-def _extended(base: dict, add: dict) -> dict:
-    """Copy of a ``{key: [paths]}`` map with ``add``'s paths appended."""
-    out = {k: list(ps) for k, ps in base.items()}
-    for k, ps in add.items():
-        out.setdefault(k, []).extend(ps)
-    return out
+def _next_maps(m: dict, op: str, parts: list[dict], replace: set) -> dict:
+    """The next snapshot's four manifest maps: the one place they are
+    derived. ``replace``d keys lose their files, deltas and tombstones;
+    staged data joins ``files`` (``deltas`` for ``upsert_delta``);
+    staged tombstones join ``tombstones``; blooms follow the rules
+    below."""
+    nxt = {
+        name: {
+            k: list(ps) for k, ps in m[name].items()
+            if name == "blooms" or k not in replace
+        }
+        for name in _MAPS
+    }
+    data = nxt["deltas" if op == "upsert_delta" else "files"]
+    bloom_add: dict[str, str] = {}
+    for p in parts:
+        for k, ps in p["new_files"].items():
+            data.setdefault(k, []).extend(ps)
+        for k, ps in p["tomb_files"].items():
+            nxt["tombstones"].setdefault(k, []).extend(ps)
+        bloom_add.update(p["blooms"])
+    if (
+        m.get("properties", {}).get("key_bloom")
+        and m["num_buckets"] is not None
+        # a compaction rewrites the same key set: blooms stay valid
+        and op != "compact"
+    ):
+        blooms = nxt["blooms"]
+        for k in {k for p in parts for k in p["new_files"]}:
+            # An appended key without a segment breaks the bucket's
+            # completeness invariant, and every other op may introduce
+            # keys no segment covers; false negatives are correctness
+            # bugs, so such buckets drop their blooms and readers fall
+            # back to the plain existence read. A segment may only
+            # ATTACH when coverage stays complete: the bucket either
+            # already had complete coverage (k in blooms) or holds no
+            # pre-existing rows at all (no files AND no deltas). Without
+            # that guard, a bucket invalidated by a merge/overwrite/
+            # unbloomed append would be "resurrected" by the next
+            # bloomed append with a segment covering only that batch —
+            # its older keys covered by no segment, so redeliveries
+            # would probe hits=0 and insert duplicates.
+            never_had_rows = k not in m["files"] and k not in m["deltas"]
+            if op == "append" and k in bloom_add and (k in blooms or never_had_rows):
+                blooms.setdefault(k, []).append(bloom_add[k])
+            else:
+                blooms.pop(k, None)
+    return nxt
 
 
 def _log_dir(root: str) -> str:
@@ -225,37 +294,15 @@ class LakeTable:
             return cached
         m = self._read_manifest(v)
         if "files" not in m:  # delta: fold onto predecessor
-            base = self.snapshot(m["delta_base"])
-            files = dict(base["files"])
-            for k in m.get("files_drop", []):
-                files.pop(k, None)
-            files.update(m.get("files_set", {}))
-            deltas = dict(base.get("deltas", {}))
-            for k in m.get("deltas_drop", []):
-                deltas.pop(k, None)
-            deltas.update(m.get("deltas_set", {}))
-            blooms = dict(base.get("blooms", {}))
-            for k in m.get("blooms_drop", []):
-                blooms.pop(k, None)
-            blooms.update(m.get("blooms_set", {}))
-            tombs = dict(base.get("tombstones", {}))
-            for k in m.get("tombstones_drop", []):
-                tombs.pop(k, None)
-            tombs.update(m.get("tombstones_set", {}))
-            m = {
-                k: val for k, val in m.items()
-                if k not in ("files_set", "files_drop", "deltas_set",
-                             "deltas_drop", "blooms_set", "blooms_drop",
-                             "tombstones_set", "tombstones_drop",
-                             "delta_base")
-            }
-            m["files"] = files
-            m["deltas"] = deltas
-            m["blooms"] = blooms
-            m["tombstones"] = tombs
-        m.setdefault("deltas", {})
-        m.setdefault("blooms", {})
-        m.setdefault("tombstones", {})
+            base = self.snapshot(m.pop("delta_base"))
+            for name in _MAPS:
+                cur = dict(base[name])
+                for k in m.pop(f"{name}_drop", []):
+                    cur.pop(k, None)
+                cur.update(m.pop(f"{name}_set", {}))
+                m[name] = cur
+        for name in _MAPS:
+            m.setdefault(name, {})
         if len(_SNAP_CACHE) > 512:
             _SNAP_CACHE.clear()
         _SNAP_CACHE[key] = m
@@ -301,13 +348,6 @@ class LakeTable:
         finally:
             os.unlink(tmp)
         return next_v
-
-    def _drop_attempt(self, commit_rel: str) -> None:
-        """Remove a losing write attempt's data directory (its files are
-        referenced by no manifest; the retry rewrites fresh ones)."""
-        import shutil
-
-        shutil.rmtree(os.path.join(self.root, commit_rel), ignore_errors=True)
 
     # ---------------------------------------------------------------- reads
 
@@ -510,7 +550,7 @@ class LakeTable:
     def _write_files(
         self, df: DataFrame, manifest: dict, next_v: int, salts: int = 1,
         wide: bool = False,
-    ) -> dict[str, list[str]]:
+    ) -> tuple[dict[str, list[str]], str]:
         """Write df physically split by partition key; return
         ``({key: [relpaths]}, commit_rel)``.
 
@@ -520,8 +560,8 @@ class LakeTable:
         ``mode("overwrite")`` write would delete the winner's
         already-committed files before the loser's manifest commit even
         fails (found by test_concurrent_writers_occ). The losing
-        attempt's directory is removed by the caller's CommitConflict
-        retry; a crash in the window leaves an orphan dir that no
+        attempt's directory is removed by :meth:`commit_staged` on
+        CommitConflict; a crash in the window leaves an orphan dir that no
         manifest references (harmless, reclaimed by a vacuum).
 
         Write distribution (what Iceberg's bucket-partitioned write
@@ -678,18 +718,190 @@ class LakeTable:
         # big direct append (initial seed / backfill) skips the build for
         # oversized buckets (parquet footer row counts only — no data
         # read), leaving them uncovered = safe plain-read fallback.
-        max_rows = int(os.environ.get("DVX_BLOOM_FALLBACK_MAX_ROWS", "2000000"))
         out = {}
         for k, ps in new_files.items():
             paths = [os.path.join(self.root, p) for p in ps]
             n_rows = sum(pq.ParquetFile(p).metadata.num_rows for p in paths)
-            if n_rows > max_rows:
+            if n_rows > _BLOOM_FALLBACK_MAX_ROWS:
                 continue  # bucket stays uncovered; readers fall back
             vals: list = []
             for p in paths:
                 vals.extend(pq.read_table(p, columns=[key_col]).column(0).to_pylist())
             out[k] = bloom.build(vals)
         return out
+
+    # ------------------------------------------------------- the write path
+
+    def _stage(
+        self,
+        m: dict,
+        v: int,
+        df: DataFrame | None = None,
+        tombstone_keys: DataFrame | None = None,
+        salts: int = 1,
+        wide: bool = False,
+    ) -> dict:
+        """Write one attempt's files for base snapshot ``m`` at version
+        ``v`` — the only caller of :meth:`_write_files`. ``df``'s rows
+        become data files; ``tombstone_keys`` (plain bucketed tables
+        without key blooms) become equality-delete tombstone files for
+        those keys, stamped with the attempt's commit version (``_tcv``,
+        a stored column so the read side never needs a second
+        input_file_name derivation). Nothing is visible until
+        :meth:`commit_staged` publishes the returned part."""
+        staged = {
+            "base_version": v, "new_files": {}, "commit_rel": None,
+            "tomb_files": {}, "tomb_rel": None, "blooms": {},
+        }
+        if tombstone_keys is not None:
+            if m["num_buckets"] is None or m.get("partition_col"):
+                raise ValueError(
+                    "delete_keys_insert requires a plain bucketed table"
+                )
+            if m.get("properties", {}).get("key_bloom"):
+                raise ValueError(
+                    "delete_keys_insert is not supported on key_bloom "
+                    "tables (deletes break segment completeness)"
+                )
+        if df is not None:
+            staged["new_files"], staged["commit_rel"] = self._write_files(
+                self._schema_aligned(df, m), m, v + 1, salts=salts, wide=wide
+            )
+        if tombstone_keys is not None:
+            kdf = tombstone_keys.select(*m["bucket_cols"]).distinct().withColumn(
+                "_tcv", F.lit(v + 1).cast("long")
+            )
+            staged["tomb_files"], staged["tomb_rel"] = self._write_files(
+                kdf, m, v + 1
+            )
+        return staged
+
+    def _write(self, op: str, stage, summary: dict | None = None) -> int:
+        """The data-write retry loop. ``stage(m, v)`` writes one
+        attempt's files for base snapshot ``m`` at version ``v`` and
+        returns ``(staged, replace)``, or None when there is nothing to
+        write (then nothing commits and ``v`` is returned). One
+        :meth:`commit_staged` publishes the attempt; on CommitConflict
+        (its directories already dropped) the whole stage runs again
+        from the new base, so a frame read from the table itself is
+        re-read there and a concurrent commit is never lost."""
+        while True:
+            v = self.version()
+            out = stage(self.snapshot(v), v)
+            if out is None:
+                return v
+            try:
+                return self.commit_staged(out[0], op, summary, replace=out[1])
+            except CommitConflict:
+                continue
+
+    def write(
+        self,
+        op: str,
+        df: DataFrame | None,
+        tombstone_keys: DataFrame | None = None,
+        summary: dict | None = None,
+    ) -> int:
+        """Stage ``df`` (and ``tombstone_keys``) and commit them as ONE
+        ``op`` commit, staged again from the new base on conflict — the
+        body of :meth:`upsert_delta` and :meth:`delete_keys_insert`, and
+        the redo of a :meth:`stage_write` whose :meth:`commit_staged`
+        conflicted. Unlike :meth:`append` it attaches no bloom segments
+        and skips the pending-delta guard."""
+        return self._write(
+            op, lambda m, v: (self._stage(m, v, df, tombstone_keys), ()), summary
+        )
+
+    def stage_write(
+        self, df: DataFrame | None, tombstone_keys: DataFrame | None = None
+    ) -> dict:
+        """Run ONLY the heavy data-file write jobs of an append /
+        upsert_delta / delete_insert now, at the latest version; publish
+        later with :meth:`commit_staged`.
+
+        Lets a caller overlap two independent tables' write jobs on the
+        executors while still COMMITTING in a required order (the
+        satellite apply must publish history before current — the
+        crash-replay invariant — but has no reason to serialize the two
+        multi-second writes). The staged files are invisible until
+        commit; a crash in between leaves an orphan attempt dir only.
+        ``tombstone_keys`` stages tombstones too (publish them with
+        ``op="delete_insert"``); ``df=None`` stages tombstones only, so a
+        caller can write them while it still computes the data rows.
+        """
+        v = self.version()
+        return self._stage(self.snapshot(v), v, df, tombstone_keys)
+
+    def commit_staged(
+        self,
+        staged: dict | list[dict],
+        op: str,
+        summary: dict | None = None,
+        replace=(),
+    ) -> int:
+        """Publish staged parts — all staged at the same base version —
+        as ONE ``op`` commit. ``replace`` names the manifest keys whose
+        current files, deltas and tombstones the commit supersedes.
+        Rows written in a tombstone's own commit survive it.
+
+        Raises :class:`CommitConflict` (after removing the attempt dirs)
+        if the table moved past the staged base version. No silent
+        retry here: the staged file paths embed the guessed commit
+        version, which the MOR last-wins merge and the tombstone
+        resolution order by, so re-targeting them at a different
+        version would corrupt both. :meth:`_write` stages again."""
+        parts = staged if isinstance(staged, list) else [staged]
+        v = parts[0]["base_version"]
+        try:
+            if self.version() != v or any(p["base_version"] != v for p in parts):
+                raise CommitConflict(f"table moved past staged version {v}")
+            if op not in _OPS:
+                raise ValueError(f"unsupported write op {op!r}")
+            m = self.snapshot(v)
+            nxt = _next_maps(m, op, parts, set(replace))
+            s = dict(m.get("summary", {}))
+            epochs = dict(s.get("epochs", {}))
+            user = dict(summary or {})
+            for sid, ep in (user.pop("epochs", None) or {}).items():
+                epochs[sid] = max(int(ep), int(epochs.get(sid, -1)))
+            s.update(user)
+            s["epochs"] = epochs
+            s["added_files"] = sum(
+                len(ps) for p in parts for ps in p["new_files"].values()
+            )
+            s["total_files"] = sum(len(ps) for ps in nxt["files"].values())
+            s["total_delta_files"] = sum(len(ps) for ps in nxt["deltas"].values())
+            if nxt["tombstones"]:
+                s["total_tombstone_files"] = sum(
+                    len(ps) for ps in nxt["tombstones"].values()
+                )
+            manifest = {
+                "operation": op,
+                "schema": m["schema"],
+                "num_buckets": m["num_buckets"],
+                "bucket_cols": m["bucket_cols"],
+                "partition_col": m["partition_col"],
+                "properties": m.get("properties", {}),
+                "summary": s,
+            }
+            if (v + 1) % _CHECKPOINT_EVERY == 0:
+                manifest.update(nxt)  # checkpoint: the full maps
+            else:
+                manifest["delta_base"] = v
+                for name in _MAPS:
+                    old, new = m[name], nxt[name]
+                    manifest[f"{name}_set"] = {
+                        k: ps for k, ps in new.items() if old.get(k) != ps
+                    }
+                    manifest[f"{name}_drop"] = [k for k in old if k not in new]
+            return self._commit(v, manifest)
+        except CommitConflict:
+            # the losing attempt's files are referenced by no manifest
+            for p in parts:
+                for rel in (p["commit_rel"], p["tomb_rel"]):
+                    if rel:
+                        shutil.rmtree(os.path.join(self.root, rel), ignore_errors=True)
+            raise
 
     def append(
         self,
@@ -709,12 +921,11 @@ class LakeTable:
         merge is per key) and allowed; the overlap check only costs a
         job when deltas are actually pending — never on the hub/link/
         history append hot path."""
-        while True:
-            v = self.version()
-            m = self.snapshot(v)
+
+        def stage(m: dict, v: int):
             dpaths = [
                 os.path.join(self.root, p)
-                for ps in m.get("deltas", {}).values()
+                for ps in m["deltas"].values()
                 for p in ps
             ]
             if dpaths:
@@ -737,35 +948,23 @@ class LakeTable:
                         "last-wins merge over it; run compact_deltas("
                         "max_delta_files=1) first or use upsert_delta()"
                     )
-            new_files, commit_rel = self._write_files(
-                self._schema_aligned(df, m), m, v + 1
-            )
-            bloom_add = None
+            staged = self._stage(m, v, df)
+            new_files = staged["new_files"]
             if (
                 m.get("properties", {}).get("key_bloom")
                 and m["num_buckets"] is not None
                 and new_files
-                # DVX_KEY_BLOOM=0 turns blooms off wholesale (A/B lever):
-                # appending without segments drops the touched buckets'
-                # coverage in _commit_next, so readers safely fall back
-                and os.environ.get("DVX_KEY_BLOOM", "1") != "0"
             ):
                 segs = bloom_segments or self._segments_from_written(new_files, m)
-                bloom_add = {}
                 for k in new_files:
                     if k in segs:
-                        rel = os.path.join(commit_rel, f"_bloom_{k}.bin")
+                        rel = os.path.join(staged["commit_rel"], f"_bloom_{k}.bin")
                         with open(os.path.join(self.root, rel), "wb") as bf:
                             bf.write(segs[k])
-                        bloom_add[k] = rel
-            files = _extended(m["files"], new_files)
-            try:
-                return self._commit_next(
-                    m, v, "append", files, new_files, summary, bloom_add=bloom_add
-                )
-            except CommitConflict:
-                self._drop_attempt(commit_rel)
-                continue
+                        staged["blooms"][k] = rel
+            return staged, ()
+
+        return self._write("append", stage, summary)
 
     def append_rows(self, rows: list[dict], summary: dict | None = None) -> int:
         """Driver-side tiny append: write ``rows`` as ONE parquet file via
@@ -794,9 +993,8 @@ class LakeTable:
             # UTC by the metadata._now() contract
             T.TimestampType: pa.timestamp("us", tz="UTC"),
         }
-        while True:
-            v = self.version()
-            m = self.snapshot(v)
+
+        def stage(m: dict, v: int):
             if m["num_buckets"] is not None or m["partition_col"]:
                 raise ValueError(
                     "append_rows is the driver-side path for unbucketed, "
@@ -819,28 +1017,31 @@ class LakeTable:
             # the empty-value sentinel) so compaction and readers treat
             # both kinds of file identically
             key = "__HIVE_DEFAULT_PARTITION__"
-            commit_rel = os.path.join("data", f"c{v + 1:010d}-{uuid.uuid4().hex[:8]}")
-            pdir = os.path.join(self.root, commit_rel, f"{_PHYS}={key}")
+            staged = self._stage(m, v)
+            staged["commit_rel"] = os.path.join(
+                "data", f"c{v + 1:010d}-{uuid.uuid4().hex[:8]}"
+            )
+            pdir = os.path.join(self.root, staged["commit_rel"], f"{_PHYS}={key}")
             os.makedirs(pdir, exist_ok=True)
             rel = os.path.join(
-                commit_rel, f"{_PHYS}={key}", f"part-00000-{uuid.uuid4().hex}.parquet"
+                staged["commit_rel"], f"{_PHYS}={key}",
+                f"part-00000-{uuid.uuid4().hex}.parquet",
             )
             pq.write_table(tbl, os.path.join(self.root, rel), compression="snappy")
-            files = {k: list(ps) for k, ps in m["files"].items()}
-            files.setdefault(key, []).append(rel)
-            try:
-                return self._commit_next(m, v, "append", files, {key: [rel]}, summary)
-            except CommitConflict:
-                self._drop_attempt(commit_rel)
-                continue
+            staged["new_files"] = {key: [rel]}
+            return staged, ()
+
+        return self._write("append", stage, summary)
 
     def overwrite_partitions(self, df: DataFrame, summary: dict | None = None) -> int:
         """Dynamic partition overwrite — replace only the partition values
         present in df (IcebergWriter.scala:209-231; used by bridge refresh
-        and SCD1 dims)."""
-        while True:
-            v = self.version()
-            m = self.snapshot(v)
+        and SCD1 dims). The replaced keys lose their pending deltas and
+        tombstones too: every key of an unpartitioned table, the written
+        keys of a plain partitioned or bucketed table, every key of the
+        written partition values of a composite table."""
+
+        def stage(m: dict, v: int):
             par = self.spark.sparkContext.defaultParallelism
             if _is_composite(m):
                 # the (partition x bucket) key space already spreads the
@@ -853,38 +1054,18 @@ class LakeTable:
                 salts = max(1, -(-par // m["num_buckets"]))
             else:
                 salts = max(2, par)
-            new_files, commit_rel = self._write_files(
-                self._schema_aligned(df, m), m, v + 1, salts=salts, wide=True
-            )
-            deltas = None
+            staged = self._stage(m, v, df, salts=salts, wide=True)
+            keys = set().union(m["files"], m["deltas"], m["tombstones"])
             if not m["partition_col"] and m["num_buckets"] is None:
-                # unpartitioned: full overwrite
-                files = dict(new_files)
+                replace = keys  # unpartitioned: full overwrite
             elif _is_composite(m):
-                # composite layout: replace every (partition, bucket) key of
-                # the partition VALUES present in df — dynamic partition
-                # overwrite semantics on the partition half of the key
-                parts_touched = {_part_of(k) for k in new_files}
-                files = {
-                    k: ps for k, ps in m["files"].items()
-                    if _part_of(k) not in parts_touched
-                }
-                files.update(new_files)
-                deltas = {
-                    k: ps for k, ps in m.get("deltas", {}).items()
-                    if _part_of(k) not in parts_touched
-                }
+                written = {_part_of(k) for k in staged["new_files"]}
+                replace = {k for k in keys if _part_of(k) in written}
             else:
-                files = {k: ps for k, ps in m["files"].items() if k not in new_files}
-                files.update(new_files)
-            try:
-                return self._commit_next(
-                    m, v, "overwrite_partitions", files, new_files, summary,
-                    deltas=deltas,
-                )
-            except CommitConflict:
-                self._drop_attempt(commit_rel)
-                continue
+                replace = set(staged["new_files"])
+            return staged, replace
+
+        return self._write("overwrite_partitions", stage, summary)
 
     def upsert_delta(self, df: DataFrame, summary: dict | None = None) -> int:
         """Merge-on-read upsert for bucketed tables (Iceberg format-v2
@@ -899,13 +1080,7 @@ class LakeTable:
         """
         if self.snapshot()["num_buckets"] is None:
             raise ValueError("upsert_delta requires a bucketed table")
-        while True:
-            try:
-                return self.commit_staged(
-                    self.stage_write(df), "upsert_delta", summary=summary
-                )
-            except CommitConflict:
-                continue
+        return self.write("upsert_delta", df, summary=summary)
 
     def delete_keys_insert(
         self, keys: DataFrame, rows: DataFrame, summary: dict | None = None
@@ -927,127 +1102,49 @@ class LakeTable:
         Restricted to plain bucketed tables (no partition_col) without
         key blooms (tombstones would break bloom completeness).
         """
-        while True:
-            staged = self.stage_write(rows, tombstone_keys=keys)
-            try:
-                return self.commit_staged(staged, "delete_insert", summary=summary)
-            except CommitConflict:
-                continue
+        return self.write("delete_insert", rows, tombstone_keys=keys, summary=summary)
 
-    def compact_tombstones(self) -> int:
-        """Fold equality-delete tombstones: rewrite ONLY the buckets that
-        carry them (the read resolves the deletes), clearing their
-        tombstone lists so serving reads revert to plain scans with
-        pushdown. Returns the number of buckets folded."""
-        v = self.version()
-        m = self.snapshot(v)
-        fat = sorted(k for k, ps in m.get("tombstones", {}).items() if ps)
-        if not fat:
-            return 0
-        self.replace_buckets(
-            fat, self.read(v, keys=fat),
-            summary={"compacted_tombstone_buckets": len(fat)},
-        )
-        return len(fat)
-
-    def stage_write(
-        self, df: DataFrame | None, tombstone_keys: DataFrame | None = None
-    ) -> dict:
-        """Run ONLY the heavy data-file write jobs of an append /
-        upsert_delta / delete_insert now; publish later with
-        :meth:`commit_staged`.
-
-        Lets a caller overlap two independent tables' write jobs on the
-        executors while still COMMITTING in a required order (the
-        satellite apply must publish history before current — the
-        crash-replay invariant — but has no reason to serialize the two
-        multi-second writes). The staged files are invisible until
-        commit; a crash in between leaves an orphan attempt dir only.
-
-        ``tombstone_keys`` (plain bucketed tables without key blooms)
-        also writes equality-delete tombstone files for those keys,
-        stamped with the staged commit version (``_tcv``, a stored
-        column so the read side never needs a second input_file_name
-        derivation); publish them with ``op="delete_insert"``.
-        ``df=None`` stages tombstones only, so a caller can write them
-        while it still computes the data rows.
-        """
-        v = self.version()
-        m = self.snapshot(v)
-        staged = {
-            "base_version": v, "new_files": {}, "commit_rel": None,
-            "tomb_files": {}, "tomb_rel": None,
-        }
-        if tombstone_keys is not None:
-            if m["num_buckets"] is None or m.get("partition_col"):
-                raise ValueError(
-                    "delete_keys_insert requires a plain bucketed table"
-                )
-            if m.get("properties", {}).get("key_bloom"):
-                raise ValueError(
-                    "delete_keys_insert is not supported on key_bloom "
-                    "tables (deletes break segment completeness)"
-                )
-        if df is not None:
-            staged["new_files"], staged["commit_rel"] = self._write_files(
-                self._schema_aligned(df, m), m, v + 1
-            )
-        if tombstone_keys is not None:
-            kdf = tombstone_keys.select(*m["bucket_cols"]).distinct().withColumn(
-                "_tcv", F.lit(v + 1).cast("long")
-            )
-            staged["tomb_files"], staged["tomb_rel"] = self._write_files(
-                kdf, m, v + 1
-            )
-        return staged
-
-    def commit_staged(
-        self, staged: dict | list[dict], op: str, summary: dict | None = None
+    def replace_buckets(
+        self,
+        touched: list[int],
+        contents: DataFrame,
+        summary: dict | None = None,
+        salts: int = 1,
     ) -> int:
-        """Publish :meth:`stage_write` results as ONE ``append``,
-        ``upsert_delta`` or ``delete_insert`` commit (the last adds the
-        staged data files AND tombstones atomically; rows written in the
-        tombstone's own commit survive it). A list of staged parts — all
-        staged at the same base version — commits as one. Raises
-        :class:`CommitConflict` (after removing the attempt dirs) if the
-        table moved past the staged base version — the caller falls back
-        to the regular write path. No silent retry here: the staged file
-        paths embed the guessed commit version, which the MOR last-wins
-        merge and the tombstone resolution order by, so re-targeting
-        them at a different version would corrupt both."""
-        parts = staged if isinstance(staged, list) else [staged]
-        v = parts[0]["base_version"]
-        new_files = tomb_files = {}
-        for p in parts:
-            new_files = _extended(new_files, p["new_files"])
-            tomb_files = _extended(tomb_files, p["tomb_files"])
-        try:
-            if self.version() != v or any(p["base_version"] != v for p in parts):
-                raise CommitConflict(f"table moved past staged version {v}")
-            if op not in ("append", "upsert_delta", "delete_insert"):
-                raise ValueError(f"unsupported staged op {op!r}")
-            m = self.snapshot(v)
-            if op == "upsert_delta":
-                files = dict(m["files"])
-                deltas = _extended(m.get("deltas", {}), new_files)
-            else:
-                files = _extended(m["files"], new_files)
-                deltas = None
-            tombs = (
-                _extended(m.get("tombstones", {}), tomb_files)
-                if op == "delete_insert"
-                else None
-            )
-            return self._commit_next(
-                m, v, op, files, new_files, summary, deltas=deltas,
-                tombstones=tombs,
-            )
-        except CommitConflict:
-            for p in parts:
-                for rel in (p["commit_rel"], p["tomb_rel"]):
-                    if rel:
-                        self._drop_attempt(rel)
-            raise
+        """Copy-on-write commit: replace the file sets of ``touched``
+        keys with ``contents`` (which must be exactly those keys' new
+        rows); pending deltas and tombstones of those keys go too.
+        Untouched keys carry over as pure metadata. ``salts`` > 1 widens
+        the writer stage for large rewrites (see _write_files).
+
+        ``touched`` entries are bucket ids (ints) on plain bucketed
+        tables, or full ``"<partition>|<bucket>"`` key strings on
+        composite tables (the incremental-PIT path)."""
+        replace = {str(t) for t in touched}
+        return self._write(
+            "merge",
+            lambda m, v: (self._stage(m, v, contents, salts=salts, wide=True), replace),
+            summary,
+        )
+
+    def _fold(self, op: str, pick, label: str) -> tuple[int, int]:
+        """Rewrite the manifest keys ``pick(m)`` selects from their
+        resolved read (deltas merged, tombstones applied) at the base
+        version, replacing their files, deltas and tombstones. The read
+        happens inside the retry loop, so a commit that lands meanwhile
+        is folded in, not lost. Returns ``(version, keys folded)``."""
+        summary: dict = {}
+
+        def stage(m: dict, v: int):
+            keys = sorted(pick(m))
+            summary.clear()
+            if not keys:
+                return None
+            summary[label] = len(keys)
+            return self._stage(m, v, self.read(v, keys=keys), wide=True), keys
+
+        v = self._write(op, stage, summary)
+        return v, summary.get(label, 0)
 
     def compact_deltas(self, max_delta_files: int = 8) -> int:
         """Fold delta files back into the base for every bucket whose
@@ -1057,207 +1154,22 @@ class LakeTable:
         bucket is rewritten once every T delta commits, so the amortized
         rewrite cost per commit is O(bucket/T). Returns the number of
         buckets folded."""
-        v = self.version()
-        m = self.snapshot(v)
-        fat = sorted(
-            k for k, ps in m.get("deltas", {}).items() if len(ps) >= max_delta_files
-        )
-        if not fat:
-            return 0
-        contents = self.read(v, keys=fat)  # merged view
-        self.replace_buckets(
-            fat, contents, summary={"compacted_delta_buckets": len(fat)}
-        )
-        return len(fat)
+        return self._fold(
+            "merge",
+            lambda m: [k for k, ps in m["deltas"].items() if len(ps) >= max_delta_files],
+            "compacted_delta_buckets",
+        )[1]
 
-    def merge(self, source: DataFrame, merge_fn, summary: dict | None = None) -> int:
-        """Copy-on-write MERGE on a bucketed table — the engine's single
-        upsert primitive (replaces Iceberg ``MERGE INTO``, SURVEY.md §2.9).
-
-        ``merge_fn(current, source) -> DataFrame`` receives the *current
-        rows of only the touched buckets* and the bucketed source batch,
-        and returns the full replacement contents for those buckets.
-        Untouched buckets are carried over as pure metadata.
-        """
-        while True:
-            v = self.version()
-            m = self.snapshot(v)
-            src = self.with_bucket(source).persist()
-            try:
-                touched = sorted(r[0] for r in src.select(BUCKET_COL).distinct().collect())
-                if not touched:
-                    return v  # empty batch: no-op, no new snapshot
-                current = self.read(v, buckets=touched)
-                current = current.withColumn(
-                    BUCKET_COL, self._bucket_expr(m["num_buckets"], m["bucket_cols"])
-                )
-                merged = merge_fn(current, src)
-                merged = self._schema_aligned(merged, m)
-                new_files, commit_rel = self._write_files(merged, m, v + 1, wide=True)
-                tset = {str(t) for t in touched}
-                files = {
-                    k: ps for k, ps in m["files"].items()
-                    if _bucket_of(k, _is_composite(m)) not in tset
-                }
-                files.update(new_files)
-                # replacement contents supersede any pending deltas and
-                # equality-delete tombstones
-                deltas = {
-                    k: ps for k, ps in m.get("deltas", {}).items()
-                    if _bucket_of(k, _is_composite(m)) not in tset
-                }
-                tombs = {
-                    k: ps for k, ps in m.get("tombstones", {}).items()
-                    if _bucket_of(k, _is_composite(m)) not in tset
-                }
-                try:
-                    return self._commit_next(
-                        m, v, "merge", files, new_files, summary,
-                        deltas=deltas, tombstones=tombs,
-                    )
-                except CommitConflict:
-                    self._drop_attempt(commit_rel)
-                    continue
-            finally:
-                src.unpersist()
-
-    def replace_buckets(
-        self,
-        touched: list[int],
-        contents: DataFrame,
-        summary: dict | None = None,
-        salts: int = 1,
-    ) -> int:
-        """Low-level COW commit: replace the file sets of ``touched``
-        keys with ``contents`` (which must be exactly those keys'
-        new rows). merge() is this plus the read-modify step; callers
-        that already computed the replacement (e.g. the satellite
-        current/history split) use this directly. ``salts`` > 1 widens
-        the writer stage for large rewrites (see _write_files).
-
-        ``touched`` entries are bucket ids (ints) on plain bucketed
-        tables, or full ``"<partition>|<bucket>"`` key strings on
-        composite tables (the incremental-PIT path)."""
-        while True:
-            v = self.version()
-            m = self.snapshot(v)
-            merged = self._schema_aligned(self.with_bucket(contents), m)
-            new_files, commit_rel = self._write_files(
-                merged, m, v + 1, salts=salts, wide=True
-            )
-            tset = {str(t) for t in touched}
-            files = {k: ps for k, ps in m["files"].items() if k not in tset}
-            files.update(new_files)
-            # replacement contents supersede any pending deltas and
-            # equality-delete tombstones
-            deltas = {
-                k: ps for k, ps in m.get("deltas", {}).items() if k not in tset
-            }
-            tombs = {
-                k: ps for k, ps in m.get("tombstones", {}).items()
-                if k not in tset
-            }
-            try:
-                return self._commit_next(
-                    m, v, "merge", files, new_files, summary,
-                    deltas=deltas, tombstones=tombs,
-                )
-            except CommitConflict:
-                self._drop_attempt(commit_rel)
-                continue
-
-    def _commit_next(self, m, v, op, files, new_files, summary, deltas=None,
-                     bloom_add=None, tombstones=None):
-        if deltas is None:
-            deltas = m.get("deltas", {})
-        if tombstones is None:
-            tombstones = m.get("tombstones", {})
-        blooms = {k: list(ps) for k, ps in m.get("blooms", {}).items()}
-        if m.get("properties", {}).get("key_bloom") and m["num_buckets"] is not None:
-            if op == "append":
-                # an appended key without a segment breaks the bucket's
-                # completeness invariant — drop that bucket's blooms so
-                # readers fall back to the plain existence read. A segment
-                # may only ATTACH when coverage stays complete: the bucket
-                # either already had complete coverage (k in blooms) or
-                # holds no pre-existing rows at all (no files AND no
-                # deltas). Without that guard, a bucket invalidated by a
-                # merge/overwrite/unbloomed append would be "resurrected"
-                # by the next bloomed append with a segment covering only
-                # that batch — its older keys covered by no segment, so
-                # redeliveries would probe hits=0 and insert duplicates.
-                for k in new_files:
-                    never_had_rows = (
-                        k not in m["files"] and k not in m.get("deltas", {})
-                    )
-                    if (
-                        bloom_add
-                        and k in bloom_add
-                        and (k in blooms or never_had_rows)
-                    ):
-                        blooms.setdefault(k, []).append(bloom_add[k])
-                    else:
-                        blooms.pop(k, None)
-            elif op == "compact":
-                pass  # pure rewrite of the same key set: blooms stay valid
-            else:
-                # merge/overwrite/upsert may introduce keys no segment
-                # covers; false negatives are correctness bugs, so
-                # invalidate the touched buckets (false positives = an
-                # extra read = safe; missing blooms = plain read = safe)
-                for k in new_files:
-                    blooms.pop(k, None)
-        s = dict(m.get("summary", {}))
-        epochs = dict(s.get("epochs", {}))
-        user = dict(summary or {})
-        for sid, ep in (user.pop("epochs", None) or {}).items():
-            epochs[sid] = max(int(ep), int(epochs.get(sid, -1)))
-        s.update(user)
-        s["epochs"] = epochs
-        s["added_files"] = sum(len(p) for p in new_files.values())
-        s["total_files"] = sum(len(p) for p in files.values())
-        s["total_delta_files"] = sum(len(p) for p in deltas.values())
-        if tombstones:
-            s["total_tombstone_files"] = sum(len(p) for p in tombstones.values())
-        manifest = {
-            "operation": op,
-            "schema": m["schema"],
-            "num_buckets": m["num_buckets"],
-            "bucket_cols": m["bucket_cols"],
-            "partition_col": m["partition_col"],
-            "properties": m.get("properties", {}),
-            "summary": s,
-        }
-        if (v + 1) % _CHECKPOINT_EVERY == 0:
-            manifest["files"] = files  # checkpoint: full map
-            manifest["deltas"] = deltas
-            manifest["blooms"] = blooms
-            manifest["tombstones"] = tombstones
-        else:
-            old = m["files"]
-            manifest["delta_base"] = v
-            manifest["files_set"] = {
-                k: ps for k, ps in files.items() if old.get(k) != ps
-            }
-            manifest["files_drop"] = [k for k in old if k not in files]
-            old_d = m.get("deltas", {})
-            manifest["deltas_set"] = {
-                k: ps for k, ps in deltas.items() if old_d.get(k) != ps
-            }
-            manifest["deltas_drop"] = [k for k in old_d if k not in deltas]
-            old_b = m.get("blooms", {})
-            manifest["blooms_set"] = {
-                k: ps for k, ps in blooms.items() if old_b.get(k) != ps
-            }
-            manifest["blooms_drop"] = [k for k in old_b if k not in blooms]
-            old_t = m.get("tombstones", {})
-            manifest["tombstones_set"] = {
-                k: ps for k, ps in tombstones.items() if old_t.get(k) != ps
-            }
-            manifest["tombstones_drop"] = [
-                k for k in old_t if k not in tombstones
-            ]
-        return self._commit(v, manifest)
+    def compact_tombstones(self) -> int:
+        """Fold equality-delete tombstones: rewrite ONLY the buckets that
+        carry them (the read resolves the deletes), clearing their
+        tombstone lists so serving reads revert to plain scans with
+        pushdown. Returns the number of buckets folded."""
+        return self._fold(
+            "merge",
+            lambda m: [k for k, ps in m["tombstones"].items() if ps],
+            "compacted_tombstone_buckets",
+        )[1]
 
     # ----------------------------------------------------- exactly-once API
 
@@ -1402,14 +1314,9 @@ class LakeTable:
         live: set[str] = set()
         for v in keep:
             snap = self.snapshot(v)
-            for ps in snap["files"].values():
-                live.update(ps)
-            for ps in snap.get("deltas", {}).values():
-                live.update(ps)
-            for ps in snap.get("blooms", {}).values():
-                live.update(ps)
-            for ps in snap.get("tombstones", {}).values():
-                live.update(ps)
+            for name in _MAPS:
+                for ps in snap[name].values():
+                    live.update(ps)
         # the oldest retained manifest may be a delta whose base is about
         # to be expired: rewrite it as a checkpoint (resolved full map)
         # so the retained chain stays self-contained
@@ -1426,13 +1333,7 @@ class LakeTable:
         removed = 0
         for v in expire:
             snap = self.snapshot(v)
-            refs = (
-                list(snap["files"].values())
-                + list(snap.get("deltas", {}).values())
-                + list(snap.get("blooms", {}).values())
-                + list(snap.get("tombstones", {}).values())
-            )
-            for ps in refs:
+            for ps in (ps for name in _MAPS for ps in snap[name].values()):
                 for p in ps:
                     if p not in live:
                         fp = os.path.join(self.root, p)
@@ -1444,39 +1345,15 @@ class LakeTable:
 
     def compact(self, max_files_per_key: int = 1) -> int:
         """rewrite_data_files analog (IcebergWriter.scala:396-426): rewrite
-        partition keys whose file count exceeds the target. Metadata-only
-        for already-compact keys."""
-        while True:
-            v = self.version()
-            m = self.snapshot(v)
-            delta_map = m.get("deltas", {})
-            tomb_map = m.get("tombstones", {})
-            fat = sorted(
+        partition keys whose file count exceeds the target, or that carry
+        pending deltas or tombstones. Metadata-only for already-compact
+        keys. Returns the table version."""
+        return self._fold(
+            "compact",
+            lambda m: (
                 {k for k, ps in m["files"].items() if len(ps) > max_files_per_key}
-                | {k for k, ps in delta_map.items() if ps}
-                | {k for k, ps in tomb_map.items() if ps}
-            )
-            if not fat:
-                return v
-            if m["num_buckets"] is not None:
-                df = self.read(v, keys=fat).repartition(max(1, len(fat)))
-                df = df.withColumn(
-                    BUCKET_COL, self._bucket_expr(m["num_buckets"], m["bucket_cols"])
-                )
-            else:
-                df = self.read(v, partitions=fat).repartition(max(1, len(fat)))
-            new_files, commit_rel = self._write_files(
-                self._schema_aligned(df, m), m, v + 1, wide=True
-            )
-            files = {k: ps for k, ps in m["files"].items() if k not in fat}
-            files.update(new_files)
-            deltas = {k: ps for k, ps in delta_map.items() if k not in fat}
-            tombs = {k: ps for k, ps in tomb_map.items() if k not in fat}
-            try:
-                return self._commit_next(
-                    m, v, "compact", files, new_files, {"compacted": fat},
-                    deltas=deltas, tombstones=tombs,
-                )
-            except CommitConflict:
-                self._drop_attempt(commit_rel)
-                continue
+                | {k for k, ps in m["deltas"].items() if ps}
+                | {k for k, ps in m["tombstones"].items() if ps}
+            ),
+            "compacted",
+        )[0]

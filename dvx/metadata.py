@@ -15,7 +15,6 @@ import datetime as dt
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dvx.lake import BUCKET_COL
 from dvx.schema import Vault
 
 
@@ -28,7 +27,7 @@ def _now() -> dt.datetime:
 # Status/lineage rows commit DRIVER-SIDE (lake.append_rows — one pyarrow
 # file + manifest commit, zero Spark jobs): a Spark write job for O(16)
 # ~100-byte rows is pure per-batch fixed floor (~0.5 s at 16 cores,
-# bench/profile_floor.py), the kind a real deployment pays at every
+# BENCH.md round 5 floor), the kind a real deployment pays at every
 # micro-batch checkpoint.
 
 
@@ -80,31 +79,6 @@ def log_epoch_lineage(
              status="COMPLETED", load_end_ts=now)
     )
     vault.load_metadata.append_rows(rows)
-
-
-def log_partition_metrics(
-    vault: Vault, load_id: int, entity: str, prepared: DataFrame, stream_id: str | None = None
-) -> int:
-    """Per-bucket lineage rows for one epoch (north_rule: 'per-partition
-    lineage + metrics logged at every checkpoint'). One small agg job."""
-    per_bucket = (
-        prepared.groupBy(F.col(BUCKET_COL).alias("partition_id"))
-        .agg(F.count("*").alias("records_loaded"))
-        .select(
-            F.lit(load_id).cast("long").alias("load_id"),
-            F.lit(stream_id).cast("string").alias("stream_id"),
-            F.lit(entity).alias("entity_name"),
-            F.col("partition_id").cast("int"),
-            F.lit(None).cast("long").alias("records_extracted"),
-            F.col("records_loaded").cast("long"),
-            F.lit("PARTITION_METRIC").alias("status"),
-            F.lit(None).cast("timestamp").alias("load_start_ts"),
-            F.lit(_now()).cast("timestamp").alias("load_end_ts"),
-            F.lit(None).cast("string").alias("error_message"),
-        )
-    )
-    vault.load_metadata.append(per_bucket)
-    return load_id
 
 
 def last_successful_load(vault: Vault, entity: str, stream_id: str | None = None):

@@ -52,7 +52,6 @@ def ingest_batch(
     batch: DataFrame,
     epoch_id: int,
     stream_id: str = "default",
-    salt_buckets: int = 32,
     log_lineage: bool = True,
     pit_dates: list[str] | None = None,
 ) -> dict:
@@ -86,7 +85,6 @@ def ingest_batch(
         batch,
         epoch_id=epoch_id,
         stream_id=stream_id,
-        salt_buckets=salt_buckets,
         collect_metrics=log_lineage,
         pit_dates=pit_dates,
     )
@@ -111,7 +109,6 @@ def run_stream(
     checkpoint_dir: str,
     stream_id: str = "default",
     max_files_per_trigger: int = 1,
-    salt_buckets: int = 32,
     fail_after_batches: int | None = None,
     log_lineage: bool = True,
     pit_dates: list[str] | None = None,
@@ -132,7 +129,6 @@ def run_stream(
             batch_df,
             epoch_id,
             stream_id=stream_id,
-            salt_buckets=salt_buckets,
             log_lineage=log_lineage,
             pit_dates=pit_dates,
         )
@@ -177,7 +173,7 @@ def run_stream(
                 # independent tables: run the fold jobs concurrently on
                 # the executors (same overlap pattern as apply_batch's
                 # merges) — the drain fold is the largest single block of
-                # replay wall outside the batches (bench/profile_floor)
+                # replay wall outside the batches (BENCH.md, round 5 floor)
                 from concurrent.futures import ThreadPoolExecutor as _TPE
 
                 sats = list(vault.registry.satellites)

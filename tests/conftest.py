@@ -20,6 +20,11 @@ def pytest_configure(config):
 
 @pytest.fixture(scope="session")
 def spark():
+    # size the driver heap to the host: with the engine's 32g default the
+    # JVM heap can outgrow a small host's RAM before it collects, and the
+    # kernel then kills the JVM mid-suite
+    ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+    os.environ.setdefault("DVX_DRIVER_MEMORY", f"{max(2, min(8, ram_gb // 2))}g")
     spark = get_spark(app_name="dvx-tests", master="local[4]", shuffle_partitions=4)
     yield spark
 

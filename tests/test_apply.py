@@ -437,11 +437,11 @@ def test_crash_between_history_and_current_commit_converges(
     commit_staged = LakeTable.commit_staged
     armed = {"on": True}
 
-    def crash_on_current(self, staged, op, summary=None):
+    def crash_on_current(self, staged, op, summary=None, **kw):
         if op == "upsert_delta" and armed["on"]:
             armed["on"] = False
             raise RuntimeError("injected crash before the current delta commit")
-        return commit_staged(self, staged, op, summary=summary)
+        return commit_staged(self, staged, op, summary=summary, **kw)
 
     monkeypatch.setattr(LakeTable, "commit_staged", crash_on_current)
     with pytest.raises(RuntimeError, match="injected crash"):

@@ -239,7 +239,7 @@ def test_create_rejects_composite_key_bloom(spark, tmp_path):
 def test_segment_fallback_cap_leaves_bucket_uncovered(spark, hub, monkeypatch):
     """ADVICE r5 (low): a big direct append skips the driver-side segment
     build (row-count cap) — bucket stays uncovered, reads stay correct."""
-    monkeypatch.setenv("DVX_BLOOM_FALLBACK_MAX_ROWS", "3")
+    monkeypatch.setattr("dvx.lake._BLOOM_FALLBACK_MAX_ROWS", 3)
     hub.append(_keys_df(spark, [f"z{i}" for i in range(64)]))
     assert not hub.bloom_paths()  # every bucket exceeded the cap
     # inserts afterwards fall back to the plain existence read and dedup

@@ -16,11 +16,11 @@ def test_config_cascade_precedence(tmp_path):
     cfg = DvxConfig.load(
         config_file=str(cfgf),
         overrides={"num_buckets": 64},
-        env={"DVX_WAREHOUSE": "/from/env", "DVX_SALT_BUCKETS": "7"},
+        env={"DVX_WAREHOUSE": "/from/env", "DVX_MAX_FILES_PER_TRIGGER": "7"},
     )
     assert cfg.warehouse == "/from/env"  # env beats file
     assert cfg.num_buckets == 64  # explicit override beats env+file
-    assert cfg.salt_buckets == 7  # env string coerced to int
+    assert cfg.max_files_per_trigger == 7  # env string coerced to int
     assert cfg.log_lineage is True  # default survives
 
 

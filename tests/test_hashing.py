@@ -1,4 +1,5 @@
-"""Hash parity: pandas-UDF MD5 vs native F.md5 vs hashlib vs DuckDB.
+"""Hash parity: the fused Arrow UDF (registry_hashes) vs native F.md5 vs
+hashlib vs DuckDB.
 
 Mirrors HashKeyGenerator semantics (SURVEY.md §2.8): NULL sentinel,
 upper/trim normalization, '~' delimiter, lowercase 32-char hex.
@@ -12,7 +13,11 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from dvx.hashing import hash_expr, hash_expr_udf, hash_sql, normalized_concat
+from dvx.entities import DEFAULT_REGISTRY, SAT_TURN_META
+from dvx.hashing import hash_expr, hash_sql, normalized_concat, registry_hashes
+
+#: two satellites, so the fused pass emits more than one hash-diff
+REGISTRY = DEFAULT_REGISTRY.with_satellite(SAT_TURN_META)
 
 
 @pytest.fixture(scope="module")
@@ -29,17 +34,27 @@ def df(spark):
     )
 
 
+def _fused(df):
+    """``df`` plus every column the ingest hot path's ONE Arrow pass emits."""
+    diff_cols = {s.name: list(s.attrs) for s in REGISTRY.satellites}
+    return df.withColumn("_h", registry_hashes(REGISTRY, diff_cols)).select(
+        "*", "_h.*"
+    )
+
+
 def test_native_vs_udf_bit_identical(df):
-    out = df.select(
-        hash_expr("conv_id", "turn_idx").alias("native"),
-        hash_expr_udf("conv_id", "turn_idx").alias("udf"),
-        hash_expr("role", "text", "tool").alias("native_diff"),
-        hash_expr_udf("role", "text", "tool").alias("udf_diff"),
+    """Every hub key and satellite hash-diff of the fused Arrow pass equals
+    the native hash_expr over the same columns."""
+    pairs = [(h.hash_key, hash_expr(*h.business_keys)) for h in REGISTRY.hubs]
+    pairs += [(s.diff_col, hash_expr(*s.attrs)) for s in REGISTRY.satellites]
+    rows = _fused(df).select(
+        *[c for name, ref in pairs for c in (F.col(name), ref.alias("ref_" + name))]
     ).collect()
-    for r in out:
-        assert r.native == r.udf
-        assert r.native_diff == r.udf_diff
-        assert len(r.native) == 32 and r.native == r.native.lower()
+    assert len(rows) == 5
+    for r in rows:
+        for name, _ in pairs:
+            assert r[name] == r["ref_" + name], name
+            assert len(r[name]) == 32 and r[name] == r[name].lower()
 
 
 def test_matches_hashlib_reference(df):
@@ -63,25 +78,17 @@ def test_null_vs_empty_distinct(spark):
 
 
 def test_fused_key_udf_matches_individual_exprs(df):
-    from dvx.hashing import turn_key_hashes
-
-    got = df.select(
-        turn_key_hashes("conv_id", "turn_idx").alias("k"),
-        hash_expr("conv_id").alias("conv_ref"),
-        hash_expr("conv_id", "turn_idx").alias("turn_ref"),
+    """The link key computed in-pass equals md5 over its (normalized)
+    parent hub keys, each computed natively."""
+    hub_ref = {h.hash_key: hash_expr(*h.business_keys) for h in REGISTRY.hubs}
+    (link,) = REGISTRY.links
+    got = _fused(df).select(
+        F.col(link.hash_key).alias("fused"),
+        hash_expr(*[hub_ref[p] for p in link.parents]).alias("ref"),
     ).collect()
+    assert len(got) == 5
     for r in got:
-        assert r.k.conv_hash_key == r.conv_ref
-        assert r.k.turn_hash_key == r.turn_ref
-    # link hash equals md5 over the (normalized) parent hashes
-    got2 = df.select(
-        turn_key_hashes("conv_id", "turn_idx").alias("k")
-    ).select(
-        "k.link_hash_key",
-        hash_expr(F.col("k.conv_hash_key"), F.col("k.turn_hash_key")).alias("ref"),
-    ).collect()
-    for r in got2:
-        assert r.link_hash_key == r.ref
+        assert r.fused == r.ref
 
 
 def test_duckdb_oracle_parity(df):

@@ -1,4 +1,4 @@
-"""ACID lake-table format: snapshots, COW merge, time travel, rollback,
+"""ACID lake-table format: snapshots, COW replace, time travel, rollback,
 expiry, compaction, epoch tracking, additive evolution.
 
 These mirror the Iceberg capabilities the reference relies on
@@ -6,6 +6,8 @@ These mirror the Iceberg capabilities the reference relies on
 """
 
 from __future__ import annotations
+
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -36,6 +38,14 @@ def _df(spark, rows):
     return spark.createDataFrame(rows, SCHEMA)
 
 
+def _rows(t):
+    return sorted((r.k, r.v) for r in t.read().collect())
+
+
+def _bucket(t, spark, k):
+    return t.with_bucket(_df(spark, [(k, 0)])).select(BUCKET_COL).first()[0]
+
+
 def test_create_is_idempotent(spark, tmp_path):
     root = str(tmp_path / "t")
     t1 = LakeTable.create(spark, root, SCHEMA, num_buckets=4, bucket_cols=["k"])
@@ -51,23 +61,20 @@ def test_append_and_read(spark, tbl):
 
 
 def test_merge_upsert_only_rewrites_touched_buckets(spark, tbl):
+    """A copy-on-write upsert (read the touched buckets, replace them)
+    rewrites only the buckets the source batch touches."""
     tbl.append(_df(spark, [("a", 1), ("b", 2), ("c", 3)]))
     v_before = tbl.version()
     files_before = tbl.snapshot()["files"]
 
-    def upsert(cur, src):
-        cols = ["k", "v", BUCKET_COL]
-        keep = cur.join(src.select("k"), "k", "left_anti").select(*cols)
-        return keep.unionByName(src.select(*cols))
-
-    tbl.merge(tbl.with_bucket(_df(spark, [("a", 10), ("d", 4)])), upsert)
-    got = sorted((r.k, r.v) for r in tbl.read().collect())
-    assert got == [("a", 10), ("b", 2), ("c", 3), ("d", 4)]
+    src = _df(spark, [("a", 10), ("d", 4)])
+    touched = sorted({_bucket(tbl, spark, "a"), _bucket(tbl, spark, "d")})
+    keep = tbl.read(buckets=touched).join(src.select("k"), "k", "left_anti")
+    tbl.replace_buckets(touched, keep.unionByName(src))
+    assert _rows(tbl) == [("a", 10), ("b", 2), ("c", 3), ("d", 4)]
 
     # untouched buckets carried over as metadata (identical file paths)
     files_after = tbl.snapshot()["files"]
-    touched = {r[0] for r in tbl.with_bucket(_df(spark, [("a", 0), ("d", 0)]))
-               .select(BUCKET_COL).distinct().collect()}
     for key, paths in files_before.items():
         if int(key) not in touched:
             assert files_after.get(key) == paths
@@ -97,12 +104,9 @@ def test_expire_snapshots_keeps_live_files(spark, tbl):
 
 def test_expire_reclaims_replaced_merge_files(spark, tbl):
     tbl.append(_df(spark, [("a", 1)]))
-
-    def replace(cur, src):
-        return src
-
+    bucket = _bucket(tbl, spark, "a")
     for i in range(3):
-        tbl.merge(tbl.with_bucket(_df(spark, [("a", i)])), replace)
+        tbl.replace_buckets([bucket], _df(spark, [("a", i)]))
     removed = tbl.expire_snapshots(retain_last=1)
     assert removed > 0
     assert [(r.k, r.v) for r in tbl.read().collect()] == [("a", 2)]
@@ -363,3 +367,133 @@ def test_read_key_filter_prunes_below_mor_merge(spark, tbl):
     )
     with _pytest.raises(ValueError, match="bucketed"):
         flat.read(key_filter=kf)
+
+
+# ------------------------------------------- one write path: replace + OCC
+
+
+@pytest.fixture()
+def one(spark, tmp_path):
+    """A one-bucket table: every key shares bucket "0"."""
+    return LakeTable.create(
+        spark, str(tmp_path / "one"), SCHEMA, num_buckets=1, bucket_cols=["k"]
+    )
+
+
+def _keys(spark, names):
+    return spark.createDataFrame([(k,) for k in names], "k string")
+
+
+def _unreferenced_attempt_dirs(t):
+    """``data/c*`` directories no manifest of the table references."""
+    referenced = set()
+    for v in t._versions():
+        m = t.snapshot(v)
+        for name in ("files", "deltas", "blooms", "tombstones"):
+            for ps in m[name].values():
+                referenced.update(p.split(os.sep)[1] for p in ps)
+    return set(os.listdir(os.path.join(t.root, "data"))) - referenced
+
+
+def _race_once(monkeypatch, competitor):
+    """Make the next data-file write first run ``competitor`` (one
+    commit by another writer), so it lands between the writer's base
+    read and its commit."""
+    write_files = LakeTable._write_files
+    armed = {"on": True}
+
+    def racing(self, *args, **kwargs):
+        if armed["on"]:
+            armed["on"] = False
+            competitor()
+        return write_files(self, *args, **kwargs)
+
+    monkeypatch.setattr(LakeTable, "_write_files", racing)
+    return armed
+
+
+def test_overwrite_partitions_supersedes_pending_deltas(spark, one):
+    """Overwriting a bucket replaces its pending deltas and tombstones
+    too: an older delta must not resurrect a row the overwrite dropped."""
+    one.append(_df(spark, [("a", 1)]))
+    one.delete_keys_insert(_keys(spark, ["c"]), _df(spark, [("c", 3)]))
+    one.upsert_delta(_df(spark, [("b", 2)]))
+    one.overwrite_partitions(_df(spark, [("a", 99)]))
+    m = one.snapshot()
+    assert not m["deltas"].get("0")
+    assert not m["tombstones"].get("0")
+    assert _rows(one) == [("a", 99)]
+
+
+@pytest.mark.parametrize("fold", ["compact_deltas", "compact_tombstones"])
+def test_fold_keeps_a_commit_that_lands_mid_fold(spark, one, monkeypatch, fold):
+    """A writer that commits between a fold's read and its commit is
+    folded in, not lost: the fold reads again at the new base."""
+    one.append(_df(spark, [("a", 1)]))
+    if fold == "compact_deltas":
+        one.upsert_delta(_df(spark, [("a", 2)]))
+    else:
+        one.delete_keys_insert(_keys(spark, ["a"]), _df(spark, [("a", 2)]))
+    armed = _race_once(
+        monkeypatch, lambda: one.upsert_delta(_df(spark, [("c", 3)]))
+    )
+    kwargs = {"max_delta_files": 1} if fold == "compact_deltas" else {}
+    assert getattr(one, fold)(**kwargs) == 1
+    assert not armed["on"]  # the competing commit did land mid-fold
+    assert _rows(one) == [("a", 2), ("c", 3)]
+    assert one._versions() == list(range(1, one.version() + 1))
+    assert not _unreferenced_attempt_dirs(one)
+
+
+_OCC_OPS = {
+    "append": lambda spark, t: t.append(_df(spark, [("x", 5)])),
+    "upsert_delta": lambda spark, t: t.upsert_delta(_df(spark, [("a", 5)])),
+    "delete_keys_insert": lambda spark, t: t.delete_keys_insert(
+        _keys(spark, ["a"]), _df(spark, [("a", 5), ("a", 6)])
+    ),
+    "overwrite_partitions": lambda spark, t: t.overwrite_partitions(
+        _df(spark, [("a", 5)])
+    ),
+    "replace_buckets": lambda spark, t: t.replace_buckets(
+        [_bucket(t, spark, "a")], _df(spark, [("a", 5)])
+    ),
+    "compact": lambda spark, t: t.compact(max_files_per_key=1),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_OCC_OPS))
+def test_occ_retry_equals_serial(spark, tmp_path, monkeypatch, op):
+    """Every data write resolves a concurrent commit through the OCC
+    retry: a competing commit lands mid-write once, the op stages again
+    from the new base, and the table ends equal to the serial order
+    (competitor first, then the op) with dense versions and no attempt
+    directory left unreferenced."""
+
+    def setup(name):
+        t = LakeTable.create(
+            spark, str(tmp_path / name), SCHEMA, num_buckets=4, bucket_cols=["k"]
+        )
+        t.append(_df(spark, [("a", 1), ("b", 2), ("c", 3), ("d", 4)]))
+        t.append(_df(spark, [("e", 5), ("f", 6)]))
+        t.upsert_delta(_df(spark, [("b", 20)]))
+        return t
+
+    def compete(t):
+        t.append(_df(spark, [("z", 26)]))
+
+    serial = setup("serial")
+    compete(serial)
+    _OCC_OPS[op](spark, serial)
+
+    raced = setup("raced")
+    armed = _race_once(monkeypatch, lambda: compete(raced))
+    _OCC_OPS[op](spark, raced)
+    assert not armed["on"]  # the competing commit did land mid-write
+
+    assert _rows(raced) == _rows(serial)
+    assert raced._versions() == list(range(1, raced.version() + 1))
+    assert raced.version() == serial.version()
+    assert [h["operation"] for h in raced.history()] == [
+        h["operation"] for h in serial.history()
+    ]
+    assert not _unreferenced_attempt_dirs(raced)
