@@ -126,6 +126,17 @@ def _spill_path(vault: Vault) -> str:
     return os.path.join(base, "dvx_spill", uuid.uuid4().hex)
 
 
+def _in_pool(sc, pool: str, fn, *args, **kwargs):
+    """Run ``fn`` with this thread's Spark jobs in the fair-scheduler
+    pool ``pool`` (the scheduler-pool localProperty is per Python
+    thread)."""
+    sc.setLocalProperty("spark.scheduler.pool", pool)
+    try:
+        return fn(*args, **kwargs)
+    finally:
+        sc.setLocalProperty("spark.scheduler.pool", None)
+
+
 def _bloom_scan(
     prepared: DataFrame, specs: list[tuple[str, object, str]]
 ) -> dict[str, dict[int, tuple[int, bytes, int]]]:
@@ -479,17 +490,9 @@ def _apply_satellite(
                 F.col(BUCKET_COL),
             )
 
+        # the satellite apply is the batch's critical path: its helper
+        # threads' jobs join the weighted pool too
         sc = vault.spark.sparkContext
-
-        def _critical(fn, *args, **kwargs):
-            # the satellite apply is the batch's critical path: its helper
-            # threads' jobs join the weighted pool (the scheduler-pool
-            # localProperty is per python thread)
-            sc.setLocalProperty("spark.scheduler.pool", "dvx_critical")
-            try:
-                return fn(*args, **kwargs)
-            finally:
-                sc.setLocalProperty("spark.scheduler.pool", None)
 
         def _rechain(path: str) -> DataFrame:
             """Re-chain the stale keys over history ∪ current ∪ batch and
@@ -564,10 +567,11 @@ def _apply_satellite(
         f_rechain = f_tombs = None
         if stale_buckets:
             spill_r = _spill_path(vault)
-            f_rechain = ex.submit(_critical, _rechain, spill_r)
+            f_rechain = ex.submit(_in_pool, sc, "dvx_critical", _rechain, spill_r)
             if do_hist:
                 f_tombs = ex.submit(
-                    _critical, hist_tbl.stage_write, None, tombstone_keys=stale_keys
+                    _in_pool, sc, "dvx_critical", hist_tbl.stage_write, None,
+                    tombstone_keys=stale_keys,
                 )
 
         def anti_stale(df: DataFrame) -> DataFrame:
@@ -646,10 +650,10 @@ def _apply_satellite(
         if do_hist:
             op = "delete_insert" if f_tombs is not None else "append"
             writes.append((hist_tbl, hist_rows, op, ex.submit(
-                _critical, hist_tbl.stage_write, hist_rows)))
+                _in_pool, sc, "dvx_critical", hist_tbl.stage_write, hist_rows)))
         if do_cur:
             writes.append((cur_tbl, delta_rows, "upsert_delta", ex.submit(
-                _critical, cur_tbl.stage_write, delta_rows)))
+                _in_pool, sc, "dvx_critical", cur_tbl.stage_write, delta_rows)))
         for tbl, frame, op, fut in writes:
             staged = fut.result()
             if op == "delete_insert":
@@ -677,7 +681,6 @@ def apply_batch(
     batch: DataFrame,
     epoch_id: int | None = None,
     stream_id: str = "default",
-    collect_metrics: bool = False,
     pit_dates: list[str] | None = None,
 ) -> dict:
     """Apply one changelog micro-batch to the vault (idempotent).
@@ -697,8 +700,8 @@ def apply_batch(
     fixed overhead (scheduling, commit latency) overlaps instead of
     summing, which matters most for small/frequent micro-batches.
 
-    ``collect_metrics`` additionally returns per-bucket row counts (one
-    small agg on the spilled batch) for the lineage table.
+    Returns the event count and the per-bucket row counts (the lineage
+    table's metrics).
     """
     import shutil as _shutil
     from concurrent.futures import ThreadPoolExecutor
@@ -763,18 +766,10 @@ def apply_batch(
         # narrow agg) instead of waiting behind the multi-second scan
         # that only the hub/link inserts consume (guide §2.6 overlap).
         sc = vault.spark.sparkContext
-
-        def _pooled(pool: str, fn, *args):
-            sc.setLocalProperty("spark.scheduler.pool", pool)
-            try:
-                return fn(*args)
-            finally:
-                sc.setLocalProperty("spark.scheduler.pool", None)
-
         n_workers = 2 + len(tasks) + len(registry.satellites)
         with ThreadPoolExecutor(max_workers=n_workers) as ex:
             fut_scan = (
-                ex.submit(_pooled, "dvx_merge_scan", _bloom_scan, prepared,
+                ex.submit(_in_pool, sc, "dvx_merge_scan", _bloom_scan, prepared,
                           bloomed)
                 if bloomed
                 else None
@@ -783,7 +778,7 @@ def apply_batch(
                 # the counts job GATES the satellite start — run it
                 # in the weighted critical pool so it never queues
                 # behind the scan/hub stages
-                ex.submit(_pooled, "dvx_critical", _count_buckets)
+                ex.submit(_in_pool, sc, "dvx_critical", _count_buckets)
                 if first_sat is not None
                 else None
             )
@@ -817,12 +812,12 @@ def apply_batch(
                 # batch: the weighted `dvx_critical` pool (dvx.session
                 # _alloc_file) gives them most task slots; hub/link/
                 # scan backfill (guide §2.6)
-                ex.submit(_pooled, "dvx_critical", _run_sat, s)
+                ex.submit(_in_pool, sc, "dvx_critical", _run_sat, s)
                 for s in registry.satellites
             ]
             futs += [
                 ex.submit(
-                    _pooled, f"dvx_merge_{os.path.basename(tbl.root)}",
+                    _in_pool, sc, f"dvx_merge_{os.path.basename(tbl.root)}",
                     _run_key_table, tbl, nm, key, cols
                 )
                 for tbl, nm, key, cols in tasks

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dvx.hashing import hash_expr
+from dvx.pit import current_turn_text, latest_asof
 from dvx.schema import Vault
 
 #: SCD2 dim column order (metadata tail shared by every SCD2 dimension)
@@ -43,9 +44,7 @@ def build_dim_date(spark, start: str, end: str) -> DataFrame:
 
 def build_dims(vault: Vault) -> dict[str, DataFrame]:
     """SCD1 dims as deterministic derivations of the current state."""
-    sat = vault.sat_turn_text.read().filter(
-        F.col("valid_to").isNull() & F.col("is_deleted").isNull()
-    )
+    sat = current_turn_text(vault)
     dim_role = (
         sat.select("role").distinct()
         .withColumn("role_key", hash_expr("role"))
@@ -62,36 +61,9 @@ def build_dims(vault: Vault) -> dict[str, DataFrame]:
 def live_turns_asof(vault: Vault, ts: str) -> DataFrame:
     """Current live turns as of timestamp ``ts`` (P3 + W1 over the full
     satellite history, tombstones dropped) joined to hub_turn — the gold
-    layer's source frame for point-in-time dimension builds.
-
-    The W1 pick is ONE map-side-combining aggregate (same round-6 shape
-    as dvx.pit._pit_frame — guide §2.4): max over a struct ordered
-    (valid_from, src_seq, <rest>) picks the identical as-of winner the
-    previous narrow-agg + shuffle_hash semi-join + guard-agg pipeline
-    picked, in a single exchange; the partial aggregate collapses to ≤1
-    row/key/partition before the shuffle. One-row-per-key stays
-    deterministic on anomalous duplicate-version state (ties break on
-    the remaining columns in order), and the tombstone filter after the
-    agg drops the same keys the semi-join variant dropped."""
-    sat = vault.sat_all().filter(F.col("valid_from") <= F.to_timestamp(F.lit(ts)))
-    others = [
-        c for c in sat.columns
-        if c not in ("turn_hash_key", "valid_from", "src_seq")
-    ]
-    _payload = F.struct(
-        F.col("valid_from"), F.col("src_seq"), *[F.col(c) for c in others]
-    )
-    latest = (
-        sat.groupBy("turn_hash_key")
-        .agg(F.max(_payload).alias("_r"))
-        .select(
-            "turn_hash_key",
-            *[F.col(f"_r.{c}").alias(c) for c in ["valid_from", "src_seq", *others]],
-        )
-        .filter(F.col("is_deleted").isNull())
-    )
-    hub = vault.hub_turn.read().select("turn_hash_key", "conv_id", "turn_idx")
-    return latest.join(hub, "turn_hash_key")
+    layer's source frame for point-in-time dimension builds. The pick is
+    the PIT build's own (:func:`dvx.pit.latest_asof`)."""
+    return latest_asof(vault, vault.sat_all(), F.to_timestamp(F.lit(ts)))
 
 
 def conversation_attrs(turns: DataFrame) -> DataFrame:
@@ -241,9 +213,7 @@ def build_fact_turn(vault: Vault, date_spine: tuple[str, str] | None = None) -> 
     fact's own min/max dates (two tiny scalar aggs on pruned columns).
     dim_date is bounded (one row per calendar day) — always broadcast.
     """
-    sat = vault.sat_turn_text.read().filter(
-        F.col("valid_to").isNull() & F.col("is_deleted").isNull()
-    )
+    sat = current_turn_text(vault)
     link = vault.link_conversation_turn.read().select(
         "link_hash_key", "conv_hash_key", "turn_hash_key"
     )

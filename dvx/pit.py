@@ -7,7 +7,8 @@ snapshot date carrying the latest satellite version as of that date.
 Three build paths:
 
 - :func:`build_pit` — full build for one snapshot date: as-of filter (P3)
-  -> latest-version window (W1) -> hub join (J3); idempotence guard (A6)
+  -> latest-version pick (W1) -> hub join (J3), the one as-of pick
+  :func:`latest_asof` that gold shares; idempotence guard (A6)
   skips dates already materialized; writes via dynamic partition
   overwrite so re-running a date is a clean replace.
 - :func:`build_pit_incremental` — per-micro-batch variant (north_rule):
@@ -23,7 +24,7 @@ by snapshot_date, so serving queries prune to one partition.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dvx.schema import Vault
@@ -32,14 +33,27 @@ from dvx.schema import Vault
 #: the PIT grain); apply_batch's pit_dates path resolves it by this name
 PIT_SATELLITE = "sat_turn_text"
 
-_ATTR_EXCLUDE = {"turn_hash_key", "hash_diff", "valid_from", "valid_to",
-                 "is_deleted", "src_seq", "load_date", "record_source"}
+#: satellite columns a PIT row does not carry
+_PIT_DROP = {"hash_diff", "is_deleted", "src_seq", "load_date", "record_source"}
 
 
-def _pit_frame(vault: Vault, snapshot_date: str, sat: DataFrame) -> DataFrame:
-    """hub ⋈ latest-sat-version-as-of-date, projected to the PIT schema."""
-    asof_end = F.to_timestamp(F.lit(snapshot_date + " 23:59:59"))
-    asof = sat.filter(F.col("valid_from") <= asof_end)  # P3
+def day_end(date: Column) -> Column:
+    """The as-of boundary of a ``yyyy-MM-dd`` snapshot date: its last
+    second."""
+    return F.to_timestamp(F.concat(date, F.lit(" 23:59:59")))
+
+
+def current_turn_text(vault: Vault) -> DataFrame:
+    """The text satellite's current rows: open version, not a tombstone."""
+    return vault.sat_turn_text.read().filter(
+        F.col("valid_to").isNull() & F.col("is_deleted").isNull()
+    )
+
+
+def latest_asof(vault: Vault, sat: DataFrame, ts: Column) -> DataFrame:
+    """hub_turn ⋈ each key's latest live version in ``sat`` as of ``ts``
+    (P3 filter -> W1 pick -> J3 join)."""
+    asof = sat.filter(F.col("valid_from") <= ts)  # P3
     # W1 as ONE map-side-combining aggregate: max over a struct ordered
     # (valid_from, src_seq, <remaining columns>) picks the same as-of
     # winner per key that the previous three-step pipeline (narrow top
@@ -73,20 +87,30 @@ def _pit_frame(vault: Vault, snapshot_date: str, sat: DataFrame) -> DataFrame:
         .filter(F.col("is_deleted").isNull())  # tombstoned keys drop out
     )
     hub = vault.hub_turn.read().select("turn_hash_key", "conv_id", "turn_idx")
-    attrs = [c for c in latest.columns if c not in _ATTR_EXCLUDE]
-    pit_fields = [f.name for f in vault.pit_turn.schema().fields]
-    return (
-        latest.join(hub, "turn_hash_key")  # J3 (hub is NOT broadcast: one row
-        # per turn at 10^10 scale — AQE picks broadcast when it does fit)
-        .withColumn("snapshot_date", F.lit(snapshot_date))
-        .select(
-            *[
-                F.col(c) if c in ["turn_hash_key", "conv_id", "turn_idx",
-                                  "snapshot_date", "valid_from", "valid_to"] + attrs
-                else F.lit(None).alias(c)
-                for c in pit_fields
-            ]
-        )
+    # J3 (hub is NOT broadcast: one row per turn at 10^10 scale — AQE
+    # picks broadcast when it does fit)
+    return latest.join(hub, "turn_hash_key")
+
+
+def _pit_project(vault: Vault, frame: DataFrame) -> DataFrame:
+    """Project an as-of frame (satellite + hub columns + snapshot_date)
+    onto pit_turn's schema; a PIT column the frame does not carry is
+    NULL."""
+    return frame.select(
+        *[
+            F.col(c) if c in frame.columns and c not in _PIT_DROP
+            else F.lit(None).alias(c)
+            for c in (f.name for f in vault.pit_turn.schema().fields)
+        ]
+    )
+
+
+def _pit_frame(vault: Vault, snapshot_date: str, sat: DataFrame) -> DataFrame:
+    """hub ⋈ latest-sat-version-as-of-date, projected to the PIT schema."""
+    date = F.lit(snapshot_date)
+    return _pit_project(
+        vault,
+        latest_asof(vault, sat, day_end(date)).withColumn("snapshot_date", date),
     )
 
 
@@ -172,7 +196,7 @@ def build_pit_range(vault: Vault, start_date: str, end_date: str) -> int:
     hub = vault.hub_turn.read().select("turn_hash_key", "conv_id", "turn_idx")
     keys = hub.crossJoin(F.broadcast(spine))  # J5
     sat = vault.sat_all().filter(F.col("is_deleted").isNull())
-    asof_end = F.to_timestamp(F.concat(F.col("snapshot_date"), F.lit(" 23:59:59")))
+    asof_end = day_end(F.col("snapshot_date"))
     joined = keys.join(  # J6: theta join, equi part on key + residual range filter
         sat,
         (keys.turn_hash_key == sat.turn_hash_key)
@@ -180,44 +204,33 @@ def build_pit_range(vault: Vault, start_date: str, end_date: str) -> int:
         & (sat.valid_to.isNull() | (sat.valid_to > asof_end)),
         "inner",
     ).drop(sat.turn_hash_key)
-    pit_fields = [f.name for f in vault.pit_turn.schema().fields]
-    attrs = [c for c in sat.columns if c not in _ATTR_EXCLUDE]
-    frame = joined.select(
-        *[
-            F.col(c) if c in ["turn_hash_key", "conv_id", "turn_idx",
-                              "snapshot_date", "valid_from", "valid_to"] + attrs
-            else F.lit(None).alias(c)
-            for c in pit_fields
-        ]
-    )
-    vault.pit_turn.overwrite_partitions(frame)
+    vault.pit_turn.overwrite_partitions(_pit_project(vault, joined))
     return 1
+
+
+def _bridge_frame(vault: Vault, link: DataFrame) -> DataFrame:
+    """link ⋈ hub ⋈ hub ⋈ current-sat (J4) over the given link rows."""
+    hub_c = vault.hub_conversation.read().select("conv_hash_key", "conv_id")
+    hub_t = vault.hub_turn.read().select("turn_hash_key", "turn_idx")
+    sat_cur = current_turn_text(vault).select("turn_hash_key", "role", "text", "tool")
+    return (
+        # hub_conversation is NOT force-broadcast: one row per conversation
+        # is unbounded at 10^10 events — AQE broadcasts when it fits
+        link.join(hub_c, "conv_hash_key")
+        .join(hub_t, "turn_hash_key")
+        .join(sat_cur, "turn_hash_key")
+        .select(
+            "link_hash_key", "conv_hash_key", "turn_hash_key",
+            "conv_id", "turn_idx", "role", "text", "tool",
+        )
+    )
 
 
 def build_bridge(vault: Vault) -> DataFrame:
     """Bridge frame: link ⋈ hub ⋈ hub ⋈ current-sat (BusinessVaultETL
     .scala:404-494, J4). :func:`refresh_bridge` materializes it into the
     ``bridge_conversation_turn`` lake table for serving."""
-    link = vault.link_conversation_turn.read()
-    hub_c = vault.hub_conversation.read().select("conv_hash_key", "conv_id")
-    hub_t = vault.hub_turn.read().select(
-        "turn_hash_key", F.col("conv_id").alias("_tc"), "turn_idx"
-    )
-    sat_cur = vault.sat_turn_text.read().filter(
-        F.col("valid_to").isNull() & F.col("is_deleted").isNull()
-    )
-    return (
-        # hub_conversation is NOT force-broadcast: one row per conversation
-        # is unbounded at 10^10 events — AQE broadcasts when it fits
-        link.join(hub_c, "conv_hash_key")
-        .join(hub_t, "turn_hash_key")
-        .drop("_tc")
-        .join(sat_cur.select("turn_hash_key", "role", "text", "tool"), "turn_hash_key")
-        .select(
-            "link_hash_key", "conv_hash_key", "turn_hash_key",
-            "conv_id", "turn_idx", "role", "text", "tool",
-        )
-    )
+    return _bridge_frame(vault, vault.link_conversation_turn.read())
 
 
 def refresh_bridge(vault: Vault, touched_conv_keys: DataFrame | None = None) -> int:
@@ -263,19 +276,5 @@ def refresh_bridge(vault: Vault, touched_conv_keys: DataFrame | None = None) -> 
     link = vault.link_conversation_turn.read().join(
         convs.hint("shuffle_hash"), "conv_hash_key", "left_semi"
     )
-    hub_c = vault.hub_conversation.read().select("conv_hash_key", "conv_id")
-    hub_t = vault.hub_turn.read().select("turn_hash_key", "turn_idx")
-    sat_cur = vault.sat_turn_text.read().filter(
-        F.col("valid_to").isNull() & F.col("is_deleted").isNull()
-    )
-    frame = (
-        link.join(hub_c, "conv_hash_key")
-        .join(hub_t, "turn_hash_key")
-        .join(sat_cur.select("turn_hash_key", "role", "text", "tool"), "turn_hash_key")
-        .select(
-            "link_hash_key", "conv_hash_key", "turn_hash_key",
-            "conv_id", "turn_idx", "role", "text", "tool",
-        )
-    )
-    tbl.replace_buckets(touched, frame, summary=summary)
+    tbl.replace_buckets(touched, _bridge_frame(vault, link), summary=summary)
     return len(touched)

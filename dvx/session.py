@@ -23,6 +23,14 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: fair-scheduler weight of the ``dvx_critical`` pool (every other pool
+#: keeps weight 1)
+CRITICAL_WEIGHT = 6
+#: AQE's target post-shuffle partition size
+ADVISORY_PARTITION_BYTES = 16 * 1024 * 1024
+#: the largest file split one scan task reads
+MAX_PARTITION_BYTES = 32 * 1024 * 1024
+
 
 def _scratch_dir() -> str:
     shm = "/dev/shm"
@@ -41,9 +49,9 @@ def _alloc_file() -> str:
     satellite-apply threads; every other on-demand pool keeps default
     weight 1. Intra-pool mode FAIR so two satellites (multi-satellite
     registries) still share."""
-    weight = int(os.environ.get("DVX_CRITICAL_WEIGHT", "6"))
-    d = _scratch_dir()
-    path = os.path.join(d, f"dvx_fair_pools_w{weight}.xml")
+    # the weight is in the name: a file written for another weight is
+    # never reused
+    path = os.path.join(_scratch_dir(), f"dvx_fair_pools_w{CRITICAL_WEIGHT}.xml")
     if not os.path.exists(path):
         tmp = path + ".tmp"
         with open(tmp, "w") as f:
@@ -51,7 +59,7 @@ def _alloc_file() -> str:
                 "<?xml version=\"1.0\"?>\n<allocations>\n"
                 "  <pool name=\"dvx_critical\">\n"
                 "    <schedulingMode>FAIR</schedulingMode>\n"
-                f"    <weight>{weight}</weight>\n"
+                f"    <weight>{CRITICAL_WEIGHT}</weight>\n"
                 "    <minShare>0</minShare>\n"
                 "  </pool>\n"
                 "</allocations>\n"
@@ -174,15 +182,12 @@ def get_spark(
         # micro-batch stages at useful width without tiny-task overhead
         .config(
             "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("DVX_ADVISORY_PARTITION_BYTES", str(16 * 1024 * 1024)),
+            str(ADVISORY_PARTITION_BYTES),
         )
         # a micro-batch often arrives as ONE parquet file; 32MB splits give
         # the scan (and the Arrow hash UDFs that run inside it) real width.
-        # On a large cluster with many input files, raise via env.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("DVX_MAX_PARTITION_BYTES", str(32 * 1024 * 1024)),
-        )
+        # On a large cluster with many input files, raise via extra_conf.
+        .config("spark.sql.files.maxPartitionBytes", str(MAX_PARTITION_BYTES))
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.adaptive.localShuffleReader.enabled", "true")
         # CBO acts on CATALOG tables with stats: dvx.views.publish_views
@@ -217,7 +222,7 @@ def get_spark(
         # replay). The allocation file gives `dvx_critical` most of the
         # task slots; hub/link/scan jobs backfill its scheduling gaps
         # (guide §2.6: overlap fills the tail, the critical job should
-        # not wait). Weight via DVX_CRITICAL_WEIGHT (1 = old behavior).
+        # not wait). CRITICAL_WEIGHT = 1 would share slots equally.
         .config("spark.scheduler.allocation.file", _alloc_file())
         # Shuffle compression ON (the cluster default) even though local
         # shuffle lands on tmpfs: an interleaved median-of-3 A/B at both
@@ -229,14 +234,8 @@ def get_spark(
         # compressed at 4c). Round-2's "LZ4 dominates jstack" reading
         # mistook user-visible decompress frames for the bottleneck while
         # the real cost was kernel-side page traffic.
-        .config(
-            "spark.shuffle.compress",
-            os.environ.get("DVX_SHUFFLE_COMPRESS", "true"),
-        )
-        .config(
-            "spark.shuffle.spill.compress",
-            os.environ.get("DVX_SHUFFLE_COMPRESS", "true"),
-        )
+        .config("spark.shuffle.compress", "true")
+        .config("spark.shuffle.spill.compress", "true")
         # fewer, larger write syscalls on the shuffle path (default 32k):
         # tmpfs writes are pure kernel memcpy, so syscall count is the
         # cost driver at high core counts

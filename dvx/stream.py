@@ -85,7 +85,6 @@ def ingest_batch(
         batch,
         epoch_id=epoch_id,
         stream_id=stream_id,
-        collect_metrics=log_lineage,
         pit_dates=pit_dates,
     )
     if log_lineage:

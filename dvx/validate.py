@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from dvx.pit import day_end
 from dvx.schema import Vault
 
 
@@ -92,9 +93,7 @@ def check_pit_integrity(vault: Vault, snapshot_date: str):
     pit = vault.pit_turn.read(partitions=[snapshot_date])
     dups = pit.groupBy("turn_hash_key").count().filter("count > 1").count()
     nulls = pit.filter(F.col("turn_hash_key").isNull()).count()
-    late = pit.filter(
-        F.col("valid_from") > F.to_timestamp(F.lit(snapshot_date + " 23:59:59"))
-    ).count()
+    late = pit.filter(F.col("valid_from") > day_end(F.lit(snapshot_date))).count()
     return (dups == 0 and nulls == 0 and late == 0), (
         f"pit[{snapshot_date}]: {dups} dups, {nulls} null keys, {late} future valid_from"
     )

@@ -3,16 +3,20 @@
 vault that BI queries hit; Catalyst expands them and pushes predicates
 into the lake scans.
 
-Two registration surfaces:
+Each view is ONE SQL definition (:data:`_VIEWS`), written over
+placeholders for its sources: the five mirrored lake tables, plus
+``v_current_turns`` for the views built on it. Two registration
+surfaces bind those sources and run the same SQL:
 
-- :func:`create_all_views` — session TEMP views built from lake-table
-  reads (manifest-pruned, MOR-merge-aware; always correct, even
-  mid-stream). Die with the session.
+- :func:`create_all_views` — session TEMP views over this session's
+  lake reads (manifest-pruned, MOR-merge-aware; always correct, even
+  mid-stream), bound under private ``_dvx_src_*`` temp-view names. Die
+  with the session.
 - :func:`publish_views` — PERSISTENT catalog views (``CREATE OR REPLACE
   VIEW`` into the hive-backed metastore, the reference's ``CREATE OR
   REPLACE VIEW gold.v_*``): survives session restarts, so a BI tool
   reconnecting sees the semantic layer without running dvx code. The
-  views select from external parquet tables over each lake table's
+  sources are external parquet tables over each lake table's
   published serving mirror (lake.publish_mirror); re-publishing after a
   load retargets the mirror + refreshes the tables. Requires pending
   MOR deltas folded (publish folds them).
@@ -27,132 +31,10 @@ from __future__ import annotations
 import hashlib
 import os
 
-from pyspark.sql import functions as F
-
 from dvx.schema import Vault
 
-
-def create_all_views(vault: Vault) -> list[str]:
-    """CREATE OR REPLACE VIEW v_* over the vault tables."""
-    spark = vault.spark
-
-    sat = vault.sat_all()
-    hub_t = vault.hub_turn.read()
-    hub_c = vault.hub_conversation.read()
-
-    current = (
-        sat.filter(F.col("valid_to").isNull() & F.col("is_deleted").isNull())
-        .join(hub_t.select("turn_hash_key", "conv_id", "turn_idx"), "turn_hash_key")
-    )
-    current.createOrReplaceTempView("v_current_turns")
-
-    (
-        current.groupBy("conv_id")
-        .agg(
-            F.count("*").alias("n_turns"),
-            F.countDistinct("role").alias("n_roles"),
-            F.sum(F.when(F.col("tool").isNotNull(), 1).otherwise(0)).alias("n_tool_turns"),
-            F.max("turn_idx").alias("max_turn_idx"),
-        )
-        .createOrReplaceTempView("v_conversation_summary")
-    )
-
-    (
-        current.filter(F.col("tool").isNotNull())
-        .groupBy("tool")
-        .agg(
-            F.count("*").alias("n_turns"),
-            F.countDistinct("conv_id").alias("n_convs"),
-        )
-        .createOrReplaceTempView("v_tool_usage")
-    )
-
-    (
-        sat.groupBy("turn_hash_key")
-        .agg(
-            F.count("*").alias("n_versions"),
-            F.date_format(F.min("valid_from"), "yyyy-MM-dd").alias("first_seen"),
-            F.date_format(F.max("valid_from"), "yyyy-MM-dd").alias("last_changed"),
-        )
-        .join(hub_t.select("turn_hash_key", "conv_id", "turn_idx"), "turn_hash_key")
-        .createOrReplaceTempView("v_turn_churn")
-    )
-
-    # conversation_360: the reference's headline PIT-rationale view
-    # (BusinessVaultSchema.scala:365-396, SemanticModel.scala:138-218) —
-    # served from the MATERIALIZED bridge table when it has been
-    # refreshed (dvx.pit.refresh_bridge), so a BI hit pays one
-    # pre-joined, conversation-colocated scan + one agg instead of the
-    # 3-way join per query (the claimed 5-20× win). Falls back to the
-    # derived bridge frame when the table was never refreshed; serving
-    # freshness follows the refresh cadence, like the reference's.
-    from dvx.lake import LakeTable
-
-    bridge_tbl = vault.table("bridge_conversation_turn")
-    materialized = LakeTable.exists(bridge_tbl.root) and bool(
-        bridge_tbl.snapshot()["files"] or bridge_tbl.snapshot().get("deltas")
-    )
-    if materialized:
-        bridge = bridge_tbl.read()
-    else:
-        from dvx.pit import build_bridge
-
-        bridge = build_bridge(vault)
-
-    (
-        bridge
-        .groupBy("conv_id")
-        .agg(
-            F.count("*").alias("n_turns"),
-            F.countDistinct("role").alias("n_roles"),
-            F.sum(F.when(F.col("tool").isNotNull(), 1).otherwise(0)).alias("n_tool_turns"),
-            F.sum(F.length("text")).cast("long").alias("total_chars"),
-            F.max_by("role", "turn_idx").alias("last_role"),
-            F.max("turn_idx").alias("max_turn_idx"),
-        )
-        .createOrReplaceTempView("v_conversation_360")
-    )
-
-    # monthly activity trend (SemanticModel.scala:219-284 analog): current
-    # state bucketed by valid_from calendar month
-    (
-        current.groupBy(
-            F.year("valid_from").alias("year"), F.month("valid_from").alias("month")
-        )
-        .agg(
-            F.count("*").alias("n_turns"),
-            F.countDistinct("conv_id").alias("n_convs"),
-            F.sum(F.when(F.col("tool").isNotNull(), 1).otherwise(0)).alias("n_tool_turns"),
-            F.sum(F.length("text")).cast("long").alias("total_chars"),
-        )
-        .createOrReplaceTempView("v_monthly_activity")
-    )
-
-    # top-k serving view WITH an ORDER BY (O3/O4: the reference's display
-    # views carry sorts, SemanticModel.scala ORDER BY clauses)
-    (
-        current.filter(F.col("tool").isNotNull())
-        .groupBy("tool")
-        .agg(F.count("*").alias("n_turns"))
-        .orderBy(F.col("n_turns").desc(), F.col("tool"))
-        .limit(5)
-        .createOrReplaceTempView("v_top_tools")
-    )
-
-    hub_c.createOrReplaceTempView("v_hub_conversation")
-    return [
-        "v_current_turns",
-        "v_conversation_summary",
-        "v_tool_usage",
-        "v_turn_churn",
-        "v_conversation_360",
-        "v_monthly_activity",
-        "v_top_tools",
-        "v_hub_conversation",
-    ]
-
-
-#: lake tables the persistent view layer is defined over
+#: lake tables the semantic views select from (publish_views mirrors
+#: exactly these into the catalog)
 _MIRRORED = (
     "sat_turn_text",
     "sat_turn_text_hist",
@@ -160,6 +42,111 @@ _MIRRORED = (
     "hub_conversation",
     "bridge_conversation_turn",
 )
+
+#: prefix of the private temp views create_all_views binds lake reads to
+#: (a user's own temp view named like a vault table stays untouched)
+_SRC_PREFIX = "_dvx_src_"
+
+#: the semantic layer: view name -> SELECT over its source placeholders
+#: (``{versions}`` is the satellite's full history, current ∪ archived)
+_VIEWS = {
+    "v_current_turns": """
+        SELECT s.*, h.conv_id, h.turn_idx
+        FROM ({versions}) s
+        JOIN {hub_turn} h ON s.turn_hash_key = h.turn_hash_key
+        WHERE s.valid_to IS NULL AND s.is_deleted IS NULL""",
+    "v_conversation_summary": """
+        SELECT conv_id, count(*) AS n_turns,
+               count(DISTINCT role) AS n_roles,
+               sum(CASE WHEN tool IS NOT NULL THEN 1 ELSE 0 END) AS n_tool_turns,
+               max(turn_idx) AS max_turn_idx
+        FROM {v_current_turns} GROUP BY conv_id""",
+    "v_tool_usage": """
+        SELECT tool, count(*) AS n_turns,
+               count(DISTINCT conv_id) AS n_convs
+        FROM {v_current_turns} WHERE tool IS NOT NULL GROUP BY tool""",
+    "v_turn_churn": """
+        SELECT s.turn_hash_key, s.n_versions, s.first_seen, s.last_changed,
+               h.conv_id, h.turn_idx
+        FROM (SELECT turn_hash_key, count(*) AS n_versions,
+                     date_format(min(valid_from), 'yyyy-MM-dd') AS first_seen,
+                     date_format(max(valid_from), 'yyyy-MM-dd') AS last_changed
+              FROM ({versions}) GROUP BY turn_hash_key) s
+        JOIN {hub_turn} h ON s.turn_hash_key = h.turn_hash_key""",
+    # conversation_360: the reference's headline PIT-rationale view
+    # (BusinessVaultSchema.scala:365-396, SemanticModel.scala:138-218) —
+    # served from the MATERIALIZED bridge (dvx.pit.refresh_bridge), so a
+    # BI hit pays one pre-joined, conversation-colocated scan + one agg
+    # instead of the 3-way join per query (the claimed 5-20× win)
+    "v_conversation_360": """
+        SELECT conv_id, count(*) AS n_turns,
+               count(DISTINCT role) AS n_roles,
+               sum(CASE WHEN tool IS NOT NULL THEN 1 ELSE 0 END) AS n_tool_turns,
+               cast(sum(length(text)) AS BIGINT) AS total_chars,
+               max_by(role, turn_idx) AS last_role,
+               max(turn_idx) AS max_turn_idx
+        FROM {bridge_conversation_turn} GROUP BY conv_id""",
+    # monthly activity trend (SemanticModel.scala:219-284 analog)
+    "v_monthly_activity": """
+        SELECT year(valid_from) AS year, month(valid_from) AS month,
+               count(*) AS n_turns, count(DISTINCT conv_id) AS n_convs,
+               sum(CASE WHEN tool IS NOT NULL THEN 1 ELSE 0 END) AS n_tool_turns,
+               cast(sum(length(text)) AS BIGINT) AS total_chars
+        FROM {v_current_turns} GROUP BY year(valid_from), month(valid_from)""",
+    # top-k serving view WITH an ORDER BY (O3/O4: the reference's display
+    # views carry sorts, SemanticModel.scala ORDER BY clauses)
+    "v_top_tools": """
+        SELECT tool, count(*) AS n_turns
+        FROM {v_current_turns} WHERE tool IS NOT NULL
+        GROUP BY tool ORDER BY n_turns DESC, tool LIMIT 5""",
+    "v_hub_conversation": "SELECT * FROM {hub_conversation}",
+}
+
+
+def _view_sql(vault: Vault, src: dict[str, str]) -> dict[str, str]:
+    """Every view's SELECT with its sources bound: ``src`` maps each
+    mirrored table and ``v_current_turns`` to the relation serving it."""
+    cols = ", ".join(f"`{f.name}`" for f in vault.sat_turn_text.schema().fields)
+    versions = (
+        f"SELECT {cols} FROM {src['sat_turn_text']} "
+        f"UNION ALL SELECT {cols} FROM {src['sat_turn_text_hist']}"
+    )
+    return {
+        name: sql.format(versions=versions, **src) for name, sql in _VIEWS.items()
+    }
+
+
+def _bridge_refreshed(vault: Vault) -> bool:
+    """Has :func:`dvx.pit.refresh_bridge` ever materialized the bridge?"""
+    from dvx.lake import LakeTable
+
+    tbl = vault.table("bridge_conversation_turn")
+    if not LakeTable.exists(tbl.root):
+        return False
+    snap = tbl.snapshot()
+    return bool(snap["files"] or snap.get("deltas"))
+
+
+def create_all_views(vault: Vault) -> list[str]:
+    """CREATE OR REPLACE TEMP VIEW v_* over this session's lake reads.
+
+    A bridge that was never refreshed binds to the derived
+    :func:`dvx.pit.build_bridge` frame instead; serving freshness
+    otherwise follows the refresh cadence, like the reference's."""
+    refreshed = _bridge_refreshed(vault)
+    src = {"v_current_turns": "v_current_turns"}
+    for name in _MIRRORED:
+        if name == "bridge_conversation_turn" and not refreshed:
+            from dvx.pit import build_bridge
+
+            df = build_bridge(vault)
+        else:
+            df = vault.table(name).read()
+        src[name] = _SRC_PREFIX + name
+        df.createOrReplaceTempView(src[name])
+    for vname, sql in _view_sql(vault, src).items():
+        vault.spark.sql(f"CREATE OR REPLACE TEMP VIEW {vname} AS {sql}")
+    return list(_VIEWS)
 
 
 def catalog_db(vault: Vault) -> str:
@@ -195,14 +182,10 @@ def publish_views(vault: Vault) -> dict:
     for s in vault.registry.satellites:
         vault.table(s.name).compact_deltas(max_delta_files=1)
 
-    # v_conversation_360 selects from the materialized bridge; if the
-    # bridge was never refreshed, the persistent view would silently
-    # return zero rows (the session temp view falls back to DERIVING the
-    # bridge — a catalog view cannot). Publishing implies serving
-    # freshness, so materialize it now (full refresh) when empty.
-    bridge_tbl = vault.table("bridge_conversation_turn")
-    bridge_snap = bridge_tbl.snapshot()
-    if not (bridge_snap["files"] or bridge_snap.get("deltas")):
+    # v_conversation_360 selects from the materialized bridge, and a
+    # catalog view cannot derive it like the session temp view does:
+    # publishing implies serving freshness, so materialize it now
+    if not _bridge_refreshed(vault):
         from dvx.pit import refresh_bridge
 
         refresh_bridge(vault)
@@ -238,56 +221,9 @@ def publish_views(vault: Vault) -> dict:
         spark.sql(f"ANALYZE TABLE {fq} COMPUTE STATISTICS")
         tables.append(name)
 
-    sat_cols = ", ".join(
-        f"s.`{f.name}`" for f in vault.table("sat_turn_text").schema().fields
+    views = _view_sql(
+        vault, {n: f"{db}.{n}" for n in (*_MIRRORED, "v_current_turns")}
     )
-    views = {
-        "v_current_turns": f"""
-            SELECT {sat_cols}, h.conv_id, h.turn_idx
-            FROM (SELECT * FROM {db}.sat_turn_text
-                  UNION ALL SELECT * FROM {db}.sat_turn_text_hist) s
-            JOIN {db}.hub_turn h ON s.turn_hash_key = h.turn_hash_key
-            WHERE s.valid_to IS NULL AND s.is_deleted IS NULL""",
-        "v_conversation_summary": f"""
-            SELECT conv_id, count(*) AS n_turns,
-                   count(DISTINCT role) AS n_roles,
-                   sum(CASE WHEN tool IS NOT NULL THEN 1 ELSE 0 END) AS n_tool_turns,
-                   max(turn_idx) AS max_turn_idx
-            FROM {db}.v_current_turns GROUP BY conv_id""",
-        "v_tool_usage": f"""
-            SELECT tool, count(*) AS n_turns,
-                   count(DISTINCT conv_id) AS n_convs
-            FROM {db}.v_current_turns WHERE tool IS NOT NULL GROUP BY tool""",
-        "v_turn_churn": f"""
-            SELECT s.turn_hash_key, s.n_versions, s.first_seen, s.last_changed,
-                   h.conv_id, h.turn_idx
-            FROM (SELECT turn_hash_key, count(*) AS n_versions,
-                         date_format(min(valid_from), 'yyyy-MM-dd') AS first_seen,
-                         date_format(max(valid_from), 'yyyy-MM-dd') AS last_changed
-                  FROM (SELECT * FROM {db}.sat_turn_text
-                        UNION ALL SELECT * FROM {db}.sat_turn_text_hist)
-                  GROUP BY turn_hash_key) s
-            JOIN {db}.hub_turn h ON s.turn_hash_key = h.turn_hash_key""",
-        "v_conversation_360": f"""
-            SELECT conv_id, count(*) AS n_turns,
-                   count(DISTINCT role) AS n_roles,
-                   sum(CASE WHEN tool IS NOT NULL THEN 1 ELSE 0 END) AS n_tool_turns,
-                   cast(sum(length(text)) AS BIGINT) AS total_chars,
-                   max_by(role, turn_idx) AS last_role,
-                   max(turn_idx) AS max_turn_idx
-            FROM {db}.bridge_conversation_turn GROUP BY conv_id""",
-        "v_monthly_activity": f"""
-            SELECT year(valid_from) AS year, month(valid_from) AS month,
-                   count(*) AS n_turns, count(DISTINCT conv_id) AS n_convs,
-                   sum(CASE WHEN tool IS NOT NULL THEN 1 ELSE 0 END) AS n_tool_turns,
-                   cast(sum(length(text)) AS BIGINT) AS total_chars
-            FROM {db}.v_current_turns GROUP BY year(valid_from), month(valid_from)""",
-        "v_top_tools": f"""
-            SELECT tool, count(*) AS n_turns
-            FROM {db}.v_current_turns WHERE tool IS NOT NULL
-            GROUP BY tool ORDER BY n_turns DESC, tool LIMIT 5""",
-        "v_hub_conversation": f"SELECT * FROM {db}.hub_conversation",
-    }
     for vname, sql in views.items():
         spark.sql(f"CREATE OR REPLACE VIEW {db}.{vname} AS {sql}")
     # freshness marker: the snapshot versions this publish serves. A later

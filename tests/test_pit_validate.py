@@ -125,6 +125,23 @@ def test_pit_range_covers_spine(spark, loaded):
     assert {"2024-01-02", "2024-01-03", "2024-01-04"} <= dates
 
 
+def test_pit_range_of_one_date_equals_full_build(spark, loaded):
+    """The two PIT paths agree: the interval as-of join of
+    build_pit_range over a one-day spine yields build_pit's rows."""
+    vault, _ = loaded
+    date = "2024-01-02"
+
+    def rows():
+        return sorted(vault.pit_turn.read(partitions=[date]).collect())
+
+    build_pit(vault, date, if_exists="replace")
+    full = rows()
+    build_pit_range(vault, date, date)
+    assert rows() == full
+    # the date sees ended versions, not only each key's current one
+    assert any(r.valid_to is not None for r in full) and len(full) > 25
+
+
 def test_incremental_pit_write_io_is_o_of_touched_buckets(spark, tmp_path):
     """Scale pin (mirror of test_satellite_current_write_io_is_o_of_batch):
     pit_turn is (snapshot_date, bucket(turn_hash_key)) composite, so a

@@ -59,12 +59,36 @@ def test_views_survive_new_spark_session(spark, published):
 def test_published_views_match_session_views(spark, published):
     v, out = published
     db = out["database"]
-    create_all_views(v)
-    for name in ("v_conversation_summary", "v_tool_usage", "v_conversation_360",
-                 "v_monthly_activity", "v_turn_churn"):
+    names = create_all_views(v)
+    assert sorted(names) == out["views"] and len(names) == 8
+    for name in names:
         sess = spark.sql(f"SELECT * FROM {name}")
         pub = spark.sql(f"SELECT * FROM {db}.{name}").select(*sess.columns)
         assert sess.exceptAll(pub).count() == 0 and pub.exceptAll(sess).count() == 0, name
+
+
+def test_session_views_leave_user_temp_views_alone(spark, published):
+    """create_all_views binds its lake reads under private names: a
+    user's own temp view named like a vault table keeps its contents,
+    and the semantic views still read the vault."""
+    v, _ = published
+    mine = ("sat_turn_text", "sat_turn_text_hist", "hub_turn",
+            "hub_conversation", "bridge_conversation_turn")
+    for i, name in enumerate(mine):
+        spark.range(i + 1).createOrReplaceTempView(name)
+    try:
+        create_all_views(v)
+        for i, name in enumerate(mine):
+            user = spark.table(name)
+            assert user.columns == ["id"] and user.count() == i + 1, name
+        assert (
+            spark.table("v_hub_conversation").count()
+            == v.hub_conversation.read().count()
+        )
+        assert spark.table("v_current_turns").count() == v.hub_turn.read().count()
+    finally:
+        for name in mine:
+            spark.catalog.dropTempView(name)
 
 
 def test_republish_after_load_retargets(spark, published):

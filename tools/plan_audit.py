@@ -40,18 +40,12 @@ def main() -> None:
     spark = get_spark(app_name="plan-audit")
     v = em._get_vault(spark, sf_dir)
 
-    from pyspark.sql import functions as F
-
-    from dvx.pit import _pit_frame, build_bridge
+    from dvx.pit import _pit_frame, build_bridge, current_turn_text
 
     sections: list[tuple[str, str, list[str]]] = []
 
     # 1. serving read: current state with a column projection + filter
-    cur = (
-        v.sat_turn_text.read()
-        .filter(F.col("valid_to").isNull() & F.col("is_deleted").isNull())
-        .select("turn_hash_key", "role")
-    )
+    cur = current_turn_text(v).select("turn_hash_key", "role")
     sections.append(
         (
             "Serving read: current satellite (filter + 2-column projection)",
@@ -60,11 +54,11 @@ def main() -> None:
         )
     )
 
-    # 2. PIT frame: narrow W1 + hashed semi-join + hub join
+    # 2. PIT frame: one struct-max W1 pick + hub join
     pit = _pit_frame(v, em.PIT_DATE, v.sat_all())
     sections.append(
         (
-            "PIT frame (narrow two-phase max + shuffle_hash semi-join + hub join)",
+            "PIT frame (one map-side-combining struct-max pick + hub join)",
             explain_str(pit),
             ["ShuffledHashJoin", "HashAggregate"],
         )
