@@ -14,12 +14,14 @@ note's asymptote).
 
 Protocol: seed two key tables with the same SEED_KEYS keys — one
 created with the ``key_bloom`` property, its twin without it — then
-apply BATCHES trickle batches of BATCH_KEYS brand-new keys each: the
-bloom table inserts with the bloom prune (its fused scan passed in),
-the plain table with the plain existence read of every touched
-bucket. Arms alternate order each batch, same session/window. Reports
-per batch: wall per arm, buckets read by the bloom arm (possible-hit
-count) vs total.
+apply BATCHES trickle batches of BATCH_KEYS brand-new keys each. Both
+arms make the engine's one insert call: the fused scan, then the
+insert with the scan's slice. On the bloom table the scan prunes the
+existence read to the possible-hit buckets; on the plain table every
+touched bucket with data is a possible hit, so it reads them all. Each
+arm's wall time includes its scan. Arms alternate order each batch,
+same session/window. Reports per batch: wall per arm, buckets read by
+the bloom arm (possible-hit count) vs total.
 
 Usage: python bench/bloom_trickle.py [seed_keys] [batch_keys] [batches] [buckets]
 Prints one JSON line; exit code 0.
@@ -66,6 +68,11 @@ def main() -> None:
             F.concat(F.lit("p-"), F.col("id").cast("string")).alias("payload"),
         )
 
+    def insert(tbl, src) -> dict:
+        scan = _bloom_scan(src, [("t", tbl, "k")])["t"]
+        _insert_new_keys(tbl, src, "k", ["k", "payload"], None, "s", None, scan)
+        return scan
+
     tmp = tempfile.mkdtemp(prefix="dvx_bloom_trickle_")
     results = []
     try:
@@ -81,16 +88,8 @@ def main() -> None:
                 properties={"key_bloom": arm == "bloom"},
             )
             # identical seed rows on both tables; only the bloom table
-            # builds segments (its fused scan is passed in)
-            seed_src = keys_df(0, seed_keys)
-            scan = (
-                _bloom_scan(seed_src, [("t", tbls[arm], "k")])["t"]
-                if arm == "bloom" else None
-            )
-            _insert_new_keys(
-                tbls[arm], seed_src, "k", ["k", "payload"], None, "s", None,
-                scan=scan,
-            )
+            # keeps the scan's segments
+            insert(tbls[arm], keys_df(0, seed_keys))
 
         for b in range(batches):
             src = keys_df(seed_keys + b * batch_keys, batch_keys)
@@ -98,22 +97,11 @@ def main() -> None:
             order = ("bloom", "plain") if b % 2 == 0 else ("plain", "bloom")
             for arm in order:
                 t0 = time.time()
-                if arm == "bloom":
-                    scan = _bloom_scan(src, [("t", tbls[arm], "k")])["t"]
-                    row["buckets_hit"] = sum(
-                        1 for hits, _, _ in scan.values() if hits
-                    )
-                    row["buckets_touched"] = len(scan)
-                    _insert_new_keys(
-                        tbls[arm], src, "k", ["k", "payload"], None, "s",
-                        None, scan=scan,
-                    )
-                else:
-                    # no key_bloom: plain existence read of every touched bucket
-                    _insert_new_keys(
-                        tbls[arm], src, "k", ["k", "payload"], None, "s", None,
-                    )
+                scan = insert(tbls[arm], src)
                 row[f"{arm}_wall_s"] = round(time.time() - t0, 3)
+                if arm == "bloom":
+                    row["buckets_hit"] = sum(1 for hits, _ in scan.values() if hits)
+                    row["buckets_touched"] = len(scan)
             results.append(row)
 
         # invariant: both arms inserted exactly the same rows

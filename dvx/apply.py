@@ -13,7 +13,10 @@ insertion into one commit), driven by a declarative entity registry
    version grain (min attr struct — replays must byte-match even on
    anomalous inputs),
 3. hub/link merges = insert-only anti-join on hash key (J1,
-   RawVaultETL.scala:204-205),
+   RawVaultETL.scala:204-205): ONE fused scan job per batch tests every
+   key table's batch keys against its buckets' key blooms, and each
+   table reads only the buckets that may hold a batch key (a table or
+   bucket without blooms is read whenever it holds data),
 4. per-satellite SCD2 apply over a bounded CURRENT table + append-only
    HISTORY: the batch chains per key on the satellite's OWN hash-diff
    (consecutive duplicates collapse), displaced versions are end-dated
@@ -24,7 +27,9 @@ insertion into one commit), driven by a declarative entity registry
    has ONE write shape: the history and current writes are staged
    concurrently and published history-first, the history side as a
    single commit (an append, or an equality-delete + insert when stale
-   keys re-chain).
+   keys re-chain). Each satellite takes its touched buckets from ONE
+   per-bucket row census of its parent key, which also feeds the
+   lineage metrics.
 
 Scale notes
 -----------
@@ -55,19 +60,11 @@ from pyspark.sql import functions as F
 from dvx.entities import DEFAULT_REGISTRY, EntityRegistry, SatelliteSpec
 from dvx.hashing import registry_hashes
 from dvx.lake import BUCKET_COL
-from dvx.schema import CHANGELOG_SCHEMA, RECORD_SOURCE, Vault
-
-_ENVELOPE = {f.name for f in CHANGELOG_SCHEMA.fields}
+from dvx.schema import RECORD_SOURCE, Vault, descriptive_cols
 
 #: a satellite's current table folds a bucket's merge-on-read deltas
 #: back into its base once the bucket holds this many delta files
 SAT_DELTA_COMPACT = 8
-
-
-def descriptive_cols_of(df: DataFrame) -> list[str]:
-    """Additive-evolution extras present in the batch (the reference's
-    intersection pattern, RawVaultETL.scala:250-309)."""
-    return sorted(c for c in df.columns if c not in _ENVELOPE and not c.startswith("_"))
 
 
 def prepare_batch(df: DataFrame, registry: EntityRegistry | None = None) -> DataFrame:
@@ -82,7 +79,7 @@ def prepare_batch(df: DataFrame, registry: EntityRegistry | None = None) -> Data
     each satellite's apply (each chains on its own diff).
     """
     registry = registry or DEFAULT_REGISTRY
-    extras = descriptive_cols_of(df)
+    extras = descriptive_cols(df.columns)
     grain = list(registry.version_grain())
     # Redistribute on the version grain BEFORE the Arrow hash UDFs. A
     # micro-batch often arrives as one file (= 1-3 scan tasks), and
@@ -139,20 +136,21 @@ def _in_pool(sc, pool: str, fn, *args, **kwargs):
 
 def _bloom_scan(
     prepared: DataFrame, specs: list[tuple[str, object, str]]
-) -> dict[str, dict[int, tuple[int, bytes, int]]]:
-    """ONE shuffle-keyed job serving every bloom-enabled key table of the
-    batch: per (table, bucket), test the batch keys against the bucket's
-    existing bloom segments, build this batch's new segment, and count
-    rows. Returns ``{table: {bucket: (possible_hits, segment, rows)}}``.
+) -> dict[str, dict[int, tuple[int, bytes]]]:
+    """ONE shuffle-keyed job serving every key table of the batch: per
+    (table, bucket), test the batch keys against the bucket's existing
+    bloom segments and build this batch's new segment. Returns
+    ``{table: {bucket: (possible_hits, segment)}}``; its buckets are
+    exactly the batch's touched buckets.
 
     Fusing the tables into a single applyInPandas pass matters because
     each extra Spark job is per-batch fixed floor (~0.3-0.5 s at 16
-    cores): this one job replaces three per-table scans AND the
-    per-bucket lineage counts agg AND the per-table touched-bucket
-    distinct-collects (its group keys are exactly the touched buckets).
-    Executors read segment files straight from the table directory — no
-    bitmap broadcast through the driver. A bucket without complete bloom
-    coverage reports all keys as possible hits (= must read)."""
+    cores): this one job replaces per-table scans AND the per-table
+    touched-bucket distinct-collects. Executors read segment files
+    straight from the table directory — no bitmap broadcast through the
+    driver. A bucket with data but without complete bloom coverage (a
+    table without ``key_bloom`` has none) reports all keys as possible
+    hits (= must read); a bucket with no data reports none."""
     from functools import reduce
 
     import pandas as pd
@@ -199,18 +197,17 @@ def _bloom_scan(
         else:
             hits = 0  # bucket has no data at all
         return pd.DataFrame(
-            [{"t": name, "bucket": b, "hits": hits, "cnt": len(pdf),
-              "segment": _bloom.build(uniq)}]
+            [{"t": name, "bucket": b, "hits": hits, "segment": _bloom.build(uniq)}]
         )
 
     rows = (
         allk.groupBy("_t", "_b")
-        .applyInPandas(fn, "t string, bucket int, hits long, cnt long, segment binary")
+        .applyInPandas(fn, "t string, bucket int, hits long, segment binary")
         .collect()
     )
-    out: dict[str, dict[int, tuple[int, bytes, int]]] = {n: {} for n, _, _ in specs}
+    out: dict[str, dict[int, tuple[int, bytes]]] = {n: {} for n, _, _ in specs}
     for r in rows:
-        out[r.t][r.bucket] = (r.hits, bytes(r.segment), r.cnt)
+        out[r.t][r.bucket] = (r.hits, bytes(r.segment))
     return out
 
 
@@ -222,8 +219,7 @@ def _insert_new_keys(
     epoch_id: int | None,
     stream_id: str,
     summary: dict | None,
-    touched: list[int] | None = None,
-    scan: dict[int, tuple[int, bytes, int]] | None = None,
+    scan: dict[int, tuple[int, bytes]],
 ) -> None:
     """Insert-only hub/link apply as an anti-join + APPEND.
 
@@ -236,32 +232,20 @@ def _insert_new_keys(
     the table's epoch watermark guards re-delivered batches (the same
     handshake the satellite history table uses).
 
-    When the table carries key blooms (dvx.bloom; hubs/links by
-    default), the existence read is first PRUNED to the buckets whose
-    blooms report a possible hit — a batch of brand-new keys reads
-    (almost) no existing data — and the scan's per-bucket segments ride
-    along into the append commit, keeping coverage complete.
-    ``scan`` is the table's slice of apply_batch's fused
-    :func:`_bloom_scan` (standalone callers compute their own)."""
+    ``scan`` is the table's slice of :func:`_bloom_scan` over ``src``:
+    the existence read is PRUNED to the buckets that report a possible
+    hit — with key blooms (dvx.bloom; hubs/links by default) a batch of
+    brand-new keys reads (almost) no existing data — and the scan's
+    per-bucket segments ride along into the append commit, keeping
+    coverage complete."""
     if epoch_id is not None and tbl.last_epoch(stream_id) >= epoch_id:
         return
-    others = [c for c in select_cols if c != key]
-    src_b = tbl.with_bucket(src)
-    if scan is None and tbl.bloom_enabled():
-        scan = _bloom_scan(src, [("t", tbl, key)])["t"]
-    if touched is None:
-        touched = sorted(scan) if scan is not None else sorted(
-            r[0] for r in src_b.select(BUCKET_COL).distinct().collect()
-        )
-    if not touched:
+    if not scan:
         return
-    segments = None
-    candidates = touched
-    if scan is not None:
-        candidates = sorted(b for b, (hits, _, _) in scan.items() if hits)
-        segments = {str(b): seg for b, (_, seg, _) in scan.items()}
+    others = [c for c in select_cols if c != key]
+    candidates = sorted(b for b, (hits, _) in scan.items() if hits)
     src_rows = (
-        src_b.groupBy(key, BUCKET_COL)
+        tbl.with_bucket(src).groupBy(key, BUCKET_COL)
         .agg(F.min(F.struct(*[F.col(c) for c in others])).alias("_s"))
         .select(key, "_s.*", BUCKET_COL)
     )
@@ -270,7 +254,10 @@ def _insert_new_keys(
         new = src_rows.join(existing, key, "left_anti")
     else:
         new = src_rows  # every batch key is provably absent
-    tbl.append(new, summary=summary, bloom_segments=segments)
+    tbl.append(
+        new, summary=summary,
+        bloom_segments={str(b): seg for b, (_, seg) in scan.items()},
+    )
 
 
 def _apply_satellite(
@@ -280,9 +267,11 @@ def _apply_satellite(
     epoch_id: int | None,
     stream_id: str,
     summary: dict | None,
-    touched: list[int] | None = None,
+    touched: list[int],
 ) -> None:
-    """One satellite's SCD2 apply over its current/history split.
+    """One satellite's SCD2 apply over its current/history split;
+    ``touched`` lists the batch's buckets of the parent key (the
+    census in :func:`apply_batch`).
 
     Semantics (reference's *intended* end-dating, RawVaultETL.scala
     1032-1078 fixed), per version of THIS satellite's hash-diff:
@@ -344,6 +333,8 @@ def _apply_satellite(
     do_cur = epoch_id is None or cur_tbl.last_epoch(stream_id) < epoch_id
     if not (do_hist or do_cur):
         return  # replayed epoch, both commits already landed
+    if not touched:
+        return
     sat_fields = cur_tbl.schema().fields
     sat_cols = [f.name for f in sat_fields]
     types = {f.name: f.dataType for f in sat_fields}
@@ -370,11 +361,6 @@ def _apply_satellite(
     spill_r = None
     ex = ThreadPoolExecutor(max_workers=3)
     try:
-        if touched is None:
-            touched = sorted(r[0] for r in src.select(BUCKET_COL).distinct().collect())
-        if not touched:
-            return
-
         # the decisions pass needs only the version columns of current —
         # and only for keys THE BATCH CARRIES: a column-pruned,
         # key-filtered read keeps the MOR last-wins agg off `text` AND
@@ -700,8 +686,16 @@ def apply_batch(
     fixed overhead (scheduling, commit latency) overlaps instead of
     summing, which matters most for small/frequent micro-batches.
 
-    Returns the event count and the per-bucket row counts (the lineage
-    table's metrics).
+    The merges wait on the batch's only driver collects: the fused
+    :func:`_bloom_scan` over every hub and link gates the key-table
+    inserts, and one per-bucket row census per distinct satellite
+    parent key gates that key's satellites. With ``pit_dates``
+    the PIT snapshots are maintained last, and the last PIT commit
+    carries the epoch mark (dvx.stream.ingest_batch counts the epoch as
+    applied only then).
+
+    Returns the event count and the per-bucket row counts of the first
+    satellite's parent key (the lineage table's metrics).
     """
     import shutil as _shutil
     from concurrent.futures import ThreadPoolExecutor
@@ -709,6 +703,21 @@ def apply_batch(
     from dvx.evolve import evolve_for_batch
 
     registry = vault.registry
+    if pit_dates:
+        # checked before any commit: a failure after the vault commits
+        # would leave the epoch applied without its PIT maintenance
+        from dvx.pit import PIT_SATELLITE, build_pit_incremental
+
+        pit_key = next(
+            (s.parent_key for s in registry.satellites if s.name == PIT_SATELLITE),
+            None,
+        )
+        if pit_key is None:
+            raise ValueError(
+                f"pit_dates maintenance requires the '{PIT_SATELLITE}' "
+                "satellite in the registry (dvx.pit builds the PIT over it); "
+                f"this registry has {[s.name for s in registry.satellites]}"
+            )
     desc_extras = evolve_for_batch(vault, batch)
     # snappy spills even on tmpfs scratch: transcript text compresses 3-4x,
     # and tmpfs "IO" is kernel memcpy, so fewer bytes = less sys-CPU (16c
@@ -720,36 +729,28 @@ def apply_batch(
     try:
         summary = {"epochs": {stream_id: epoch_id}} if epoch_id is not None else None
 
-        first_sat = registry.satellites[0] if registry.satellites else None
-        bucket_counts: list[tuple[int, int]] = []
-        n = None
-
-        # ONE fused scan job for every bloom-enabled key table: bloom
-        # prune + this batch's segments, replacing per-table scans —
-        # each extra Spark job is pure per-batch fixed floor.
-        scan_specs = [
-            (h.name, vault.table(h.name), h.hash_key) for h in registry.hubs
-        ] + [
-            (l.name, vault.table(l.name), l.hash_key) for l in registry.links
-        ]
-        bloomed = [(nm, t, k) for nm, t, k in scan_specs if t.bloom_enabled()]
-
+        # every hub and link: (name, table, hash key, inserted columns)
         audit = ["load_date", "record_source"]
-        tasks = []
-        for h in registry.hubs:
-            cols = [h.hash_key, *h.business_keys, *audit]
-            tasks.append((vault.table(h.name), h.name, h.hash_key, cols))
-        for l in registry.links:
-            cols = [l.hash_key, *l.parents, *audit]
-            tasks.append((vault.table(l.name), l.name, l.hash_key, cols))
+        key_tables = [
+            (h.name, vault.table(h.name), h.hash_key,
+             [h.hash_key, *h.business_keys, *audit])
+            for h in registry.hubs
+        ] + [
+            (l.name, vault.table(l.name), l.hash_key,
+             [l.hash_key, *l.parents, *audit])
+            for l in registry.links
+        ]
+        # one census per distinct satellite parent key, on the bucket
+        # function of the first satellite hanging off that key
+        census_tables = {}
+        for s in registry.satellites:
+            census_tables.setdefault(s.parent_key, vault.table(s.name))
 
-        def _count_buckets() -> list[tuple[int, int]]:
-            # per-bucket row counts on the first satellite's bucket
-            # function — serves the lineage metrics AND the satellite /
-            # same-key hub touched-bucket lists in ONE narrow job
-            bucketed = vault.table(first_sat.name).with_bucket(
-                prepared.select(first_sat.parent_key)
-            )
+        def _count_buckets(key: str) -> list[tuple[int, int]]:
+            # per-bucket row counts of the batch on ``key``: the
+            # satellites' touched-bucket lists and the lineage metrics
+            # in ONE narrow job
+            bucketed = census_tables[key].with_bucket(prepared.select(key))
             return sorted(
                 (r[0], r[1])
                 for r in bucketed.groupBy(BUCKET_COL).count().collect()
@@ -760,51 +761,36 @@ def apply_batch(
         # default pool whose intra-pool scheduling is FIFO — an early
         # hub job would still hog every slot. Distinct on-demand pools
         # (default weight 1) round-robin slots across the merges.
-        # The fused bloom scan and the bucket-count collect run as
-        # concurrent pooled jobs too: the satellite applies (the
-        # critical path) start as soon as the counts land (~sub-second
-        # narrow agg) instead of waiting behind the multi-second scan
-        # that only the hub/link inserts consume (guide §2.6 overlap).
+        # The fused bloom scan and the census run as concurrent pooled
+        # jobs too: the satellite applies (the critical path) start as
+        # soon as their census lands (~sub-second narrow agg) instead of
+        # waiting behind the multi-second scan that only the hub/link
+        # inserts consume (guide §2.6 overlap).
         sc = vault.spark.sparkContext
-        n_workers = 2 + len(tasks) + len(registry.satellites)
+        n_workers = 1 + len(census_tables) + len(key_tables) + len(registry.satellites)
         with ThreadPoolExecutor(max_workers=n_workers) as ex:
-            fut_scan = (
-                ex.submit(_in_pool, sc, "dvx_merge_scan", _bloom_scan, prepared,
-                          bloomed)
-                if bloomed
-                else None
+            fut_scan = ex.submit(
+                _in_pool, sc, "dvx_merge_scan", _bloom_scan, prepared,
+                [(nm, tbl, key) for nm, tbl, key, _ in key_tables],
             )
-            fut_counts = (
-                # the counts job GATES the satellite start — run it
-                # in the weighted critical pool so it never queues
-                # behind the scan/hub stages
-                ex.submit(_in_pool, sc, "dvx_critical", _count_buckets)
-                if first_sat is not None
-                else None
-            )
+            # the census GATES the satellite start — run it in the
+            # weighted critical pool so it never queues behind the
+            # scan/hub stages
+            fut_counts = {
+                key: ex.submit(_in_pool, sc, "dvx_critical", _count_buckets, key)
+                for key in census_tables
+            }
 
             def _run_sat(s):
-                touched = None
-                if fut_counts is not None and s.parent_key == first_sat.parent_key:
-                    touched = [b for b, c in fut_counts.result() if c]
+                touched = [b for b, _ in fut_counts[s.parent_key].result()]
                 _apply_satellite(
                     vault, s, prepared, epoch_id, stream_id, summary, touched
                 )
 
-            def _run_key_table(tbl, nm, key, cols):
-                scan = (
-                    fut_scan.result().get(nm) if fut_scan is not None else None
-                )
-                touched = None
-                if (
-                    scan is None
-                    and fut_counts is not None
-                    and key == first_sat.parent_key
-                ):
-                    touched = [b for b, c in fut_counts.result() if c]
+            def _run_key_table(nm, tbl, key, cols):
                 _insert_new_keys(
                     tbl, prepared.select(*cols), key, cols, epoch_id,
-                    stream_id, summary, touched, scan
+                    stream_id, summary, fut_scan.result()[nm],
                 )
 
             futs = [
@@ -817,36 +803,27 @@ def apply_batch(
             ]
             futs += [
                 ex.submit(
-                    _in_pool, sc, f"dvx_merge_{os.path.basename(tbl.root)}",
-                    _run_key_table, tbl, nm, key, cols
+                    _in_pool, sc, f"dvx_merge_{nm}", _run_key_table, nm, tbl, key, cols
                 )
-                for tbl, nm, key, cols in tasks
+                for nm, tbl, key, cols in key_tables
             ]
             for f in futs:
                 f.result()
-            if fut_counts is not None:
-                bucket_counts = fut_counts.result()
-                n = sum(c for _, c in bucket_counts)
-            else:
-                n = prepared.count()
+            bucket_counts = fut_counts[registry.satellites[0].parent_key].result()
         if pit_dates:
             # maintain PIT snapshots incrementally while the prepared batch
             # (with its already-computed hash keys) is still spilled — no
-            # second Arrow hashing pass over the raw batch. The PIT is
-            # built over the text satellite (dvx.pit), so resolve its
-            # parent key from the registry rather than assuming a column.
-            from dvx.pit import PIT_SATELLITE, build_pit_incremental
-
-            pit_sats = [s for s in registry.satellites if s.name == PIT_SATELLITE]
-            if not pit_sats:
-                raise ValueError(
-                    f"pit_dates maintenance requires the '{PIT_SATELLITE}' "
-                    "satellite in the registry (dvx.pit builds the PIT over it); "
-                    f"this registry has {[s.name for s in registry.satellites]}"
-                )
-            touched_keys = prepared.select(pit_sats[0].parent_key).distinct()
-            for d in pit_dates:
+            # second Arrow hashing pass over the raw batch. Only the last
+            # date's commit carries the epoch mark: an earlier mark would
+            # let a replay after a crash skip the dates not yet built.
+            touched_keys = prepared.select(pit_key).distinct()
+            for d in pit_dates[:-1]:
                 build_pit_incremental(vault, d, touched_keys)
-        return {"events": n, "extras": desc_extras, "bucket_counts": bucket_counts}
+            build_pit_incremental(vault, pit_dates[-1], touched_keys, summary=summary)
+        return {
+            "events": sum(c for _, c in bucket_counts),
+            "extras": desc_extras,
+            "bucket_counts": bucket_counts,
+        }
     finally:
         _shutil.rmtree(spill, ignore_errors=True)

@@ -22,9 +22,9 @@ Design (mirrors the manifest's own delta/checkpoint shape):
   bit-OR'd together.
 - False positives only cost an extra bucket read; false negatives are
   impossible for any key covered by a segment. Ops that could add keys
-  without a segment (merge/overwrite/upsert) *invalidate* the touched
-  buckets' segment lists in the manifest, falling back to the plain
-  read — see lake._next_maps.
+  without a segment (an append without segments, overwrite, upsert)
+  *invalidate* the touched buckets' segment lists in the manifest,
+  falling back to the plain read — see lake._next_maps.
 
 Probe scheme: 16-byte digest per key (``bytes.fromhex`` when the key is
 already a 32-hex hash — every dvx hub/link key — else md5), split into

@@ -71,6 +71,12 @@ class EntityRegistry:
     links: tuple[LinkSpec, ...] = field(default_factory=tuple)
     satellites: tuple[SatelliteSpec, ...] = field(default_factory=tuple)
 
+    def __post_init__(self) -> None:
+        # the ingest apply takes every batch's touched buckets and its
+        # lineage counts from the satellites' per-bucket census
+        if not self.satellites:
+            raise ValueError("an EntityRegistry needs at least one satellite")
+
     def with_satellite(self, sat: SatelliteSpec) -> "EntityRegistry":
         """A new registry with one more satellite — the config-only way
         to widen the vault."""

@@ -15,7 +15,7 @@ import logging
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StructField
 
-from dvx.schema import CHANGELOG_SCHEMA, Vault
+from dvx.schema import CHANGELOG_SCHEMA, Vault, descriptive_cols
 
 log = logging.getLogger(__name__)
 
@@ -28,7 +28,7 @@ def validate_batch(batch: DataFrame) -> list[str]:
     missing = [c for c in _REQUIRED if c not in batch.columns]
     if missing:
         raise ValueError(f"changelog batch missing required columns: {missing}")
-    extras = sorted(c for c in batch.columns if c not in _REQUIRED and not c.startswith("_"))
+    extras = descriptive_cols(batch.columns)
     if extras:
         log.warning("additive schema evolution detected: new columns %s", extras)
     return extras

@@ -118,10 +118,6 @@ _MAPS = ("files", "deltas", "blooms", "tombstones")
 _OPS = ("append", "upsert_delta", "delete_insert", "overwrite_partitions",
         "merge", "compact")
 
-#: a direct append() builds bloom segments driver-side only for buckets
-#: of at most this many new rows (see _segments_from_written)
-_BLOOM_FALLBACK_MAX_ROWS = 2_000_000
-
 __all__ = ["LakeTable", "BUCKET_COL", "CommitConflict"]
 
 
@@ -141,6 +137,14 @@ def _part_of(k: str) -> str:
 
 def _bucket_of(k: str, composite: bool) -> str:
     return k.split("|", 1)[1] if composite else k
+
+
+def _key_bloom(m: dict) -> bool:
+    """The table keeps per-bucket key bloom segments (table property
+    ``key_bloom``, set for hubs/links: append-only key tables whose
+    insert is an existence proof). :meth:`LakeTable.create` admits it
+    only on a plain table bucketed by one column."""
+    return bool(m.get("properties", {}).get("key_bloom"))
 
 
 def _next_maps(m: dict, op: str, parts: list[dict], replace: set) -> dict:
@@ -164,12 +168,8 @@ def _next_maps(m: dict, op: str, parts: list[dict], replace: set) -> dict:
         for k, ps in p["tomb_files"].items():
             nxt["tombstones"].setdefault(k, []).extend(ps)
         bloom_add.update(p["blooms"])
-    if (
-        m.get("properties", {}).get("key_bloom")
-        and m["num_buckets"] is not None
-        # a compaction rewrites the same key set: blooms stay valid
-        and op != "compact"
-    ):
+    # a compaction rewrites the same key set: blooms stay valid
+    if _key_bloom(m) and op != "compact":
         blooms = nxt["blooms"]
         for k in {k for p in parts for k in p["new_files"]}:
             # An appended key without a segment breaks the bucket's
@@ -232,11 +232,19 @@ class LakeTable:
             raise FileExistsError(root)
         if (num_buckets is None) != (bucket_cols is None):
             raise ValueError("num_buckets and bucket_cols go together")
-        if (properties or {}).get("key_bloom") and (
-            bucket_cols is None or len(bucket_cols) != 1
-        ):
+        manifest = {
+            "operation": "create",
+            "schema": json.loads(schema.json()),
+            "num_buckets": num_buckets,
+            "bucket_cols": bucket_cols,
+            "partition_col": partition_col,
+            "properties": properties or {},
+            "files": {},
+            "summary": {"epochs": {}},
+        }
+        if _key_bloom(manifest) and (bucket_cols is None or len(bucket_cols) != 1):
             raise ValueError("key_bloom requires exactly one bucket column")
-        if (properties or {}).get("key_bloom") and partition_col:
+        if _key_bloom(manifest) and partition_col:
             # composite "<partition>|<bucket>" manifest keys would defeat
             # the bloom scan's plain-bucket key arithmetic (dvx.apply
             # _bloom_scan int(k) / k.isdigit()), silently classifying
@@ -247,19 +255,7 @@ class LakeTable:
             )
         os.makedirs(_log_dir(root), exist_ok=True)
         t = cls(spark, root)
-        t._commit(
-            expected_version=0,
-            manifest={
-                "operation": "create",
-                "schema": json.loads(schema.json()),
-                "num_buckets": num_buckets,
-                "bucket_cols": bucket_cols,
-                "partition_col": partition_col,
-                "properties": properties or {},
-                "files": {},
-                "summary": {"epochs": {}},
-            },
-        )
+        t._commit(expected_version=0, manifest=manifest)
         return t
 
     # ------------------------------------------------------------- snapshots
@@ -678,20 +674,6 @@ class LakeTable:
 
     # --------------------------------------------------------- key blooms
 
-    def bloom_enabled(self) -> bool:
-        """True when this table maintains per-bucket key bloom segments
-        (table property ``key_bloom``, set for hubs/links — append-only
-        key tables whose insert is an existence proof)."""
-        m = self.snapshot()
-        return (
-            bool(m.get("properties", {}).get("key_bloom"))
-            and m["num_buckets"] is not None
-            # composite layouts are rejected at create(); belt-and-braces
-            # for pre-guard tables: their "<part>|<bucket>" keys would
-            # break the bloom scan's plain-bucket arithmetic
-            and not m.get("partition_col")
-        )
-
     def bloom_paths(self, version: int | None = None) -> dict[int, list[str]]:
         """{bucket: [absolute segment paths]} for buckets with COMPLETE
         bloom coverage at a snapshot. A bucket absent here (invalidated
@@ -701,34 +683,6 @@ class LakeTable:
             int(k): [os.path.join(self.root, p) for p in ps]
             for k, ps in m.get("blooms", {}).items()
         }
-
-    def _segments_from_written(self, new_files: dict, m: dict) -> dict[str, bytes]:
-        """Fallback bloom build for direct append() callers: read the
-        just-written files' key column driver-side (pyarrow — the files
-        are new-keys-only, so this is O(new keys)) and build one segment
-        per manifest key. The hot path (dvx.apply) passes precomputed
-        segments from its prune scan instead."""
-        import pyarrow.parquet as pq
-
-        from dvx import bloom
-
-        key_col = m["bucket_cols"][0]
-        # cap: the fallback reads key values driver-side — O(new keys)
-        # driver memory and serial pyarrow reads on the commit path. A
-        # big direct append (initial seed / backfill) skips the build for
-        # oversized buckets (parquet footer row counts only — no data
-        # read), leaving them uncovered = safe plain-read fallback.
-        out = {}
-        for k, ps in new_files.items():
-            paths = [os.path.join(self.root, p) for p in ps]
-            n_rows = sum(pq.ParquetFile(p).metadata.num_rows for p in paths)
-            if n_rows > _BLOOM_FALLBACK_MAX_ROWS:
-                continue  # bucket stays uncovered; readers fall back
-            vals: list = []
-            for p in paths:
-                vals.extend(pq.read_table(p, columns=[key_col]).column(0).to_pylist())
-            out[k] = bloom.build(vals)
-        return out
 
     # ------------------------------------------------------- the write path
 
@@ -758,7 +712,7 @@ class LakeTable:
                 raise ValueError(
                     "delete_keys_insert requires a plain bucketed table"
                 )
-            if m.get("properties", {}).get("key_bloom"):
+            if _key_bloom(m):
                 raise ValueError(
                     "delete_keys_insert is not supported on key_bloom "
                     "tables (deletes break segment completeness)"
@@ -920,7 +874,12 @@ class LakeTable:
         Distinct-key appends alongside pending deltas are safe (the
         merge is per key) and allowed; the overlap check only costs a
         job when deltas are actually pending — never on the hub/link/
-        history append hot path."""
+        history append hot path.
+
+        On a ``key_bloom`` table, ``bloom_segments`` ({manifest key:
+        segment}) attach to the written buckets; a bucket written
+        without one loses its bloom coverage (:func:`_next_maps`), so
+        its inserts fall back to the plain existence read."""
 
         def stage(m: dict, v: int):
             dpaths = [
@@ -949,18 +908,12 @@ class LakeTable:
                         "max_delta_files=1) first or use upsert_delta()"
                     )
             staged = self._stage(m, v, df)
-            new_files = staged["new_files"]
-            if (
-                m.get("properties", {}).get("key_bloom")
-                and m["num_buckets"] is not None
-                and new_files
-            ):
-                segs = bloom_segments or self._segments_from_written(new_files, m)
-                for k in new_files:
-                    if k in segs:
+            if _key_bloom(m) and bloom_segments:
+                for k in staged["new_files"]:
+                    if k in bloom_segments:
                         rel = os.path.join(staged["commit_rel"], f"_bloom_{k}.bin")
                         with open(os.path.join(self.root, rel), "wb") as bf:
-                            bf.write(segs[k])
+                            bf.write(bloom_segments[k])
                         staged["blooms"][k] = rel
             return staged, ()
 

@@ -131,7 +131,8 @@ def build_pit(vault: Vault, snapshot_date: str, if_exists: str = "skip") -> int:
 
 
 def build_pit_incremental(
-    vault: Vault, snapshot_date: str, touched_keys: DataFrame
+    vault: Vault, snapshot_date: str, touched_keys: DataFrame,
+    summary: dict | None = None,
 ) -> int:
     """Recompute PIT rows only for keys touched by a micro-batch, merging
     them into the existing date partition (north_rule: 'PIT tables rebuilt
@@ -143,6 +144,8 @@ def build_pit_incremental(
     write IO are O(touched buckets), never O(date partition). pit_turn
     and the satellite share the bucket function (same key column, same
     vault-wide bucket count), so one touched-bucket list serves both.
+    ``summary`` rides on the PIT commit (dvx.apply passes the epoch
+    mark with a batch's last date).
     """
     from dvx.lake import _is_composite
 
@@ -173,7 +176,7 @@ def build_pit_incremental(
         old = pit_tbl.read(partitions=[snapshot_date]).join(
             keys, "turn_hash_key", "left_anti"
         )
-        pit_tbl.overwrite_partitions(old.unionByName(fresh))
+        pit_tbl.overwrite_partitions(old.unionByName(fresh), summary=summary)
         return 1
     # untouched keys WITHIN the touched buckets carry over; untouched
     # buckets are never read or rewritten
@@ -183,6 +186,7 @@ def build_pit_incremental(
     pit_tbl.replace_buckets(
         [f"{snapshot_date}|{b}" for b in touched_buckets],
         old.unionByName(fresh),
+        summary=summary,
     )
     return 1
 

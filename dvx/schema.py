@@ -55,6 +55,16 @@ CHANGELOG_SCHEMA = StructType(
     ]
 )
 
+
+def descriptive_cols(columns: list[str], known: StructType = CHANGELOG_SCHEMA) -> list[str]:
+    """The additive-evolution extras among ``columns``: names outside
+    ``known`` (default: the changelog envelope) that are not
+    ``_``-prefixed lineage columns (the reference's intersection
+    pattern, RawVaultETL.scala:250-309)."""
+    names = set(known.fieldNames())
+    return sorted(c for c in columns if c not in names and not c.startswith("_"))
+
+
 HUB_CONVERSATION = StructType(
     [
         StructField("conv_hash_key", StringType(), False),

@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from dvx.schema import descriptive_cols
+
 log = logging.getLogger(__name__)
 
 _FORMATS = {"parquet", "json", "csv", "orc", "avro"}
@@ -46,10 +48,7 @@ def validate_staging(df: DataFrame, canonical: StructType) -> list[str]:
     missing = [c for c in required if c not in df.columns]
     if missing:
         raise ValueError(f"staging data missing required columns: {missing}")
-    known = {f.name for f in canonical.fields}
-    extras = sorted(
-        c for c in df.columns if c not in known and not c.startswith("_")
-    )
+    extras = descriptive_cols(df.columns, canonical)
     if extras:
         log.warning("staging has unexpected new columns (evolution?): %s", extras)
     return extras
@@ -67,7 +66,7 @@ def read_staging(
 
     Returns the staged rows plus ``_source_file`` and ``_load_timestamp``
     lineage columns (underscore-prefixed: excluded from hash-diff and
-    satellite payloads by dvx.apply.descriptive_cols_of).
+    satellite payloads by dvx.schema.descriptive_cols).
     """
     if fmt not in _FORMATS:
         raise ValueError(f"unsupported staging format {fmt!r}; one of {sorted(_FORMATS)}")

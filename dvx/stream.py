@@ -59,21 +59,22 @@ def ingest_batch(
 
     Epoch skip: every vault table commits the epoch in its snapshot
     summary inside apply_batch (the merges run as concurrent jobs). The
-    batch is skipped only when ALL four tables have committed it; a crash
-    that left the epoch partially applied re-runs it, which is safe —
-    every merge is idempotent (anti-join inserts; SCD2 stale/no-op
-    guards).
+    batch is skipped only when EVERY registry table has committed it; a
+    crash that left the epoch partially applied re-runs it, which is
+    safe — every merge is idempotent (anti-join inserts; SCD2 stale/
+    no-op guards).
 
     ``pit_dates``: PIT snapshot dates to maintain incrementally per
     micro-batch (north_star: "PIT tables rebuilt incrementally per
     micro-batch") — only the keys this batch touched are recomputed
     (dvx.pit.build_pit_incremental). The rebuild derives purely from
-    satellite state, so it is idempotent and needs no epoch guard.
+    satellite state, so re-running it is idempotent; its last commit
+    carries the epoch mark, so with ``pit_dates`` the epoch counts as
+    applied only once ``pit_turn`` has it too — a crash after the vault
+    commits but before the PIT maintenance re-runs the epoch.
     """
-    applied = min(
-        vault.table(t).last_epoch(stream_id)
-        for t in vault.registry.table_names()
-    )
+    tables = vault.registry.table_names() + (["pit_turn"] if pit_dates else [])
+    applied = min(vault.table(t).last_epoch(stream_id) for t in tables)
     if applied >= epoch_id:
         if log_lineage:
             metadata.complete_load(

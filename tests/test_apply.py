@@ -285,6 +285,37 @@ def test_satellite_current_write_io_is_o_of_batch(spark, tmp_path, changelog):
     assert_frames_equal(current_state(vault), oracle_state(changelog))
 
 
+def test_satellite_on_a_second_parent_key(spark, tmp_path, changelog):
+    """A satellite hanging off conv_hash_key takes its touched buckets
+    from its own key's census: it ends with one current row per
+    conversation, carrying the conversation's latest event."""
+    from dvx.entities import DEFAULT_REGISTRY, SatelliteSpec
+
+    reg = DEFAULT_REGISTRY.with_satellite(
+        SatelliteSpec("sat_conv_role", "conv_hash_key", ("role",))
+    )
+    vault = Vault(spark, str(tmp_path / "wh_conv"), num_buckets=4, registry=reg)
+    vault.create_all_tables()
+    for i, b in enumerate(split_batches(changelog, 3)):
+        apply_batch(vault, b, epoch_id=i)
+
+    cur = vault.table("sat_conv_role").read().filter(F.col("valid_to").isNull())
+    hub = vault.hub_conversation.read().select("conv_hash_key", "conv_id")
+    got = cur.join(hub, "conv_hash_key").select("conv_id", "role", "is_deleted")
+    last = changelog.groupBy("conv_id").agg(
+        F.max_by(F.struct("role", "op"), F.struct("ts", "seq")).alias("r")
+    )
+    want = last.select(
+        "conv_id", "r.role",
+        F.when(F.col("r.op") == "D", F.lit("Y")).cast("string").alias("is_deleted"),
+    )
+    n_convs = changelog.select("conv_id").distinct().count()
+    assert cur.count() == hub.count() == got.count() == n_convs
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+    # the text satellite on turn_hash_key still matches its oracle
+    assert_frames_equal(current_state(vault), oracle_state(changelog))
+
+
 def test_second_satellite_added_purely_by_config(spark, tmp_path, changelog):
     """A role/tool-only satellite joins the vault via the registry — no
     ETL code changes. It versions on ITS OWN hash-diff: text-only edits

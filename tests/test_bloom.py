@@ -12,11 +12,10 @@ import hashlib
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from dvx import bloom
-from dvx.apply import _insert_new_keys
-from dvx.lake import BUCKET_COL, LakeTable
+from dvx.apply import _bloom_scan, _insert_new_keys
+from dvx.lake import LakeTable
 from dvx.schema import Vault
 
 
@@ -91,16 +90,21 @@ def _read_calls(monkeypatch):
 COLS = ["conv_hash_key", "conv_id", "load_date", "record_source"]
 
 
+def _insert(tbl, src):
+    """The engine's key-table insert: the fused scan, then the insert
+    with the table's scan slice."""
+    scan = _bloom_scan(src, [("t", tbl, "conv_hash_key")])["t"]
+    _insert_new_keys(tbl, src, "conv_hash_key", COLS, None, "default", None, scan)
+
+
 def test_brand_new_keys_skip_existing_read(spark, hub, monkeypatch):
-    _insert_new_keys(hub, _keys_df(spark, [f"c{i}" for i in range(200)]),
-                     "conv_hash_key", COLS, None, "default", None)
+    _insert(hub, _keys_df(spark, [f"c{i}" for i in range(200)]))
     n1 = hub.read().count()
     assert n1 == 200
-    assert hub.bloom_enabled() and hub.bloom_paths()
+    assert hub.bloom_paths()
 
     calls = _read_calls(monkeypatch)
-    _insert_new_keys(hub, _keys_df(spark, [f"d{i}" for i in range(200)]),
-                     "conv_hash_key", COLS, None, "default", None)
+    _insert(hub, _keys_df(spark, [f"d{i}" for i in range(200)]))
     # the existence read was pruned away entirely (bloom fp would allow
     # at most a bucket or two — 400 keys at ~0.3% fp makes 0 overwhelmingly
     # likely, and any nonempty read here must still be a strict subset)
@@ -111,40 +115,17 @@ def test_brand_new_keys_skip_existing_read(spark, hub, monkeypatch):
 
 def test_redelivered_keys_still_dedup(spark, hub):
     names = [f"c{i}" for i in range(150)]
-    _insert_new_keys(hub, _keys_df(spark, names), "conv_hash_key", COLS,
-                     None, "default", None)
+    _insert(hub, _keys_df(spark, names))
     # second delivery: 100 old + 50 new
     again = names[:100] + [f"n{i}" for i in range(50)]
-    _insert_new_keys(hub, _keys_df(spark, again), "conv_hash_key", COLS,
-                     None, "default", None)
+    _insert(hub, _keys_df(spark, again))
     df = hub.read()
     assert df.count() == 200
     assert df.select("conv_hash_key").distinct().count() == 200
 
 
-def test_direct_append_keeps_bloom_coverage(spark, hub):
-    """append() without precomputed segments must auto-build them (the
-    completeness invariant: every key in the table is covered or the
-    bucket's bloom is absent)."""
-    hub.append(_keys_df(spark, [f"z{i}" for i in range(64)]).withColumn(
-        BUCKET_COL, F.pmod(F.xxhash64("conv_hash_key"), F.lit(8)).cast("int")
-    ).drop(BUCKET_COL))
-    paths = hub.bloom_paths()
-    assert paths  # segments exist
-    # every stored key tests positive against its bucket's segments
-    rows = hub.read().select("conv_hash_key").collect()
-    keys = [r[0] for r in rows]
-    segs_all = []
-    for ps in paths.values():
-        for p in ps:
-            with open(p, "rb") as f:
-                segs_all.append(f.read())
-    assert bool(bloom.contains_any(segs_all, keys).all())
-
-
 def test_invalidation_on_replace(spark, hub):
-    _insert_new_keys(hub, _keys_df(spark, [f"c{i}" for i in range(100)]),
-                     "conv_hash_key", COLS, None, "default", None)
+    _insert(hub, _keys_df(spark, [f"c{i}" for i in range(100)]))
     assert hub.bloom_paths()
     touched = sorted(int(k) for k in hub.snapshot()["files"])
     contents = hub.read()
@@ -153,15 +134,13 @@ def test_invalidation_on_replace(spark, hub):
     assert not set(hub.bloom_paths()) & set(touched)
     assert hub.read().count() == 100
     # and inserts afterwards still work (plain-read path)
-    _insert_new_keys(hub, _keys_df(spark, [f"q{i}" for i in range(20)]),
-                     "conv_hash_key", COLS, None, "default", None)
+    _insert(hub, _keys_df(spark, [f"q{i}" for i in range(20)]))
     assert hub.read().count() == 120
 
 
 def test_expire_snapshots_keeps_live_bloom_segments(spark, hub):
     for batch in range(4):
-        _insert_new_keys(hub, _keys_df(spark, [f"b{batch}_{i}" for i in range(50)]),
-                         "conv_hash_key", COLS, None, "default", None)
+        _insert(hub, _keys_df(spark, [f"b{batch}_{i}" for i in range(50)]))
     hub.expire_snapshots(retain_last=1)
     import os
 
@@ -170,8 +149,7 @@ def test_expire_snapshots_keeps_live_bloom_segments(spark, hub):
             assert os.path.exists(p)
     # coverage still complete: new-key insert prunes the read
     before = hub.version()
-    _insert_new_keys(hub, _keys_df(spark, [f"fresh{i}" for i in range(50)]),
-                     "conv_hash_key", COLS, None, "default", None)
+    _insert(hub, _keys_df(spark, [f"fresh{i}" for i in range(50)]))
     assert hub.version() > before
     assert hub.read().count() == 250
 
@@ -182,22 +160,19 @@ def test_no_bloom_resurrection_after_invalidation(spark, hub):
     that batch, so the bucket's older keys would probe hits=0 and
     redeliveries would insert duplicates."""
     names = [f"c{i}" for i in range(100)]
-    _insert_new_keys(hub, _keys_df(spark, names), "conv_hash_key", COLS,
-                     None, "default", None)
+    _insert(hub, _keys_df(spark, names))
     touched = sorted(int(k) for k in hub.snapshot()["files"])
     hub.replace_buckets(touched, hub.read())  # drops bloom coverage
     assert not hub.bloom_paths()
     # bloomed append of brand-new keys: buckets with pre-existing rows
     # must stay uncovered (segment covers only the new batch)
-    _insert_new_keys(hub, _keys_df(spark, [f"n{i}" for i in range(100)]),
-                     "conv_hash_key", COLS, None, "default", None)
+    _insert(hub, _keys_df(spark, [f"n{i}" for i in range(100)]))
     covered = set(hub.bloom_paths())
     data_buckets = {int(k) for k in hub.snapshot()["files"]}
     assert not (covered & set(touched))
     assert covered <= data_buckets
     # redeliver the ORIGINAL keys: must dedup via the plain read path
-    _insert_new_keys(hub, _keys_df(spark, names), "conv_hash_key", COLS,
-                     None, "default", None)
+    _insert(hub, _keys_df(spark, names))
     df = hub.read()
     assert df.count() == 200
     assert df.select("conv_hash_key").distinct().count() == 200
@@ -236,18 +211,42 @@ def test_create_rejects_composite_key_bloom(spark, tmp_path):
         )
 
 
-def test_segment_fallback_cap_leaves_bucket_uncovered(spark, hub, monkeypatch):
-    """ADVICE r5 (low): a big direct append skips the driver-side segment
-    build (row-count cap) — bucket stays uncovered, reads stay correct."""
-    monkeypatch.setattr("dvx.lake._BLOOM_FALLBACK_MAX_ROWS", 3)
+def test_direct_append_leaves_buckets_uncovered(spark, hub):
+    """An append() without segments drops bloom coverage for the buckets
+    it writes (no segment covers their keys), so later inserts there
+    take the plain existence read and a redelivery still dedups."""
     hub.append(_keys_df(spark, [f"z{i}" for i in range(64)]))
-    assert not hub.bloom_paths()  # every bucket exceeded the cap
-    # inserts afterwards fall back to the plain existence read and dedup
-    _insert_new_keys(hub, _keys_df(spark, [f"z{i}" for i in range(64)]),
-                     "conv_hash_key", COLS, None, "default", None)
+    assert not hub.bloom_paths()
+    _insert(hub, _keys_df(spark, [f"z{i}" for i in range(64)]))
     df = hub.read()
     assert df.count() == 64
     assert df.select("conv_hash_key").distinct().count() == 64
+
+
+def test_plain_and_bloomed_key_tables_insert_the_same_rows(spark, tmp_path):
+    """A key table without ``key_bloom`` takes the same scan-and-insert
+    path as its bloomed twin (every bucket with data is a possible hit),
+    so seed, redelivery and new-key batches leave identical rows."""
+    from dvx.schema import HUB_CONVERSATION
+
+    tbls = {
+        bloomed: LakeTable.create(
+            spark, str(tmp_path / f"hub_{bloomed}"), HUB_CONVERSATION,
+            num_buckets=8, bucket_cols=["conv_hash_key"],
+            properties={"key_bloom": bloomed},
+        )
+        for bloomed in (True, False)
+    }
+    seed = [f"c{i}" for i in range(150)]
+    batches = [seed, seed[:100] + [f"n{i}" for i in range(50)],
+               [f"m{i}" for i in range(30)]]
+    for names in batches:
+        for tbl in tbls.values():
+            _insert(tbl, _keys_df(spark, names))
+    assert tbls[True].bloom_paths() and not tbls[False].bloom_paths()
+    rows = {b: sorted(t.read().select(*COLS).collect()) for b, t in tbls.items()}
+    assert len(rows[True]) == 230
+    assert rows[True] == rows[False]
 
 
 def test_np_uint8_shift_semantics():

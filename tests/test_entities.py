@@ -4,8 +4,10 @@ table layouts and break replays against existing warehouses)."""
 
 from __future__ import annotations
 
+import pytest
+
 from dvx import schema as S
-from dvx.entities import DEFAULT_REGISTRY, SAT_TURN_META
+from dvx.entities import DEFAULT_REGISTRY, SAT_TURN_META, EntityRegistry
 
 
 def test_derived_schemas_match_canonical_ddl():
@@ -41,3 +43,8 @@ def test_with_satellite_is_pure_config():
 
 def test_version_grain_is_union_of_hub_keys():
     assert DEFAULT_REGISTRY.version_grain() == ("conv_id", "turn_idx")
+
+
+def test_registry_without_satellites_is_rejected():
+    with pytest.raises(ValueError, match="at least one satellite"):
+        EntityRegistry(hubs=DEFAULT_REGISTRY.hubs, satellites=())

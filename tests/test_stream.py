@@ -153,3 +153,59 @@ def test_epochs_recorded_in_snapshots(spark, tmp_path, changelog):
     ingest_batch(vault, changelog.limit(100), epoch_id=7, log_lineage=False)
     for t in ("hub_conversation", "hub_turn", "link_conversation_turn", "sat_turn_text", "sat_turn_text_hist"):
         assert vault.table(t).last_epoch("default") == 7
+
+
+def test_pit_crash_after_vault_commits_replays_the_pit(
+    spark, tmp_path, changelog, monkeypatch
+):
+    """A crash inside the PIT maintenance, after the epoch's hub, link
+    and satellite commits, must not let the replay skip the epoch: the
+    replayed epoch rebuilds the PIT date, equal to a full build."""
+    import dvx.pit as pit_mod
+
+    pit_date = "2024-01-02"
+    vault = make_vault(spark, tmp_path)
+    real = pit_mod.build_pit_incremental
+    calls = []
+
+    def crash_once(*a, **kw):
+        calls.append(1)
+        if len(calls) == 1:
+            raise RuntimeError("injected crash before the PIT commit")
+        return real(*a, **kw)
+
+    monkeypatch.setattr(pit_mod, "build_pit_incremental", crash_once)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        ingest_batch(vault, changelog, epoch_id=0, log_lineage=False,
+                     pit_dates=[pit_date])
+    assert vault.sat_turn_text.last_epoch("default") == 0  # vault committed
+    replay = ingest_batch(vault, changelog, epoch_id=0, log_lineage=False,
+                          pit_dates=[pit_date])
+    assert not replay["skipped"]
+    assert vault.pit_turn.last_epoch("default") == 0
+    again = ingest_batch(vault, changelog, epoch_id=0, log_lineage=False,
+                         pit_dates=[pit_date])
+    assert again["skipped"]
+
+    got = sorted(vault.pit_turn.read(partitions=[pit_date]).collect())
+    pit_mod.build_pit(vault, pit_date, if_exists="replace")
+    want = sorted(vault.pit_turn.read(partitions=[pit_date]).collect())
+    assert got and got == want
+
+
+def test_pit_registry_check_runs_before_any_commit(spark, tmp_path, changelog):
+    """pit_dates on a registry without the PIT satellite fails before
+    any table commits."""
+    from dvx.entities import DEFAULT_REGISTRY, SAT_TURN_META, EntityRegistry
+
+    reg = EntityRegistry(
+        hubs=DEFAULT_REGISTRY.hubs, links=DEFAULT_REGISTRY.links,
+        satellites=(SAT_TURN_META,),
+    )
+    vault = Vault(spark, str(tmp_path / "wh"), num_buckets=4, registry=reg)
+    vault.create_all_tables()
+    before = {t: vault.table(t).version() for t in vault.tables}
+    with pytest.raises(ValueError, match="sat_turn_text"):
+        ingest_batch(vault, changelog.limit(50), epoch_id=0,
+                     log_lineage=False, pit_dates=["2024-01-02"])
+    assert {t: vault.table(t).version() for t in vault.tables} == before
