@@ -109,9 +109,9 @@ def main(argv: list[str] | None = None) -> int:
             # conversations; event-time (load_date) watermarks also have a
             # cross-key skew hole. Instead: every change the satellite
             # applied since the refresh lives in data files COMMITTED
-            # after the snapshot version recorded at refresh time (MOR
-            # deltas are O(changed rows); compaction rewrites widen this
-            # conservatively). Read just those files' keys and map them to
+            # after the snapshot version recorded at refresh time (a
+            # row-level change inserts only the changed rows; compaction
+            # rewrites widen this conservatively). Read just those files' keys and map them to
             # conversations through the link.
             from pyspark.sql import functions as F
 

@@ -20,15 +20,16 @@ insertion into one commit), driven by a declarative entity registry
 4. per-satellite SCD2 apply over a bounded CURRENT table + append-only
    HISTORY: the batch chains per key on the satellite's OWN hash-diff
    (consecutive duplicates collapse), displaced versions are end-dated
-   into history, the batch-final version upserts into current as a
-   merge-on-read delta; stale (out-of-order) arrivals trigger a per-key
-   re-chain that splices them into history (one-shot semantics, nothing
-   lost); deletes are tombstone versions. Every batch, stale or not,
-   has ONE write shape: the history and current writes are staged
-   concurrently and published history-first, the history side as a
-   single commit (an append, or an equality-delete + insert when stale
-   keys re-chain). Each satellite takes its touched buckets from ONE
-   per-bucket row census of its parent key, which also feeds the
+   into history, the batch-final version replaces the stored current row;
+   stale (out-of-order) arrivals trigger a per-key re-chain that splices
+   them into history (one-shot semantics, nothing lost); deletes are
+   tombstone versions. Every batch, stale or not, has ONE write shape:
+   the history and current writes are staged concurrently and published
+   history-first, each as a single commit. The current side is an
+   equality-delete + insert (``delete_insert``) on the changed keys; the
+   history side is an append, or a ``delete_insert`` on the stale keys
+   when they re-chain. Each satellite takes its touched buckets from
+   ONE per-bucket row census of its parent key, which also feeds the
    lineage metrics.
 
 Scale notes
@@ -46,8 +47,9 @@ Scale notes
   turn's version run (bounded by the per-turn edit count). The rows
   that flow through that window are the narrow ~100B decision columns,
   so even a pathological single-turn run is cheap to sort.
-- Current-table writes are merge-on-read deltas (dvx.lake.upsert_delta):
-  per-batch write IO is O(changed rows), never O(touched buckets).
+- Current-table writes are equality deletes plus inserts
+  (dvx.lake ``delete_insert``): per-batch write IO is O(changed rows),
+  never O(touched buckets).
 """
 
 from __future__ import annotations
@@ -62,9 +64,9 @@ from dvx.hashing import registry_hashes
 from dvx.lake import BUCKET_COL
 from dvx.schema import RECORD_SOURCE, Vault, descriptive_cols
 
-#: a satellite's current table folds a bucket's merge-on-read deltas
-#: back into its base once the bucket holds this many delta files
-SAT_DELTA_COMPACT = 8
+#: a satellite's current table folds a bucket's equality-delete
+#: tombstones into its data once the bucket holds this many tombstone files
+SAT_TOMB_COMPACT = 8
 
 
 def prepare_batch(df: DataFrame, registry: EntityRegistry | None = None) -> DataFrame:
@@ -168,7 +170,7 @@ def _bloom_scan(
             )
         info[name] = (
             tbl.bloom_paths(),
-            {int(k) for k in (set(m["files"]) | set(m.get("deltas", {}))) if k.isdigit()},
+            {int(k) for k in m["files"] if k.isdigit()},
         )
         frames.append(
             prepared.select(
@@ -285,8 +287,8 @@ def _apply_satellite(
       version if it matches the stored current hash_diff (P5 change
       filter, RawVaultETL.scala:340-346); non-final chain versions +
       displaced old current rows go to the HISTORY table; the
-      batch-final version per key upserts into CURRENT as a
-      merge-on-read delta (O(changed rows) write IO).
+      batch-final version per key replaces the key's CURRENT row
+      (O(changed rows) write IO).
     - EQUAL rows (same (ts, seq) as the stored current): exact
       redeliveries — dropped, idempotent.
     - STALE rows (strictly older than the stored current): out-of-order
@@ -297,27 +299,27 @@ def _apply_satellite(
       O(stale keys) only.
 
     Write shape (the same for every batch, stale or in-order): a stale
-    batch first computes and spills its re-chain and stages the stale
-    keys' history tombstones (both on helper threads, while this thread
-    plans the in-order frames); then the history write and the
-    current-delta write are STAGED concurrently (lake.stage_write) and
-    published strictly history-first. The
-    history side is ONE commit — an ``append`` of the in-order keys'
-    displaced/intermediate rows, or, when stale keys exist, a
-    ``delete_insert`` that also tombstones the stale keys' old history
-    and appends their re-chained ended versions (the key sets are
-    disjoint through ``anti_stale``; rows written in the tombstone's
-    own commit survive it). The current side is one ``upsert_delta``
-    holding the batch-final rows and the stale keys' re-chained current
-    rows.
+    batch first computes and spills its re-chain on a helper thread
+    while this thread plans the in-order frames; then the history write
+    and the current write are STAGED concurrently (lake.stage_write,
+    each one Spark job carrying its rows and its tombstones) and
+    published strictly history-first, each as ONE commit. The history
+    side is an ``append`` of the in-order keys' displaced/intermediate
+    rows, or, when stale keys exist, a ``delete_insert`` that also
+    tombstones the stale keys' old history and appends their re-chained
+    ended versions (the key sets are disjoint through ``anti_stale``;
+    rows written in the tombstone's own commit survive it). The current
+    side is a ``delete_insert`` that tombstones every key with a fresh
+    winner or a re-chain, and inserts the batch-final rows and the
+    stale keys' re-chained current rows.
 
-    Crash ordering: history (data and tombstones, atomically) before
-    current; both commits carry the epoch mark. A crash before the
-    history commit publishes nothing. A crash between the two leaves
-    current untouched, so the re-run sees do_hist=False and commits
-    only the current delta — the same delta: the in-order part depends
-    only on (unchanged) current, and the re-chain is a pure function of
-    stored state ∪ batch that the spliced history reproduces.
+    Crash ordering: history before current; both commits carry the
+    epoch mark. A crash before the history commit publishes nothing. A
+    crash between the two leaves current untouched, so the re-run sees
+    do_hist=False and commits only the current side — the same commit:
+    the in-order part depends only on (unchanged) current, and the
+    re-chain is a pure function of stored state ∪ batch that the
+    spliced history reproduces.
     """
     import shutil as _shutil
     from concurrent.futures import ThreadPoolExecutor
@@ -363,7 +365,7 @@ def _apply_satellite(
     try:
         # the decisions pass needs only the version columns of current —
         # and only for keys THE BATCH CARRIES: a column-pruned,
-        # key-filtered read keeps the MOR last-wins agg off `text` AND
+        # key-filtered read keeps the tombstone resolution off `text` AND
         # off every key the batch doesn't mention, so this read (and the
         # decisions join below, whose build side it is) stays O(batch)
         # as the table grows instead of O(touched buckets' live keys)
@@ -484,9 +486,9 @@ def _apply_satellite(
             """Re-chain the stale keys over history ∪ current ∪ batch and
             spill the result to ``path``: it feeds BOTH staged writes,
             and without the spill each write job would recompute the
-            whole re-chain (two table reads + MOR merge + dedup agg +
-            two windows) from scratch (guide §1.2: don't compute things
-            twice; §5 materialize shared subtrees)."""
+            whole re-chain (two table reads + tombstone resolution +
+            dedup agg + two windows) from scratch (guide §1.2: don't
+            compute things twice; §5 materialize shared subtrees)."""
             attr_cols = [
                 c for c in sat_cols
                 if c not in (key, "valid_from", "valid_to", "src_seq")
@@ -506,7 +508,7 @@ def _apply_satellite(
             )
             # key-filtered reads: the re-chain consumes only the stale
             # keys' history and current — key_filter pushes the semi
-            # below the MOR merge / tombstone resolution
+            # below the tombstone resolution
             hist_re = as_version(
                 hist_tbl.with_bucket(
                     hist_tbl.read(buckets=stale_buckets, key_filter=stale_keys)
@@ -547,18 +549,13 @@ def _apply_satellite(
             re_sat.write.mode("overwrite").option("compression", "snappy").parquet(path)
             return vault.spark.read.schema(re_sat.schema).parquet(path)
 
-        # ---- stale keys: start the re-chain and the history tombstones ----
-        # both depend only on the decisions spill, so they run on helper
-        # threads while this thread plans the in-order frames below
-        f_rechain = f_tombs = None
+        # ---- stale keys: start the re-chain ----
+        # it depends only on the decisions spill, so it runs on a helper
+        # thread while this thread plans the in-order frames below
+        f_rechain = None
         if stale_buckets:
             spill_r = _spill_path(vault)
             f_rechain = ex.submit(_in_pool, sc, "dvx_critical", _rechain, spill_r)
-            if do_hist:
-                f_tombs = ex.submit(
-                    _in_pool, sc, "dvx_critical", hist_tbl.stage_write, None,
-                    tombstone_keys=stale_keys,
-                )
 
         def anti_stale(df: DataFrame) -> DataFrame:
             return df.join(stale_keys, key, "left_anti") if stale_buckets else df
@@ -598,7 +595,7 @@ def _apply_satellite(
         )
         # full current rows are needed ONLY for the displaced set (keys
         # whose stored version gets end-dated into history) — key_filter
-        # prunes the full-text MOR merge to those keys BEFORE it runs, so
+        # prunes the full-text read to those keys BEFORE it resolves, so
         # the displaced read is O(updated keys), not O(touched buckets).
         # enders derives from the spilled decisions parquet, so this does
         # not recompute the chain.
@@ -613,14 +610,14 @@ def _apply_satellite(
         hist_rows = as_sat(
             intermediates, F.col("_next_ts").cast("timestamp")
         ).unionByName(displaced)
-        delta_rows = as_sat(finals, F.lit(None).cast("timestamp"))
+        cur_rows = as_sat(finals, F.lit(None).cast("timestamp"))
 
         if f_rechain is not None:
             re_sat = f_rechain.result()
             hist_rows = hist_rows.unionByName(
                 re_sat.filter(F.col("valid_to").isNotNull())
             )
-            delta_rows = delta_rows.unionByName(
+            cur_rows = cur_rows.unionByName(
                 re_sat.filter(F.col("valid_to").isNull())
             )
 
@@ -631,30 +628,32 @@ def _apply_satellite(
         # old version entirely (it is no longer in current and never
         # reached history). So: run both multi-second WRITE jobs
         # concurrently on the executors, then publish the two metadata
-        # commits strictly history-first.
+        # commits strictly history-first. Each write carries its
+        # tombstones: on history the stale keys, on current every key
+        # with a fresh winner or a re-chain — read from the decisions
+        # spill, so no frame above is recomputed for them.
         writes = []
         if do_hist:
-            op = "delete_insert" if f_tombs is not None else "append"
-            writes.append((hist_tbl, hist_rows, op, ex.submit(
-                _in_pool, sc, "dvx_critical", hist_tbl.stage_write, hist_rows)))
+            tombs = stale_keys if stale_buckets else None
+            writes.append((hist_tbl, hist_rows, tombs))
         if do_cur:
-            writes.append((cur_tbl, delta_rows, "upsert_delta", ex.submit(
-                _in_pool, sc, "dvx_critical", cur_tbl.stage_write, delta_rows)))
-        for tbl, frame, op, fut in writes:
-            staged = fut.result()
-            if op == "delete_insert":
-                staged = [f_tombs.result(), staged]
+            changed = decisions.filter(F.col("_win") | (F.col("_sb") >= 0))
+            writes.append((cur_tbl, cur_rows, changed.select(key)))
+        futs = [
+            ex.submit(_in_pool, sc, "dvx_critical", tbl.stage_write, rows, keys)
+            for tbl, rows, keys in writes
+        ]
+        for (tbl, rows, keys), fut in zip(writes, futs):
+            op = "append" if keys is None else "delete_insert"
             try:
-                tbl.commit_staged(staged, op, summary=summary)
+                tbl.commit_staged(fut.result(), op, summary=summary)
             except CommitConflict:  # an external writer moved the table:
                 # the same write, staged again at its new base
-                keys = stale_keys if op == "delete_insert" else None
-                tbl.write(op, frame, keys, summary=summary)
+                tbl.write(op, rows, keys, summary=summary)
         if do_cur:
-            # current is written as merge-on-read deltas (O(changed rows)
-            # per batch); folding a bucket every SAT_DELTA_COMPACT delta
-            # commits keeps its amortized rewrite O(bucket/threshold)
-            cur_tbl.compact_deltas(SAT_DELTA_COMPACT)
+            # folding a bucket every SAT_TOMB_COMPACT current commits
+            # keeps its amortized rewrite O(bucket/threshold)
+            cur_tbl.compact_tombstones(SAT_TOMB_COMPACT)
     finally:
         ex.shutdown(wait=True)  # no helper job may still read a spill
         for d in (spill_j, spill_r):

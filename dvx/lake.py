@@ -37,16 +37,23 @@ metadata-pointer swap which is likewise driver-side.
 Writes
 ------
 Every data write is one sequence run by one retry loop
-(``LakeTable._write``): stage the attempt's files for base version v,
-publish them with ONE :meth:`LakeTable.commit_staged`, and on
-``CommitConflict`` drop the attempt and stage again from the new base
-(a frame read from the table itself is re-read there). A commit names
-the manifest keys it ``replace``s; they lose their files, deltas and
+(``LakeTable._write``): stage the attempt's files for base version v in
+ONE Spark job, publish them with ONE :meth:`LakeTable.commit_staged`,
+and on ``CommitConflict`` drop the attempt and stage again from the new
+base (a frame read from the table itself is re-read there). A commit
+names the manifest keys it ``replace``s; they lose their files and
 tombstones: the written buckets of ``replace_buckets`` and of a plain
 overwrite, every key of a written partition value on composite tables,
 every key of an unpartitioned overwrite, and the folded keys of a
-compaction. Staged data joins ``files`` (``deltas`` for
-``upsert_delta``) and staged tombstones join ``tombstones``.
+compaction. Staged data joins ``files`` and staged tombstones join
+``tombstones``.
+
+Row-level change has one mechanism, the Iceberg format-v2 equality
+delete: a ``delete_insert`` commit writes tombstones for the keys it
+changes plus their new rows, and a read drops every row older than the
+newest tombstone on its key (rows written in a tombstone's own commit
+survive it). An upsert, a delete and an SCD2 re-chain are all that one
+commit; :meth:`LakeTable.compact_tombstones` folds the tombstones away.
 
 Object-store note (what changes off POSIX): ``os.link`` atomicity maps
 to a conditional PUT (S3 ``If-None-Match: *``, GCS ``ifGenerationMatch=
@@ -75,13 +82,14 @@ Scale design
   either half. This is what lets the incremental PIT maintain one
   snapshot-date partition with O(touched buckets) write IO instead of
   rewriting the whole date per micro-batch.
-- Bucketed tables additionally support **merge-on-read upserts**
-  (``upsert_delta`` — the Iceberg format-v2 row-level-delta analog):
-  per-bucket delta files whose rows replace same-key base rows at read
-  time, last-wins by commit version; ``compact_deltas`` folds them back.
-  This turns per-batch upsert write IO from O(touched buckets) into
-  O(changed rows), the lever that matters when every micro-batch touches
-  every bucket (uniformly hashed keys at 10^10 rows).
+- Row-level changes (``delete_insert``) write O(changed rows): one
+  tombstone file and one data file per touched bucket, never a bucket
+  rewrite. Tombstones go only to buckets that hold rows at the base
+  version, so a first load writes none. Readers pay a narrow hashed
+  resolution join on tombstone-carrying buckets until a thresholded
+  fold rewrites them, so the amortized rewrite per commit stays
+  O(bucket / threshold) even when every micro-batch touches every
+  bucket (uniformly hashed keys at 10^10 rows).
 - The physical partition value is duplicated into a regular data column
   before write, so explicit-file-list reads keep it without relying on
   directory-name inference.
@@ -97,7 +105,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import LongType, StructField, StructType
 
 _PHYS = "_p"  # physical layout column (dropped from data files by partitionBy)
 BUCKET_COL = "_bucket"
@@ -110,13 +118,17 @@ _CHECKPOINT_EVERY = 16
 #: immutable once committed, so entries never go stale.
 _SNAP_CACHE: dict[tuple[str, int], dict] = {}
 
-#: the per-key maps every snapshot carries: data files, merge-on-read
-#: delta files, key bloom segments, equality-delete tombstone files
-_MAPS = ("files", "deltas", "blooms", "tombstones")
+#: the per-key maps every snapshot carries: data files, key bloom
+#: segments, equality-delete tombstone files
+_MAPS = ("files", "blooms", "tombstones")
+
+#: merge-on-read delta files, a per-key map earlier versions of this
+#: module wrote: resolved only so that a snapshot still holding some is
+#: refused instead of read without them
+_LEGACY = "deltas"
 
 #: the manifest operations a data write commits as
-_OPS = ("append", "upsert_delta", "delete_insert", "overwrite_partitions",
-        "merge", "compact")
+_OPS = ("append", "delete_insert", "overwrite_partitions", "merge", "compact")
 
 __all__ = ["LakeTable", "BUCKET_COL", "CommitConflict"]
 
@@ -147,12 +159,11 @@ def _key_bloom(m: dict) -> bool:
     return bool(m.get("properties", {}).get("key_bloom"))
 
 
-def _next_maps(m: dict, op: str, parts: list[dict], replace: set) -> dict:
-    """The next snapshot's four manifest maps: the one place they are
-    derived. ``replace``d keys lose their files, deltas and tombstones;
-    staged data joins ``files`` (``deltas`` for ``upsert_delta``);
-    staged tombstones join ``tombstones``; blooms follow the rules
-    below."""
+def _next_maps(m: dict, op: str, part: dict, replace: set) -> dict:
+    """The next snapshot's manifest maps: the one place they are
+    derived. ``replace``d keys lose their files and tombstones; staged
+    data joins ``files``, staged tombstones join ``tombstones``; blooms
+    follow the rules below."""
     nxt = {
         name: {
             k: list(ps) for k, ps in m[name].items()
@@ -160,18 +171,14 @@ def _next_maps(m: dict, op: str, parts: list[dict], replace: set) -> dict:
         }
         for name in _MAPS
     }
-    data = nxt["deltas" if op == "upsert_delta" else "files"]
-    bloom_add: dict[str, str] = {}
-    for p in parts:
-        for k, ps in p["new_files"].items():
-            data.setdefault(k, []).extend(ps)
-        for k, ps in p["tomb_files"].items():
-            nxt["tombstones"].setdefault(k, []).extend(ps)
-        bloom_add.update(p["blooms"])
+    for k, ps in part["new_files"].items():
+        nxt["files"].setdefault(k, []).extend(ps)
+    for k, ps in part["tomb_files"].items():
+        nxt["tombstones"].setdefault(k, []).extend(ps)
     # a compaction rewrites the same key set: blooms stay valid
     if _key_bloom(m) and op != "compact":
         blooms = nxt["blooms"]
-        for k in {k for p in parts for k in p["new_files"]}:
+        for k in part["new_files"]:
             # An appended key without a segment breaks the bucket's
             # completeness invariant, and every other op may introduce
             # keys no segment covers; false negatives are correctness
@@ -179,18 +186,30 @@ def _next_maps(m: dict, op: str, parts: list[dict], replace: set) -> dict:
             # back to the plain existence read. A segment may only
             # ATTACH when coverage stays complete: the bucket either
             # already had complete coverage (k in blooms) or holds no
-            # pre-existing rows at all (no files AND no deltas). Without
-            # that guard, a bucket invalidated by a merge/overwrite/
-            # unbloomed append would be "resurrected" by the next
-            # bloomed append with a segment covering only that batch —
-            # its older keys covered by no segment, so redeliveries
-            # would probe hits=0 and insert duplicates.
-            never_had_rows = k not in m["files"] and k not in m["deltas"]
-            if op == "append" and k in bloom_add and (k in blooms or never_had_rows):
-                blooms.setdefault(k, []).append(bloom_add[k])
+            # pre-existing rows at all. Without that guard, a bucket
+            # invalidated by a merge/overwrite/unbloomed append would be
+            # "resurrected" by the next bloomed append with a segment
+            # covering only that batch — its older keys covered by no
+            # segment, so redeliveries would probe hits=0 and insert
+            # duplicates.
+            seg = part["blooms"].get(k)
+            if op == "append" and seg and (k in blooms or k not in m["files"]):
+                blooms.setdefault(k, []).append(seg)
             else:
                 blooms.pop(k, None)
     return nxt
+
+
+def _refuse_legacy(m: dict, root: str) -> None:
+    """Refuse a snapshot whose resolved merge-on-read delta map is not
+    empty: this version reads and writes no delta files, so serving or
+    extending such a snapshot would silently drop their rows."""
+    if _LEGACY in m:
+        raise ValueError(
+            f"{root}: snapshot v{m['version']} holds merge-on-read delta "
+            "files written by an earlier dvx version; fold them with that "
+            "version (compact_deltas(max_delta_files=1)) first"
+        )
 
 
 def _log_dir(root: str) -> str:
@@ -291,14 +310,16 @@ class LakeTable:
         m = self._read_manifest(v)
         if "files" not in m:  # delta: fold onto predecessor
             base = self.snapshot(m.pop("delta_base"))
-            for name in _MAPS:
-                cur = dict(base[name])
+            for name in (*_MAPS, _LEGACY):
+                cur = dict(base.get(name, {}))
                 for k in m.pop(f"{name}_drop", []):
                     cur.pop(k, None)
                 cur.update(m.pop(f"{name}_set", {}))
                 m[name] = cur
         for name in _MAPS:
             m.setdefault(name, {})
+        if not any(m.get(_LEGACY, {}).values()):
+            m.pop(_LEGACY, None)
         if len(_SNAP_CACHE) > 512:
             _SNAP_CACHE.clear()
         _SNAP_CACHE[key] = m
@@ -370,19 +391,13 @@ class LakeTable:
 
         ``columns`` prunes the read schema to those columns (order
         preserved; bucket cols are always included on bucketed tables so
-        the merge-on-read agg can key on them). This matters on the MOR
-        path: the last-wins merge agg then runs over the pruned struct —
-        a consumer that needs only the key/version columns never pays the
-        merge over ``text``.
+        the tombstone resolution can key on them).
 
         ``key_filter`` (bucketed tables): a frame whose ``bucket_cols``
         columns name the keys the caller wants — rows for other keys are
-        dropped by a semi-join BELOW the merge-on-read agg. Per-key
-        last-wins semantics are preserved (filtering by key keeps every
-        candidate row of a surviving key), but the agg — the expensive
-        part, a hash aggregate over the buckets' full contents including
-        wide columns — shrinks from O(touched buckets' rows) to O(kept
-        keys' rows). This is what keeps the per-micro-batch satellite
+        dropped by a semi-join BELOW the tombstone resolution join, so
+        the resolution runs over O(kept keys' rows), not O(touched
+        buckets' rows). This is what keeps the per-micro-batch satellite
         apply O(batch), not O(table): the batch's key set is a vanishing
         fraction of a grown table's buckets.
 
@@ -394,15 +409,17 @@ class LakeTable:
         :meth:`compact_tombstones` folds them away.
         """
         m = self.snapshot(version)
-        if key_filter is not None and not m["bucket_cols"]:
+        _refuse_legacy(m, self.root)
+        key_cols = m["bucket_cols"]
+        if key_filter is not None and not key_cols:
             raise ValueError("key_filter requires a bucketed table")
-        schema = StructType.fromJson(m["schema"])
+        full = StructType.fromJson(m["schema"])
+        schema = full
         if columns is not None:
-            want = set(columns) | set(m["bucket_cols"] or [])
-            schema = StructType([f for f in schema.fields if f.name in want])
-        delta_map = m.get("deltas", {})
-        tomb_map = m.get("tombstones", {})
-        live = set(m["files"].keys()) | set(delta_map.keys())
+            want = set(columns) | set(key_cols or [])
+            schema = StructType([f for f in full.fields if f.name in want])
+        tomb_map = m["tombstones"]
+        live = set(m["files"])
         composite = _is_composite(m)
         if buckets is not None:
             want = {str(b) for b in buckets}
@@ -411,37 +428,24 @@ class LakeTable:
             want = set(map(str, partitions))
             live = {k for k in live if (_part_of(k) if composite else k) in want}
         if keys is not None:
-            want = set(map(str, keys))
-            live = {k for k in live if k in want}
-        keys = live
-        plain_keys = [
-            k for k in keys if not delta_map.get(k) and not tomb_map.get(k)
-        ]
-        tomb_keys = sorted(
-            k for k in keys if tomb_map.get(k) and not delta_map.get(k)
-        )
-        mor_keys = sorted(k for k in keys if delta_map.get(k))
-        plain_files = [
-            os.path.join(self.root, p)
-            for k in plain_keys
-            for p in m["files"].get(k, [])
-        ]
-        tomb_data_files = [
-            os.path.join(self.root, p)
-            for k in tomb_keys
-            for p in m["files"].get(k, [])
-        ]
-        mor_files = [
-            os.path.join(self.root, p)
-            for k in mor_keys
-            for p in [*m["files"].get(k, []), *delta_map[k]]
-        ]
-        if not plain_files and not tomb_data_files and not mor_files:
-            return self.spark.createDataFrame([], schema)
+            live &= set(map(str, keys))
+        tomb_keys = sorted(k for k in live if tomb_map.get(k))
 
-        key_cols = m["bucket_cols"]
+        def paths(ks, name="files") -> list[str]:
+            return [os.path.join(self.root, p) for k in ks for p in m[name].get(k, [])]
 
-        def _keep(df: DataFrame) -> DataFrame:
+        def scan(ps: list[str], with_cv: bool = False) -> DataFrame:
+            df = self.spark.read.schema(schema).parquet(*ps)
+            if with_cv:
+                # the row's commit version comes from its file path: it
+                # is non-deterministic, so it must live in a Project
+                # directly above its OWN scan — below any join
+                df = df.withColumn(
+                    "_cv",
+                    F.regexp_extract(
+                        F.input_file_name(), r"data/c(\d+)[-/]", 1
+                    ).cast("long"),
+                )
             if key_filter is None:
                 return df
             kf = key_filter.select(*key_cols).distinct()
@@ -453,80 +457,35 @@ class LakeTable:
             # fixed, non-scaling cost and an OOM hazard at big batches).
             return df.join(kf.hint("shuffle_hash"), key_cols, "left_semi")
 
-        def _cv(df: DataFrame) -> DataFrame:
-            # project the commit version out of the file path: it is
-            # non-deterministic, so it must live in a Project directly
-            # above its OWN scan — below any join/aggregate
-            return df.withColumn(
-                "_cv",
-                F.regexp_extract(
-                    F.input_file_name(), r"data/c(\d+)[-/]", 1
-                ).cast("long"),
-            )
-
-        def _untomb(df: DataFrame, klist: list[str]) -> DataFrame:
-            """Equality-delete resolution: drop rows whose key has a
-            NEWER tombstone than the row's commit (rows written in the
-            tombstone's own commit survive). ``df`` must carry _cv; the
-            tombstone commit version is a stored column (_tcv), not a
-            path derivation — two input_file_name sources in one plan
-            are ambiguous."""
-            from pyspark.sql.types import LongType, StructField
-
-            tpaths = [
-                os.path.join(self.root, p)
-                for k in klist
-                for p in tomb_map.get(k, [])
-            ]
+        plain_files = paths(sorted(live.difference(tomb_keys)))
+        tomb_files = paths(tomb_keys)
+        parts: list[DataFrame] = []
+        if plain_files:
+            parts.append(scan(plain_files))
+        if tomb_files:
+            # the tombstone's commit version is a stored column (_tcv),
+            # not a path derivation: two input_file_name sources in one
+            # plan are ambiguous
             tschema = StructType(
-                [f for f in StructType.fromJson(m["schema"]).fields
-                 if f.name in key_cols]
+                [f for f in full.fields if f.name in key_cols]
                 + [StructField("_tcv", LongType())]
             )
-            t = (
-                self.spark.read.schema(tschema).parquet(*tpaths)
+            newest = (
+                self.spark.read.schema(tschema)
+                .parquet(*paths(tomb_keys, "tombstones"))
                 .groupBy(*key_cols)
                 .agg(F.max("_tcv").alias("_tcv"))
             )
-            j = df.join(t.hint("shuffle_hash"), key_cols, "left")
-            return j.filter(
-                F.col("_tcv").isNull() | (F.col("_cv") >= F.col("_tcv"))
-            ).drop("_tcv")
-
-        parts: list[DataFrame] = []
-        if plain_files:
-            parts.append(_keep(self.spark.read.schema(schema).parquet(*plain_files)))
-        if tomb_data_files:
-            df = _keep(_cv(self.spark.read.schema(schema).parquet(*tomb_data_files)))
-            parts.append(_untomb(df, tomb_keys).drop("_cv"))
-        if mor_files:
-            # merge-on-read (only the delta-carrying buckets pay it):
-            # delta files hold last-wins upserts keyed on the bucket cols
-            # (at most one row per key per delta commit — the
-            # upsert_delta caller contract). The winning row per key is
-            # the one from the highest commit, recovered from the file
-            # path (data/c<version>/...). Ties (same commit) break on the
-            # full row struct, so the merge is deterministic. This
-            # per-key agg is the read-side price of O(new rows) write IO
-            # per batch; compact_deltas() folds deltas back into the
-            # base to bound the number of files it spans.
-            raw = self.spark.read.schema(schema).parquet(*mor_files)
-            cols = raw.columns
-            df = _keep(_cv(raw))
-            mor_tombed = [k for k in mor_keys if tomb_map.get(k)]
-            if mor_tombed:
-                df = _untomb(df, mor_tombed)
-            ordered = F.struct(F.col("_cv"), *[F.col(c) for c in cols])
-            merged = (
-                df.groupBy(*[F.col(c) for c in key_cols])
-                .agg(F.max(ordered).alias("_m"))
-                .select(*[F.col(f"_m.{c}").alias(c) for c in cols])
+            # rows written in the tombstone's own commit survive it
+            parts.append(
+                scan(tomb_files, with_cv=True)
+                .join(newest.hint("shuffle_hash"), key_cols, "left")
+                .filter(F.col("_tcv").isNull() | (F.col("_cv") >= F.col("_tcv")))
+                .drop("_tcv", "_cv")
             )
-            parts.append(merged)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        if not parts:
+            return self.spark.createDataFrame([], schema)
+        return parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
 
     # --------------------------------------------------------------- writes
 
@@ -585,6 +544,11 @@ class LakeTable:
                     BUCKET_COL, self._bucket_expr(manifest["num_buckets"], manifest["bucket_cols"])
                 )
             phys = F.col(BUCKET_COL).cast("string")
+            if "_tcv" in df.columns:
+                # tombstone rows (:meth:`_stage`) land under "t<bucket>"
+                phys = F.when(F.col("_tcv").isNull(), phys).otherwise(
+                    F.concat(F.lit("t"), phys)
+                )
             if manifest.get("partition_col"):
                 # composite layout: "<partition>|<bucket>" ('|' is not in
                 # Spark's partition-path escape set, so the directory name
@@ -609,7 +573,7 @@ class LakeTable:
             else:
                 # wide (big rewrites): 4x partition headroom so two bucket
                 # keys rarely hash to the same writer task and idle the
-                # rest. Narrow (small appends — hubs/links/history/deltas,
+                # rest. Narrow (small appends — hubs/links/history/current,
                 # several per micro-batch): no partition count, so AQE
                 # coalesces the shuffle to as few writer tasks as the data
                 # needs. A fixed num_buckets count launched mostly empty
@@ -696,17 +660,21 @@ class LakeTable:
         wide: bool = False,
     ) -> dict:
         """Write one attempt's files for base snapshot ``m`` at version
-        ``v`` — the only caller of :meth:`_write_files`. ``df``'s rows
-        become data files; ``tombstone_keys`` (plain bucketed tables
-        without key blooms) become equality-delete tombstone files for
-        those keys, stamped with the attempt's commit version (``_tcv``,
-        a stored column so the read side never needs a second
-        input_file_name derivation). Nothing is visible until
+        ``v`` in ONE Spark job — the only caller of :meth:`_write_files`.
+        ``df``'s rows become data files; ``tombstone_keys`` (plain
+        bucketed tables without key blooms) become equality-delete
+        tombstone files for those keys, stamped with the attempt's commit
+        version (``_tcv``, a stored column so the read side never needs a
+        second input_file_name derivation). A key whose bucket holds no
+        rows at ``v`` gets no tombstone: it would delete nothing, and the
+        commit re-checks ``v``. Nothing is visible until
         :meth:`commit_staged` publishes the returned part."""
+        _refuse_legacy(m, self.root)
         staged = {
             "base_version": v, "new_files": {}, "commit_rel": None,
-            "tomb_files": {}, "tomb_rel": None, "blooms": {},
+            "tomb_files": {}, "blooms": {},
         }
+        frame = None if df is None else self._schema_aligned(df, m)
         if tombstone_keys is not None:
             if m["num_buckets"] is None or m.get("partition_col"):
                 raise ValueError(
@@ -717,17 +685,29 @@ class LakeTable:
                     "delete_keys_insert is not supported on key_bloom "
                     "tables (deletes break segment completeness)"
                 )
-        if df is not None:
-            staged["new_files"], staged["commit_rel"] = self._write_files(
-                self._schema_aligned(df, m), m, v + 1, salts=salts, wide=wide
+            if m["files"]:
+                bucket = self._bucket_expr(m["num_buckets"], m["bucket_cols"])
+                tombs = (
+                    tombstone_keys.select(*m["bucket_cols"]).distinct()
+                    .withColumn(BUCKET_COL, bucket)
+                    .filter(F.col(BUCKET_COL).isin([int(k) for k in m["files"]]))
+                    .withColumn("_tcv", F.lit(v + 1).cast("long"))
+                )
+                if frame is None:
+                    frame = tombs
+                else:
+                    if BUCKET_COL not in frame.columns:
+                        frame = frame.withColumn(BUCKET_COL, bucket)
+                    frame = frame.unionByName(tombs, allowMissingColumns=True)
+        if frame is not None:
+            written, staged["commit_rel"] = self._write_files(
+                frame, m, v + 1, salts=salts, wide=wide
             )
-        if tombstone_keys is not None:
-            kdf = tombstone_keys.select(*m["bucket_cols"]).distinct().withColumn(
-                "_tcv", F.lit(v + 1).cast("long")
-            )
-            staged["tomb_files"], staged["tomb_rel"] = self._write_files(
-                kdf, m, v + 1
-            )
+            for k, ps in written.items():
+                if k.startswith("t"):
+                    staged["tomb_files"][k[1:]] = ps
+                else:
+                    staged["new_files"][k] = ps
         return staged
 
     def _write(self, op: str, stage, summary: dict | None = None) -> int:
@@ -758,10 +738,9 @@ class LakeTable:
     ) -> int:
         """Stage ``df`` (and ``tombstone_keys``) and commit them as ONE
         ``op`` commit, staged again from the new base on conflict — the
-        body of :meth:`upsert_delta` and :meth:`delete_keys_insert`, and
-        the redo of a :meth:`stage_write` whose :meth:`commit_staged`
-        conflicted. Unlike :meth:`append` it attaches no bloom segments
-        and skips the pending-delta guard."""
+        body of :meth:`delete_keys_insert`, and the redo of a
+        :meth:`stage_write` whose :meth:`commit_staged` conflicted.
+        Unlike :meth:`append` it attaches no bloom segments."""
         return self._write(
             op, lambda m, v: (self._stage(m, v, df, tombstone_keys), ()), summary
         )
@@ -769,50 +748,46 @@ class LakeTable:
     def stage_write(
         self, df: DataFrame | None, tombstone_keys: DataFrame | None = None
     ) -> dict:
-        """Run ONLY the heavy data-file write jobs of an append /
-        upsert_delta / delete_insert now, at the latest version; publish
-        later with :meth:`commit_staged`.
+        """Run ONLY the data-file write job of an append / delete_insert
+        now, at the latest version; publish later with
+        :meth:`commit_staged` (``op="delete_insert"`` when
+        ``tombstone_keys`` is given).
 
         Lets a caller overlap two independent tables' write jobs on the
         executors while still COMMITTING in a required order (the
         satellite apply must publish history before current — the
         crash-replay invariant — but has no reason to serialize the two
         multi-second writes). The staged files are invisible until
-        commit; a crash in between leaves an orphan attempt dir only.
-        ``tombstone_keys`` stages tombstones too (publish them with
-        ``op="delete_insert"``); ``df=None`` stages tombstones only, so a
-        caller can write them while it still computes the data rows.
-        """
+        commit; a crash in between leaves an orphan attempt dir only."""
         v = self.version()
         return self._stage(self.snapshot(v), v, df, tombstone_keys)
 
     def commit_staged(
         self,
-        staged: dict | list[dict],
+        staged: dict,
         op: str,
         summary: dict | None = None,
         replace=(),
     ) -> int:
-        """Publish staged parts — all staged at the same base version —
-        as ONE ``op`` commit. ``replace`` names the manifest keys whose
-        current files, deltas and tombstones the commit supersedes.
-        Rows written in a tombstone's own commit survive it.
+        """Publish one staged part as ONE ``op`` commit. ``replace``
+        names the manifest keys whose current files and tombstones the
+        commit supersedes. Rows written in a tombstone's own commit
+        survive it.
 
-        Raises :class:`CommitConflict` (after removing the attempt dirs)
+        Raises :class:`CommitConflict` (after removing the attempt dir)
         if the table moved past the staged base version. No silent
         retry here: the staged file paths embed the guessed commit
-        version, which the MOR last-wins merge and the tombstone
-        resolution order by, so re-targeting them at a different
-        version would corrupt both. :meth:`_write` stages again."""
-        parts = staged if isinstance(staged, list) else [staged]
-        v = parts[0]["base_version"]
+        version, which the tombstone resolution orders by, so
+        re-targeting them at a different version would corrupt it.
+        :meth:`_write` stages again."""
+        v = staged["base_version"]
         try:
-            if self.version() != v or any(p["base_version"] != v for p in parts):
+            if self.version() != v:
                 raise CommitConflict(f"table moved past staged version {v}")
             if op not in _OPS:
                 raise ValueError(f"unsupported write op {op!r}")
             m = self.snapshot(v)
-            nxt = _next_maps(m, op, parts, set(replace))
+            nxt = _next_maps(m, op, staged, set(replace))
             s = dict(m.get("summary", {}))
             epochs = dict(s.get("epochs", {}))
             user = dict(summary or {})
@@ -820,11 +795,8 @@ class LakeTable:
                 epochs[sid] = max(int(ep), int(epochs.get(sid, -1)))
             s.update(user)
             s["epochs"] = epochs
-            s["added_files"] = sum(
-                len(ps) for p in parts for ps in p["new_files"].values()
-            )
+            s["added_files"] = sum(len(ps) for ps in staged["new_files"].values())
             s["total_files"] = sum(len(ps) for ps in nxt["files"].values())
-            s["total_delta_files"] = sum(len(ps) for ps in nxt["deltas"].values())
             if nxt["tombstones"]:
                 s["total_tombstone_files"] = sum(
                     len(ps) for ps in nxt["tombstones"].values()
@@ -851,10 +823,10 @@ class LakeTable:
             return self._commit(v, manifest)
         except CommitConflict:
             # the losing attempt's files are referenced by no manifest
-            for p in parts:
-                for rel in (p["commit_rel"], p["tomb_rel"]):
-                    if rel:
-                        shutil.rmtree(os.path.join(self.root, rel), ignore_errors=True)
+            if staged["commit_rel"]:
+                shutil.rmtree(
+                    os.path.join(self.root, staged["commit_rel"]), ignore_errors=True
+                )
             raise
 
     def append(
@@ -865,48 +837,12 @@ class LakeTable:
     ) -> int:
         """Append-only insert (Iceberg append sink, IcebergWriter.scala:86-121).
 
-        Refuses to append a row whose key has a PENDING MOR delta: the
-        appended base file would carry a HIGHER commit version than the
-        delta, so the read-time last-wins merge would silently prefer it
-        over the older ``upsert_delta`` row — an ordering surprise no
-        caller should get implicitly. Fold first (:meth:`compact_deltas`
-        with ``max_delta_files=1``) or use :meth:`upsert_delta`.
-        Distinct-key appends alongside pending deltas are safe (the
-        merge is per key) and allowed; the overlap check only costs a
-        job when deltas are actually pending — never on the hub/link/
-        history append hot path.
-
         On a ``key_bloom`` table, ``bloom_segments`` ({manifest key:
         segment}) attach to the written buckets; a bucket written
         without one loses its bloom coverage (:func:`_next_maps`), so
         its inserts fall back to the plain existence read."""
 
         def stage(m: dict, v: int):
-            dpaths = [
-                os.path.join(self.root, p)
-                for ps in m["deltas"].values()
-                for p in ps
-            ]
-            if dpaths:
-                key_cols = m["bucket_cols"]
-                kschema = StructType(
-                    [f for f in StructType.fromJson(m["schema"]).fields
-                     if f.name in key_cols]
-                )
-                dkeys = self.spark.read.schema(kschema).parquet(*dpaths)
-                clash = (
-                    df.select(*key_cols)
-                    .join(dkeys, key_cols, "left_semi")
-                    .limit(1)
-                    .count()
-                )
-                if clash:
-                    raise ValueError(
-                        f"append() on {self.root}: a row's key has a pending "
-                        "MOR delta file, and the appended base would win the "
-                        "last-wins merge over it; run compact_deltas("
-                        "max_delta_files=1) first or use upsert_delta()"
-                    )
             staged = self._stage(m, v, df)
             if _key_bloom(m) and bloom_segments:
                 for k in staged["new_files"]:
@@ -989,8 +925,8 @@ class LakeTable:
     def overwrite_partitions(self, df: DataFrame, summary: dict | None = None) -> int:
         """Dynamic partition overwrite — replace only the partition values
         present in df (IcebergWriter.scala:209-231; used by bridge refresh
-        and SCD1 dims). The replaced keys lose their pending deltas and
-        tombstones too: every key of an unpartitioned table, the written
+        and SCD1 dims). The replaced keys lose their pending tombstones
+        too: every key of an unpartitioned table, the written
         keys of a plain partitioned or bucketed table, every key of the
         written partition values of a composite table."""
 
@@ -1008,7 +944,7 @@ class LakeTable:
             else:
                 salts = max(2, par)
             staged = self._stage(m, v, df, salts=salts, wide=True)
-            keys = set().union(m["files"], m["deltas"], m["tombstones"])
+            keys = set().union(m["files"], m["tombstones"])
             if not m["partition_col"] and m["num_buckets"] is None:
                 replace = keys  # unpartitioned: full overwrite
             elif _is_composite(m):
@@ -1021,19 +957,10 @@ class LakeTable:
         return self._write("overwrite_partitions", stage, summary)
 
     def upsert_delta(self, df: DataFrame, summary: dict | None = None) -> int:
-        """Merge-on-read upsert for bucketed tables (Iceberg format-v2
-        row-level-delta analog, RawVaultSchema.scala:123-128): append
-        per-bucket DELTA files whose rows replace the bucket's current
-        row for the same key at read time (last-wins by commit version).
-
-        Caller contract: at most one row per bucket key in ``df``. Write
-        IO is O(len(df)) — nothing existing is rewritten; readers pay a
-        per-key merge over base + deltas for the touched buckets until
-        :meth:`compact_deltas` folds them back into the base.
-        """
-        if self.snapshot()["num_buckets"] is None:
-            raise ValueError("upsert_delta requires a bucketed table")
-        return self.write("upsert_delta", df, summary=summary)
+        """Upsert ``df`` (at most one row per bucket key): its keys'
+        stored rows are equality-deleted and its rows inserted in ONE
+        commit — :meth:`delete_keys_insert` with ``df`` as both sides."""
+        return self.delete_keys_insert(df, df, summary)
 
     def delete_keys_insert(
         self, keys: DataFrame, rows: DataFrame, summary: dict | None = None
@@ -1066,7 +993,7 @@ class LakeTable:
     ) -> int:
         """Copy-on-write commit: replace the file sets of ``touched``
         keys with ``contents`` (which must be exactly those keys' new
-        rows); pending deltas and tombstones of those keys go too.
+        rows); pending tombstones of those keys go too.
         Untouched keys carry over as pure metadata. ``salts`` > 1 widens
         the writer stage for large rewrites (see _write_files).
 
@@ -1082,8 +1009,8 @@ class LakeTable:
 
     def _fold(self, op: str, pick, label: str) -> tuple[int, int]:
         """Rewrite the manifest keys ``pick(m)`` selects from their
-        resolved read (deltas merged, tombstones applied) at the base
-        version, replacing their files, deltas and tombstones. The read
+        resolved read (tombstones applied) at the base version,
+        replacing their files and tombstones. The read
         happens inside the retry loop, so a commit that lands meanwhile
         is folded in, not lost. Returns ``(version, keys folded)``."""
         summary: dict = {}
@@ -1099,30 +1026,25 @@ class LakeTable:
         v = self._write(op, stage, summary)
         return v, summary.get(label, 0)
 
-    def compact_deltas(self, max_delta_files: int = 8) -> int:
-        """Fold delta files back into the base for every bucket whose
-        delta count reached ``max_delta_files`` (rewrite_data_files
-        analog for the MOR path). Bounds read-side merge width while
-        keeping per-batch write IO O(new rows): with threshold T a
-        bucket is rewritten once every T delta commits, so the amortized
-        rewrite cost per commit is O(bucket/T). Returns the number of
-        buckets folded."""
+    def compact_tombstones(self, min_files: int = 1) -> int:
+        """Fold equality-delete tombstones: rewrite every bucket holding
+        at least ``min_files`` tombstone files from its resolved read,
+        clearing its tombstones so reads revert to plain scans with
+        pushdown (rewrite_data_files analog). A satellite's current
+        table takes one tombstone file per touched bucket per batch, so
+        with threshold T a bucket is rewritten once every T batches: the
+        amortized rewrite cost per commit is O(bucket/T) while per-batch
+        write IO stays O(changed rows). Returns the number of buckets
+        folded."""
         return self._fold(
             "merge",
-            lambda m: [k for k, ps in m["deltas"].items() if len(ps) >= max_delta_files],
-            "compacted_delta_buckets",
-        )[1]
-
-    def compact_tombstones(self) -> int:
-        """Fold equality-delete tombstones: rewrite ONLY the buckets that
-        carry them (the read resolves the deletes), clearing their
-        tombstone lists so serving reads revert to plain scans with
-        pushdown. Returns the number of buckets folded."""
-        return self._fold(
-            "merge",
-            lambda m: [k for k, ps in m["tombstones"].items() if ps],
+            lambda m: [k for k, ps in m["tombstones"].items() if len(ps) >= min_files],
             "compacted_tombstone_buckets",
         )[1]
+
+    def compact_deltas(self, max_delta_files: int = 8) -> int:
+        """The former name of :meth:`compact_tombstones`."""
+        return self.compact_tombstones(max_delta_files)
 
     # ----------------------------------------------------- exactly-once API
 
@@ -1140,6 +1062,7 @@ class LakeTable:
         while True:
             v = self.version()
             m = self.snapshot(v)
+            _refuse_legacy(m, self.root)
             schema = StructType.fromJson(m["schema"])
             names = {f.name for f in schema.fields}
             for f in new_fields:
@@ -1157,22 +1080,17 @@ class LakeTable:
         """Absolute paths of data files live in the CURRENT snapshot that
         were not live at ``version`` — the change-capture surface for
         downstream incremental refreshes (Iceberg's incremental-scan
-        analog). Because upserts are MOR deltas, the added files hold
-        exactly the rows written since (compaction commits widen this to
-        whole rewritten buckets — a conservative over-approximation).
-        Raises FileNotFoundError if ``version`` was expired."""
-        cur, old = self.snapshot(), self.snapshot(version)
-
-        def _all_paths(m: dict) -> set[str]:
-            out: set[str] = set()
-            for ps in m["files"].values():
-                out.update(ps)
-            for ps in m.get("deltas", {}).values():
-                out.update(ps)
-            return out
-
+        analog). A row-level change inserts only the changed rows, so the
+        added files hold exactly the rows written since (compaction
+        commits widen this to whole rewritten buckets — a conservative
+        over-approximation). Raises FileNotFoundError if ``version`` was
+        expired."""
+        old = {p for ps in self.snapshot(version)["files"].values() for p in ps}
         return sorted(
-            os.path.join(self.root, p) for p in _all_paths(cur) - _all_paths(old)
+            os.path.join(self.root, p)
+            for ps in self.snapshot()["files"].values()
+            for p in ps
+            if p not in old
         )
 
     def publish_mirror(self, dest: str) -> int:
@@ -1184,16 +1102,12 @@ class LakeTable:
         O(files) metadata ops, no data copy; on an object store this
         becomes a manifest-driven copy or an Iceberg catalog pointer).
 
-        Refuses while MOR deltas are pending: a plain directory read
-        cannot express the last-wins merge — fold first
-        (``compact_deltas(max_delta_files=1)``)."""
+        Refuses while tombstones are pending: a plain directory read
+        cannot express the equality deletes — fold first
+        (:meth:`compact_tombstones`)."""
         m = self.snapshot()
-        if any(m.get("deltas", {}).values()):
-            raise ValueError(
-                f"publish_mirror on {self.root}: pending MOR delta files; "
-                "run compact_deltas(max_delta_files=1) first"
-            )
-        if any(m.get("tombstones", {}).values()):
+        _refuse_legacy(m, self.root)
+        if any(m["tombstones"].values()):
             raise ValueError(
                 f"publish_mirror on {self.root}: pending equality-delete "
                 "tombstones; run compact_tombstones() first"
@@ -1216,9 +1130,10 @@ class LakeTable:
         """Per-partition-key file statistics at a snapshot — the
         ``table.files`` metadata-table analog (IcebergWriter.scala:
         436-469): one row per partition key with file count and on-disk
-        bytes. Driver-side metadata walk; no Spark job."""
+        bytes; ``delta_file_count`` / ``delta_bytes`` count the key's
+        equality-delete tombstone files (Iceberg's delete files).
+        Driver-side metadata walk; no Spark job."""
         m = self.snapshot(version)
-        delta_map = m.get("deltas", {})
         out = []
 
         def _size(paths: list[str]) -> int:
@@ -1230,16 +1145,16 @@ class LakeTable:
                     pass
             return size
 
-        for k in sorted(set(m["files"]) | set(delta_map)):
+        for k in sorted(set(m["files"]) | set(m["tombstones"])):
             paths = m["files"].get(k, [])
-            dpaths = delta_map.get(k, [])
+            tpaths = m["tombstones"].get(k, [])
             out.append(
                 {
                     "partition": k,
                     "file_count": len(paths),
                     "bytes": _size(paths),
-                    "delta_file_count": len(dpaths),
-                    "delta_bytes": _size(dpaths),
+                    "delta_file_count": len(tpaths),
+                    "delta_bytes": _size(tpaths),
                 }
             )
         return out
@@ -1250,6 +1165,7 @@ class LakeTable:
         """CALL system.rollback_to_snapshot analog (IcebergWriter.scala:347-376):
         commit a NEW snapshot whose file map is the old one."""
         old = self.snapshot(version)
+        _refuse_legacy(old, self.root)
         cur_v = self.version()
         manifest = dict(old)
         manifest["operation"] = "rollback"
@@ -1299,13 +1215,12 @@ class LakeTable:
     def compact(self, max_files_per_key: int = 1) -> int:
         """rewrite_data_files analog (IcebergWriter.scala:396-426): rewrite
         partition keys whose file count exceeds the target, or that carry
-        pending deltas or tombstones. Metadata-only for already-compact
+        pending tombstones. Metadata-only for already-compact
         keys. Returns the table version."""
         return self._fold(
             "compact",
             lambda m: (
                 {k for k, ps in m["files"].items() if len(ps) > max_files_per_key}
-                | {k for k, ps in m["deltas"].items() if ps}
                 | {k for k, ps in m["tombstones"].items() if ps}
             ),
             "compacted",

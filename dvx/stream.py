@@ -119,7 +119,7 @@ def run_stream(
     the restart-replay test harness (SURVEY.md §5 item 3). Returns the
     number of batches processed this run.
     """
-    processed = {"n": 0}
+    processed = {"n": 0, "epoch": -1}
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
         if fail_after_batches is not None and processed["n"] >= fail_after_batches:
@@ -133,6 +133,7 @@ def run_stream(
             pit_dates=pit_dates,
         )
         processed["n"] += 1
+        processed["epoch"] = epoch_id
 
     reader = (
         vault.spark.readStream.schema(CHANGELOG_SCHEMA)
@@ -146,7 +147,6 @@ def run_stream(
         .start()
     )
     injected = False
-    stream_error = None
     try:
         q.awaitTermination()
     except Exception as e:
@@ -156,62 +156,43 @@ def run_stream(
         # propagate, or the restart test would "pass" while masking it
         injected = fail_after_batches is not None and _INJECT_TOKEN in str(e)
         if not injected:
-            stream_error = e
             raise
     finally:
         if q.isActive:
             q.stop()
-        # fold any remaining current-table deltas so serving reads revert
-        # to plain scans with filter pushdown and column pruning
-        # (mid-stream reads pay the merge-on-read agg; a drained table
-        # should not). Runs in finally so a drained-but-errored run still
-        # folds — compaction only reads the last COMMITTED snapshot, so
-        # it is safe at any point. Skipped after the injected crash: the
+        # fold every satellite table's remaining tombstones so serving
+        # reads revert to plain scans with filter pushdown and column
+        # pruning. Runs in finally so a drained-but-errored run still
+        # folds — a fold only reads the last COMMITTED snapshot, so it is
+        # safe at any point. Skipped after the injected crash: the
         # restart tests examine the mid-stream state on purpose.
         if not injected:
-            try:
-                # independent tables: run the fold jobs concurrently on
-                # the executors (same overlap pattern as apply_batch's
-                # merges) — the drain fold is the largest single block of
-                # replay wall outside the batches (BENCH.md, round 5 floor)
-                from concurrent.futures import ThreadPoolExecutor as _TPE
-
-                sats = list(vault.registry.satellites)
-                with _TPE(max_workers=max(1, 2 * len(sats))) as ex:
-                    futs = [
-                        ex.submit(
-                            vault.table(s.name).compact_deltas, 1
-                        )
-                        for s in sats
-                    ]
-                    # fold equality-delete tombstones left by stale
-                    # re-chains (lake.delete_keys_insert): history
-                    # serving reads revert to plain scans with pushdown
-                    futs += [
-                        ex.submit(vault.table(s.hist_name).compact_tombstones)
-                        for s in sats
-                    ]
-                    for f in futs:
-                        f.result()
-            except Exception as ce:
-                # NOTE: sys.exc_info() inside this handler reports `ce`
-                # itself, so it cannot detect a propagating stream error —
-                # the explicit stream_error capture above does.
-                if stream_error is not None:
-                    # a real streaming exception is already propagating;
-                    # raising from finally would REPLACE it and mask the
-                    # root cause (often the same underlying fault) —
-                    # log-and-suppress the compaction error instead
-                    import sys as _sys
-
-                    print(
-                        "dvx: end-of-drain delta compaction failed while a "
-                        f"streaming error is propagating (suppressed): {ce!r}",
-                        file=_sys.stderr,
-                    )
-                else:
-                    raise
+            _drain_fold(vault, stream_id, processed["epoch"])
     return processed["n"]
+
+
+def _drain_fold(vault: Vault, stream_id: str, epoch: int) -> None:
+    """End-of-drain fold of every satellite current and history table.
+    Best-effort: every batch has already committed, so a failing fold
+    neither aborts the load nor masks a streaming error propagating past
+    it — it is logged and recorded as a FAILED ``load_metadata`` row
+    (driver-side, no Spark job)."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    tables = [t for s in vault.registry.satellites for t in (s.name, s.hist_name)]
+    try:
+        # independent tables: run the fold jobs concurrently on the
+        # executors (same overlap pattern as apply_batch's merges)
+        with ThreadPoolExecutor(max_workers=len(tables)) as ex:
+            for f in [ex.submit(vault.table(t).compact_tombstones) for t in tables]:
+                f.result()
+    except Exception as e:
+        print(f"dvx: end-of-drain fold failed: {e!r}", file=sys.stderr)
+        metadata.complete_load(
+            vault, epoch, "drain_fold", 0, 0,
+            stream_id=stream_id, status="FAILED", error=repr(e),
+        )
 
 
 def write_changelog_files(changelog: DataFrame, out_dir: str, n_files: int) -> None:

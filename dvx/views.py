@@ -9,7 +9,7 @@ placeholders for its sources: the five mirrored lake tables, plus
 surfaces bind those sources and run the same SQL:
 
 - :func:`create_all_views` — session TEMP views over this session's
-  lake reads (manifest-pruned, MOR-merge-aware; always correct, even
+  lake reads (manifest-pruned, tombstone-aware; always correct, even
   mid-stream), bound under private ``_dvx_src_*`` temp-view names. Die
   with the session.
 - :func:`publish_views` — PERSISTENT catalog views (``CREATE OR REPLACE
@@ -19,7 +19,7 @@ surfaces bind those sources and run the same SQL:
   sources are external parquet tables over each lake table's
   published serving mirror (lake.publish_mirror); re-publishing after a
   load retargets the mirror + refreshes the tables. Requires pending
-  MOR deltas folded (publish folds them).
+  tombstones folded (publish folds them).
 
 At 10^10 scale the expensive ones (conversation_360) are served from the
 PIT/bridge pre-joins instead of re-deriving (the reference's 5-20x PIT
@@ -123,8 +123,7 @@ def _bridge_refreshed(vault: Vault) -> bool:
     tbl = vault.table("bridge_conversation_turn")
     if not LakeTable.exists(tbl.root):
         return False
-    snap = tbl.snapshot()
-    return bool(snap["files"] or snap.get("deltas"))
+    return bool(tbl.snapshot()["files"])
 
 
 def create_all_views(vault: Vault) -> list[str]:
@@ -159,8 +158,8 @@ def catalog_db(vault: Vault) -> str:
 def publish_views(vault: Vault) -> dict:
     """Publish the semantic layer as PERSISTENT catalog objects.
 
-    1. folds any pending satellite MOR deltas (serving refresh implies
-       compaction, same rationale as the end-of-drain fold),
+    1. folds each mirrored table's pending tombstones (serving refresh
+       implies compaction, same rationale as the end-of-drain fold),
     2. hardlink-mirrors each vault table's current snapshot into
        ``<warehouse>/_serving/<table>`` (lake.publish_mirror),
     3. issues ``CREATE TABLE ... USING PARQUET LOCATION`` externals with
@@ -179,8 +178,6 @@ def publish_views(vault: Vault) -> dict:
             "(dvx.session.get_spark default; DVX_CATALOG=memory disables it)"
         )
     db = catalog_db(vault)
-    for s in vault.registry.satellites:
-        vault.table(s.name).compact_deltas(max_delta_files=1)
 
     # v_conversation_360 selects from the materialized bridge, and a
     # catalog view cannot derive it like the session temp view does:
@@ -195,6 +192,7 @@ def publish_views(vault: Vault) -> dict:
     for name in _MIRRORED:
         tbl = vault.table(name)
         dest = os.path.join(vault.warehouse, "_serving", name)
+        tbl.compact_tombstones()
         tbl.publish_mirror(dest)
         schema = tbl.schema()
         ddl_cols = ", ".join(

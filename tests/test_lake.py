@@ -196,49 +196,60 @@ def test_expire_rewrites_oldest_delta_as_checkpoint(spark, tbl):
     assert tbl.read(version=vs[0]).count() == vs[0] - 1
 
 
-# ---------------------------------------------------------------- MOR deltas
+# ------------------------------------- row-level change: equality deletes
 
 
 def test_upsert_delta_last_wins_read(spark, tbl):
+    """An upsert is an equality delete plus an insert in one commit: the
+    read serves the newest commit's row per key."""
     tbl.append(_df(spark, [("a", 1), ("b", 2), ("c", 3)]))
     tbl.upsert_delta(_df(spark, [("a", 10), ("d", 40)]))
     tbl.upsert_delta(_df(spark, [("a", 100)]))
     got = sorted((r.k, r.v) for r in tbl.read().collect())
     assert got == [("a", 100), ("b", 2), ("c", 3), ("d", 40)]
-    # nothing in the base was rewritten: delta commits add only new files
-    assert tbl.snapshot()["summary"]["total_delta_files"] >= 2
+    assert [h["operation"] for h in tbl.history()][-2:] == ["delete_insert"] * 2
+    # nothing in the base was rewritten: the upserts added files only
+    assert tbl.snapshot()["summary"]["total_tombstone_files"] >= 2
 
 
 def test_upsert_delta_write_io_is_o_of_changed_rows(spark, tbl):
-    """The MOR point: upserting one key must not rewrite the bucket."""
+    """Upserting one key must not rewrite its bucket: the commit adds one
+    data file and one tombstone file, and the base stays as it was."""
     tbl.append(_df(spark, [(f"k{i}", i) for i in range(64)]))
     files_before = dict(tbl.snapshot()["files"])
     tbl.upsert_delta(_df(spark, [("k0", -1)]))
     m = tbl.snapshot()
-    assert m["files"] == files_before  # base untouched
-    assert m["summary"]["added_files"] == 1  # one delta file
+    b = str(_bucket(tbl, spark, "k0"))
+    assert m["files"] == {**files_before, b: files_before[b] + m["files"][b][-1:]}
+    assert m["summary"]["added_files"] == 1
+    assert {k: len(ps) for k, ps in m["tombstones"].items()} == {b: 1}
     assert [r.v for r in tbl.read().filter("k = 'k0'").collect()] == [-1]
+    assert tbl.read().count() == 64
 
 
 def test_replace_buckets_supersedes_deltas(spark, tbl):
     tbl.append(_df(spark, [("a", 1)]))
     tbl.upsert_delta(_df(spark, [("a", 10)]))
-    bucket = tbl.with_bucket(_df(spark, [("a", 1)])).select(BUCKET_COL).first()[0]
+    bucket = _bucket(tbl, spark, "a")
+    assert tbl.snapshot()["tombstones"].get(str(bucket))
     tbl.replace_buckets([bucket], _df(spark, [("a", 99)]))
     m = tbl.snapshot()
-    assert not m["deltas"].get(str(bucket))
+    assert not m["tombstones"].get(str(bucket))
     assert [r.v for r in tbl.read().collect()] == [99]
 
 
 def test_compact_deltas_folds_and_preserves_contents(spark, tbl):
+    """The fold is thresholded on the bucket's tombstone file count;
+    ``compact_deltas`` is its former name."""
     tbl.append(_df(spark, [("a", 1), ("b", 2)]))
     for i in range(3):
         tbl.upsert_delta(_df(spark, [("a", 10 + i)]))
     before = sorted((r.k, r.v) for r in tbl.read().collect())
-    folded = tbl.compact_deltas(max_delta_files=3)
-    assert folded >= 1
+    assert tbl.compact_tombstones(min_files=4) == 0  # below the threshold
+    assert tbl.compact_deltas(max_delta_files=3) == 1
     m = tbl.snapshot()
-    assert sum(len(p) for p in m["deltas"].values()) < 3
+    assert not any(m["tombstones"].values())
+    assert len(m["files"][str(_bucket(tbl, spark, "a"))]) == 1
     assert sorted((r.k, r.v) for r in tbl.read().collect()) == before
 
 
@@ -254,32 +265,20 @@ def test_time_travel_sees_deltas_as_of_version(spark, tbl):
 
 
 def test_expire_keeps_live_delta_files(spark, tbl):
-    import os
-
     tbl.append(_df(spark, [("a", 1)]))
     tbl.upsert_delta(_df(spark, [("a", 2)]))
     for i in range(12):
         tbl.append(_df(spark, [(f"x{i}", i)]))
     tbl.expire_snapshots(retain_last=3)
-    # the delta file is still referenced by the latest snapshot
+    # the upsert's tombstone and data files are still referenced by the
+    # latest snapshot
     m = tbl.snapshot()
-    for ps in m["deltas"].values():
-        for p in ps:
-            assert os.path.exists(os.path.join(tbl.root, p))
+    assert any(m["tombstones"].values())
+    for name in ("files", "tombstones"):
+        for ps in m[name].values():
+            for p in ps:
+                assert os.path.exists(os.path.join(tbl.root, p))
     assert [r.v for r in tbl.read().filter("k = 'a'").collect()] == [2]
-
-
-def test_append_refuses_same_key_over_pending_delta(spark, tbl):
-    """The MOR ordering guard: an appended base file would outrank a
-    pending delta for the SAME key in the last-wins merge — append must
-    refuse; distinct-key appends stay allowed (previous test)."""
-    tbl.append(_df(spark, [("a", 1)]))
-    tbl.upsert_delta(_df(spark, [("a", 2)]))
-    with pytest.raises(ValueError, match="pending"):
-        tbl.append(_df(spark, [("a", 99)]))
-    tbl.compact_deltas(max_delta_files=1)
-    tbl.append(_df(spark, [("a", 99)]))  # folded: append is fine again
-    assert sorted(r.v for r in tbl.read().filter("k = 'a'").collect()) == [2, 99]
 
 
 def test_concurrent_writers_occ(spark, tmp_path):
@@ -315,8 +314,8 @@ def test_concurrent_writers_occ(spark, tmp_path):
 
 
 def test_concurrent_delta_upserts_converge(spark, tmp_path):
-    """Concurrent MOR upserts to DISJOINT keys: all land, last-wins merge
-    serves every key."""
+    """Concurrent upserts to DISJOINT keys: all land, and the read
+    serves every key's newest row."""
     from concurrent.futures import ThreadPoolExecutor
 
     tbl = LakeTable.create(
@@ -334,38 +333,35 @@ def test_concurrent_delta_upserts_converge(spark, tmp_path):
     assert got == {f"k{i}": i + 10 for i in range(6)}
 
 
-def test_read_key_filter_prunes_below_mor_merge(spark, tbl):
-    """key_filter semantics: per-key last-wins is preserved for kept
-    keys, other keys are absent, and the semi-join sits BELOW the
-    merge-on-read aggregate (the whole point: the agg never hashes rows
-    of keys the caller didn't ask for)."""
+def test_read_key_filter_prunes_below_tombstone_resolution(spark, one):
+    """key_filter semantics: per-key newest-row resolution is preserved
+    for kept keys, other keys are absent, and the semi-join sits BELOW
+    the tombstone resolution join (the join never hashes rows of keys
+    the caller didn't ask for). One bucket, so the whole read is the
+    tombstone-resolving branch."""
+    tbl = one
     tbl.append(_df(spark, [("a", 1), ("b", 2), ("c", 3)]))
     tbl.upsert_delta(_df(spark, [("a", 10), ("d", 40)]))
     tbl.upsert_delta(_df(spark, [("a", 100), ("b", 20)]))
 
     kf = spark.createDataFrame([("a",), ("d",), ("zz",)], "k string")
     got = sorted((r.k, r.v) for r in tbl.read(key_filter=kf).collect())
-    # last-wins for kept keys; b/c filtered out; zz absent from table
+    # newest row for kept keys; b/c filtered out; zz absent from table
     assert got == [("a", 100), ("d", 40)]
 
-    # plan shape: the LeftSemi join must be a descendant of the
-    # last-wins Aggregate, not above it
+    # plan shape: the LeftSemi join is a descendant of the resolution's
+    # LeftOuter join, not above it (deeper in the tree prints later)
     plan = tbl.read(key_filter=kf)._jdf.queryExecution().optimizedPlan().toString()
-    agg_at = plan.find("Aggregate")
-    semi_at = plan.find("LeftSemi")
-    assert agg_at != -1 and semi_at != -1
-    assert semi_at > agg_at  # deeper in the tree prints later
+    outer_at = plan.find("LeftOuter")
+    assert outer_at != -1 and "LeftSemi" in plan[outer_at:]
+    assert "LeftSemi" not in plan[:outer_at]
 
     # non-bucketed tables refuse key_filter instead of mis-filtering
-    import pytest as _pytest
-
-    from pyspark.sql.types import StringType, StructField, StructType
-
     flat = LakeTable.create(
         spark, tbl.root + "_flat",
         StructType([StructField("k", StringType())]),
     )
-    with _pytest.raises(ValueError, match="bucketed"):
+    with pytest.raises(ValueError, match="bucketed"):
         flat.read(key_filter=kf)
 
 
@@ -389,7 +385,7 @@ def _unreferenced_attempt_dirs(t):
     referenced = set()
     for v in t._versions():
         m = t.snapshot(v)
-        for name in ("files", "deltas", "blooms", "tombstones"):
+        for name in ("files", "blooms", "tombstones"):
             for ps in m[name].values():
                 referenced.update(p.split(os.sep)[1] for p in ps)
     return set(os.listdir(os.path.join(t.root, "data"))) - referenced
@@ -413,15 +409,14 @@ def _race_once(monkeypatch, competitor):
 
 
 def test_overwrite_partitions_supersedes_pending_deltas(spark, one):
-    """Overwriting a bucket replaces its pending deltas and tombstones
-    too: an older delta must not resurrect a row the overwrite dropped."""
+    """Overwriting a bucket replaces its pending tombstones too: an older
+    tombstone must not hide a row the overwrite wrote."""
     one.append(_df(spark, [("a", 1)]))
     one.delete_keys_insert(_keys(spark, ["c"]), _df(spark, [("c", 3)]))
-    one.upsert_delta(_df(spark, [("b", 2)]))
+    one.upsert_delta(_df(spark, [("a", 2)]))
+    assert len(one.snapshot()["tombstones"]["0"]) == 2
     one.overwrite_partitions(_df(spark, [("a", 99)]))
-    m = one.snapshot()
-    assert not m["deltas"].get("0")
-    assert not m["tombstones"].get("0")
+    assert not one.snapshot()["tombstones"].get("0")
     assert _rows(one) == [("a", 99)]
 
 
@@ -497,3 +492,51 @@ def test_occ_retry_equals_serial(spark, tmp_path, monkeypatch, op):
         h["operation"] for h in serial.history()
     ]
     assert not _unreferenced_attempt_dirs(raced)
+
+
+def test_legacy_delta_chain_folded_reads_unfolded_refused(spark, one):
+    """Snapshots written by the former merge-on-read path: a chain whose
+    delta files were folded resolves and reads normally, while one that
+    still holds delta files is refused by read and by a write instead of
+    served without them."""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dvx.lake import _SNAP_CACHE
+
+    one.append(_df(spark, [("a", 1), ("b", 2)]))
+    one.append(_df(spark, [("a", 10)]))
+    frame = one._read_manifest(3)  # an append: schema, layout, summary
+    (new,) = frame["files_set"]["0"][-1:]
+
+    def commit_legacy(v, **maps):
+        with open(os.path.join(one.root, "_log", f"v{v:010d}.json"), "w") as f:
+            json.dump({**frame, "version": v, "delta_base": v - 1, **maps}, f)
+        _SNAP_CACHE.clear()
+
+    # v3 as the former upsert_delta committed it: its file in "deltas"
+    commit_legacy(3, operation="upsert_delta", files_set={}, deltas_set={"0": [new]})
+    with pytest.raises(ValueError, match="merge-on-read"):
+        one.read()
+    with pytest.raises(ValueError, match="merge-on-read"):
+        one.append(_df(spark, [("c", 3)]))
+    with pytest.raises(ValueError, match="merge-on-read"):
+        one.delete_keys_insert(_keys(spark, ["a"]), _df(spark, [("a", 5)]))
+    assert one.version() == 3
+
+    # v4 as the former fold committed it: the merged rows as one base
+    # file, the delta map dropped
+    folded = os.path.join("data", "c0000000004-legacy", "_p=0", "part-0.parquet")
+    os.makedirs(os.path.dirname(os.path.join(one.root, folded)))
+    pq.write_table(
+        pa.table({"k": ["a", "b"], "v": pa.array([10, 2], pa.int32())}),
+        os.path.join(one.root, folded),
+    )
+    commit_legacy(4, operation="merge", files_set={"0": [folded]}, deltas_drop=["0"])
+    assert "deltas" not in one.snapshot()
+    assert _rows(one) == [("a", 10), ("b", 2)]
+    assert sorted((r.k, r.v) for r in one.read(2).collect()) == [("a", 1), ("b", 2)]
+    one.upsert_delta(_df(spark, [("b", 20)]))
+    assert _rows(one) == [("a", 10), ("b", 20)]

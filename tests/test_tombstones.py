@@ -65,6 +65,16 @@ def test_delete_keys_insert_replaces_only_named_keys(spark, tbl):
     ]
     # untouched buckets stay plain; touched buckets carry tombstones
     assert any(tbl.snapshot()["tombstones"].values())
+    # a tombstone and an upsert in one bucket (c and d share it): each
+    # equality delete drops only its own key's older rows
+    cd = tbl.with_bucket(_keys(spark, ["c", "d"])).select("_bucket")
+    assert cd.distinct().count() == 1
+    tbl.delete_keys_insert(_keys(spark, ["c"]), _rows(spark, [("c", 10)]))
+    tbl.upsert_delta(_rows(spark, [("d", 9)]))
+    assert [r for r in _contents(tbl) if r[0] in ("c", "d")] == [
+        ("c", 10, "p-c-10"),
+        ("d", 9, "p-d-9"),
+    ]
 
 
 def test_rerun_converges(spark, tbl):
@@ -158,45 +168,74 @@ def test_guards(spark, tmp_path):
         )
 
 
-def test_delete_with_mor_deltas_coexists(spark, tmp_path):
-    """A bucket with BOTH pending deltas and tombstones: tombstone filter
-    applies below the last-wins merge."""
-    t = LakeTable.create(
-        spark, str(tmp_path / "t2"), SCHEMA, num_buckets=2, bucket_cols=["k"]
-    )
-    t.append(_rows(spark, [("a", 1), ("b", 1)]))
-    t.delete_keys_insert(_keys(spark, ["a"]), _rows(spark, [("a", 2)]))
-    t.upsert_delta(_rows(spark, [("b", 9)]))
-    got = sorted((r.k, r.ver) for r in t.read().collect())
-    assert got == [("a", 2), ("b", 9)]
-
-
 def test_staged_tombstones_and_rows_commit_as_one(spark, tbl):
-    """Tombstones staged apart from the data rows (the satellite writes
-    them while it still computes the rows) publish as ONE delete_insert
-    commit, equal to delete_keys_insert; a part staged before the table
-    moved makes the commit conflict and removes every attempt dir."""
+    """One stage carries the rows and the tombstones and publishes as ONE
+    delete_insert commit, equal to delete_keys_insert; a part staged
+    before the table moved makes the commit conflict and removes its
+    attempt dir."""
     import os
 
     from dvx.lake import CommitConflict
 
     v = tbl.version()
-    tombs = tbl.stage_write(None, tombstone_keys=_keys(spark, ["a", "b"]))
-    rows = tbl.stage_write(_rows(spark, [("a", 10), ("b", 10)]))
-    assert tbl.commit_staged([tombs, rows], "delete_insert") == v + 1
+    staged = tbl.stage_write(
+        _rows(spark, [("a", 10), ("b", 10)]),
+        tombstone_keys=_keys(spark, ["a", "b"]),
+    )
+    assert staged["new_files"] and staged["tomb_files"]
+    assert tbl.commit_staged(staged, "delete_insert") == v + 1
     assert tbl.history()[-1]["operation"] == "delete_insert"
     assert [r for r in _contents(tbl) if r[0] in ("a", "b")] == [
         ("a", 10, "p-a-10"), ("b", 10, "p-b-10"),
     ]
 
-    stale = tbl.stage_write(None, tombstone_keys=_keys(spark, ["c"]))
+    stale = tbl.stage_write(
+        _rows(spark, [("c", 10)]), tombstone_keys=_keys(spark, ["c"])
+    )
     tbl.append(_rows(spark, [("e", 1)]))  # another writer moves the table
-    fresh = tbl.stage_write(_rows(spark, [("c", 10)]))
     with pytest.raises(CommitConflict):
-        tbl.commit_staged([stale, fresh], "delete_insert")
-    for rel in (stale["tomb_rel"], fresh["commit_rel"]):
-        assert not os.path.exists(os.path.join(tbl.root, rel))
+        tbl.commit_staged(stale, "delete_insert")
+    assert not os.path.exists(os.path.join(tbl.root, stale["commit_rel"]))
     assert ("c", 1, "p-c-1") in _contents(tbl)
+
+
+def test_one_attempt_writes_one_commit_dir(spark, tbl):
+    """Rows and tombstones of one delete_insert land in ONE commit
+    directory, written by one Spark job."""
+    import os
+
+    data = os.path.join(tbl.root, "data")
+    before = set(os.listdir(data))
+    tbl.delete_keys_insert(
+        _keys(spark, ["a", "b"]), _rows(spark, [("a", 10), ("b", 10)])
+    )
+    (new,) = set(os.listdir(data)) - before
+    m = tbl.snapshot()
+    added = [
+        p for name in ("files", "tombstones") for ps in m[name].values()
+        for p in ps if p.split(os.sep)[1] == new
+    ]
+    assert len(added) == 4  # a data file and a tombstone file per bucket
+
+
+def test_delete_insert_on_an_empty_bucket_writes_no_tombstone(spark, tmp_path):
+    """A tombstone on a bucket that holds no rows at the base version
+    would delete nothing, so none is written: a first load commits no
+    tombstones at all, and a later one tombstones only the buckets
+    that hold rows."""
+    t = LakeTable.create(
+        spark, str(tmp_path / "t2"), SCHEMA, num_buckets=2, bucket_cols=["k"]
+    )
+    t.delete_keys_insert(_keys(spark, ["a"]), _rows(spark, [("a", 1)]))
+    assert t.snapshot()["files"] and not t.snapshot()["tombstones"]
+    # a -> bucket 0 (holds rows), b -> bucket 1 (empty)
+    t.delete_keys_insert(
+        _keys(spark, ["a", "b"]), _rows(spark, [("a", 2), ("b", 1)])
+    )
+    m = t.snapshot()
+    assert sorted(m["files"]) == ["0", "1"]
+    assert {k: len(ps) for k, ps in m["tombstones"].items()} == {"0": 1}
+    assert _contents(t) == [("a", 2, "p-a-2"), ("b", 1, "p-b-1")]
 
 
 def test_stale_rechain_uses_eq_delete_and_drain_folds(spark, tmp_path):

@@ -9,8 +9,10 @@ evidence for the hot paths plus automated checks:
 - WholeStageCodegen spans cover the JVM-side operators,
 - the satellite narrow chain reuses the join exchange for its window
   (single shuffle for join+window+flags),
-- merge-on-read reads with a key_filter keep the semi-join BELOW the
-  last-wins merge aggregate (read work O(requested keys)).
+- a tombstone-carrying read with a key_filter keeps the semi-join BELOW
+  the hashed tombstone resolution join, whose only aggregate is the
+  narrow max(_tcv) (read work O(requested keys), no aggregate over a
+  row column).
 
 Usage: python tools/plan_audit.py [sf_dir]   (default sf0.001)
 """
@@ -70,11 +72,14 @@ def main() -> None:
         ("Bridge (link ⋈ hub ⋈ hub ⋈ current-sat)", explain_str(bridge), [])
     )
 
-    # 4. MOR read with key_filter: the semi-join must sit BELOW the
-    # last-wins merge aggregate (legal because filtering by the bucket
-    # key keeps every candidate row of a surviving key), so the agg
-    # never hashes rows of keys the caller didn't ask for. Built on a
-    # scratch table because the audit needs live (unfolded) deltas.
+    # 4. tombstone-carrying read with key_filter and a column projection:
+    # the semi-join must sit BELOW the resolution join (legal because
+    # filtering by the bucket key keeps every candidate row of a
+    # surviving key), the resolution must be a hashed join, and the only
+    # aggregate must be the narrow newest-tombstone pick. Built on a
+    # one-bucket scratch table, so the whole read is the resolving
+    # branch, with a wide `text` column the projection drops.
+    import re
     import shutil
     import tempfile
 
@@ -85,36 +90,51 @@ def main() -> None:
     scratch = tempfile.mkdtemp(prefix="dvx_plan_audit_")
     try:
         kv = StructType(
-            [StructField("k", StringType()), StructField("v", IntegerType())]
+            [StructField("k", StringType()), StructField("v", IntegerType()),
+             StructField("text", StringType())]
         )
-        mor = LakeTable.create(
-            spark, os.path.join(scratch, "mor"), kv, num_buckets=4, bucket_cols=["k"]
+        t = LakeTable.create(
+            spark, os.path.join(scratch, "t"), kv, num_buckets=1, bucket_cols=["k"]
         )
-        mor.append(spark.createDataFrame([("a", 1), ("b", 2)], kv))
-        mor.upsert_delta(spark.createDataFrame([("a", 10)], kv))
+        t.append(spark.createDataFrame([("a", 1, "x" * 64), ("b", 2, "y" * 64)], kv))
+        t.upsert_delta(spark.createDataFrame([("a", 10, "z" * 64)], kv))
         kf = spark.createDataFrame([("a",)], "k string")
-        kf_read = mor.read(key_filter=kf)
+        kf_read = t.read(columns=["k", "v"], key_filter=kf)
+        kf_text = explain_str(kf_read)
         kf_plan = kf_read._jdf.queryExecution().optimizedPlan().toString()
         sections.append(
             (
-                "MOR read with key_filter (semi-join pushed below the "
-                "last-wins merge aggregate)",
-                explain_str(kf_read),
-                ["LeftSemi", "Aggregate"],
+                "Tombstone-carrying read with key_filter and a column "
+                "projection (semi-join below the hashed resolution join)",
+                kf_text,
+                ["LeftSemi", "LeftOuter"],
             )
         )
-        # the read may union a plain branch (buckets without deltas,
-        # filtered by its own semi) with the merged branch; the claim is
-        # about the MERGED branch, so look for a LeftSemi in the
-        # Aggregate's subtree (which prints after it), not the first
-        # LeftSemi anywhere in the tree
-        agg_at = kf_plan.find("Aggregate")
+        outer_at = kf_plan.find("LeftOuter")
+        aggs = [ln for ln in kf_plan.splitlines() if "Aggregate [" in ln]
+        agg_fns = re.findall(r"(\w+)\((\w+)#", " ".join(aggs))
+        semi_below = (
+            outer_at != -1
+            and "LeftSemi" in kf_plan[outer_at:]
+            and "LeftSemi" not in kf_plan[:outer_at]
+        )
+        phys = kf_read._jdf.queryExecution().sparkPlan().toString()
+        hashed = bool(
+            re.search(r"(ShuffledHash|BroadcastHash)Join .*LeftOuter", phys)
+        ) and "SortMergeJoin" not in phys
+        narrow = agg_fns == [("max", "_tcv")] and not any(
+            re.search(r"\b(v|text)#", ln) for ln in aggs
+        )
         checks_kf = (
-            "key_filter semi-join sits below the MOR merge aggregate",
-            agg_at != -1 and "LeftSemi" in kf_plan[agg_at:],
-            "optimized plan: a LeftSemi prints inside the last-wins "
-            "Aggregate's subtree — per-key merge work is O(requested "
-            "keys), not O(touched buckets) (dvx/lake.py read(key_filter=...))",
+            "key_filter semi-join sits below the hashed, narrow tombstone "
+            "resolution",
+            semi_below and hashed and narrow,
+            "optimized plan: the LeftSemi prints inside the resolution's "
+            f"LeftOuter join subtree ({semi_below}), so resolution work is "
+            "O(requested keys), not O(touched buckets); physical plan: the "
+            f"resolution is a hash join, no sort-merge ({hashed}); the only "
+            f"aggregate functions are {agg_fns} and no Aggregate references "
+            f"a non-key column ({narrow}) (dvx/lake.py read(key_filter=...))",
         )
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
@@ -154,9 +174,7 @@ def main() -> None:
     # `.explain()` replans, so read the QueryExecution after an action
     pit.collect()
     executed = pit._jdf.queryExecution().executedPlan().toString()
-    import re as _re
-
-    stars = len(set(_re.findall(r"\*\((\d+)\)", executed)))
+    stars = len(set(re.findall(r"\*\((\d+)\)", executed)))
     checks.append(
         (
             "PIT plan has whole-stage codegen spans",
@@ -166,8 +184,6 @@ def main() -> None:
         )
     )
     s2 = sections[2][1]
-    import re
-
     forced_bc = re.findall(r"BroadcastExchange", s2)
     checks.append(
         (
