@@ -63,6 +63,7 @@ from dvx.entities import DEFAULT_REGISTRY, EntityRegistry, SatelliteSpec
 from dvx.hashing import registry_hashes
 from dvx.lake import BUCKET_COL
 from dvx.schema import RECORD_SOURCE, Vault, descriptive_cols
+from dvx.session import merge_pool
 
 #: a satellite's current table folds a bucket's equality-delete
 #: tombstones into its data once the bucket holds this many tombstone files
@@ -769,7 +770,7 @@ def apply_batch(
         n_workers = 1 + len(census_tables) + len(key_tables) + len(registry.satellites)
         with ThreadPoolExecutor(max_workers=n_workers) as ex:
             fut_scan = ex.submit(
-                _in_pool, sc, "dvx_merge_scan", _bloom_scan, prepared,
+                _in_pool, sc, merge_pool("scan"), _bloom_scan, prepared,
                 [(nm, tbl, key) for nm, tbl, key, _ in key_tables],
             )
             # the census GATES the satellite start — run it in the
@@ -802,7 +803,7 @@ def apply_batch(
             ]
             futs += [
                 ex.submit(
-                    _in_pool, sc, f"dvx_merge_{nm}", _run_key_table, nm, tbl, key, cols
+                    _in_pool, sc, merge_pool(nm), _run_key_table, nm, tbl, key, cols
                 )
                 for nm, tbl, key, cols in key_tables
             ]

@@ -46,7 +46,11 @@ tombstones: the written buckets of ``replace_buckets`` and of a plain
 overwrite, every key of a written partition value on composite tables,
 every key of an unpartitioned overwrite, and the folded keys of a
 compaction. Staged data joins ``files`` and staged tombstones join
-``tombstones``.
+``tombstones``. Every write job has one distribution, whatever the
+layout or op: a rebalance on the manifest key that AQE coalesces to what
+the rows fill, so a trickle-sized fold runs in one task and a large
+rewrite keeps about one task per bucket; an unsalted commit adds one
+file per key (:meth:`LakeTable._write_files`).
 
 Row-level change has one mechanism, the Iceberg format-v2 equality
 delete: a ``delete_insert`` commit writes tombstones for the keys it
@@ -76,6 +80,10 @@ Scale design
 - File pruning happens in *metadata* (the manifest), so a point lookup
   or a merge never lists directories or scans untouched buckets.
 - Commits are metadata-only; carried-over buckets are never rewritten.
+- Writer width follows the data, not the layout: the writer exchange
+  starts from ``4 x num_buckets`` partitions and is coalesced at
+  runtime, never split inside a key, so a few touched rows cost one
+  writer task and a full rewrite at 10^10 rows one task per bucket.
 - Tables may combine a value partition WITH hash buckets (Iceberg's
   ``PARTITIONED BY (days(ts), bucket(N, key))`` composite): the manifest
   key is ``"<partition>|<bucket>"`` and reads/replacements prune on
@@ -503,8 +511,7 @@ class LakeTable:
         return df.withColumn(BUCKET_COL, self._bucket_expr(m["num_buckets"], m["bucket_cols"]))
 
     def _write_files(
-        self, df: DataFrame, manifest: dict, next_v: int, salts: int = 1,
-        wide: bool = False,
+        self, df: DataFrame, manifest: dict, next_v: int, salts: int = 1
     ) -> tuple[dict[str, list[str]], str]:
         """Write df physically split by partition key; return
         ``({key: [relpaths]}, commit_rel)``.
@@ -520,29 +527,34 @@ class LakeTable:
         manifest references (harmless, reclaimed by a vacuum).
 
         Write distribution (what Iceberg's bucket-partitioned write
-        distribution does):
+        distribution does), one rebalance exchange on the manifest key
+        for every layout, sized by the data it carries:
 
-        - bucketed tables: cluster by bucket so each commit adds ONE file
-          per touched bucket (read cost stays O(buckets), not O(commits x
-          tasks)); 4x partition headroom so two bucket keys rarely hash to
-          the same writer task and idle the rest. At scale num_buckets is
-          sized so a bucket's rewrite (~100-500 MB) is one healthy task.
-        - partition_col / unpartitioned tables with ``salts > 1``: a
-          deterministic row-hash salt spreads each partition value over up
-          to ``salts`` writer tasks. Without this, a commit touching one
+        - it starts from ``4 x num_buckets`` partitions
+          (``4 x defaultParallelism`` on unbucketed tables), headroom so
+          two keys rarely hash to the same writer task, and AQE coalesces
+          it to what the rows fill: a small append or fold runs in one
+          task, a large rewrite keeps about one task per bucket. At scale
+          num_buckets is sized so a bucket's rewrite (~100-500 MB) is one
+          healthy task.
+        - skew splitting of rebalance partitions is off
+          (dvx.session.get_spark), so a key never spans two tasks and an
+          unsalted commit adds ONE file per touched key (read cost stays
+          O(keys), not O(commits x tasks)).
+        - ``salts > 1`` is the one way to spread a key over several
+          writer tasks: a deterministic row-hash salt gives up to
+          ``salts`` files per key. Without it, a commit touching one
           partition value (every PIT single-date overwrite, every
-          unpartitioned full overwrite) funnels the entire dataset through
+          unpartitioned full overwrite) funnels the whole dataset through
           ONE task — the round-1 pit_build anti-scaling (4.7s -> 30.4s
-          with MORE cores). Callers pass salts=1 for small appends (one
-          file) and salts=defaultParallelism for big overwrites.
+          with MORE cores).
         """
         commit_rel = os.path.join("data", f"c{next_v:010d}-{uuid.uuid4().hex[:8]}")
         commit_dir = os.path.join(self.root, commit_rel)
-        if manifest["num_buckets"] is not None:
+        nb = manifest["num_buckets"]
+        if nb is not None:
             if BUCKET_COL not in df.columns:
-                df = df.withColumn(
-                    BUCKET_COL, self._bucket_expr(manifest["num_buckets"], manifest["bucket_cols"])
-                )
+                df = df.withColumn(BUCKET_COL, self._bucket_expr(nb, manifest["bucket_cols"]))
             phys = F.col(BUCKET_COL).cast("string")
             if "_tcv" in df.columns:
                 # tombstone rows (:meth:`_stage`) land under "t<bucket>"
@@ -556,55 +568,22 @@ class LakeTable:
                 phys = F.concat(
                     F.col(manifest["partition_col"]).cast("string"), F.lit("|"), phys
                 )
-            df = df.withColumn(_PHYS, phys)
-            if salts > 1:
-                # spread each bucket over `salts` writer tasks: hash
-                # collisions in the bucket->task assignment otherwise idle
-                # writers while doubling others (measured 3.4s -> 2.2s for
-                # a full-table rewrite at local[16]); costs `salts` files
-                # per touched bucket per commit — compact() merges them
-                wsalt = F.pmod(
-                    F.xxhash64(*[F.col(c) for c in df.columns if c != _PHYS]),
-                    F.lit(salts),
-                )
-                df = df.repartition(
-                    4 * manifest["num_buckets"], F.col(_PHYS), wsalt.alias("_w_salt")
-                )
-            else:
-                # wide (big rewrites): 4x partition headroom so two bucket
-                # keys rarely hash to the same writer task and idle the
-                # rest. Narrow (small appends — hubs/links/history/current,
-                # several per micro-batch): no partition count, so AQE
-                # coalesces the shuffle to as few writer tasks as the data
-                # needs. A fixed num_buckets count launched mostly empty
-                # tasks whose scheduling cost is pure per-batch overhead
-                # (trickle: ~0.3 s per small write on 4 cores); a bucket
-                # still lands in exactly one task, so one file per bucket.
-                if wide:
-                    df = df.repartition(4 * manifest["num_buckets"], F.col(_PHYS))
-                else:
-                    df = df.repartition(F.col(_PHYS))
+        elif manifest["partition_col"]:
+            phys = F.col(manifest["partition_col"]).cast("string")
         else:
-            if manifest["partition_col"]:
-                df = df.withColumn(_PHYS, F.col(manifest["partition_col"]).cast("string"))
-            else:
-                df = df.withColumn(_PHYS, F.lit(""))
-            n_write = max(2, self.spark.sparkContext.defaultParallelism)
-            if salts > 1:
-                salt = F.pmod(
-                    F.xxhash64(*[F.col(c) for c in df.columns if c != _PHYS]),
-                    F.lit(salts),
-                )
-                df = df.repartition(2 * n_write, F.col(_PHYS), salt.alias("_w_salt"))
-            else:
-                # non-salted (small appends — lineage rows, status rows):
-                # hash-partitioning on _PHYS collapses each partition
-                # value into ONE task regardless of the partition count,
-                # so defaultParallelism partitions here are just
-                # (defaultParallelism - #values) EMPTY tasks of pure
-                # scheduling overhead per batch. Two suffice; large
-                # rewrites come through the salted branch above.
-                df = df.repartition(2, F.col(_PHYS))
+            phys = F.lit("")
+        df = df.withColumn(_PHYS, phys)
+        by = [_PHYS]
+        if salts > 1:
+            # the rebalance hint takes column names only: the salt is a
+            # column for the exchange and dropped before the write
+            by.append("_w_salt")
+            df = df.withColumn(
+                "_w_salt",
+                F.pmod(F.xxhash64(*[F.col(c) for c in df.columns if c != _PHYS]), F.lit(salts)),
+            )
+        width = 4 * (nb or self.spark.sparkContext.defaultParallelism)
+        df = df.hint("rebalance", width, *by).drop("_w_salt")
         df.write.mode("overwrite").partitionBy(_PHYS).parquet(commit_dir)
 
         out: dict[str, list[str]] = {}
@@ -657,7 +636,6 @@ class LakeTable:
         df: DataFrame | None = None,
         tombstone_keys: DataFrame | None = None,
         salts: int = 1,
-        wide: bool = False,
     ) -> dict:
         """Write one attempt's files for base snapshot ``m`` at version
         ``v`` in ONE Spark job — the only caller of :meth:`_write_files`.
@@ -700,9 +678,7 @@ class LakeTable:
                         frame = frame.withColumn(BUCKET_COL, bucket)
                     frame = frame.unionByName(tombs, allowMissingColumns=True)
         if frame is not None:
-            written, staged["commit_rel"] = self._write_files(
-                frame, m, v + 1, salts=salts, wide=wide
-            )
+            written, staged["commit_rel"] = self._write_files(frame, m, v + 1, salts)
             for k, ps in written.items():
                 if k.startswith("t"):
                     staged["tomb_files"][k[1:]] = ps
@@ -943,7 +919,7 @@ class LakeTable:
                 salts = max(1, -(-par // m["num_buckets"]))
             else:
                 salts = max(2, par)
-            staged = self._stage(m, v, df, salts=salts, wide=True)
+            staged = self._stage(m, v, df, salts=salts)
             keys = set().union(m["files"], m["tombstones"])
             if not m["partition_col"] and m["num_buckets"] is None:
                 replace = keys  # unpartitioned: full overwrite
@@ -985,17 +961,12 @@ class LakeTable:
         return self.write("delete_insert", rows, tombstone_keys=keys, summary=summary)
 
     def replace_buckets(
-        self,
-        touched: list[int],
-        contents: DataFrame,
-        summary: dict | None = None,
-        salts: int = 1,
+        self, touched: list[int], contents: DataFrame, summary: dict | None = None
     ) -> int:
         """Copy-on-write commit: replace the file sets of ``touched``
         keys with ``contents`` (which must be exactly those keys' new
         rows); pending tombstones of those keys go too.
-        Untouched keys carry over as pure metadata. ``salts`` > 1 widens
-        the writer stage for large rewrites (see _write_files).
+        Untouched keys carry over as pure metadata.
 
         ``touched`` entries are bucket ids (ints) on plain bucketed
         tables, or full ``"<partition>|<bucket>"`` key strings on
@@ -1003,7 +974,7 @@ class LakeTable:
         replace = {str(t) for t in touched}
         return self._write(
             "merge",
-            lambda m, v: (self._stage(m, v, contents, salts=salts, wide=True), replace),
+            lambda m, v: (self._stage(m, v, contents), replace),
             summary,
         )
 
@@ -1021,7 +992,7 @@ class LakeTable:
             if not keys:
                 return None
             summary[label] = len(keys)
-            return self._stage(m, v, self.read(v, keys=keys), wide=True), keys
+            return self._stage(m, v, self.read(v, keys=keys)), keys
 
         v = self._write(op, stage, summary)
         return v, summary.get(label, 0)

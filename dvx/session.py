@@ -19,9 +19,12 @@ Scale notes
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 from pyspark.sql import SparkSession
+
+from dvx.entities import DEFAULT_REGISTRY
 
 #: fair-scheduler weight of the ``dvx_critical`` pool (every other pool
 #: keeps weight 1)
@@ -43,27 +46,42 @@ def _scratch_dir() -> str:
     return tempfile.gettempdir()
 
 
+def merge_pool(name: str) -> str:
+    """The fair-scheduler pool of one ingest merge job: ``scan`` for the
+    fused bloom scan, else the hub or link table it inserts into."""
+    return f"dvx_merge_{name}"
+
+
 def _alloc_file() -> str:
     """Write the fair-scheduler allocation file (idempotent) and return
-    its path. One weighted pool: ``dvx_critical`` — used by the
-    satellite-apply threads; every other on-demand pool keeps default
-    weight 1. Intra-pool mode FAIR so two satellites (multi-satellite
-    registries) still share."""
-    # the weight is in the name: a file written for another weight is
-    # never reused
-    path = os.path.join(_scratch_dir(), f"dvx_fair_pools_w{CRITICAL_WEIGHT}.xml")
+    its path. It declares every pool the ingest apply runs jobs in, so
+    none is built on demand (each such pool logs a FairSchedulableBuilder
+    WARN): the weighted ``dvx_critical`` (intra-pool FAIR, so two
+    satellites of a multi-satellite registry still share) for the
+    satellite applies and their census, and the :func:`merge_pool` of the
+    scan and of each default-registry hub and link, with the
+    weight 1 and FIFO mode an on-demand pool gets. A registry with other
+    key tables still gets theirs on demand."""
+    reg = DEFAULT_REGISTRY
+    merge = ["scan"] + [t.name for t in (*reg.hubs, *reg.links)]
+    pools = [("dvx_critical", "FAIR", CRITICAL_WEIGHT)]
+    pools += [(merge_pool(t), "FIFO", 1) for t in merge]
+    xml = "<?xml version=\"1.0\"?>\n<allocations>\n" + "".join(
+        f"  <pool name=\"{name}\">\n"
+        f"    <schedulingMode>{mode}</schedulingMode>\n"
+        f"    <weight>{weight}</weight>\n"
+        "    <minShare>0</minShare>\n"
+        "  </pool>\n"
+        for name, mode, weight in pools
+    ) + "</allocations>\n"
+    # the content's digest is in the name: a file another version wrote
+    # into the shared scratch dir is never reused
+    digest = hashlib.sha1(xml.encode()).hexdigest()[:12]
+    path = os.path.join(_scratch_dir(), f"dvx_fair_pools_{digest}.xml")
     if not os.path.exists(path):
-        tmp = path + ".tmp"
+        tmp = f"{path}.{os.getpid()}.tmp"
         with open(tmp, "w") as f:
-            f.write(
-                "<?xml version=\"1.0\"?>\n<allocations>\n"
-                "  <pool name=\"dvx_critical\">\n"
-                "    <schedulingMode>FAIR</schedulingMode>\n"
-                f"    <weight>{CRITICAL_WEIGHT}</weight>\n"
-                "    <minShare>0</minShare>\n"
-                "  </pool>\n"
-                "</allocations>\n"
-            )
+            f.write(xml)
         os.replace(tmp, path)
     return path
 
@@ -189,6 +207,10 @@ def get_spark(
         # On a large cluster with many input files, raise via extra_conf.
         .config("spark.sql.files.maxPartitionBytes", str(MAX_PARTITION_BYTES))
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # a lake write rebalances on its manifest key (dvx.lake
+        # _write_files): splitting a skewed key over two writer tasks
+        # would add a second file to it, so AQE only coalesces there
+        .config("spark.sql.adaptive.optimizeSkewsInRebalancePartitions.enabled", "false")
         .config("spark.sql.adaptive.localShuffleReader.enabled", "true")
         # CBO acts on CATALOG tables with stats: dvx.views.publish_views
         # runs ANALYZE TABLE on the published serving tables, so BI SQL

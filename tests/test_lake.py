@@ -253,6 +253,82 @@ def test_compact_deltas_folds_and_preserves_contents(spark, tbl):
     assert sorted((r.k, r.v) for r in tbl.read().collect()) == before
 
 
+def _task_counts(spark, group: str, fn) -> list[int]:
+    """Run ``fn`` under job group ``group``; return the task count of
+    every stage its jobs ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    stages = [
+        st.getStageInfo(s)
+        for j in st.getJobIdsForGroup(group)
+        for s in st.getJobInfo(j).stageIds
+    ]
+    return [s.numTasks for s in stages if s is not None]
+
+
+def test_rewrites_are_sized_by_their_data(spark, tmp_path):
+    """A rewrite of a few rows on a 16-bucket table runs its write stage
+    in at most ``spark.sql.shuffle.partitions`` tasks (AQE coalesces the
+    writer exchange; a fixed ``4 x num_buckets`` count would launch 64
+    mostly empty tasks), and a fold still leaves one data file per key."""
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    t = LakeTable.create(
+        spark, str(tmp_path / "t"), SCHEMA, num_buckets=16, bucket_cols=["k"]
+    )
+    keys = [f"k{i}" for i in range(24)]
+    t.append(_df(spark, [(k, 0) for k in keys]))
+    t.upsert_delta(_df(spark, [(k, 1) for k in keys[:12]]))
+    t.upsert_delta(_df(spark, [(k, 2) for k in keys[:6]]))
+    folded = sorted(t.snapshot()["tombstones"])
+    assert len(folded) > 1
+
+    def fold():
+        assert t.compact_tombstones() == len(folded)
+
+    tasks = {"compact_tombstones": _task_counts(spark, "width-fold", fold)}
+    m = t.snapshot()
+    assert not any(m["tombstones"].values())
+    assert all(len(m["files"][k]) == 1 for k in folded)
+    assert _rows(t) == sorted(
+        [(k, 2) for k in keys[:6]] + [(k, 1) for k in keys[6:12]]
+        + [(k, 0) for k in keys[12:]]
+    )
+
+    touched = sorted({_bucket(t, spark, k) for k in keys[:3]})
+    tasks["replace_buckets"] = _task_counts(
+        spark, "width-replace",
+        lambda: t.replace_buckets(
+            touched,
+            t.read(keys=touched).withColumn("v", F.col("v") + 10),
+        ),
+    )
+    assert all(len(t.snapshot()["files"][str(b)]) == 1 for b in touched)
+
+    schema = StructType(SCHEMA.fields + [StructField("d", StringType())])
+    comp = LakeTable.create(
+        spark, str(tmp_path / "c"), schema, num_buckets=16, bucket_cols=["k"],
+        partition_col="d",
+    )
+    rows = [(k, 0, d) for k in keys for d in ("d1", "d2")]
+    comp.append(spark.createDataFrame(rows, schema))
+    tasks["overwrite_partitions"] = _task_counts(
+        spark, "width-overwrite",
+        lambda: comp.overwrite_partitions(
+            spark.createDataFrame([(k, 5, "d2") for k in keys], schema)
+        ),
+    )
+    assert sorted((r.k, r.v, r.d) for r in comp.read().collect()) == sorted(
+        [(k, 0, "d1") for k in keys] + [(k, 5, "d2") for k in keys]
+    )
+    for op, counts in tasks.items():
+        assert counts and max(counts) <= width, (op, counts)
+
+
 def test_time_travel_sees_deltas_as_of_version(spark, tbl):
     tbl.append(_df(spark, [("a", 1)]))
     v1 = tbl.version()

@@ -297,3 +297,24 @@ def test_lsh_recall_floor_planted_corpus(spark):
     assert len(got_pairs & brute_pairs) / max(1, len(brute_pairs)) >= 0.98
     emb.unpersist()
     nd.unpersist()
+
+
+def test_widen_partitions_follows_the_size_estimate(spark, tmp_path, monkeypatch):
+    """A one-file input estimated under ``defaultParallelism`` full scan
+    splits is spread over ``defaultParallelism`` tasks; one estimated at
+    that many splits is returned as is."""
+    import dvx.ops.util as util
+
+    path = str(tmp_path / "one_file")
+    spark.range(20000).select(
+        "id", F.sha2(F.col("id").cast("string"), 256).alias("text")
+    ).coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path)
+    target = spark.sparkContext.defaultParallelism
+    wide = util.widen_partitions(df)
+    assert wide.rdd.getNumPartitions() == target
+    assert wide.count() == 20000
+
+    size = sum(p.stat().st_size for p in tmp_path.joinpath("one_file").glob("*.parquet"))
+    monkeypatch.setattr(util, "MAX_PARTITION_BYTES", size // target)
+    assert util.widen_partitions(df) is df

@@ -71,3 +71,36 @@ def test_failed_warm_start_does_not_block_create_and_is_retried(
     monkeypatch.setattr(dvx_session, "_scratch_dir", lambda: str(tmp_path))
     vault.create_all_tables()
     assert app_id in dvx_session._WARMED
+
+
+def test_alloc_file_declares_every_apply_pool(monkeypatch, tmp_path):
+    """Every pool dvx.apply runs jobs in is declared, each on-demand one
+    with the weight 1 and FIFO mode Spark would give it; the file name
+    follows the content, so a file written for other pools is not
+    reused."""
+    import xml.etree.ElementTree as ET
+
+    from dvx.entities import DEFAULT_REGISTRY as reg
+
+    monkeypatch.setattr(dvx_session, "_scratch_dir", lambda: str(tmp_path))
+    path = dvx_session._alloc_file()
+    pools = {
+        p.get("name"): (
+            p.findtext("schedulingMode"), int(p.findtext("weight")),
+            int(p.findtext("minShare")),
+        )
+        for p in ET.parse(path).getroot().iter("pool")
+    }
+    weight = dvx_session.CRITICAL_WEIGHT
+    want = {"dvx_critical": ("FAIR", weight, 0), "dvx_merge_scan": ("FIFO", 1, 0)}
+    want.update({f"dvx_merge_{t.name}": ("FIFO", 1, 0) for t in (*reg.hubs, *reg.links)})
+    assert pools == want
+    assert dvx_session._alloc_file() == path
+
+    monkeypatch.setattr(dvx_session, "CRITICAL_WEIGHT", weight + 1)
+    other = dvx_session._alloc_file()
+    assert other != path
+    assert f"<weight>{weight + 1}</weight>" in open(other).read()
+    assert sorted(os.listdir(tmp_path)) == sorted(
+        os.path.basename(p) for p in (path, other)
+    )
