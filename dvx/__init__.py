@@ -9,9 +9,10 @@ transcripts:
 - ``dvx.hashing``   MD5 business-key + hash-diff, vectorized pandas UDFs
                     bit-identical to the native column expressions.
 - ``dvx.lake``      minimal snapshot-based ACID table format over Parquet
-                    (atomic metadata-pointer commits, bucket COW merge,
-                    time travel, rollback, epoch dedup) — the role Iceberg
-                    plays in the reference.
+                    (atomic metadata-pointer commits, equality-delete
+                    row changes, bucket replacement, time travel,
+                    rollback, epoch dedup) — the role Iceberg plays in
+                    the reference.
 - ``dvx.schema``    canonical vault table schemas (hub/link/sat/pit/meta).
 - ``dvx.changelog`` deterministic transcript changelog generation/derivation.
 - ``dvx.apply``     core CDC batch apply (LWW dedup -> hub/link/sat merges).

@@ -113,7 +113,7 @@ def main(argv: list[str] | None = None) -> int:
             # row-level change inserts only the changed rows; compaction
             # rewrites widen this conservatively). Read just those files' keys and map them to
             # conversations through the link.
-            from pyspark.sql import functions as F
+            from dvx.lake import empty_frame
 
             tbl = vault.table("bridge_conversation_turn")
             sv = tbl.snapshot().get("summary", {}).get("refreshed_sat_version")
@@ -126,12 +126,10 @@ def main(argv: list[str] | None = None) -> int:
                     added = None  # expired snapshot: fall back to full refresh
             if added is not None:
                 changed_turns = (
-                    spark.read.schema(sat_tbl.schema())
-                    .parquet(*added)
-                    .select("turn_hash_key")
+                    spark.read.schema(sat_tbl.schema()).parquet(*added)
                     if added
-                    else spark.createDataFrame([], "turn_hash_key string")
-                )
+                    else empty_frame(spark, sat_tbl.schema())
+                ).select("turn_hash_key")
                 link = vault.link_conversation_turn.read().select(
                     "conv_hash_key", "turn_hash_key"
                 )

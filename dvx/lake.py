@@ -138,11 +138,27 @@ _LEGACY = "deltas"
 #: the manifest operations a data write commits as
 _OPS = ("append", "delete_insert", "overwrite_partitions", "merge", "compact")
 
-__all__ = ["LakeTable", "BUCKET_COL", "CommitConflict"]
+__all__ = ["LakeTable", "BUCKET_COL", "CommitConflict", "empty_frame"]
 
 
 class CommitConflict(RuntimeError):
     """Another writer committed this version first (optimistic CC)."""
+
+
+def empty_frame(spark: SparkSession, schema: StructType) -> DataFrame:
+    """A frame of ``schema`` with no rows that the optimizer knows is empty.
+
+    A typed null projection under ``limit(0)``: ``OptimizeLimitZero``
+    rewrites it into an empty ``LocalRelation``, and
+    ``PropagateEmptyRelation`` then folds every join, semi-join and union
+    over it before planning, so reading it starts no task.
+    ``spark.createDataFrame([], schema)`` is not used: PySpark builds it
+    as a parallelized empty RDD behind a Python reserialize, which the
+    optimizer cannot see through, and every plan over it runs
+    ``defaultParallelism`` Python-worker tasks that produce no rows.
+    """
+    cols = [F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
+    return spark.range(1).select(*cols).limit(0)
 
 
 def _is_composite(m: dict) -> bool:
@@ -415,6 +431,14 @@ class LakeTable:
         tombstone covering its key. Only tombstone-carrying buckets pay
         the (narrow, hashed) resolution join;
         :meth:`compact_tombstones` folds them away.
+
+        A selection of no files (an empty table, or ``buckets`` /
+        ``partitions`` / ``keys`` that match no file) returns an empty
+        ``LocalRelation`` (:func:`empty_frame`) with the same column
+        names and types as a file-backed read of the same arguments, so
+        every join against it folds away in the optimizer: a first
+        load's anti-joins and lookups against vault state plan no scan
+        and start no task.
         """
         m = self.snapshot(version)
         _refuse_legacy(m, self.root)
@@ -492,7 +516,7 @@ class LakeTable:
                 .drop("_tcv", "_cv")
             )
         if not parts:
-            return self.spark.createDataFrame([], schema)
+            return empty_frame(self.spark, schema)
         return parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
 
     # --------------------------------------------------------------- writes

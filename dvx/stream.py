@@ -3,8 +3,9 @@
 The reference has no streaming (SURVEY.md §2.10) — NiFi polls
 ``updated_at`` and Spark batch-applies. This module is the north_rule's
 re-expression: ``readStream`` over a binlog/WAL-style changelog directory
--> ``foreachBatch`` -> :func:`dvx.apply.apply_batch` (keyed COW MERGE),
-with:
+-> ``foreachBatch`` -> :func:`dvx.apply.apply_batch` (hub/link appends
+of new keys; satellite history appends and equality-delete + insert
+``delete_insert`` commits, never a bucket rewrite), with:
 
 - **exactly-once**: each micro-batch's ``epoch_id`` is recorded in every
   table's snapshot summary; on restart, foreachBatch replays the last

@@ -505,3 +505,35 @@ def test_crash_between_history_and_current_commit_converges(
         .filter("count > 1")
     )
     assert dup.count() == 0
+
+
+def test_first_load_then_updates_deletes_and_a_stale_edit(
+    spark, tmp_path, changelog, oneshot_vault
+):
+    """A first load plans every read of vault state as an empty relation;
+    it must leave the same rows as the one-shot build once a second batch
+    of updates, deletes and one stale edit lands on top of it."""
+    from dvx.validate import validate_vault
+
+    early, late = split_batches(changelog, 2)
+    # swap one key's insert (first half) with its update (second half):
+    # the insert then arrives after a newer stored version, i.e. stale
+    keys = ["conv_id", "turn_idx"]
+    updated = late.filter("op = 'U'").select(*keys)
+    k = early.filter("op = 'I'").join(updated, keys, "left_semi").orderBy("seq").first()
+    is_k = (F.col("conv_id") == k.conv_id) & (F.col("turn_idx") == k.turn_idx)
+    its_update = is_k & (F.col("op") == "U")
+    first = early.filter(~is_k).unionByName(late.filter(its_update))
+    second = late.filter(~its_update).unionByName(early.filter(is_k))
+    ops = {r.op for r in second.select("op").distinct().collect()}
+    assert {"U", "D"} <= ops
+
+    vault = make_vault(spark, tmp_path)
+    apply_batch(vault, first, epoch_id=0)
+    apply_batch(vault, second, epoch_id=1)
+
+    # the stale edit re-chained its key's history in one delete_insert
+    assert vault.sat_turn_text_hist.history()[-1]["operation"] == "delete_insert"
+    assert_frames_equal(current_state(vault), oracle_state(changelog))
+    assert_frames_equal(full_history(vault), full_history(oneshot_vault))
+    assert validate_vault(vault)["exit_code"] == 0

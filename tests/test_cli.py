@@ -39,9 +39,9 @@ def test_config_list_and_bool_coercion():
     assert cfg.log_lineage is False
 
 
-def test_cli_end_to_end(spark, tmp_path, monkeypatch):
-    """create -> replay -> pit -> validate -> stats through the real CLI
-    main() (in-process; get_spark reuses the test session)."""
+def test_cli_end_to_end(spark, tmp_path, monkeypatch, capsys):
+    """create -> replay -> pit -> validate -> bridge -> stats through the
+    real CLI main() (in-process; get_spark reuses the test session)."""
     from dvx.__main__ import main
     from dvx.changelog import synthetic_changelog
     from dvx.stream import write_changelog_files
@@ -57,6 +57,11 @@ def test_cli_end_to_end(spark, tmp_path, monkeypatch):
                  "--checkpoint", str(tmp_path / "ck")]) == 0
     assert main([*base, "pit", "--date", "2024-06-01"]) == 0
     assert main([*base, "validate"]) == 0
+    assert main([*base, "bridge"]) == 0
+    # no satellite file was added since that refresh: nothing to redo
+    capsys.readouterr()
+    assert main([*base, "bridge", "--incremental"]) == 0
+    assert json.loads(capsys.readouterr().out) == {"buckets_refreshed": 0}
 
     from dvx.schema import Vault
 

@@ -11,7 +11,14 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, StringType, StructField, StructType
+from pyspark.sql.types import (
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
 from dvx.lake import BUCKET_COL, LakeTable
 
@@ -439,6 +446,56 @@ def test_read_key_filter_prunes_below_tombstone_resolution(spark, one):
     )
     with pytest.raises(ValueError, match="bucketed"):
         flat.read(key_filter=kf)
+
+
+def test_read_of_no_files_is_an_empty_relation(spark, tmp_path):
+    """A read that selects no file is an empty LocalRelation typed like a
+    file-backed read of the same arguments, so a join against it folds
+    away before planning (no scan, no task)."""
+    typed = StructType(
+        [
+            StructField("k", StringType()),
+            StructField("v", IntegerType()),
+            StructField("n", LongType()),
+            StructField("ts", TimestampType()),
+        ]
+    )
+
+    def make(name):
+        return LakeTable.create(
+            spark, str(tmp_path / name), typed, num_buckets=4, bucket_cols=["k"]
+        )
+
+    empty, full = make("empty"), make("full")
+    full.append(spark.createDataFrame([("a", 1, 1, None)], typed))
+    full.upsert_delta(spark.createDataFrame([("a", 2, 2, None)], typed))
+    with_files = {int(k) for k in full.snapshot()["files"]}
+    assert len(with_files) == 1
+    bare = next(b for b in range(4) if b not in with_files)
+
+    kf = spark.createDataFrame([("a",)], "k string")
+    probe = spark.createDataFrame([("a", 7)], "k string, x int")
+    variants = {
+        "all": {},
+        "columns": {"columns": ["v"]},
+        "key_filter": {"key_filter": kf},
+    }
+    for name, kw in variants.items():
+        file_backed = full.read(**kw)
+        for selection in (empty.read(**kw), full.read(buckets=[bare], **kw)):
+            plan = selection._jdf.queryExecution().optimizedPlan().toString()
+            assert plan.startswith("LocalRelation <empty>"), (name, plan)
+            assert [(f.name, f.dataType) for f in selection.schema.fields] == [
+                (f.name, f.dataType) for f in file_backed.schema.fields
+            ], name
+            joined = probe.join(selection, "k", "left")
+            jplan = joined._jdf.queryExecution().optimizedPlan().toString()
+            assert "Join" not in jplan, (name, jplan)
+            assert joined.collect() == [(
+                "a", 7, *[None] * (len(selection.columns) - 1)
+            )]
+    # columns= keeps the bucket key
+    assert full.read(buckets=[bare], columns=["v"]).columns == ["k", "v"]
 
 
 # ------------------------------------------- one write path: replace + OCC

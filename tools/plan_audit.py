@@ -12,7 +12,10 @@ evidence for the hot paths plus automated checks:
 - a tombstone-carrying read with a key_filter keeps the semi-join BELOW
   the hashed tombstone resolution join, whose only aggregate is the
   narrow max(_tcv) (read work O(requested keys), no aggregate over a
-  row column).
+  row column),
+- a read that selects no file is an empty LocalRelation, and a join
+  against it folds away before planning (a first load's lookups against
+  vault state start no task).
 
 Usage: python tools/plan_audit.py [sf_dir]   (default sf0.001)
 """
@@ -136,6 +139,36 @@ def main() -> None:
             f"aggregate functions are {agg_fns} and no Aggregate references "
             f"a non-key column ({narrow}) (dvx/lake.py read(key_filter=...))",
         )
+
+        # 5. the same read on a table with no files, left-joined to a
+        # small frame: the read is an empty LocalRelation and the join
+        # folds into a null projection of the probe
+        empty = LakeTable.create(
+            spark, os.path.join(scratch, "e"), kv, num_buckets=1, bucket_cols=["k"]
+        )
+        e_read = empty.read(columns=["k", "v"], key_filter=kf)
+        probe = spark.createDataFrame([("a", 7)], "k string, x int")
+        e_join = probe.join(e_read, "k", "left")
+        e_read_plan = e_read._jdf.queryExecution().optimizedPlan().toString()
+        e_join_plan = e_join._jdf.queryExecution().optimizedPlan().toString()
+        sections.append(
+            (
+                "Read of no files (empty one-bucket table, key_filter + "
+                "column projection) left-joined to a small frame",
+                explain_str(e_join),
+                [],
+            )
+        )
+        e_local = e_read_plan.startswith("LocalRelation <empty>")
+        e_folded = "Join" not in e_join_plan
+        checks_empty = (
+            "a read of no files is an empty LocalRelation and a join "
+            "against it folds away",
+            e_local and e_folded,
+            f"optimized read plan is `{e_read_plan.splitlines()[0]}` "
+            f"({e_local}); the left join's optimized plan has no Join node "
+            f"({e_folded}) (dvx/lake.py empty_frame)",
+        )
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -194,6 +227,7 @@ def main() -> None:
         )
     )
     checks.append(checks_kf)
+    checks.append(checks_empty)
 
     out = ["# PLANS — physical-plan audit (generated by tools/plan_audit.py)\n"]
     out.append(f"SF dir: `{sf_dir}`\n")
