@@ -15,8 +15,8 @@ note's asymptote).
 Protocol: seed two key tables with the same SEED_KEYS keys — one
 created with the ``key_bloom`` property, its twin without it — then
 apply BATCHES trickle batches of BATCH_KEYS brand-new keys each. Both
-arms make the engine's one insert call: the fused scan, then the
-insert with the scan's slice. On the bloom table the scan prunes the
+arms make the engine's one insert call: the fused scan, the insert
+staged with the scan's slice, then its commit. On the bloom table the scan prunes the
 existence read to the possible-hit buckets; on the plain table every
 touched bucket with data is a possible hit, so it reads them all. Each
 arm's wall time includes its scan. Arms alternate order each batch,
@@ -69,9 +69,9 @@ def main() -> None:
         )
 
     def insert(tbl, src) -> dict:
-        scan = _bloom_scan(src, [("t", tbl, "k")])["t"]
-        _insert_new_keys(tbl, src, "k", ["k", "payload"], None, "s", None, scan)
-        return scan
+        _, hits = scan = _bloom_scan(src, [("t", tbl, "k")])["t"]
+        _insert_new_keys(tbl, src, "k", ["k", "payload"], scan).commit()
+        return hits
 
     tmp = tempfile.mkdtemp(prefix="dvx_bloom_trickle_")
     results = []

@@ -24,13 +24,18 @@ insertion into one commit), driven by a declarative entity registry
    stale (out-of-order) arrivals trigger a per-key re-chain that splices
    them into history (one-shot semantics, nothing lost); deletes are
    tombstone versions. Every batch, stale or not, has ONE write shape:
-   the history and current writes are staged concurrently and published
-   history-first, each as a single commit. The current side is an
+   the history and current writes are staged concurrently, each as a
+   single commit. The current side is an
    equality-delete + insert (``delete_insert``) on the changed keys; the
    history side is an append, or a ``delete_insert`` on the stale keys
    when they re-chain. Each satellite takes its touched buckets from
    ONE per-bucket row census of its parent key, which also feeds the
    lineage metrics.
+5. one exactly-once rule: every table's commit is staged first, then
+   the epoch publishes them in ONE fixed order (:func:`publish_order`),
+   each commit carrying the epoch mark and skipped when its table
+   already holds it. A crash leaves a prefix of that order committed,
+   and the re-run resumes at the first table without the mark.
 
 Scale notes
 -----------
@@ -55,19 +60,66 @@ Scale notes
 from __future__ import annotations
 
 import os
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dvx import metadata
 from dvx.entities import DEFAULT_REGISTRY, EntityRegistry, SatelliteSpec
 from dvx.hashing import registry_hashes
-from dvx.lake import BUCKET_COL
+from dvx.lake import BUCKET_COL, CommitConflict, LakeTable
 from dvx.schema import RECORD_SOURCE, Vault, descriptive_cols
 from dvx.session import merge_pool
 
 #: a satellite's current table folds a bucket's equality-delete
 #: tombstones into its data once the bucket holds this many tombstone files
 SAT_TOMB_COMPACT = 8
+
+
+def publish_order(
+    registry: EntityRegistry, pit_dates: list[str] | None = None,
+    log_lineage: bool = False,
+) -> list[str]:
+    """The tables an epoch commits, in the one order it commits them:
+    hubs, links, each satellite's history then its current table,
+    ``pit_turn`` with ``pit_dates``, ``load_metadata`` with
+    ``log_lineage``. Hubs before links keeps every committed link row's
+    hub rows committed; history before current keeps a displaced
+    version in history before current drops it; the PIT derives from
+    the committed satellites; the lineage row says the epoch is done.
+    :func:`apply_batch` publishes in this order and
+    dvx.stream.ingest_batch skips an epoch every one of these tables
+    holds."""
+    return [
+        *registry.table_names(),
+        *(["pit_turn"] if pit_dates else []),
+        *(["load_metadata"] if log_lineage else []),
+    ]
+
+
+class _Part(NamedTuple):
+    """One table's staged commit (``LakeTable.stage_write``), and what
+    stages it again when another writer moved the table first: ``rows``
+    (a frame, or a function of the new base version), ``tombs`` and
+    ``segments``. A part with tombstones commits as ``delete_insert``,
+    any other as ``append``."""
+
+    tbl: LakeTable
+    staged: dict
+    rows: DataFrame | Callable[[int], DataFrame]
+    tombs: DataFrame | None = None
+    segments: dict | None = None
+
+    @property
+    def op(self) -> str:
+        return "append" if self.tombs is None else "delete_insert"
+
+    def commit(self, summary: dict | None = None) -> int:
+        try:
+            return self.tbl.commit_staged(self.staged, self.op, summary=summary)
+        except CommitConflict:  # another writer moved the table
+            return self.tbl.write(self.op, self.rows, self.tombs, summary, self.segments)
 
 
 def prepare_batch(df: DataFrame, registry: EntityRegistry | None = None) -> DataFrame:
@@ -139,12 +191,13 @@ def _in_pool(sc, pool: str, fn, *args, **kwargs):
 
 def _bloom_scan(
     prepared: DataFrame, specs: list[tuple[str, object, str]]
-) -> dict[str, dict[int, tuple[int, bytes]]]:
+) -> dict[str, tuple[int, dict[int, tuple[int, bytes]]]]:
     """ONE shuffle-keyed job serving every key table of the batch: per
     (table, bucket), test the batch keys against the bucket's existing
     bloom segments and build this batch's new segment. Returns
-    ``{table: {bucket: (possible_hits, segment)}}``; its buckets are
-    exactly the batch's touched buckets.
+    ``{table: (version, {bucket: (possible_hits, segment)})}``: the
+    snapshot version the hits hold at, and exactly the batch's touched
+    buckets.
 
     Fusing the tables into a single applyInPandas pass matters because
     each extra Spark job is per-batch fixed floor (~0.3-0.5 s at 16
@@ -163,31 +216,24 @@ def _bloom_scan(
     info = {}
     frames = []
     for name, tbl, key in specs:
-        m = tbl.snapshot()
-        if m["bucket_cols"] != [key]:  # scan recomputes the bucket fn inline
+        v = tbl.version()
+        m = tbl.snapshot(v)
+        if m["bucket_cols"] != [key]:  # the scan buckets on `key` alone
             raise ValueError(
                 f"{name}: bloom scan requires bucket_cols == [{key}], "
                 f"got {m['bucket_cols']}"
             )
-        info[name] = (
-            tbl.bloom_paths(),
-            {int(k) for k in m["files"] if k.isdigit()},
-        )
+        info[name] = (v, tbl.bloom_paths(v), {int(k) for k in m["files"] if k.isdigit()})
         frames.append(
-            prepared.select(
-                F.lit(name).alias("_t"),
-                F.col(key).alias("_k"),
-                F.pmod(F.xxhash64(F.col(key)), F.lit(m["num_buckets"]))
-                .cast("int")
-                .alias("_b"),
-            )
+            tbl.with_bucket(prepared.select(F.lit(name).alias("_t"), F.col(key)))
+            .select("_t", F.col(key).alias("_k"), F.col(BUCKET_COL).alias("_b"))
         )
     allk = reduce(lambda a, b: a.unionByName(b), frames)
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         name = pdf["_t"].iloc[0]
         b = int(pdf["_b"].iloc[0])
-        seg_paths, with_files = info[name]
+        _, seg_paths, with_files = info[name]
         uniq = pdf["_k"].drop_duplicates().tolist()
         if b in seg_paths:
             segs = []
@@ -208,73 +254,74 @@ def _bloom_scan(
         .applyInPandas(fn, "t string, bucket int, hits long, segment binary")
         .collect()
     )
-    out: dict[str, dict[int, tuple[int, bytes]]] = {n: {} for n, _, _ in specs}
+    out = {n: (info[n][0], {}) for n, _, _ in specs}
     for r in rows:
-        out[r.t][r.bucket] = (r.hits, bytes(r.segment))
+        out[r.t][1][r.bucket] = (r.hits, bytes(r.segment))
     return out
 
 
 def _insert_new_keys(
-    tbl,
+    tbl: LakeTable,
     src: DataFrame,
     key: str,
     select_cols: list[str],
-    epoch_id: int | None,
-    stream_id: str,
-    summary: dict | None,
-    scan: dict[int, tuple[int, bytes]],
-) -> None:
-    """Insert-only hub/link apply as an anti-join + APPEND.
+    scan: tuple[int, dict[int, tuple[int, bytes]]],
+) -> _Part | None:
+    """Insert-only hub/link apply as an anti-join + APPEND, staged:
+    returns the append part (None for a batch without keys), which
+    the caller commits.
 
     Hubs and links never update, so COW-rewriting their touched buckets
     every batch is pure write amplification — O(table) per batch once
     batches spread across all buckets. This path reads only the key
     column of the touched buckets (parquet column pruning), anti-joins
     (J1, RawVaultETL.scala:204-205), and appends just the new rows:
-    write IO is O(new keys). Appends are not naturally idempotent, so
-    the table's epoch watermark guards re-delivered batches (the same
-    handshake the satellite history table uses).
+    write IO is O(new keys).
 
     ``scan`` is the table's slice of :func:`_bloom_scan` over ``src``:
-    the existence read is PRUNED to the buckets that report a possible
-    hit — with key blooms (dvx.bloom; hubs/links by default) a batch of
-    brand-new keys reads (almost) no existing data — and the scan's
-    per-bucket segments ride along into the append commit, keeping
-    coverage complete."""
-    if epoch_id is not None and tbl.last_epoch(stream_id) >= epoch_id:
-        return
-    if not scan:
-        return
+    at the version the scan read, the existence read is PRUNED to the
+    buckets that report a possible hit — with key blooms (dvx.bloom;
+    hubs/links by default) a batch of brand-new keys reads (almost) no
+    existing data — and the scan's per-bucket segments ride along into
+    the append commit, keeping coverage complete. At any later base (a
+    commit landed after the scan, or the commit conflicted) the scan's
+    blooms cannot cover the newer keys, so the anti-join reads every
+    touched bucket."""
+    scanned, hits = scan
+    if not hits:
+        return None
     others = [c for c in select_cols if c != key]
-    candidates = sorted(b for b, (hits, _) in scan.items() if hits)
+    touched = sorted(hits)
+    candidates = [b for b in touched if hits[b][0]]
     src_rows = (
         tbl.with_bucket(src).groupBy(key, BUCKET_COL)
         .agg(F.min(F.struct(*[F.col(c) for c in others])).alias("_s"))
         .select(key, "_s.*", BUCKET_COL)
     )
-    if candidates:
-        existing = tbl.read(buckets=candidates).select(key)
-        new = src_rows.join(existing, key, "left_anti")
-    else:
-        new = src_rows  # every batch key is provably absent
-    tbl.append(
-        new, summary=summary,
-        bloom_segments={str(b): seg for b, (_, seg) in scan.items()},
-    )
+
+    def new_rows(v: int) -> DataFrame:
+        read = candidates if v == scanned else touched
+        if not read:
+            return src_rows  # every batch key is provably absent
+        return src_rows.join(tbl.read(v, buckets=read).select(key), key, "left_anti")
+
+    segments = {str(b): seg for b, (_, seg) in hits.items()}
+    staged = tbl.stage_write(new_rows, bloom_segments=segments)
+    return _Part(tbl, staged, new_rows, segments=segments)
 
 
 def _apply_satellite(
     vault: Vault,
     spec: SatelliteSpec,
     prepared: DataFrame,
-    epoch_id: int | None,
-    stream_id: str,
-    summary: dict | None,
     touched: list[int],
-) -> None:
-    """One satellite's SCD2 apply over its current/history split;
-    ``touched`` lists the batch's buckets of the parent key (the
-    census in :func:`apply_batch`).
+    scratch: str,
+) -> dict[str, _Part]:
+    """One satellite's SCD2 apply over its current/history split, staged:
+    returns ``{table name: part}`` for its history and current tables,
+    which :func:`apply_batch` commits. ``touched`` lists the batch's
+    buckets of the parent key (the census in :func:`apply_batch`); the
+    batch's spills go under ``scratch``, which outlives the commits.
 
     Semantics (reference's *intended* end-dating, RawVaultETL.scala
     1032-1078 fixed), per version of THIS satellite's hash-diff:
@@ -303,8 +350,8 @@ def _apply_satellite(
     batch first computes and spills its re-chain on a helper thread
     while this thread plans the in-order frames; then the history write
     and the current write are STAGED concurrently (lake.stage_write,
-    each one Spark job carrying its rows and its tombstones) and
-    published strictly history-first, each as ONE commit. The history
+    each one Spark job carrying its rows and its tombstones), each to be
+    published as ONE commit. The history
     side is an ``append`` of the in-order keys' displaced/intermediate
     rows, or, when stale keys exist, a ``delete_insert`` that also
     tombstones the stale keys' old history and appends their re-chained
@@ -312,32 +359,19 @@ def _apply_satellite(
     rows written in the tombstone's own commit survive it). The current
     side is a ``delete_insert`` that tombstones every key with a fresh
     winner or a re-chain, and inserts the batch-final rows and the
-    stale keys' re-chained current rows.
-
-    Crash ordering: history before current; both commits carry the
-    epoch mark. A crash before the history commit publishes nothing. A
-    crash between the two leaves current untouched, so the re-run sees
-    do_hist=False and commits only the current side — the same commit:
-    the in-order part depends only on (unchanged) current, and the
-    re-chain is a pure function of stored state ∪ batch that the
-    spliced history reproduces.
+    stale keys' re-chained current rows. Both parts are staged against
+    the same stored current, so a re-run after a crash between the two
+    commits stages the current part it did not publish.
     """
-    import shutil as _shutil
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark.sql.window import Window
 
-    from dvx.lake import CommitConflict
-
+    if not touched:
+        return {}
     key = spec.parent_key
     cur_tbl = vault.table(spec.name)
     hist_tbl = vault.table(spec.hist_name)
-    do_hist = epoch_id is None or hist_tbl.last_epoch(stream_id) < epoch_id
-    do_cur = epoch_id is None or cur_tbl.last_epoch(stream_id) < epoch_id
-    if not (do_hist or do_cur):
-        return  # replayed epoch, both commits already landed
-    if not touched:
-        return
     sat_fields = cur_tbl.schema().fields
     sat_cols = [f.name for f in sat_fields]
     types = {f.name: f.dataType for f in sat_fields}
@@ -360,10 +394,8 @@ def _apply_satellite(
     # memory store at high core counts (measured: 3 caches alive made the
     # satellite block 4x slower at local[32] than local[8])
     src = cur_tbl.with_bucket(prepared.select(*proj, "ts", "seq"))
-    spill_j = None
-    spill_r = None
-    ex = ThreadPoolExecutor(max_workers=3)
-    try:
+    # waits on exit: no helper job may outlive the apply
+    with ThreadPoolExecutor(max_workers=3) as ex:
         # the decisions pass needs only the version columns of current —
         # and only for keys THE BATCH CARRIES: a column-pruned,
         # key-filtered read keeps the tombstone resolution off `text` AND
@@ -435,7 +467,7 @@ def _apply_satellite(
             # _sb: a stale row's bucket, -1 for every other row
             F.when(F.col("_stale"), F.col(BUCKET_COL)).otherwise(F.lit(-1)).alias("_sb"),
         )
-        spill_j = _spill_path(vault)
+        spill_j = os.path.join(scratch, f"{spec.name}.decisions")
         # spill PARTITIONED by _sb: whether any out-of-order row exists —
         # and which buckets hold them — is then a driver-side listdir of
         # the `_sb=<bucket>` directories, and the stale slice a
@@ -555,8 +587,10 @@ def _apply_satellite(
         # thread while this thread plans the in-order frames below
         f_rechain = None
         if stale_buckets:
-            spill_r = _spill_path(vault)
-            f_rechain = ex.submit(_in_pool, sc, "dvx_critical", _rechain, spill_r)
+            f_rechain = ex.submit(
+                _in_pool, sc, "dvx_critical", _rechain,
+                os.path.join(scratch, f"{spec.name}.rechain"),
+            )
 
         def anti_stale(df: DataFrame) -> DataFrame:
             return df.join(stale_keys, key, "left_anti") if stale_buckets else df
@@ -622,44 +656,27 @@ def _apply_satellite(
                 re_sat.filter(F.col("valid_to").isNull())
             )
 
-        # ---- staged write overlap, history-first publish ----
-        # history and current are INDEPENDENT tables, but their commits
-        # must stay ordered: displaced rows must reach history before
-        # current advances, or a crash between the two commits loses the
-        # old version entirely (it is no longer in current and never
-        # reached history). So: run both multi-second WRITE jobs
-        # concurrently on the executors, then publish the two metadata
-        # commits strictly history-first. Each write carries its
-        # tombstones: on history the stale keys, on current every key
-        # with a fresh winner or a re-chain — read from the decisions
-        # spill, so no frame above is recomputed for them.
-        writes = []
-        if do_hist:
-            tombs = stale_keys if stale_buckets else None
-            writes.append((hist_tbl, hist_rows, tombs))
-        if do_cur:
-            changed = decisions.filter(F.col("_win") | (F.col("_sb") >= 0))
-            writes.append((cur_tbl, cur_rows, changed.select(key)))
-        futs = [
-            ex.submit(_in_pool, sc, "dvx_critical", tbl.stage_write, rows, keys)
-            for tbl, rows, keys in writes
-        ]
-        for (tbl, rows, keys), fut in zip(writes, futs):
-            op = "append" if keys is None else "delete_insert"
-            try:
-                tbl.commit_staged(fut.result(), op, summary=summary)
-            except CommitConflict:  # an external writer moved the table:
-                # the same write, staged again at its new base
-                tbl.write(op, rows, keys, summary=summary)
-        if do_cur:
-            # folding a bucket every SAT_TOMB_COMPACT current commits
-            # keeps its amortized rewrite O(bucket/threshold)
-            cur_tbl.compact_tombstones(SAT_TOMB_COMPACT)
-    finally:
-        ex.shutdown(wait=True)  # no helper job may still read a spill
-        for d in (spill_j, spill_r):
-            if d:
-                _shutil.rmtree(d, ignore_errors=True)
+        # ---- staged write overlap ----
+        # history and current are INDEPENDENT tables: run both
+        # multi-second WRITE jobs concurrently on the executors; the
+        # metadata commits follow in apply_batch's publish order. Each
+        # write carries its tombstones: on history the stale keys, on
+        # current every key with a fresh winner or a re-chain — read
+        # from the decisions spill, so no frame above is recomputed for
+        # them.
+        changed = decisions.filter(F.col("_win") | (F.col("_sb") >= 0))
+        writes = {
+            spec.hist_name: (hist_tbl, hist_rows, stale_keys if stale_buckets else None),
+            spec.name: (cur_tbl, cur_rows, changed.select(key)),
+        }
+        futs = {
+            name: ex.submit(_in_pool, sc, "dvx_critical", tbl.stage_write, rows, keys)
+            for name, (tbl, rows, keys) in writes.items()
+        }
+        return {
+            name: _Part(tbl, futs[name].result(), rows, keys)
+            for name, (tbl, rows, keys) in writes.items()
+        }
 
 
 def apply_batch(
@@ -668,6 +685,7 @@ def apply_batch(
     epoch_id: int | None = None,
     stream_id: str = "default",
     pit_dates: list[str] | None = None,
+    log_lineage: bool = False,
 ) -> dict:
     """Apply one changelog micro-batch to the vault (idempotent).
 
@@ -681,18 +699,27 @@ def apply_batch(
     counts made cached replays bimodal (measured: identical profile runs
     at local[16] swinging 43s ↔ 172s wall / 470 ↔ 2000 CPU-sec with
     persist(); spill reads are deterministic). The table merges are
-    independent, so they run as concurrent driver-thread jobs (each in
-    its own fair-scheduler pool) sharing the executors — the per-batch
-    fixed overhead (scheduling, commit latency) overlaps instead of
-    summing, which matters most for small/frequent micro-batches.
+    independent, so their write jobs are staged concurrently as
+    driver-thread jobs (each in its own fair-scheduler pool) sharing the
+    executors — the per-batch fixed overhead (scheduling, task launch)
+    overlaps instead of summing, which matters most for small/frequent
+    micro-batches.
 
     The merges wait on the batch's only driver collects: the fused
     :func:`_bloom_scan` over every hub and link gates the key-table
     inserts, and one per-bucket row census per distinct satellite
-    parent key gates that key's satellites. With ``pit_dates``
-    the PIT snapshots are maintained last, and the last PIT commit
-    carries the epoch mark (dvx.stream.ingest_batch counts the epoch as
-    applied only then).
+    parent key gates that key's satellites.
+
+    Exactly-once rule: once every staged write is done, ONE loop
+    publishes the epoch's tables in :func:`publish_order` — hubs, links,
+    each satellite's history then current, the PIT snapshots for
+    ``pit_dates`` (all dates in one commit, derived from the committed
+    satellites), the lineage rows with ``log_lineage`` — and every
+    commit carries the epoch mark. A table that already holds the mark
+    is skipped (its staged part dropped), so a re-run after a crash at
+    any commit boundary publishes exactly the tables the crash left
+    behind. A commit that conflicts with another writer is staged again
+    at the new base.
 
     Returns the event count and the per-bucket row counts of the first
     satellite's parent key (the lineage table's metrics).
@@ -700,29 +727,26 @@ def apply_batch(
     import shutil as _shutil
     from concurrent.futures import ThreadPoolExecutor
 
+    from dvx import pit
     from dvx.evolve import evolve_for_batch
 
     registry = vault.registry
-    if pit_dates:
+    if pit_dates and pit.PIT_SATELLITE not in [s.name for s in registry.satellites]:
         # checked before any commit: a failure after the vault commits
         # would leave the epoch applied without its PIT maintenance
-        from dvx.pit import PIT_SATELLITE, build_pit_incremental
-
-        pit_key = next(
-            (s.parent_key for s in registry.satellites if s.name == PIT_SATELLITE),
-            None,
+        raise ValueError(
+            f"pit_dates maintenance requires the '{pit.PIT_SATELLITE}' "
+            "satellite in the registry (dvx.pit builds the PIT over it); "
+            f"this registry has {[s.name for s in registry.satellites]}"
         )
-        if pit_key is None:
-            raise ValueError(
-                f"pit_dates maintenance requires the '{PIT_SATELLITE}' "
-                "satellite in the registry (dvx.pit builds the PIT over it); "
-                f"this registry has {[s.name for s in registry.satellites]}"
-            )
     desc_extras = evolve_for_batch(vault, batch)
     # snappy spills even on tmpfs scratch: transcript text compresses 3-4x,
     # and tmpfs "IO" is kernel memcpy, so fewer bytes = less sys-CPU (16c
-    # A/B 2026-08-17: prepare stage 27.2s -> 17.4s, kernel CPU 128 -> 12s)
-    spill = _spill_path(vault)
+    # A/B 2026-08-17: prepare stage 27.2s -> 17.4s, kernel CPU 128 -> 12s).
+    # Every spill of the batch lives under `scratch`: the redo of a
+    # conflicting commit may re-read them, so they outlive the publish.
+    scratch = _spill_path(vault)
+    spill = os.path.join(scratch, "prepared")
     pre = prepare_batch(batch, registry)
     pre.write.mode("overwrite").option("compression", "snappy").parquet(spill)
     prepared = vault.spark.read.schema(pre.schema).parquet(spill)
@@ -768,6 +792,7 @@ def apply_batch(
         # inserts consume (guide §2.6 overlap).
         sc = vault.spark.sparkContext
         n_workers = 1 + len(census_tables) + len(key_tables) + len(registry.satellites)
+        parts: dict[str, _Part] = {}
         with ThreadPoolExecutor(max_workers=n_workers) as ex:
             fut_scan = ex.submit(
                 _in_pool, sc, merge_pool("scan"), _bloom_scan, prepared,
@@ -783,14 +808,11 @@ def apply_batch(
 
             def _run_sat(s):
                 touched = [b for b, _ in fut_counts[s.parent_key].result()]
-                _apply_satellite(
-                    vault, s, prepared, epoch_id, stream_id, summary, touched
-                )
+                parts.update(_apply_satellite(vault, s, prepared, touched, scratch))
 
             def _run_key_table(nm, tbl, key, cols):
-                _insert_new_keys(
-                    tbl, prepared.select(*cols), key, cols, epoch_id,
-                    stream_id, summary, fut_scan.result()[nm],
+                parts[nm] = _insert_new_keys(
+                    tbl, prepared.select(*cols), key, cols, fut_scan.result()[nm]
                 )
 
             futs = [
@@ -810,20 +832,34 @@ def apply_batch(
             for f in futs:
                 f.result()
             bucket_counts = fut_counts[registry.satellites[0].parent_key].result()
+        events = sum(c for _, c in bucket_counts)
+
+        # ---- publish: the one exactly-once rule ----
+        # (a table the batch has no rows for has no entry)
+        publish = {name: part.commit for name, part in parts.items() if part}
         if pit_dates:
-            # maintain PIT snapshots incrementally while the prepared batch
-            # (with its already-computed hash keys) is still spilled — no
-            # second Arrow hashing pass over the raw batch. Only the last
-            # date's commit carries the epoch mark: an earlier mark would
-            # let a replay after a crash skip the dates not yet built.
-            touched_keys = prepared.select(pit_key).distinct()
-            for d in pit_dates[:-1]:
-                build_pit_incremental(vault, d, touched_keys)
-            build_pit_incremental(vault, pit_dates[-1], touched_keys, summary=summary)
-        return {
-            "events": sum(c for _, c in bucket_counts),
-            "extras": desc_extras,
-            "bucket_counts": bucket_counts,
-        }
+            # maintained from the prepared batch's already-computed hash
+            # keys while it is still spilled: no second Arrow hashing pass
+            publish["pit_turn"] = lambda summary: pit.build_pit_incremental(
+                vault, pit_dates, prepared, summary
+            )
+        if log_lineage:
+            publish["load_metadata"] = lambda summary: metadata.log_epoch_lineage(
+                vault, epoch_id, metadata.ENTITY, bucket_counts, events, stream_id, summary
+            )
+        for name in publish_order(registry, pit_dates, log_lineage):
+            if epoch_id is not None and vault.table(name).last_epoch(stream_id) >= epoch_id:
+                if parts.get(name):  # committed before a crash: drop the re-stage
+                    parts[name].tbl.discard_staged(parts[name].staged)
+            elif name in publish:
+                publish[name](summary)
+        for s in registry.satellites:
+            # folding a bucket every SAT_TOMB_COMPACT current commits
+            # keeps its amortized rewrite O(bucket/threshold)
+            _in_pool(
+                sc, "dvx_critical",
+                vault.table(s.name).compact_tombstones, SAT_TOMB_COMPACT,
+            )
+        return {"events": events, "extras": desc_extras, "bucket_counts": bucket_counts}
     finally:
-        _shutil.rmtree(spill, ignore_errors=True)
+        _shutil.rmtree(scratch, ignore_errors=True)

@@ -83,11 +83,12 @@ class EntityRegistry:
         return replace(self, satellites=(*self.satellites, sat))
 
     def table_names(self) -> list[str]:
-        """Every vault table this registry materializes (epoch-guard and
-        DDL surface)."""
+        """Every vault table this registry materializes, in the order an
+        epoch publishes them (dvx.apply.publish_order): hubs, links, then
+        each satellite's history before its current table."""
         out = [h.name for h in self.hubs] + [l.name for l in self.links]
         for s in self.satellites:
-            out += [s.name, s.hist_name]
+            out += [s.hist_name, s.name]
         return out
 
     def version_grain(self) -> tuple[str, ...]:

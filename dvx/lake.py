@@ -657,25 +657,33 @@ class LakeTable:
         self,
         m: dict,
         v: int,
-        df: DataFrame | None = None,
+        df=None,
         tombstone_keys: DataFrame | None = None,
         salts: int = 1,
+        bloom_segments: dict[str, bytes] | None = None,
     ) -> dict:
         """Write one attempt's files for base snapshot ``m`` at version
         ``v`` in ONE Spark job — the only caller of :meth:`_write_files`.
-        ``df``'s rows become data files; ``tombstone_keys`` (plain
+        ``df``'s rows become data files; ``df`` may also be a function
+        of ``v`` returning them (a frame read from the table itself at
+        the base it is staged on). ``tombstone_keys`` (plain
         bucketed tables without key blooms) become equality-delete
         tombstone files for those keys, stamped with the attempt's commit
         version (``_tcv``, a stored column so the read side never needs a
         second input_file_name derivation). A key whose bucket holds no
         rows at ``v`` gets no tombstone: it would delete nothing, and the
-        commit re-checks ``v``. Nothing is visible until
+        commit re-checks ``v``. On a ``key_bloom`` table,
+        ``bloom_segments`` ({manifest key: segment}) attach to the
+        written buckets; a bucket written without one loses its bloom
+        coverage (:func:`_next_maps`). Nothing is visible until
         :meth:`commit_staged` publishes the returned part."""
         _refuse_legacy(m, self.root)
         staged = {
             "base_version": v, "new_files": {}, "commit_rel": None,
             "tomb_files": {}, "blooms": {},
         }
+        if callable(df):
+            df = df(v)
         frame = None if df is None else self._schema_aligned(df, m)
         if tombstone_keys is not None:
             if m["num_buckets"] is None or m.get("partition_col"):
@@ -708,6 +716,13 @@ class LakeTable:
                     staged["tomb_files"][k[1:]] = ps
                 else:
                     staged["new_files"][k] = ps
+        if _key_bloom(m) and bloom_segments:
+            for k in staged["new_files"]:
+                if k in bloom_segments:
+                    rel = os.path.join(staged["commit_rel"], f"_bloom_{k}.bin")
+                    with open(os.path.join(self.root, rel), "wb") as bf:
+                        bf.write(bloom_segments[k])
+                    staged["blooms"][k] = rel
         return staged
 
     def _write(self, op: str, stage, summary: dict | None = None) -> int:
@@ -732,35 +747,49 @@ class LakeTable:
     def write(
         self,
         op: str,
-        df: DataFrame | None,
+        df,
         tombstone_keys: DataFrame | None = None,
         summary: dict | None = None,
+        bloom_segments: dict[str, bytes] | None = None,
     ) -> int:
-        """Stage ``df`` (and ``tombstone_keys``) and commit them as ONE
-        ``op`` commit, staged again from the new base on conflict — the
-        body of :meth:`delete_keys_insert`, and the redo of a
-        :meth:`stage_write` whose :meth:`commit_staged` conflicted.
-        Unlike :meth:`append` it attaches no bloom segments."""
-        return self._write(
-            op, lambda m, v: (self._stage(m, v, df, tombstone_keys), ()), summary
-        )
+        """Stage ``df`` (and ``tombstone_keys``, ``bloom_segments``; see
+        :meth:`_stage`) and commit them as ONE ``op`` commit, staged again
+        from the new base on conflict — the body of :meth:`append` and
+        :meth:`delete_keys_insert`, and the redo of a :meth:`stage_write`
+        whose :meth:`commit_staged` conflicted. A ``df`` given as a
+        function of the base version is called again at every base."""
+        def stage(m: dict, v: int):
+            return self._stage(m, v, df, tombstone_keys, bloom_segments=bloom_segments), ()
+
+        return self._write(op, stage, summary)
 
     def stage_write(
-        self, df: DataFrame | None, tombstone_keys: DataFrame | None = None
+        self,
+        df,
+        tombstone_keys: DataFrame | None = None,
+        bloom_segments: dict[str, bytes] | None = None,
     ) -> dict:
         """Run ONLY the data-file write job of an append / delete_insert
         now, at the latest version; publish later with
         :meth:`commit_staged` (``op="delete_insert"`` when
-        ``tombstone_keys`` is given).
+        ``tombstone_keys`` is given), or drop with :meth:`discard_staged`.
+        Arguments as in :meth:`write`.
 
-        Lets a caller overlap two independent tables' write jobs on the
-        executors while still COMMITTING in a required order (the
-        satellite apply must publish history before current — the
-        crash-replay invariant — but has no reason to serialize the two
-        multi-second writes). The staged files are invisible until
-        commit; a crash in between leaves an orphan attempt dir only."""
+        Lets a caller overlap several tables' write jobs on the executors
+        while still COMMITTING them in a required order (dvx.apply
+        publishes an epoch's tables in one fixed order). The staged files
+        are invisible until commit; a crash in between leaves an orphan
+        attempt dir only."""
         v = self.version()
-        return self._stage(self.snapshot(v), v, df, tombstone_keys)
+        return self._stage(
+            self.snapshot(v), v, df, tombstone_keys, bloom_segments=bloom_segments
+        )
+
+    def discard_staged(self, staged: dict) -> None:
+        """Drop a staged part that will not be committed: its attempt
+        directory is referenced by no manifest."""
+        if staged["commit_rel"]:
+            shutil.rmtree(os.path.join(self.root, staged["commit_rel"]), ignore_errors=True)
 
     def commit_staged(
         self,
@@ -822,11 +851,7 @@ class LakeTable:
                     manifest[f"{name}_drop"] = [k for k in old if k not in new]
             return self._commit(v, manifest)
         except CommitConflict:
-            # the losing attempt's files are referenced by no manifest
-            if staged["commit_rel"]:
-                shutil.rmtree(
-                    os.path.join(self.root, staged["commit_rel"]), ignore_errors=True
-                )
+            self.discard_staged(staged)
             raise
 
     def append(
@@ -836,24 +861,9 @@ class LakeTable:
         bloom_segments: dict[str, bytes] | None = None,
     ) -> int:
         """Append-only insert (Iceberg append sink, IcebergWriter.scala:86-121).
-
-        On a ``key_bloom`` table, ``bloom_segments`` ({manifest key:
-        segment}) attach to the written buckets; a bucket written
-        without one loses its bloom coverage (:func:`_next_maps`), so
-        its inserts fall back to the plain existence read."""
-
-        def stage(m: dict, v: int):
-            staged = self._stage(m, v, df)
-            if _key_bloom(m) and bloom_segments:
-                for k in staged["new_files"]:
-                    if k in bloom_segments:
-                        rel = os.path.join(staged["commit_rel"], f"_bloom_{k}.bin")
-                        with open(os.path.join(self.root, rel), "wb") as bf:
-                            bf.write(bloom_segments[k])
-                        staged["blooms"][k] = rel
-            return staged, ()
-
-        return self._write("append", stage, summary)
+        ``bloom_segments`` as in :meth:`_stage`: a bucket appended to
+        without one falls back to the plain existence read."""
+        return self.write("append", df, summary=summary, bloom_segments=bloom_segments)
 
     def append_rows(self, rows: list[dict], summary: dict | None = None) -> int:
         """Driver-side tiny append: write ``rows`` as ONE parquet file via
@@ -1045,7 +1055,8 @@ class LakeTable:
 
     def last_epoch(self, stream_id: str) -> int:
         """Max epoch committed for a stream (-1 if none) — the snapshot-
-        summary handshake dvx.stream uses to skip replayed micro-batches."""
+        summary mark dvx.apply skips a table's commit on, and dvx.stream
+        a replayed micro-batch on."""
         return int(self.snapshot().get("summary", {}).get("epochs", {}).get(stream_id, -1))
 
     # ------------------------------------------------------------ evolution

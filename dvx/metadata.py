@@ -18,6 +18,10 @@ from pyspark.sql import functions as F
 from dvx.schema import Vault
 
 
+#: the entity name of the CDC stream's lineage rows
+ENTITY = "transcript_changes"
+
+
 def _now() -> dt.datetime:
     # lineage timestamps are audit-only; data-plane timestamps are always
     # event-derived (determinism rule, SURVEY.md §7.3)
@@ -62,10 +66,12 @@ def log_epoch_lineage(
     bucket_counts: list[tuple[int, int]],
     records: int,
     stream_id: str | None = None,
+    summary: dict | None = None,
 ) -> None:
     """Single append per epoch: one PARTITION_METRIC row per touched
     bucket + the COMPLETED summary row (north_rule: per-partition lineage
-    + metrics at every checkpoint, without three separate tiny writes)."""
+    + metrics at every checkpoint, without three separate tiny writes).
+    ``summary`` rides on the commit (dvx.apply passes the epoch mark)."""
     now = _now()
     rows = [
         dict(load_id=load_id, stream_id=stream_id, entity_name=entity,
@@ -78,7 +84,7 @@ def log_epoch_lineage(
              records_extracted=records, records_loaded=records,
              status="COMPLETED", load_end_ts=now)
     )
-    vault.load_metadata.append_rows(rows)
+    vault.load_metadata.append_rows(rows, summary=summary)
 
 
 def last_successful_load(vault: Vault, entity: str, stream_id: str | None = None):

@@ -12,8 +12,8 @@ Three build paths:
   skips dates already materialized; writes via dynamic partition
   overwrite so re-running a date is a clean replace.
 - :func:`build_pit_incremental` — per-micro-batch variant (north_rule):
-  only the keys touched by the batch are recomputed, then partition-
-  overwritten into the same date — O(batch), not O(table).
+  only the keys touched by the batch are recomputed, for all of the
+  batch's dates in one commit — O(batch), not O(table).
 - :func:`build_pit_range` — date-spine cross join (J5) + interval as-of
   join (J6), the PITBuilder.buildSnapshotRange form.
 
@@ -131,12 +131,13 @@ def build_pit(vault: Vault, snapshot_date: str, if_exists: str = "skip") -> int:
 
 
 def build_pit_incremental(
-    vault: Vault, snapshot_date: str, touched_keys: DataFrame,
+    vault: Vault, dates: list[str], touched_keys: DataFrame,
     summary: dict | None = None,
 ) -> int:
     """Recompute PIT rows only for keys touched by a micro-batch, merging
-    them into the existing date partition (north_rule: 'PIT tables rebuilt
-    incrementally per micro-batch').
+    them into the existing partitions of every date in ``dates`` in ONE
+    ``pit_turn`` commit (north_rule: 'PIT tables rebuilt incrementally
+    per micro-batch'). Returns the number of dates maintained.
 
     Reads only the touched buckets of the satellite AND of the PIT
     (manifest pruning on the composite ``"<date>|<bucket>"`` key);
@@ -144,51 +145,50 @@ def build_pit_incremental(
     write IO are O(touched buckets), never O(date partition). pit_turn
     and the satellite share the bucket function (same key column, same
     vault-wide bucket count), so one touched-bucket list serves both.
-    ``summary`` rides on the PIT commit (dvx.apply passes the epoch
-    mark with a batch's last date).
+    ``summary`` rides on the commit (dvx.apply passes the epoch mark).
     """
+    from functools import reduce
+
     from dvx.lake import _is_composite
 
-    sat_tbl = vault.sat_turn_text
     pit_tbl = vault.pit_turn
     keys = touched_keys.select("turn_hash_key").distinct()
-    bucketed = sat_tbl.with_bucket(keys)
+    bucketed = vault.sat_turn_text.with_bucket(keys)
     touched_buckets = sorted(
         r[0] for r in bucketed.select("_bucket").distinct().collect()
     )
     if not touched_buckets:
         return 0
-    composite = _is_composite(pit_tbl.snapshot())
     # no forced broadcast of the key set: a backfill micro-batch can carry
     # millions of keys — plain joins let AQE pick broadcast when it fits
     sat = vault.sat_all(buckets=touched_buckets).join(
         keys, "turn_hash_key", "left_semi"
     )
-    fresh = _pit_frame(vault, snapshot_date, sat)
-    if not composite:
+    fresh = reduce(
+        DataFrame.unionByName, [_pit_frame(vault, d, sat) for d in dates]
+    )
+    # untouched keys WITHIN the touched buckets carry over; untouched
+    # buckets are never read or rewritten
+    composite = _is_composite(pit_tbl.snapshot())
+    old = pit_tbl.read(
+        partitions=dates, buckets=touched_buckets if composite else None
+    ).join(keys, "turn_hash_key", "left_anti")
+    if composite:
+        pit_tbl.replace_buckets(
+            [f"{d}|{b}" for d in dates for b in touched_buckets],
+            old.unionByName(fresh),
+            summary=summary,
+        )
+    else:
         # LEGACY layout guard: a warehouse created before the composite
         # "<date>|<bucket>" layout has a plain date-partitioned pit_turn.
         # Bucket-half pruning there compares date strings to bucket ids
         # and matches ZERO manifest keys — `old` would come back empty and
         # replace_buckets would silently drop every untouched key's PIT
-        # row for the date. Fall back to the pre-composite full-date
-        # dynamic partition overwrite (correct, O(date partition) write).
-        old = pit_tbl.read(partitions=[snapshot_date]).join(
-            keys, "turn_hash_key", "left_anti"
-        )
+        # row for the dates. Fall back to the pre-composite full-date
+        # dynamic partition overwrite (correct, O(date partitions) write).
         pit_tbl.overwrite_partitions(old.unionByName(fresh), summary=summary)
-        return 1
-    # untouched keys WITHIN the touched buckets carry over; untouched
-    # buckets are never read or rewritten
-    old = pit_tbl.read(partitions=[snapshot_date], buckets=touched_buckets).join(
-        keys, "turn_hash_key", "left_anti"
-    )
-    pit_tbl.replace_buckets(
-        [f"{snapshot_date}|{b}" for b in touched_buckets],
-        old.unionByName(fresh),
-        summary=summary,
-    )
-    return 1
+    return len(dates)
 
 
 def build_pit_range(vault: Vault, start_date: str, end_date: str) -> int:

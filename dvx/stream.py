@@ -7,12 +7,17 @@ re-expression: ``readStream`` over a binlog/WAL-style changelog directory
 of new keys; satellite history appends and equality-delete + insert
 ``delete_insert`` commits, never a bucket rewrite), with:
 
-- **exactly-once**: each micro-batch's ``epoch_id`` is recorded in every
-  table's snapshot summary; on restart, foreachBatch replays the last
-  uncommitted batch and :func:`ingest_batch` skips entities whose tables
-  already committed that epoch (the Iceberg snapshot-summary handshake —
-  analog of the reference's anti-join idempotency J1, RawVaultETL.scala:
-  204-205, but O(1) metadata instead of a join).
+- **exactly-once**: an epoch stages every table's write, then publishes
+  them in ONE fixed order (hubs, links, each satellite's history then
+  current, ``pit_turn``, ``load_metadata``), each commit recording the
+  ``epoch_id`` in its table's snapshot summary and skipped when the
+  table already holds it. A crash at any commit boundary leaves a
+  prefix of that order committed; on restart, foreachBatch replays the
+  last uncommitted batch, which publishes the rest, and
+  :func:`ingest_batch` skips a batch every table already holds (the
+  Iceberg snapshot-summary handshake — analog of the reference's
+  anti-join idempotency J1, RawVaultETL.scala:204-205, but O(1)
+  metadata instead of a join).
 - **resume from checkpoint**: the standard Structured Streaming
   checkpointLocation contract; killed mid-replay runs continue.
 - **per-partition lineage + metrics**: load_metadata rows per epoch and
@@ -29,10 +34,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dvx import metadata
-from dvx.apply import apply_batch
+from dvx.apply import apply_batch, publish_order
 from dvx.schema import CHANGELOG_SCHEMA, Vault
-
-ENTITY = "transcript_changes"
 
 #: sentinel token for the fail_after_batches test hook. The Python
 #: exception TYPE does not survive the foreachBatch -> JVM ->
@@ -58,28 +61,30 @@ def ingest_batch(
 ) -> dict:
     """Apply one micro-batch exactly once.
 
-    Epoch skip: every vault table commits the epoch in its snapshot
-    summary inside apply_batch (the merges run as concurrent jobs). The
-    batch is skipped only when EVERY registry table has committed it; a
-    crash that left the epoch partially applied re-runs it, which is
-    safe — every merge is idempotent (anti-join inserts; SCD2 stale/
-    no-op guards).
+    One rule: :func:`dvx.apply.apply_batch` publishes the epoch's tables
+    in ONE fixed order (:func:`dvx.apply.publish_order`: hubs, links,
+    each satellite's history then current, ``pit_turn`` with
+    ``pit_dates``, ``load_metadata`` with ``log_lineage``), every commit
+    carrying the epoch mark and skipped when its table already holds
+    it. The batch is skipped here only when EVERY table of that list
+    holds the mark; a crash at any commit boundary leaves a prefix of
+    the list committed, and the re-run publishes the rest.
 
     ``pit_dates``: PIT snapshot dates to maintain incrementally per
     micro-batch (north_star: "PIT tables rebuilt incrementally per
     micro-batch") — only the keys this batch touched are recomputed
-    (dvx.pit.build_pit_incremental). The rebuild derives purely from
-    satellite state, so re-running it is idempotent; its last commit
-    carries the epoch mark, so with ``pit_dates`` the epoch counts as
-    applied only once ``pit_turn`` has it too — a crash after the vault
-    commits but before the PIT maintenance re-runs the epoch.
+    (dvx.pit.build_pit_incremental), all dates in one commit.
+    ``log_lineage``: one append per epoch of the per-bucket metric rows
+    and the COMPLETED row (north_rule per-partition lineage), last in
+    the order; a skipped replay appends a SKIPPED row.
     """
-    tables = vault.registry.table_names() + (["pit_turn"] if pit_dates else [])
+    tables = publish_order(vault.registry, pit_dates, log_lineage)
     applied = min(vault.table(t).last_epoch(stream_id) for t in tables)
     if applied >= epoch_id:
         if log_lineage:
             metadata.complete_load(
-                vault, epoch_id, ENTITY, 0, 0, stream_id=stream_id, status="SKIPPED"
+                vault, epoch_id, metadata.ENTITY, 0, 0,
+                stream_id=stream_id, status="SKIPPED",
             )
         return {"skipped": True, "epoch": epoch_id}
     stats = apply_batch(
@@ -88,19 +93,8 @@ def ingest_batch(
         epoch_id=epoch_id,
         stream_id=stream_id,
         pit_dates=pit_dates,
+        log_lineage=log_lineage,
     )
-    if log_lineage:
-        # ONE lineage append per epoch: per-bucket metric rows + the
-        # COMPLETED row together (north_rule per-partition lineage, at a
-        # single tiny write instead of three)
-        metadata.log_epoch_lineage(
-            vault,
-            epoch_id,
-            ENTITY,
-            stats["bucket_counts"],
-            records=stats["events"],
-            stream_id=stream_id,
-        )
     return {"skipped": False, "epoch": epoch_id, **stats}
 
 

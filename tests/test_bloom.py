@@ -91,10 +91,10 @@ COLS = ["conv_hash_key", "conv_id", "load_date", "record_source"]
 
 
 def _insert(tbl, src):
-    """The engine's key-table insert: the fused scan, then the insert
-    with the table's scan slice."""
+    """The engine's key-table insert: the fused scan, the insert staged
+    with the table's scan slice, then its commit."""
     scan = _bloom_scan(src, [("t", tbl, "conv_hash_key")])["t"]
-    _insert_new_keys(tbl, src, "conv_hash_key", COLS, None, "default", None, scan)
+    _insert_new_keys(tbl, src, "conv_hash_key", COLS, scan).commit()
 
 
 def test_brand_new_keys_skip_existing_read(spark, hub, monkeypatch):
@@ -122,6 +122,21 @@ def test_redelivered_keys_still_dedup(spark, hub):
     df = hub.read()
     assert df.count() == 200
     assert df.select("conv_hash_key").distinct().count() == 200
+
+
+def test_insert_racing_a_commit_of_the_same_key(spark, hub, monkeypatch):
+    """A competing insert of the same new key that commits while the
+    insert's write job runs makes the insert's commit conflict; the
+    redo re-reads the existence side at the new base, past the blooms
+    the scan read, so the key lands once."""
+    from tests.test_lake import _race_once
+
+    _insert(hub, _keys_df(spark, ["a", "b", "c"]))
+    armed = _race_once(monkeypatch, lambda: _insert(hub, _keys_df(spark, ["new"])))
+    _insert(hub, _keys_df(spark, ["new"]))
+    assert not armed["on"]  # the competing insert did land mid-write
+    got = sorted(r.conv_id for r in hub.read().select("conv_id").collect())
+    assert got == ["a", "b", "c", "new"]
 
 
 def test_invalidation_on_replace(spark, hub):

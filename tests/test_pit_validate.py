@@ -64,7 +64,7 @@ def test_incremental_pit_equals_full_rebuild(spark, loaded):
     )
     # simulate a micro-batch touching a subset of keys, then incremental fix-up
     touched = vault.hub_turn.read().filter(F.pmod(F.xxhash64("conv_id"), F.lit(3)) == 0)
-    build_pit_incremental(vault, DATE_END, touched)
+    build_pit_incremental(vault, [DATE_END], touched)
     incr = (
         vault.pit_turn.read(partitions=[DATE_END])
         .orderBy("conv_id", "turn_idx")
@@ -106,7 +106,7 @@ def test_incremental_pit_legacy_layout_fallback(spark, tmp_path):
         F.pmod(F.xxhash64("conv_id"), F.lit(3)) == 0
     )
     assert 0 < touched.count() < v.hub_turn.read().count()
-    build_pit_incremental(v, DATE_END, touched)
+    build_pit_incremental(v, [DATE_END], touched)
     incr = (
         v.pit_turn.read(partitions=[DATE_END])
         .orderBy("conv_id", "turn_idx")

@@ -239,3 +239,99 @@ def test_failing_drain_fold_leaves_the_load_committed(
     assert vault.load_metadata.read().filter("status = 'COMPLETED'").count() == 2
     assert_frames_equal(current_state(vault), oracle_state(changelog))
     assert validate_vault(vault)["exit_code"] == 0
+
+
+#: an epoch's commits with ``pit_dates`` and lineage, in publish order
+PUBLISH_ORDER = [
+    "hub_conversation", "hub_turn", "link_conversation_turn",
+    "sat_turn_text_hist", "sat_turn_text", "pit_turn", "load_metadata",
+]
+PIT_DATES = ["2024-01-02", "2024-01-03"]
+
+
+def test_publish_order_is_the_skip_list():
+    from dvx.apply import publish_order
+    from dvx.entities import DEFAULT_REGISTRY
+
+    assert publish_order(DEFAULT_REGISTRY, PIT_DATES, True) == PUBLISH_ORDER
+    assert publish_order(DEFAULT_REGISTRY) == PUBLISH_ORDER[:5]
+
+
+@pytest.fixture(scope="module")
+def crash_setup(spark, tmp_path_factory, changelog):
+    """The boundary tests' shared state: the changelog split in two
+    batches, a warehouse holding the first as epoch 0, and the oracles
+    (the whole changelog applied as one batch, and its full PIT
+    build for each date)."""
+    from dvx.pit import build_pit
+    from tests.test_apply import full_history, split_batches
+
+    early, late = split_batches(changelog, 2)
+    base = tmp_path_factory.mktemp("epoch0") / "wh"
+    v = Vault(spark, str(base), num_buckets=4)
+    v.create_all_tables()
+    ingest_batch(v, early, epoch_id=0, pit_dates=PIT_DATES)
+    one = Vault(spark, str(tmp_path_factory.mktemp("oneshot") / "wh"), num_buckets=4)
+    one.create_all_tables()
+    ingest_batch(one, changelog, epoch_id=0, log_lineage=False)
+    pits = {}
+    for d in PIT_DATES:
+        build_pit(one, d)
+        pits[d] = one.pit_turn.read(partitions=[d]).orderBy("turn_hash_key").collect()
+    return {
+        "late": late, "base": str(base), "pits": pits,
+        "history": full_history(one).collect(),
+    }
+
+
+@pytest.mark.parametrize("table", PUBLISH_ORDER)
+def test_crash_at_every_commit_boundary_converges(
+    spark, tmp_path, changelog, crash_setup, monkeypatch, table
+):
+    """A crash before any one of an epoch's commits leaves exactly the
+    tables before it in the publish order committed, with no link row
+    ahead of its hub rows; re-running the epoch publishes the rest and
+    converges to the one-shot vault, its PIT dates and ONE lineage
+    record, and a third delivery is skipped."""
+    import shutil
+
+    from dvx.lake import LakeTable
+    from dvx.validate import check_link_referential_integrity, validate_vault
+    from tests.test_apply import full_history
+
+    shutil.copytree(crash_setup["base"], tmp_path / "wh")
+    vault = make_vault(spark, tmp_path)
+    late = crash_setup["late"]
+    root = vault.table(table).root
+    commit_staged = LakeTable.commit_staged
+    armed = {"on": True}
+
+    def crash_before(self, staged, op, summary=None, **kw):
+        if self.root == root and armed["on"]:
+            armed["on"] = False
+            raise RuntimeError(f"injected crash before the {table} commit")
+        return commit_staged(self, staged, op, summary=summary, **kw)
+
+    monkeypatch.setattr(LakeTable, "commit_staged", crash_before)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        ingest_batch(vault, late, epoch_id=1, pit_dates=PIT_DATES)
+    at = PUBLISH_ORDER.index(table)
+    assert [vault.table(t).last_epoch("default") for t in PUBLISH_ORDER] == (
+        [1] * at + [0] * (len(PUBLISH_ORDER) - at)
+    )
+    assert check_link_referential_integrity(vault)[0]
+
+    rerun = ingest_batch(vault, late, epoch_id=1, pit_dates=PIT_DATES)
+    assert not rerun["skipped"]
+    assert_frames_equal(current_state(vault), oracle_state(changelog))
+    assert full_history(vault).collect() == crash_setup["history"]
+    for d in PIT_DATES:
+        got = vault.pit_turn.read(partitions=[d]).orderBy("turn_hash_key").collect()
+        assert got == crash_setup["pits"][d]
+    lineage = vault.load_metadata.read().filter("load_id = 1")
+    assert lineage.filter("status = 'COMPLETED'").count() == 1
+    assert lineage.filter("status = 'PARTITION_METRIC'").count() == len(
+        rerun["bucket_counts"]
+    )
+    assert validate_vault(vault, pit_dates=PIT_DATES)["exit_code"] == 0
+    assert ingest_batch(vault, late, epoch_id=1, pit_dates=PIT_DATES)["skipped"]

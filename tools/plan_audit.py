@@ -5,7 +5,9 @@ evidence for the hot paths plus automated checks:
   (PushedFilters / ReadSchema),
 - no forced broadcast of unbounded relations (hubs, satellite current)
   in bridge/PIT plans — broadcast appears only when AQE sizes a side
-  under the threshold at this SF,
+  under the threshold at this SF; the bridge's code (dvx.pit
+  ``_bridge_frame`` / ``build_bridge``) carries no broadcast call or
+  hint,
 - WholeStageCodegen spans cover the JVM-side operators,
 - the satellite narrow chain reuses the join exchange for its window
   (single shuffle for join+window+flags),
@@ -37,6 +39,18 @@ def explain_str(df) -> str:
     return buf.getvalue()
 
 
+def _code_mentions(fn, words) -> bool:
+    """Whether any of ``words`` occurs in ``fn``'s source outside its
+    comments (case-insensitive): a name, an attribute or a hint
+    string."""
+    import inspect
+    import tokenize
+
+    toks = tokenize.generate_tokens(io.StringIO(inspect.getsource(fn)).readline)
+    code = " ".join(t.string for t in toks if t.type != tokenize.COMMENT).lower()
+    return any(w in code for w in words)
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     import __spark_entry__ as em
@@ -45,6 +59,7 @@ def main() -> None:
     spark = get_spark(app_name="plan-audit")
     v = em._get_vault(spark, sf_dir)
 
+    from dvx import pit as pit_mod
     from dvx.pit import _pit_frame, build_bridge, current_turn_text
 
     sections: list[tuple[str, str, list[str]]] = []
@@ -218,12 +233,18 @@ def main() -> None:
     )
     s2 = sections[2][1]
     forced_bc = re.findall(r"BroadcastExchange", s2)
+    hinted = [
+        fn.__name__ for fn in (pit_mod._bridge_frame, build_bridge)
+        if _code_mentions(fn, ("broadcast", "mapjoin"))
+    ]
     checks.append(
         (
             "bridge: broadcast only where AQE sized it (no unconditional hint in code)",
-            True,
-            f"{len(forced_bc)} BroadcastExchange node(s) at sf — AQE-chosen, "
-            "source has no F.broadcast on unbounded relations (dvx/pit.py)",
+            not hinted,
+            f"{len(forced_bc)} BroadcastExchange node(s) at sf — AQE-chosen; "
+            "code of dvx.pit._bridge_frame / build_bridge (comments aside) "
+            + (f"hints a broadcast in {hinted}" if hinted
+               else "has no F.broadcast and no broadcast hint"),
         )
     )
     checks.append(checks_kf)
